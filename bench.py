@@ -100,17 +100,12 @@ EXTENDED_QUERIES = [
     "corpus_curation_pipeline_v3",
     "curation_v3_production",
     "minhash_lsh_stopshingle_production",
-    # r11: appended at the END so earlier entries' session context is
-    # unchanged vs the sealed floor (floor_ratio_table compares shared
-    # queries only; this one simply has no floor row until re-seal)
+    # entries are appended at the END so every earlier entry keeps the
+    # session context (JIT, caches, prior jobs) it was measured in
     "minhash_index_increment_production",
-    # r12: same END-append rule; the first two got their floor rows at
-    # the r12 re-seal; the index probe landed after it and earns its
-    # row at the next seal (until then it is timed but has no ratio)
     "semantic_dedup_capped",
     "minhash_index_frozen_census_production",
     "semdedup_index_probe",
-    # r13: same END-append rule; no floor rows until the next re-seal
     "semdedup_probe_stratified",
     "semdedup_pool_probe",
     "semdedup_pool_probe_capped",
@@ -347,7 +342,7 @@ def _production_curation_v3(spark, sf_dir):
     # ONE broadcast per (session, sf_dir) — contamination_screen's own
     # docstring tells repeat callers to create/reuse a single Broadcast
     # instead of leaking one per call; the bench times this twin 3-4x
-    # per session (and tools/ab_v3.py dozens), so cache it.  Keyed on
+    # per session (and tools/measure.py ab dozens), so cache it.  Keyed on
     # applicationId, not id(spark): a CPython id can be reused after a
     # stopped session is garbage-collected, which would hand a new
     # SparkContext a broadcast belonging to a dead one.
@@ -438,13 +433,27 @@ EXTRA = {
 }
 
 
-def _read_steal_jiffies() -> int:
+def cpu_jiffies(line: str | None = None) -> tuple[int, int]:
+    """(steal, total) jiffies of the aggregate ``cpu`` line of /proc/stat
+    (or of ``line``), (0, 0) when unreadable.  The total sums user
+    through steal (guest time is already counted inside user/nice), so
+    a delta ratio is the steal share of ALL CPUs over the window: no
+    core count or USER_HZ enters it."""
     try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        return int(parts[8])  # cpu ... steal is field 8 (0-based after 'cpu')
-    except Exception:
-        return 0
+        if line is None:
+            with open("/proc/stat") as f:
+                line = f.readline()
+        ticks = [int(x) for x in line.split()[1:9]]
+        return ticks[7], sum(ticks)
+    except (OSError, ValueError, IndexError):
+        return 0, 0
+
+
+def steal_pct(start: tuple[int, int], end: tuple[int, int]) -> float:
+    """Steal as a percentage of all CPU time between two
+    :func:`cpu_jiffies` readings (100 * dsteal / dtotal)."""
+    total = end[1] - start[1]
+    return round(100.0 * (end[0] - start[0]) / total, 2) if total > 0 else 0.0
 
 
 def _loadavg() -> list[float]:
@@ -455,73 +464,89 @@ def _loadavg() -> list[float]:
         return []
 
 
+def warm_tables(spark, sf_dir: str) -> None:
+    """Warm the JVM + parquet footers with one tiny action per table."""
+    from financial_data_science_spark.sources.testdata import load_tables
+
+    for df in load_tables(spark, sf_dir).values():
+        df.limit(1).count()
+
+
+def time_entry(spark, fn, sf_dir: str, n_runs: int = 3):
+    """Time one bench entry ``fn(spark, sf_dir)`` under v3 semantics;
+    returns ``(record, df)`` with record keys runs, steal (per-run
+    :func:`steal_pct`), rows, build and warmup.
+
+    v3 timing semantics (bench_set_version 3, r11): build the DataFrame
+    ONCE per entry, pay ONE untimed warmup action, then time n_runs
+    actions against the same analyzed plan and take the min.
+    Production jobs declare a plan once and execute it; min-of-N
+    re-planning (and re-running eager construction work like IRLS
+    training or codebook fits) of identical SQL was a bench artifact,
+    not a workload — it charged the twin queries ~2s/run of driver plan
+    re-analysis and charged every entry's first record appearance its
+    first-ever JIT.  Nothing is hidden: per-entry [build_sec,
+    warmup_sec] (construction incl. any eager offline-leg collects +
+    the JIT-paying first action) lands in BENCH_DETAIL.json under
+    "builds".  min-of-N still guards hypervisor-steal bursts; raw runs
+    are reported as before."""
+    t0 = time.time()
+    df = fn(spark, sf_dir)
+    build = time.time() - t0
+    t0 = time.time()
+    rows = df.count()
+    warmup = time.time() - t0
+    runs, steal = [], []
+    for _ in range(n_runs):
+        j0, t0 = cpu_jiffies(), time.time()
+        df.count()
+        runs.append(round(time.time() - t0, 3))
+        steal.append(steal_pct(j0, cpu_jiffies()))
+    rec = {"runs": runs, "steal": steal, "rows": rows,
+           "build": round(build, 3), "warmup": round(warmup, 3)}
+    return rec, df
+
+
 def main() -> None:
     from financial_data_science_spark import get_spark
     from financial_data_science_spark.queries import Q
 
     spark = get_spark("bench")
-    # warm the JVM + parquet footers with one tiny action per table
-    from financial_data_science_spark.sources.testdata import load_tables
+    warm_tables(spark, SF_DIR)
 
-    for df in load_tables(spark, SF_DIR).values():
-        df.limit(1).count()
-
-    load0, steal0, wall0 = _loadavg(), _read_steal_jiffies(), time.time()
+    load0, jiffies0, wall0 = _loadavg(), cpu_jiffies(), time.time()
 
     builds: dict[str, list[float]] = {}
+    raw_runs: dict[str, list[float]] = {}
 
-    def run(name: str, n_runs: int = 3) -> tuple[float, list[float], int]:
-        fn = EXTRA.get(name) or Q[name]
-        # v3 timing semantics (bench_set_version 3, r11): build the
-        # DataFrame ONCE per entry, pay ONE untimed warmup action, then
-        # time n_runs actions against the same analyzed plan and take
-        # the min.  Production jobs declare a plan once and execute it;
-        # min-of-N re-planning (and re-running eager construction work
-        # like IRLS training or codebook fits) of identical SQL was a
-        # bench artifact, not a workload — it charged the twin queries
-        # ~2s/run of driver plan re-analysis and charged every entry's
-        # first record appearance its first-ever JIT.  Nothing is
-        # hidden: per-entry [build_sec, warmup_sec] (construction incl.
-        # any eager offline-leg collects + the JIT-paying first action)
-        # lands in BENCH_DETAIL.json under "builds".  min-of-N still
-        # guards hypervisor-steal bursts; raw runs reported as before.
-        t0 = time.time()
-        df = fn(spark, SF_DIR)
-        build = time.time() - t0
-        t0 = time.time()
-        n = df.count()
-        builds[name] = [round(build, 3), round(time.time() - t0, 3)]
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.time()
-            n = df.count()
-            runs.append(round(time.time() - t0, 3))
-        return min(runs), runs, n
+    def run(name: str, n_runs: int = 3) -> tuple[float, int]:
+        rec, _ = time_entry(spark, EXTRA.get(name) or Q[name], SF_DIR, n_runs)
+        builds[name] = [rec["build"], rec["warmup"]]
+        raw_runs[name] = rec["runs"]
+        return min(rec["runs"]), rec["rows"]
 
     times: dict[str, float] = {}
-    raw_runs: dict[str, list[float]] = {}
     for name in BENCH_QUERIES:
-        times[name], raw_runs[name], n = run(name, n_runs=4)
+        times[name], n = run(name, n_runs=4)
         print(f"# {name}: {n} rows in {times[name]:.2f}s "
               f"(build {builds[name][0]:.2f}s + warmup {builds[name][1]:.2f}s)",
               file=sys.stderr)
 
     oracle_times: dict[str, float] = {}
     for name in ORACLE_PATH_QUERIES:
-        oracle_times[name], raw_runs[name], n = run(name)
+        oracle_times[name], n = run(name)
         print(f"# [oracle-path] {name}: {n} rows in {oracle_times[name]:.2f}s",
               file=sys.stderr)
 
     extended_times: dict[str, float] = {}
     for name in EXTENDED_QUERIES:
-        extended_times[name], raw_runs[name], n = run(name)
+        extended_times[name], n = run(name)
         print(f"# [extended] {name}: {n} rows in {extended_times[name]:.2f}s",
               file=sys.stderr)
 
     wall = time.time() - wall0
-    steal_jiffies = _read_steal_jiffies() - steal0
-    # steal% of one-CPU time over the bench wall-clock (jiffies = 10ms)
-    steal_pct = round(100.0 * steal_jiffies * 0.01 / max(wall, 1e-9), 2)
+    # steal share of all CPU time over the bench window
+    steal = steal_pct(jiffies0, cpu_jiffies())
 
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -537,7 +562,7 @@ def main() -> None:
         # ANN, TF-IDF, PageRank; moves the portable-hash oracle
         # variants to "oracle_path"); v3 = round 11+ (same query sets,
         # plan-reuse timing: build once + untimed warmup + timed warm
-        # actions — see run(); v2<->v3 bridge table in SCALE.md).
+        # actions — see time_entry(); v2<->v3 bridge table in SCALE.md).
         "bench_set_version": BENCH_SET_VERSION,
         "value": round(sum(times.values()), 3),
         "unit": "sec",
@@ -551,7 +576,7 @@ def main() -> None:
         "queries": times,
         "oracle_path": oracle_times,
         "extended": extended_times,
-        "cpu_steal_pct_of_wall": steal_pct,
+        "cpu_steal_pct_of_wall": steal,
         "sf": sf_val,
     }
     # Bulky raw-run detail goes to a side file (and stderr), never stdout.
@@ -560,7 +585,7 @@ def main() -> None:
         "builds": builds,
         "loadavg_start": load0,
         "loadavg_end": _loadavg(),
-        "cpu_steal_pct_of_wall": steal_pct,
+        "cpu_steal_pct_of_wall": steal,
         "sf": sf_val,
         "wall_sec": round(wall, 3),
     }

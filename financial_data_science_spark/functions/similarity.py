@@ -19,8 +19,6 @@ north star).  Design notes per operator:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -46,9 +44,8 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-_FLAT_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FLAT_MIN_BYTES", 64 * 1024 * 1024)
-)
+# _flat_gate's threshold on the corpus-side size estimate
+_FLAT_MIN_BYTES = 64 * 1024 * 1024
 
 
 def _vec_dim(df: DataFrame, vec_col: str) -> int:
@@ -76,8 +73,8 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int:
 
 def _flat_gate(df: DataFrame, dim: int) -> int:
     """SIZE-gate for flat-chain scoring: ``dim`` when ``df``'s optimizer
-    size estimate reaches ``SPARK_GRAFT_FLAT_MIN_BYTES`` (default
-    64 MiB), else 0 (callers fall back to the interpreted fold).
+    size estimate reaches ``_FLAT_MIN_BYTES`` (64 MiB), else 0 (callers
+    fall back to the interpreted fold).
 
     Measured rationale (r15): a dim-unrolled multiply-add chain is a
     fixed ~5*dim-node expression at EVERY scoring site — it wins per
@@ -91,8 +88,7 @@ def _flat_gate(df: DataFrame, dim: int) -> int:
     the corpus-side size estimate keeps the toy-scale plan lean and
     turns the flat chains on exactly where they pay: the estimate is
     driver metadata (no job), and unknown estimates (streaming/RDD
-    lineages) fall back to the fold.  Env-tunable for clusters whose
-    planning-to-compute balance differs."""
+    lineages) fall back to the fold."""
     if dim <= 0:
         return 0
     try:

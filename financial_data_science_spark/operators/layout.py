@@ -23,26 +23,23 @@ cores than 32 for exactly this reason.  Two guards, both derived from
 the optimizer's size estimate for the input plan (file bytes for
 scans; no job, no RDD materialization):
 
-* frames below ``SPARK_GRAFT_FAN_MIN_BYTES`` (default 8 KiB) are never
-  fanned — the work they carry cannot amortize even one exchange;
-* the fan WIDTH is ``bytes / SPARK_GRAFT_FAN_BYTES_PER_TASK`` (default
-  24 KiB/task), capped at default parallelism — so a 700 KB corpus at
-  sf0.1 fans ~wide while a 60 KB test-scale frame fans a few ways, and
+* frames below ``_FAN_MIN_BYTES`` (8 KiB) are never fanned — the work
+  they carry cannot amortize even one exchange;
+* the fan WIDTH is ``bytes / _FAN_BYTES_PER_TASK`` (24 KiB/task),
+  capped at default parallelism — so a 700 KB corpus at sf0.1 fans
+  ~wide while a 60 KB test-scale frame fans a few ways, and
   the width is the same at every core count at or above it (the 8-core
   vs 32-core bench comparison stops being distorted by 32-way overhead
   on sub-second inputs).
 
-Both knobs are env-tunable because the right constants are
-cluster-dependent: these defaults are sized for the local bench's
-heavy-per-row kernels (shingle/gram explodes over compressed text:
-per-row compute is orders of magnitude larger than per-row bytes).  On
-a production cluster with plain columnar work, set
-``SPARK_GRAFT_FAN_BYTES_PER_TASK`` toward the guide's 100 MB - 1 GB
-per-task sizing (§2.2); at 100 TB the helper is a no-op either way
-because real scans arrive well-split.  When the estimate is
-unavailable (localCheckpoint/RDD-backed frames report the default
-"unknown = huge" stat), the helper behaves as before: fan to default
-parallelism.
+Both constants are sized for the local bench's heavy-per-row kernels
+(shingle/gram explodes over compressed text: per-row compute is orders
+of magnitude larger than per-row bytes).  Plain columnar work on a
+production cluster would want the guide's 100 MB - 1 GB per-task
+sizing (§2.2), but at 100 TB the helper is a no-op either way because
+real scans arrive well-split.  When the estimate is unavailable
+(localCheckpoint/RDD-backed frames report the default "unknown = huge"
+stat), the helper behaves as before: fan to default parallelism.
 
 Partitioning by an id column (when given) rather than round-robin does
 double duty: the rows spread evenly AND the downstream per-id
@@ -57,24 +54,18 @@ an output value must keep its original partitioning.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # below this, never fan: one exchange costs more than the kernel
-_FAN_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_FAN_MIN_BYTES", 8 * 1024))
-# sizing dial for the fan width (bytes of estimated input per task)
-_FAN_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_FAN_BYTES_PER_TASK", 24 * 1024)
-)
+_FAN_MIN_BYTES = 8 * 1024
+# fan width = estimated input bytes / this (bytes per task)
+_FAN_BYTES_PER_TASK = 24 * 1024
 # estimates at/above this are treated as "unknown" (Catalyst reports
 # spark.sql.defaultSizeInBytes = Long.Max for RDD-backed plans)
 _STATS_UNKNOWN = 1 << 60
-# sizing dial for compact_width (bytes of estimated frame per partition)
-_COMPACT_BYTES_PER_PART = int(
-    os.environ.get("SPARK_GRAFT_COMPACT_BYTES_PER_PART", 1 << 20)
-)
+# compact_width's target: bytes of estimated frame per partition
+_COMPACT_BYTES_PER_PART = 1 << 20
 
 
 def _plan_size_bytes(df: DataFrame) -> int:
@@ -89,9 +80,7 @@ def _plan_size_bytes(df: DataFrame) -> int:
     return -1 if size >= _STATS_UNKNOWN else size
 
 
-def compact_width(
-    df: DataFrame, bytes_per_part: int | None = None
-) -> int:
+def compact_width(df: DataFrame) -> int:
     """Width to COMPACT a small reused intermediate to before an eager
     checkpoint, or 0 to leave the layout alone.
 
@@ -100,21 +89,18 @@ def compact_width(
     block PER TASK is re-scanned by every consumer at full task count —
     pure scheduling overhead when the whole frame is a few hundred KB
     (guide §6: small files/partitions hurt twice).  Returns
-    ``ceil(estimated_bytes / bytes_per_part)`` when that is SMALLER
-    than the current partition count, else 0 — so it only ever shrinks
-    trivially small frames and is an identity at scale, where the
-    estimate (and hence the width) exceeds the existing layout.
-    ``bytes_per_part`` defaults to ``SPARK_GRAFT_COMPACT_BYTES_PER_PART``
-    (1 MiB): checkpoint blocks are uncompressed row data, far lighter
+    ``ceil(estimated_bytes / _COMPACT_BYTES_PER_PART)`` (1 MiB) when
+    that is SMALLER than the current partition count, else 0 — so it
+    only ever shrinks trivially small frames and is an identity at
+    scale, where the estimate (and hence the width) exceeds the existing
+    layout.  Checkpoint blocks are uncompressed row data, far lighter
     per row than the guide's on-disk 128 MB-1 GB file sizing."""
     if df.isStreaming:
         return 0
-    if bytes_per_part is None:
-        bytes_per_part = _COMPACT_BYTES_PER_PART
     size = _plan_size_bytes(df)
-    if size < 0 or bytes_per_part <= 0:
+    if size < 0:
         return 0
-    want = max(1, -(-size // bytes_per_part))
+    want = max(1, -(-size // _COMPACT_BYTES_PER_PART))
     try:
         current = df.rdd.getNumPartitions()
     except Exception:  # unconvertible plans: leave layout alone

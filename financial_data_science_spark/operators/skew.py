@@ -8,8 +8,8 @@ AQE's skew-join splitting handles moderate skew automatically
     fraction of all rows (e.g. one permno with billions of ticks).  A
     random salt splits each key across ``n_salts`` reducers for a partial
     aggregate; the tiny second pass merges the partials.  NOTE the
-    measured scope (tools/scale_probe_skew.py): for plain ALGEBRAIC
-    aggregates (sum/count/min/max/avg) Spark's map-side partial
+    measured scope (bdde7f0:tools/scale_probe_skew.py): for plain
+    ALGEBRAIC aggregates (sum/count/min/max/avg) Spark's map-side partial
     aggregation already compresses the hot key to one partial row per
     map task — salting those is an anti-optimization (extra shuffle,
     measured slower).  Salt the aggregates whose partial state Spark
@@ -54,7 +54,7 @@ def salted_aggregate(
     prefer the plain groupBy — hash aggregation's partial pass already
     bounds the hot reducer's input to one row per map task, and the
     salted form's extra (key, salt) shuffle only adds cost (measured:
-    tools/scale_probe_skew.py / SCALE.md).
+    bdde7f0:tools/scale_probe_skew.py / SCALE.md).
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
     salted = df.withColumn("__salt__", (F.rand(seed=7) * n_salts).cast("int"))

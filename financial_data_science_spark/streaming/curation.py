@@ -15,8 +15,8 @@ as broadcast scalars/sets:
                               score gate -> per-row band keys -> ONE
                               stateful dropDuplicates on the bucket key
 
-Measured (tools/scale_probe_docstream.py, SCALE.md): the fused DAG at
-50k docs costs 18.5s where the standalone novelty arm alone costs 45.3s
+Measured (bdde7f0:tools/scale_probe_docstream.py, SCALE.md): the fused
+DAG at 50k docs costs 18.5s where the standalone novelty arm alone costs 45.3s
 in the same run — the screen+gate prune docs before the bands x docs
 fan-out, so composition is strictly cheaper than its pieces.
 

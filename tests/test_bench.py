@@ -52,3 +52,19 @@ def test_bench_full_query_sets_fit_the_window():
          + len(bench.EXTENDED_QUERIES))
     est = 200 + 45 * n
     assert est < 3800, (n, est)
+
+
+def test_steal_pct_is_share_of_all_cpus():
+    """Two synthetic /proc/stat cpu lines 10 s apart on a 32-CPU host at
+    USER_HZ=100 (32,000 jiffies), 928 of them stolen: 2.9% of the CPU
+    time, where steal over one CPU's wall time would read 92.8%."""
+    import bench
+
+    start = bench.cpu_jiffies(
+        "cpu  1000 10 500 90000 200 0 30 5000 0 0")
+    end = bench.cpu_jiffies(
+        "cpu  13000 10 4500 104872 400 0 30 5928 0 0")
+    assert start == (5000, 96740)
+    assert end[1] - start[1] == 32 * 100 * 10
+    assert bench.steal_pct(start, end) == 2.9
+    assert bench.steal_pct(start, start) == 0.0

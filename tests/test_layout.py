@@ -38,7 +38,7 @@ def test_fan_out_widens_underspit_scan(spark):
 
 def test_fan_out_skips_trivially_small_frame(spark):
     """The r15 size floor: a frame whose optimizer estimate is below
-    SPARK_GRAFT_FAN_MIN_BYTES comes back IDENTITY — no exchange, no
+    layout._FAN_MIN_BYTES comes back IDENTITY — no exchange, no
     tasks spent parallelizing work smaller than the exchange itself."""
     from financial_data_science_spark.sources.testdata import load_table
 

@@ -1,0 +1,44 @@
+"""tools/measure.py in-process: ``time`` records and ``plans`` output on
+the session fixture at sf0.001.  ``ab`` starts JVMs in a git worktree,
+so it stays out of this suite."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+
+from tests.test_layout import SF
+
+NAMES = ["q1_pricing_summary", "hash_split_assign"]
+
+
+def _measure():
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "measure.py")
+    spec = importlib.util.spec_from_file_location("measure", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_time_records_bench_v3_fields(spark):
+    from financial_data_science_spark.queries import Q
+
+    measure = _measure()
+    out = measure.timings(spark, NAMES, SF)
+    assert list(out) == NAMES
+    for name, rec in out.items():
+        assert set(rec) == {"runs", "steal", "rows", "build", "warmup",
+                            "sig"}
+        assert len(rec["runs"]) == len(rec["steal"]) == measure.N_RUNS
+        assert all(0.0 <= s <= 100.0 for s in rec["steal"])
+        assert rec["rows"] == Q[name](spark, SF).count()
+        assert rec["sig"][0] == rec["rows"]
+
+
+def test_plans_writes_formatted_physical_plan(spark, tmp_path):
+    measure = _measure()
+    (path,) = measure.write_plans(spark, ["q1_pricing_summary"], SF,
+                                  str(tmp_path))
+    assert path == str(tmp_path / "q1_pricing_summary.txt")
+    assert "== Physical Plan ==" in open(path).read()

@@ -1,7 +1,7 @@
 """Full at-rest INDEX LIFECYCLE loop, run live for >= 20 batches.
 
-MIGRATION.md documents the ingestion loop; scale_probe_index_live
-measures the streaming probe half.  This probe runs the WHOLE cycle the
+MIGRATION.md documents the ingestion loop;
+bdde7f0:tools/scale_probe_index_live.py measures the streaming probe half.  This probe runs the WHOLE cycle the
 way a production ingest would — per batch N:
 
   1. re-open the at-rest index (minhash_read_index: params + frozen
