@@ -23,7 +23,10 @@ pairs, the REV side's IQR, and whether every run of both sides produced
 one content signature (exit status 1 if not).
 
 ``plans`` writes ``.explain("formatted")`` (the AQE initial plan) of
-each entry, all bench entries when none are named.
+each entry, all bench entries when none are named.  Session-counter ids
+(expression ids ``#123L``, lambda variable suffixes ``x_81``, exchange
+``plan_id=``, ``RDD[...]``) are stripped, so an unchanged plan writes an
+unchanged file and plan identity is ``git diff --exit-code plans/current``.
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ from __future__ import annotations
 import importlib.util
 import json
 import os
+import re
 import shutil
 import statistics
 import subprocess
@@ -41,6 +45,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PLANS_DIR = os.path.join(REPO, "plans", "current")
 N_RUNS = 3
 N_PAIRS = 10
+
+# Catalyst expression ids, lambda variable suffixes, then the plan and
+# RDD ids: all are drawn from session-wide counters, so they shift with
+# whatever ran before (or with the order a kernel builds its lambdas)
+_EXPR_ID = re.compile(r"#\d+L?\b")
+_LAMBDA_ID = re.compile(r"\b(lambda \w+?)_\d+\b")
+_NODE_ID = re.compile(r"(plan_id=|RDD\[)\d+")
 
 # an ab child: put the side's tree first on sys.path, then run `time`
 # with this file's harness
@@ -106,6 +117,8 @@ def write_plans(spark, names: list[str], sf_dir: str,
         df = _entry(name)(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
+        plan = _EXPR_ID.sub("", plan)
+        plan = _NODE_ID.sub(r"\1", _LAMBDA_ID.sub(r"\1", plan))
         path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
