@@ -302,14 +302,13 @@ def semantic_dedup_pairs(
     # dim from the index's trained centroid rows (coordinate means over
     # the corpus, so len == corpus dim) — replaces the r14 _vec_dim
     # one-row driver peek with ZERO jobs (r15, build-time shave); empty
-    # centroids fall back to the fold path exactly as a 0 peek did
+    # centroids mean an empty corpus, so the dim-0 chain scores no rows
     cents = index.get("centroids") or []
     dim = len(cents[0][1]) if cents else 0
     l = ranked.select(
         "cell",
         F.col(id_col).alias("left_id"),
-        *(_flat_cols(F.col(vec_col), "l", dim) if dim > 0
-          else [F.col(vec_col).alias("__lv__")]),
+        *_flat_cols(F.col(vec_col), "l", dim),
         _norm(F.col(vec_col)).alias("__lnorm__"),
         F.col("__rn__").alias("__lrn__"),
         F.col("__cnt__"),
@@ -317,21 +316,13 @@ def semantic_dedup_pairs(
     r = ranked.select(
         "cell",
         F.col(id_col).alias("right_id"),
-        *(_flat_cols(F.col(vec_col), "r", dim) if dim > 0
-          else [F.col(vec_col).alias("__rv__")]),
+        *_flat_cols(F.col(vec_col), "r", dim),
         _norm(F.col(vec_col)).alias("__rnorm__"),
         F.col("__rn__").alias("__rrn__"),
     )
-    if dim > 0:
-        raw_cos = _flat_dot("l", "r", dim) / (
-            F.col("__lnorm__") * F.col("__rnorm__")
-        )
-    else:
-        from financial_data_science_spark.functions.similarity import dot as _dot
-
-        raw_cos = _dot(F.col("__lv__"), F.col("__rv__")) / (
-            F.col("__lnorm__") * F.col("__rnorm__")
-        )
+    raw_cos = _flat_dot("l", "r", dim) / (
+        F.col("__lnorm__") * F.col("__rnorm__")
+    )
     # Two join arms so the JOIN FAN-OUT itself is bounded, not just the
     # emitted pairs: cells within cap join on the cell key (per-key
     # product <= cap^2); cells STILL over cap join on a rank-block key

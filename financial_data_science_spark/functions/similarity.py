@@ -44,88 +44,29 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-# _flat_gate's threshold on the corpus-side size estimate
-_FLAT_MIN_BYTES = 64 * 1024 * 1024
-
-
 def _vec_dim(df: DataFrame, vec_col: str) -> int:
-    """Array length of ``vec_col`` from ONE driver-side row — a bounded
-    peek (same class as the centroid/meta collects in this module), paid
-    at plan-build time.  Returns 0 on an empty frame, a null vector, or
-    a STREAMING frame (no eager job possible) so callers fall back to
-    the array-fold formulation.
+    """Array length of ``vec_col`` in the first row whose vector is
+    non-null — a bounded driver peek (same class as the centroid/meta
+    collects in this module), paid at plan-build time.  Returns 0 on an
+    empty or all-null frame, where the dim-0 flat chain gives what the
+    array fold would: no rows, or null scores.  A streaming frame
+    raises (no eager job is possible); the scoring kernels end in a
+    window function or a checkpoint, so none of them runs on a stream.
 
     Input contract (r15, flagged by the r14 advisor): the flat-unpacked
-    scoring paths gated on this peek assume UNIFORM vector dims.  A row
-    whose array is SHORTER than the peeked dim nulls out exactly like
-    the fold (missing getItem -> null product -> null sum); a row
-    LONGER than the peeked dim would score on its dim-prefix where the
-    fold nulls the pair (zip_with pads the shorter side) — so ragged
-    inputs mixing lengths ABOVE the peeked dim are outside the
-    contract.  Callers that must serve ragged corpora should pass the
-    fold path explicitly (dim=0).  Every embedding table in this repo
-    (and any real ANN corpus) is fixed-dim."""
-    if df.isStreaming:
-        return 0
-    row = df.select(F.size(F.col(vec_col)).alias("n")).first()
-    return int(row["n"]) if row is not None and row["n"] is not None else 0
-
-
-def _flat_gate(df: DataFrame, dim: int) -> int:
-    """SIZE-gate for flat-chain scoring: ``dim`` when ``df``'s optimizer
-    size estimate reaches ``_FLAT_MIN_BYTES`` (64 MiB), else 0 (callers
-    fall back to the interpreted fold).
-
-    Measured rationale (r15): a dim-unrolled multiply-add chain is a
-    fixed ~5*dim-node expression at EVERY scoring site — it wins per
-    ROW (whole-stage codegen vs an interpreted HOF fold) but pays a
-    fixed per-STAGE planning/AQE-replan cost for the bloated tree.  On
-    the sf0.1 bench corpora (2k vectors) that fixed cost exceeds the
-    per-row savings in the small ANN query paths (ann_sq8_topk measured
-    ~3x slower flat; the semdedup probes ~1.6x), while on large scored
-    sets it dominates the other way (embedding_near_dups's 356k-pair
-    scoring measured 2.6s fold -> sub-second flat in r14).  Gating on
-    the corpus-side size estimate keeps the toy-scale plan lean and
-    turns the flat chains on exactly where they pay: the estimate is
-    driver metadata (no job), and unknown estimates (streaming/RDD
-    lineages) fall back to the fold."""
-    if dim <= 0:
-        return 0
-    try:
-        from financial_data_science_spark.operators.layout import (
-            _plan_size_bytes,
-        )
-
-        size = _plan_size_bytes(df)
-    except Exception:  # pragma: no cover
-        return 0
-    return dim if size >= _FLAT_MIN_BYTES else 0
-
-
-def _flat_norm(vec: Column, dim: int) -> Column:
-    """L2 norm as a flat codegen multiply-add chain over ``vec[i]`` —
-    the dim-known replacement for the interpreted ``norm`` fold.
-    sqrt(((0.0 + v0*v0) + v1*v1) + ...) is the SAME IEEE addition
-    sequence as the ``dot(a, a)`` fold, so the double is bit-identical
-    (the ``_flat_dot`` argument applied to the self-dot)."""
-    acc = F.lit(0.0)
-    for i in range(dim):
-        v = vec.getItem(i).cast("double")
-        acc = acc + v * v
-    return F.sqrt(acc)
-
-
-def _flat_dot_arr(a: Column, b: Column, dim: int) -> Column:
-    """Dot product as a flat codegen chain DIRECTLY over two array
-    columns (``a[i]*b[i]`` via getItem) — for scoring projections where
-    both arrays are already in the row (post-join), so no named-column
-    unpack is needed.  Same IEEE addition sequence as the ``dot`` fold
-    (see ``_flat_dot``), so scores are bit-identical; a missing element
-    (null/short array) nulls the chain exactly as the fold does."""
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + a.getItem(i).cast("double") * b.getItem(i).cast("double")
-    return acc
+    scoring built on this peek assumes UNIFORM vector dims.  A row whose
+    array is SHORTER than the peeked dim nulls out exactly like the fold
+    (missing getItem -> null product -> null sum); a row LONGER than the
+    peeked dim scores on its dim-prefix where the fold nulls the pair
+    (zip_with pads the shorter side) — so ragged inputs mixing lengths
+    ABOVE the peeked dim are outside the contract.  Every embedding
+    table in this repo (and any real ANN corpus) is fixed-dim."""
+    row = (
+        df.filter(F.col(vec_col).isNotNull())
+        .select(F.size(F.col(vec_col)).alias("n"))
+        .first()
+    )
+    return 0 if row is None else int(row["n"])
 
 
 def _flat_cols(vec: Column, prefix: str, dim: int) -> list:
@@ -186,7 +127,7 @@ def cosine_topk(
     # |Q| + |C| norm folds instead of |Q|x|C|, ~1/3 the fold work on
     # the O(|Q|·|C|) score frame.  Scoring itself runs on FLAT-UNPACKED
     # columns (codegen multiply-add chain, bit-identical to the fold —
-    # see _flat_dot); the fold path remains as the dim-unknown fallback.
+    # see _flat_dot).
     # The corpus side fans out off an under-split scan so the |Q|x|C|
     # score projection parallelizes (row-local doubles; no-op at scale).
     # Dim peek runs BEFORE the fan (r15, advisor item): peeking the
@@ -194,32 +135,19 @@ def cosine_topk(
     # just to read one row.
     dim = _vec_dim(corpus, vec_col)
     corpus = fan_out_scan(corpus, id_col)
-    if dim > 0:
-        q = F.broadcast(
-            queries.select(
-                F.col(id_col).alias(query_id),
-                *_flat_cols(F.col(vec_col), "q", dim),
-                norm(F.col(vec_col)).alias("__qn__"),
-            )
+    q = F.broadcast(
+        queries.select(
+            F.col(id_col).alias(query_id),
+            *_flat_cols(F.col(vec_col), "q", dim),
+            norm(F.col(vec_col)).alias("__qn__"),
         )
-        corpus = corpus.select(
-            F.col(id_col),
-            *_flat_cols(F.col(vec_col), "c", dim),
-            norm(F.col(vec_col)).alias("__cn__"),
-        )
-        s = _flat_dot("q", "c", dim) / (F.col("__qn__") * F.col("__cn__"))
-    else:
-        q = F.broadcast(
-            queries.select(
-                F.col(id_col).alias(query_id),
-                F.col(vec_col).alias("__qv__"),
-                norm(F.col(vec_col)).alias("__qn__"),
-            )
-        )
-        corpus = corpus.withColumn("__cn__", norm(F.col(vec_col)))
-        s = dot(F.col("__qv__"), F.col(vec_col)) / (
-            F.col("__qn__") * F.col("__cn__")
-        )
+    )
+    corpus = corpus.select(
+        F.col(id_col),
+        *_flat_cols(F.col(vec_col), "c", dim),
+        norm(F.col(vec_col)).alias("__cn__"),
+    )
+    s = _flat_dot("q", "c", dim) / (F.col("__qn__") * F.col("__cn__"))
     if round_dp is not None:
         s = F.round(s, round_dp)
     scored = corpus.join(q, F.col(query_id) != F.col(id_col)).select(
@@ -426,41 +354,21 @@ def embedding_near_dups(
     # nulls the whole sum, exactly as the zip_with fold does.  The dim
     # comes from ONE first() row at plan-build time (a bounded driver
     # peek, same class as the centroid/meta collects elsewhere in this
-    # module); an empty frame falls back to the fold formulation.
+    # module; see _vec_dim for the empty/null cases).
     # Measured 1.87s -> 0.97s warm on the scored pipeline.  (r15: the
     # dim peek moved above the fan call; the hoisted norms STAY as the
     # interpreted fold — swapping them for flat self-dot chains was
     # measured SLOWER here, the per-stage plan-bloat cost again.)
-    if dim > 0:
-        vec = F.col(vec_col)
-        lv = emb.select(
-            ids.alias("left_id"),
-            *[vec.getItem(i).cast("double").alias(f"__l{i}__") for i in range(dim)],
-            norm(vec).alias("__ln__"),
-        )
-        rv = emb.select(
-            ids.alias("right_id"),
-            *[vec.getItem(i).cast("double").alias(f"__r{i}__") for i in range(dim)],
-            norm(vec).alias("__rn__"),
-        )
-        acc = F.lit(0.0)
-        for i in range(dim):
-            acc = acc + F.col(f"__l{i}__") * F.col(f"__r{i}__")
-        score = acc / (F.col("__ln__") * F.col("__rn__"))
-    else:
-        lv = emb.select(
-            ids.alias("left_id"),
-            F.col(vec_col).alias("__lv__"),
-            norm(F.col(vec_col)).alias("__ln__"),
-        )
-        rv = emb.select(
-            ids.alias("right_id"),
-            F.col(vec_col).alias("__rv__"),
-            norm(F.col(vec_col)).alias("__rn__"),
-        )
-        score = dot(F.col("__lv__"), F.col("__rv__")) / (
-            F.col("__ln__") * F.col("__rn__")
-        )
+    vec = F.col(vec_col)
+    lv = emb.select(
+        ids.alias("left_id"), *_flat_cols(vec, "l", dim),
+        norm(vec).alias("__ln__"),
+    )
+    rv = emb.select(
+        ids.alias("right_id"), *_flat_cols(vec, "r", dim),
+        norm(vec).alias("__rn__"),
+    )
+    score = _flat_dot("l", "r", dim) / (F.col("__ln__") * F.col("__rn__"))
     scored = cands.join(lv, "left_id").join(rv, "right_id").select(
         "left_id",
         "right_id",
@@ -1534,22 +1442,9 @@ def ivf_query_index(
     id_col, vec_col = index["id_col"], index["vec_col"]
     cent_rows, binned = index["centroids"], index["binned"]
     v = F.col(vec_col)
-    # FLAT in-list scoring (r15): the per-candidate dot/norm folds were
-    # the last interpreted (CodegenFallback) scoring stage in the IVF
-    # query path.  The vector dim comes from the trained centroid rows
-    # — coordinate means over the corpus, so len == corpus dim — with
-    # ZERO extra driver jobs (no _vec_dim peek); empty centroids fall
-    # back to the fold.  The flat chains are the same IEEE sequences as
-    # the folds (see _flat_dot/_flat_norm), so scores are bit-identical.
-    # SIZE-GATED on the corpus side (_flat_gate): at bench scale the
-    # chains' fixed plan-bloat cost exceeds the per-row savings; at
-    # corpus scale the per-row savings dominate.
-    dim = _flat_gate(binned, len(cent_rows[0][1]) if cent_rows else 0)
-    qn = (_flat_norm(F.col("__qv__"), dim) if dim > 0
-          else norm(F.col("__qv__")))
     probes = _probe_clusters(
         queries, id_col, vec_col, cent_rows, nprobe, query_id, keep=qkeep
-    ).withColumn("__qn__", qn)
+    ).withColumn("__qn__", norm(F.col("__qv__")))
     # probes is |Q| x nprobe rows — broadcast it so the corpus-side bin
     # join is map-side; a hash shuffle on the nlist-value cluster key
     # would cap parallelism at nlist and skew on popular lists.
@@ -1558,16 +1453,13 @@ def ivf_query_index(
     # bit-identical scores, see embedding_near_dups; the persisted
     # index schema is untouched (the corpus norm is a lazy projection
     # on top of the loaded/checkpointed binned frame)
-    binned = binned.withColumn(
-        "__cn__", _flat_norm(v, dim) if dim > 0 else norm(v)
-    )
+    binned = binned.withColumn("__cn__", norm(v))
     scored = F.broadcast(probes).join(binned, "cluster").filter(
         F.col(query_id) != F.col(id_col)
     )
     if candidate_filter is not None:
         scored = scored.filter(candidate_filter)
-    raw_dot = (_flat_dot_arr(F.col("__qv__"), v, dim) if dim > 0
-               else dot(F.col("__qv__"), v))
+    raw_dot = dot(F.col("__qv__"), v)
     scored = scored.select(
         query_id,
         *qkeep,
@@ -1998,35 +1890,20 @@ def rerank_exact(
     # per-vector norms hoisted into the fetch projections (bit-identical
     # to per-pair cosine() — see embedding_near_dups); exact scoring on
     # FLAT-UNPACKED columns (codegen multiply-add chain, bit-identical
-    # to the interpreted array fold — see _flat_dot), fold fallback when
-    # the dim peek comes back empty
+    # to the interpreted array fold — see _flat_dot)
     dim = _vec_dim(corpus, vec_col)
-    if dim > 0:
-        qv = corpus.select(
-            F.col(id_col).alias(query_id),
-            *_flat_cols(F.col(vec_col), "q", dim),
-            norm(F.col(vec_col)).alias("__qn__"),
-        )
-        nv = corpus.select(
-            F.col(id_col).alias(neighbor_id),
-            *_flat_cols(F.col(vec_col), "n", dim),
-            norm(F.col(vec_col)).alias("__nn__"),
-        )
-        raw_cos = _flat_dot("q", "n", dim) / (F.col("__qn__") * F.col("__nn__"))
-        raw_l2 = _flat_sqdist("q", "n", dim)
-    else:
-        qv = corpus.select(
-            F.col(id_col).alias(query_id), F.col(vec_col).alias("__qv__"),
-            norm(F.col(vec_col)).alias("__qn__"),
-        )
-        nv = corpus.select(
-            F.col(id_col).alias(neighbor_id), F.col(vec_col).alias("__nv__"),
-            norm(F.col(vec_col)).alias("__nn__"),
-        )
-        raw_cos = dot(F.col("__qv__"), F.col("__nv__")) / (
-            F.col("__qn__") * F.col("__nn__")
-        )
-        raw_l2 = sqdist(F.col("__qv__"), F.col("__nv__"))
+    qv = corpus.select(
+        F.col(id_col).alias(query_id),
+        *_flat_cols(F.col(vec_col), "q", dim),
+        norm(F.col(vec_col)).alias("__qn__"),
+    )
+    nv = corpus.select(
+        F.col(id_col).alias(neighbor_id),
+        *_flat_cols(F.col(vec_col), "n", dim),
+        norm(F.col(vec_col)).alias("__nn__"),
+    )
+    raw_cos = _flat_dot("q", "n", dim) / (F.col("__qn__") * F.col("__nn__"))
+    raw_l2 = _flat_sqdist("q", "n", dim)
     # candidates are |Q| x R pairs — small by construction — so FORCE the
     # broadcast (don't rely on autoBroadcastJoinThreshold seeing through
     # the projection): the full vector table must stream, never shuffle
@@ -2286,52 +2163,26 @@ def sq8_encode(
     # scan (codes are partitioning-independent; no-op at scale)
     corpus = fan_out_scan(corpus, id_col)
     v = F.col(vec_col)
-    if _flat_gate(corpus, len(mins) if mins and maxs else 0) > 0:
-        # FLAT encode (r15): mins/maxs are driver-side lists, so the
-        # interpreted zip_with + element_at-literal fold unrolls into an
-        # array() of per-dimension affine expressions that whole-stage
-        # codegen compiles.  Each element is the IDENTICAL arithmetic
-        # over the identical operands (element_at of the min/max
-        # literal == the literal element; the hi > lo guard is decided
-        # from the same doubles), so codes are bit-identical.  Assumes
-        # the repo-wide fixed-dim vector contract (see _vec_dim).
-        # SIZE-GATED (_flat_gate): fold below the estimate threshold —
-        # the 64-expression array is plan bloat the bench corpus never
-        # amortizes; at corpus scale the per-row win dominates.
-        def _enc(i: int) -> Column:
-            lo_i, hi_i = float(mins[i]), float(maxs[i])
-            if hi_i > lo_i:
-                inner = F.round(
-                    (v.getItem(i).cast("double") - F.lit(lo_i))
-                    / (F.lit(hi_i) - F.lit(lo_i))
-                    * 255
-                ).cast("int")
-            else:
-                inner = F.lit(0)
-            return F.least(F.lit(255), F.greatest(F.lit(0), inner))
-
-        code = F.array(*[_enc(i) for i in range(len(mins))])
-    else:
-        lo, hi = _dlist_literal(mins), _dlist_literal(maxs)
-        idx = F.sequence(F.lit(0), F.size(v) - 1)
-        code = F.zip_with(
-            v,
-            idx,
-            lambda x, i: F.least(
-                F.lit(255),
-                F.greatest(
-                    F.lit(0),
-                    F.when(
-                        F.element_at(hi, i + 1) > F.element_at(lo, i + 1),
-                        F.round(
-                            (x.cast("double") - F.element_at(lo, i + 1))
-                            / (F.element_at(hi, i + 1) - F.element_at(lo, i + 1))
-                            * 255
-                        ).cast("int"),
-                    ).otherwise(F.lit(0)),
-                ),
+    lo, hi = _dlist_literal(mins), _dlist_literal(maxs)
+    idx = F.sequence(F.lit(0), F.size(v) - 1)
+    code = F.zip_with(
+        v,
+        idx,
+        lambda x, i: F.least(
+            F.lit(255),
+            F.greatest(
+                F.lit(0),
+                F.when(
+                    F.element_at(hi, i + 1) > F.element_at(lo, i + 1),
+                    F.round(
+                        (x.cast("double") - F.element_at(lo, i + 1))
+                        / (F.element_at(hi, i + 1) - F.element_at(lo, i + 1))
+                        * 255
+                    ).cast("int"),
+                ).otherwise(F.lit(0)),
             ),
-        )
+        ),
+    )
     return corpus.select(id_col, code.alias(out))
 
 
@@ -2369,40 +2220,17 @@ def sq8_topk(
     # (query, corpus) pair — bit-identical scores (same decode
     # expression -> same doubles; see embedding_near_dups for the norm
     # argument).
-    # FLAT decode + scoring (r15): the dim is len(mins) (the per-dim
-    # census), so the zip_with dequantize becomes an array() of per-dim
-    # affine expressions, and the per-pair dot / per-row norms become
-    # codegen multiply-add chains — every per-element expression is the
-    # identical arithmetic over the identical operands (element_at of
-    # the min/max literal == the literal element), so decoded doubles
-    # and scores are bit-identical to the interpreted fold forms.
-    # SIZE-GATED on the corpus estimate (_flat_gate, r15 measurement):
-    # at bench scale the flat plan was ~3x SLOWER (fixed plan-bloat
-    # cost, 2k rows); the fold forms return below the threshold.
-    dim = _flat_gate(corpus, len(mins))
-    deq = F.array(
-        *[
-            F.lit(float(mins[i]))
-            + F.col("codes").getItem(i).cast("double")
-            / F.lit(255.0)
-            * (F.lit(float(maxs[i])) - F.lit(float(mins[i])))
-            for i in range(dim)
-        ]
-    ) if dim > 0 else sq8_dequantize(F.col("codes"), mins, maxs)
-    coded = coded.withColumn("__dv__", deq).withColumn(
-        "__cn__",
-        _flat_norm(F.col("__dv__"), dim) if dim > 0 else norm(F.col("__dv__")),
-    )
+    coded = coded.withColumn(
+        "__dv__", sq8_dequantize(F.col("codes"), mins, maxs)
+    ).withColumn("__cn__", norm(F.col("__dv__")))
     q = F.broadcast(
         queries.select(
             F.col(id_col).alias(query_id),
             F.col(vec_col).alias("__qv__"),
-            (_flat_norm(F.col(vec_col), dim) if dim > 0
-             else norm(F.col(vec_col))).alias("__qn__"),
+            norm(F.col(vec_col)).alias("__qn__"),
         )
     )
-    raw_dot = (_flat_dot_arr(F.col("__qv__"), F.col("__dv__"), dim)
-               if dim > 0 else dot(F.col("__qv__"), F.col("__dv__")))
+    raw_dot = dot(F.col("__qv__"), F.col("__dv__"))
     scored = coded.join(q, F.col(query_id) != F.col(id_col)).select(
         query_id,
         F.col(id_col).alias("neighbor_id"),

@@ -8308,7 +8308,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         _flat_cols,
         _flat_dot,
         _vec_dim,
-        dot,
         norm,
     )
     from financial_data_science_spark.operators.layout import fan_out_scan
@@ -8317,41 +8316,26 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same treatment as cosine_topk (r15): norms hoisted per side
     # (bit-identical), scoring on FLAT-UNPACKED columns (codegen
     # multiply-add chain, same IEEE order as the interpreted fold — the
-    # 200k-pair score frame is exactly the compute-dominated regime the
-    # r14 flat gate measured winning), and the corpus side fanned off an
-    # under-split scan so the |Q| x |C| projection parallelizes.  The
-    # fold path stays as the dim-unknown fallback.
+    # 200k-pair score frame is the compute-dominated regime where the
+    # chain measured winning in r14), and the corpus side fanned off an
+    # under-split scan so the |Q| x |C| projection parallelizes.
     dim = _vec_dim(emb, "embedding")
     corpus = fan_out_scan(emb, "vec_id")
-    if dim > 0:
-        q = F.broadcast(
-            emb.filter(F.col("vec_id") < 20).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("label").alias("qlabel"),
-                *_flat_cols(F.col("embedding"), "q", dim),
-                norm(F.col("embedding")).alias("__qn__"),
-            )
+    q = F.broadcast(
+        emb.filter(F.col("vec_id") < 20).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("label").alias("qlabel"),
+            *_flat_cols(F.col("embedding"), "q", dim),
+            norm(F.col("embedding")).alias("__qn__"),
         )
-        c = corpus.select(
-            "vec_id",
-            "label",
-            *_flat_cols(F.col("embedding"), "c", dim),
-            norm(F.col("embedding")).alias("__cn__"),
-        )
-        sexpr = _flat_dot("q", "c", dim) / (F.col("__qn__") * F.col("__cn__"))
-    else:
-        q = F.broadcast(
-            emb.filter(F.col("vec_id") < 20).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("label").alias("qlabel"),
-                F.col("embedding").alias("__qv__"),
-                norm(F.col("embedding")).alias("__qn__"),
-            )
-        )
-        c = corpus.withColumn("__cn__", norm(F.col("embedding")))
-        sexpr = dot(F.col("__qv__"), F.col("embedding")) / (
-            F.col("__qn__") * F.col("__cn__")
-        )
+    )
+    c = corpus.select(
+        "vec_id",
+        "label",
+        *_flat_cols(F.col("embedding"), "c", dim),
+        norm(F.col("embedding")).alias("__cn__"),
+    )
+    sexpr = _flat_dot("q", "c", dim) / (F.col("__qn__") * F.col("__cn__"))
     scored = c.join(q, F.col("label") != F.col("qlabel")).select(
         "query_id",
         "qlabel",
