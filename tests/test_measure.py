@@ -46,3 +46,15 @@ def test_plans_writes_formatted_physical_plan(spark, tmp_path):
     assert "== Physical Plan ==" in plan
     # expression ids are stripped, so plan diffs show only plan changes
     assert "l_returnflag" in plan and not re.search(r"#\d", plan)
+
+
+def test_plans_strip_checkpoint_call_site(spark, tmp_path):
+    """A checkpointed RDD's call site depends on session history
+    (``<unknown>:0`` or ``NativeMethodAccessorImpl.java:0``), so only
+    the operation name may be left."""
+    measure = _measure()
+    (path,) = measure.write_plans(spark, ["minhash_lsh_stopshingle"], SF,
+                                  str(tmp_path))
+    plan = open(path).read()
+    assert "RDD[] at localCheckpoint," in plan
+    assert not re.search(r"\.java:\d|<unknown>:\d", plan)

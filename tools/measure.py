@@ -25,8 +25,9 @@ one content signature (exit status 1 if not).
 ``plans`` writes ``.explain("formatted")`` (the AQE initial plan) of
 each entry, all bench entries when none are named.  Session-counter ids
 (expression ids ``#123L``, lambda variable suffixes ``x_81``, exchange
-``plan_id=``, ``RDD[...]``) are stripped, so an unchanged plan writes an
-unchanged file and plan identity is ``git diff --exit-code plans/current``.
+``plan_id=``, ``RDD[...]``) and RDD call sites (``at <unknown>:0``) are
+stripped, so an unchanged plan writes an unchanged file and plan
+identity is ``git diff --exit-code plans/current``.
 """
 
 from __future__ import annotations
@@ -52,6 +53,10 @@ N_PAIRS = 10
 _EXPR_ID = re.compile(r"#\d+L?\b")
 _LAMBDA_ID = re.compile(r"\b(lambda \w+?)_\d+\b")
 _NODE_ID = re.compile(r"(plan_id=|RDD\[)\d+")
+# the call site of a checkpointed RDD reads <unknown>:0 or
+# NativeMethodAccessorImpl.java:0 depending on how many reflective calls
+# the session made before, so keep only the RDD's operation name
+_CALL_SITE = re.compile(r"(RDD\[\] at \w+) at [^\s,]+")
 
 # an ab child: put the side's tree first on sys.path, then run `time`
 # with this file's harness
@@ -119,6 +124,7 @@ def write_plans(spark, names: list[str], sf_dir: str,
             df._jdf.queryExecution(), "formatted")
         plan = _EXPR_ID.sub("", plan)
         plan = _NODE_ID.sub(r"\1", _LAMBDA_ID.sub(r"\1", plan))
+        plan = _CALL_SITE.sub(r"\1", plan)
         path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
