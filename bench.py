@@ -152,47 +152,10 @@ def _production_stopshingle(spark, sf_dir):
 
 def _production_simhash(spark, sf_dir):
     """xxhash64 SimHash near-dup pairs: 16-bit band block + Hamming<=6."""
-    from pyspark.sql import functions as F
-
     from financial_data_science_spark.functions import similarity as SIM
     from financial_data_science_spark.sources.testdata import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
-    sig = SIM.simhash_signatures(docs, bits=62).select("doc_id", "simhash")
-    bands = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("simhash", 16 * b)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("key"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.key")
-    lt = bands.select(
-        F.col("doc_id").alias("left_id"), F.col("simhash").alias("sl"), "band", "key"
-    )
-    rt = bands.select(
-        F.col("doc_id").alias("right_id"), F.col("simhash").alias("sr"), "band", "key"
-    )
-    return (
-        lt.join(rt, ["band", "key"])
-        .filter(F.col("left_id") < F.col("right_id"))
-        .select(
-            "left_id",
-            "right_id",
-            SIM.hamming64(F.col("sl"), F.col("sr")).cast("long").alias("hamming"),
-        )
-        .dropDuplicates(["left_id", "right_id"])
-        .filter(F.col("hamming") <= 6)
-    )
+    return SIM.simhash_pairs(load_table(spark, sf_dir, "documents"))
 
 
 def _production_embedding_near_dups(spark, sf_dir):

@@ -26,8 +26,10 @@ minhash_candidates solves on the (small) increment; corpus-vs-corpus
 pairs were resolved when the corpus was ingested.  A doc id present on
 both sides is the "already ingested" case and is excluded.
 
-Signatures are per-doc-independent (no corpus statistics), so
-incremental results are EXACT: build+query on a (corpus, increment)
+Signatures are per-doc-independent (no corpus statistics), and the
+band layout (similarity.lsh_banded) and match-fraction estimate
+(similarity.sig_match_fraction) are the batch pipeline's own helpers,
+so incremental results are EXACT: build+query on a (corpus, increment)
 split yields precisely the cross-pair subset of a full batch run —
 pinned by parity test and by the DuckDB oracle of the
 ``minhash_index_increment`` catalog entry.  The one corpus-statistic
@@ -55,43 +57,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from financial_data_science_spark.functions.similarity import (
-    lsh_band_key as _band_key,
+    lsh_banded,
     minhash_signatures,
+    sig_match_fraction,
     stop_shingle_census,
 )
-
-
-def _banded(
-    sig: DataFrame,
-    id_col: str,
-    out_id: str,
-    num_hashes: int,
-    bands: int,
-    portable: bool,
-) -> DataFrame:
-    """(out_id, band, bhash) rows from a minhash_signatures frame.
-
-    The signature array is deliberately NOT carried through the band
-    explode: the bucket join shuffles 3 small ints per row, and the
-    similarity estimate re-joins the one-row-per-doc signature tables
-    AFTER pair dedup (the band_candidates lesson: hauling the k-long
-    array through both sides of the bucket join costs more than the
-    extra join)."""
-    rpb = num_hashes // bands
-    return sig.select(
-        F.col(id_col).alias(out_id),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _band_key(b, rpb, portable).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__band__"),
-    ).select(out_id, "__band__.band", "__band__.bhash")
 
 
 def minhash_build_index(
@@ -162,7 +132,7 @@ def minhash_build_index(
         # from text.  Checkpointing buckets/sigs independently instead
         # would run the full shingle/hash aggregate twice.
         sig = sig.localCheckpoint(eager=True)
-    buckets = _banded(sig, id_col, "corpus_id", num_hashes, bands, portable)
+    buckets = lsh_banded(sig, id_col, "corpus_id", num_hashes, bands, portable)
     sigs = sig.select(
         F.col(id_col).alias("corpus_id"), F.col("__sig__").alias("__csig__")
     )
@@ -212,7 +182,7 @@ def minhash_query_index(
         # stop set persisted with the index — never a per-batch census
         stop_frame=index.get("stop"),
     )
-    nb = _banded(
+    nb = lsh_banded(
         sig, id_col, "new_id", num_hashes, index["bands"], index["portable"]
     )
     pairs = (
@@ -224,22 +194,11 @@ def minhash_query_index(
     nsig = sig.select(
         F.col(id_col).alias("new_id"), F.col("__sig__").alias("__nsig__")
     )
-    matched = F.size(
-        F.filter(
-            F.zip_with(
-                F.col("__nsig__"), F.col("__csig__"), lambda a, b: a == b
-            ),
-            lambda x: x,
-        )
-    )
+    est = sig_match_fraction(F.col("__nsig__"), F.col("__csig__"), num_hashes)
     out = (
         pairs.join(nsig, "new_id")
         .join(index["sigs"], "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            (matched / F.lit(float(num_hashes))).alias("est_jaccard"),
-        )
+        .select("new_id", "corpus_id", est.alias("est_jaccard"))
     )
     if min_est is not None:
         out = out.filter(F.col("est_jaccard") >= min_est)

@@ -382,6 +382,18 @@ def embedding_near_dups(
 
 # ---------------------------------------------------------------- minhash
 
+def _minhash_coeffs(seed: int, n: int) -> list:
+    """The ``n`` affine pairs ``(a, b)`` mod 2^31-1 of the MinHash
+    family, drawn from ``random.Random(seed)``: the batch signatures and
+    the per-row band keys share them, so their values are identical."""
+    import random
+
+    from financial_data_science_spark.functions.porthash import MOD
+
+    rng = random.Random(seed)
+    return [(rng.randrange(1, MOD), rng.randrange(0, MOD)) for _ in range(n)]
+
+
 def minhash_band_keys(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -411,18 +423,16 @@ def minhash_band_keys(
     the batch path).  Works on static AND streaming frames; the k-wide
     expression stays manageable because ``num_hashes`` here is the
     streaming dial (default 8), not the batch 64."""
-    import random
-
     from financial_data_science_spark.functions.porthash import MOD, gram_hashes31
     from financial_data_science_spark.functions.text import tokens
 
-    assert num_hashes % bands == 0 and num_hashes // bands == 2, (
-        "band key fold is written for rows_per_band=2 (matches the "
-        "banded bucket join and its oracle)"
-    )
-    rng = random.Random(seed)
-    coeffs = [(rng.randrange(1, MOD), rng.randrange(0, MOD))
-              for _ in range(num_hashes)]
+    if num_hashes != 2 * bands:
+        raise ValueError(
+            f"minhash_band_keys: num_hashes={num_hashes}, bands={bands}; the "
+            "band key fold is written for rows_per_band=2 (matches the "
+            "banded bucket join and its oracle)"
+        )
+    coeffs = _minhash_coeffs(seed, num_hashes)
     # composed one-fold-per-token gram hashes (porthash.gram_hashes31);
     # its post-hash array_distinct changes nothing downstream — the
     # signature is an array_min and the emptiness filter sees distinct
@@ -451,6 +461,40 @@ def minhash_band_keys(
     other = [c for c in docs.columns if c != text_col and c != id_col]
     return (
         base.select(id_col, *other, F.posexplode(bkeys).alias("band", "bhash"))
+    )
+
+
+def _h64_shingles(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """(id, ``__h64__``) rows: each distinct k-shingle of a doc, hashed
+    with xxhash64 right at the explode — the production census key."""
+    return docs.select(
+        F.col(id_col),
+        F.explode(word_shingles(text_col, k)).alias("__shingle__"),
+    ).select(id_col, F.xxhash64("__shingle__").alias("__h64__"))
+
+
+def _stop_set(
+    exploded: DataFrame, key: str, max_df: float | int, docs: DataFrame
+) -> DataFrame:
+    """The ``key`` values of ``exploded`` found in more than ``max_df``
+    docs.  Shingles are per-doc distinct, so count(*) per shingle IS
+    the document frequency; sklearn-style dispatch on TYPE, not value:
+    float = fraction of ``docs`` (1.0 = keep everything), int =
+    absolute document count."""
+    if isinstance(max_df, float):
+        if not 0.0 < max_df <= 1.0:
+            raise ValueError(
+                f"float max_df must be a fraction in (0, 1], got {max_df}; "
+                "pass an int for an absolute document count"
+            )
+        limit = int(max_df * docs.count())
+    else:
+        limit = int(max_df)
+    return (
+        exploded.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("__df__"))
+        .filter(F.col("__df__") > limit)
+        .select(key)
     )
 
 
@@ -497,8 +541,6 @@ def minhash_signatures(
     production); mutually exclusive with ``max_df``, which would
     re-census and drift the kept-shingle set.
     """
-    import random
-
     if max_df is not None and stop_frame is not None:
         raise ValueError(
             "minhash_signatures: pass max_df (census THIS frame) or "
@@ -517,9 +559,8 @@ def minhash_signatures(
     # stage at plan-build time for a metadata-grade count.
     raw_docs = docs
     docs = fan_out_scan(docs, id_col)
-    rng = random.Random(seed)
     p = (1 << 31) - 1
-    coeffs = [(rng.randrange(1, p), rng.randrange(0, p)) for _ in range(num_hashes)]
+    coeffs = _minhash_coeffs(seed, num_hashes)
     tcol = F.col(text_col) if isinstance(text_col, str) else text_col
     if portable and max_df is None and stop_frame is None:
         # composed one-fold-per-token gram hashes, no string
@@ -575,10 +616,7 @@ def minhash_signatures(
         # not: a collision needs ~n^2/2^64 odds to merge two shingles'
         # counts (vs n^2/2^31 — real at corpus scale), which is why the
         # oracle path keeps its string census and this one does not.
-        exploded = docs.select(
-            F.col(id_col),
-            F.explode(word_shingles(text_col, shingle_k)).alias("__shingle__"),
-        ).select(id_col, F.xxhash64("__shingle__").alias("__h64__"))
+        exploded = _h64_shingles(docs, id_col, text_col, shingle_k)
     base_hash = (
         F.col("__h0pre__")
         if portable
@@ -602,25 +640,7 @@ def minhash_signatures(
         # frame's lineage is dropped (same lifecycle note as
         # embedding_near_dups) — not session-permanent.
         exploded = exploded.localCheckpoint(eager=True)
-        # shingles are per-doc distinct, so count(*) per shingle IS the
-        # document frequency; sklearn-style dispatch on TYPE, not value:
-        # float = fraction of the corpus (1.0 = keep everything), int =
-        # absolute document count
-        if isinstance(max_df, float):
-            if not 0.0 < max_df <= 1.0:
-                raise ValueError(
-                    f"float max_df must be a fraction in (0, 1], got {max_df}; "
-                    "pass an int for an absolute document count"
-                )
-            limit = int(max_df * raw_docs.count())
-        else:
-            limit = int(max_df)
-        stop = (
-            exploded.groupBy(census_key)
-            .agg(F.count(F.lit(1)).alias("__df__"))
-            .filter(F.col("__df__") > limit)
-            .select(census_key)
-        )
+        stop = _stop_set(exploded, census_key, max_df, raw_docs)
         exploded = exploded.join(F.broadcast(stop), census_key, "left_anti")
     elif stop_frame is not None:
         # frozen census: the stop set was computed elsewhere (the
@@ -662,6 +682,75 @@ def lsh_band_key(b: int, rows_per_band: int, portable: bool) -> Column:
     for c in cols:  # (acc*65537 + h) % p — h < p so products stay < 2^48
         acc = (acc * F.lit(65537) + c) % F.lit((1 << 31) - 1)
     return acc
+
+
+def lsh_banded(
+    sig: DataFrame,
+    id_col: str,
+    out_id: str,
+    num_hashes: int,
+    bands: int,
+    portable: bool,
+) -> DataFrame:
+    """(out_id, band, bhash) rows from a :func:`minhash_signatures`
+    frame — THE LSH band layout, shared by :func:`minhash_candidates`,
+    :func:`jaccard_pairs` and the incremental index.
+
+    The signature array is deliberately NOT carried through the band
+    explode: the bucket join shuffles 3 small ints per row, and callers
+    that need the similarity estimate re-join the one-row-per-doc
+    signatures AFTER pair dedup (hauling the k-long array through both
+    sides of the bucket join and zipping it per collision measured
+    ~2x slower than the extra join).
+
+    ``bands`` must divide ``num_hashes``: a remainder would band only
+    the leading hashes while the estimate still divides by all of
+    them."""
+    if bands <= 0 or num_hashes % bands:
+        raise ValueError(
+            f"lsh_banded: bands={bands} must divide num_hashes={num_hashes}"
+        )
+    rpb = num_hashes // bands
+    return sig.select(
+        F.col(id_col).alias(out_id),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        lsh_band_key(b, rpb, portable).alias("bhash"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("__band__"),
+    ).select(out_id, "__band__.band", "__band__.bhash")
+
+
+def _bucket_self_pairs(banded: DataFrame) -> DataFrame:
+    """Distinct ``(left_id, right_id)``, left < right, of the docs that
+    share a (band, bhash) bucket in an ``__id__``-keyed
+    :func:`lsh_banded` frame.  Self-join on one banded plan lets Spark
+    reuse the shuffle exchange for both sides."""
+    return (
+        banded.alias("l")
+        .join(banded.alias("r"), ["band", "bhash"])
+        .filter(F.col("l.__id__") < F.col("r.__id__"))
+        .select(
+            F.col("l.__id__").alias("left_id"),
+            F.col("r.__id__").alias("right_id"),
+        )
+        .dropDuplicates(["left_id", "right_id"])
+    )
+
+
+def sig_match_fraction(lsig: Column, rsig: Column, num_hashes: int) -> Column:
+    """Share of the ``num_hashes`` min-hashes two signatures agree on —
+    the MinHash estimate of their Jaccard similarity."""
+    matched = F.size(
+        F.filter(F.zip_with(lsig, rsig, lambda a, b: a == b), lambda x: x)
+    )
+    return matched / F.lit(float(num_hashes))
 
 
 def stop_shingle_census(
@@ -712,26 +801,9 @@ def stop_shingle_census(
         )
         census_key = "__shingle__"
     else:
-        exploded = docs.select(
-            F.col(id_col),
-            F.explode(word_shingles(text_col, shingle_k)).alias("__shingle__"),
-        ).select(id_col, F.xxhash64("__shingle__").alias("__h64__"))
+        exploded = _h64_shingles(docs, id_col, text_col, shingle_k)
         census_key = "__h64__"
-    if isinstance(max_df, float):
-        if not 0.0 < max_df <= 1.0:
-            raise ValueError(
-                f"float max_df must be a fraction in (0, 1], got {max_df}; "
-                "pass an int for an absolute document count"
-            )
-        limit = int(max_df * raw_docs.count())
-    else:
-        limit = int(max_df)
-    return (
-        exploded.groupBy(census_key)
-        .agg(F.count(F.lit(1)).alias("__df__"))
-        .filter(F.col("__df__") > limit)
-        .select(census_key)
-    )
+    return _stop_set(exploded, census_key, max_df, raw_docs)
 
 
 def minhash_candidates(
@@ -760,121 +832,30 @@ def minhash_candidates(
     ``max_df`` / ``stop_frame`` forward to :func:`minhash_signatures`
     (census here vs apply a frozen census).
     """
-    rows_per_band = num_hashes // bands
-
-    def band_key(b: int):
-        return lsh_band_key(b, rows_per_band, portable)
-
     sig = minhash_signatures(
         docs, id_col, text_col, shingle_k, num_hashes, seed, portable=portable,
         max_df=max_df, stop_frame=stop_frame,
     )
     # Bucket join on BARE (id, band, bhash) rows, THEN attach signatures
-    # by id to the deduped pairs (r14).  The previous shape hauled the
-    # k-long __sig__ array through BOTH sides of the band join — at
-    # k=64/bands=32 that is a 520-byte array on every one of the
-    # bands x docs rows (an ~88 MB broadcast build at sf0.1) and a
-    # per-COLLISION zip_with, where one per distinct pair suffices
-    # (est_jaccard is a function of the two signatures only, so every
-    # collision row of a pair carries the same value — dedup-then-score
-    # is value-identical).  The signature aggregate is referenced three
+    # by id to the deduped pairs (r14; at k=64/bands=32 the hauled
+    # array was an ~88 MB broadcast build at sf0.1).  est_jaccard is a
+    # function of the two signatures only, so dedup-then-score is
+    # value-identical.  The signature aggregate is referenced three
     # times (banded + both attach sides) but its doc_id exchange is
     # computed ONCE at runtime (AQE stage reuse; ReusedExchange
     # verified in the executed plan).  Measured 1.59s -> 1.40s warm on
     # the sf0.1 production entry, output frame equal row-for-row.
-    banded = sig.select(
-        F.col(id_col).alias("__id__"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_key(b).alias("bhash"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__band__"),
-    ).select("__id__", "__band__.band", "__band__.bhash")
-    pairs = (
-        banded.alias("l")
-        .join(banded.alias("r"), ["band", "bhash"])
-        .filter(F.col("l.__id__") < F.col("r.__id__"))
-        .select(
-            F.col("l.__id__").alias("left_id"),
-            F.col("r.__id__").alias("right_id"),
-        )
-        .dropDuplicates(["left_id", "right_id"])
+    pairs = _bucket_self_pairs(
+        lsh_banded(sig, id_col, "__id__", num_hashes, bands, portable)
     )
     ls = sig.select(F.col(id_col).alias("left_id"), F.col("__sig__").alias("__lsig__"))
     rs = sig.select(F.col(id_col).alias("right_id"), F.col("__sig__").alias("__rsig__"))
-    matched = F.size(
-        F.filter(
-            F.zip_with(F.col("__lsig__"), F.col("__rsig__"), lambda a, b: a == b),
-            lambda x: x,
-        )
-    )
+    est = sig_match_fraction(F.col("__lsig__"), F.col("__rsig__"), num_hashes)
     return (
         pairs.join(ls, "left_id")
         .join(rs, "right_id")
-        .select(
-            "left_id",
-            "right_id",
-            (matched / F.lit(float(num_hashes))).alias("est_jaccard"),
-        )
+        .select("left_id", "right_id", est.alias("est_jaccard"))
     )
-
-
-def band_candidates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 42,
-    max_df: float | int | None = None,
-) -> DataFrame:
-    """Bare LSH candidate pairs — band bucket join WITHOUT carrying the
-    signature array through the shuffle.
-
-    When every candidate is exactly verified downstream (jaccard_pairs),
-    the per-pair ``est_jaccard`` prefilter doesn't pay for itself: hauling
-    the k-long signature array through both sides of the bucket join and
-    zipping it per joined row costs more than exact-verifying the extra
-    candidates (measured ~2x on the warm path).  Self-join on one banded
-    plan also lets Spark reuse the shuffle exchange for both sides.
-    """
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(
-        docs, id_col, text_col, shingle_k, num_hashes, seed, max_df=max_df
-    )
-    banded = sig.select(
-        F.col(id_col).alias("__id__"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.hash(
-                            *[
-                                F.col(f"h{i}")
-                                for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                            ]
-                        ).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__band__"),
-    ).select("__id__", "__band__.band", "__band__.bhash")
-    pairs = (
-        banded.alias("l")
-        .join(banded.alias("r"), ["band", "bhash"])
-        .filter(F.col("l.__id__") < F.col("r.__id__"))
-        .select(
-            F.col("l.__id__").alias("left_id"),
-            F.col("r.__id__").alias("right_id"),
-        )
-    )
-    return pairs.dropDuplicates(["left_id", "right_id"])
 
 
 # ---------------------------------------------------------------- simhash
@@ -934,6 +915,38 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
+def simhash_pairs(docs: DataFrame, portable: bool = False) -> DataFrame:
+    """SimHash near-dup pairs ``(left_id, right_id, hamming)`` of a
+    ``doc_id, text`` frame: 62-bit fingerprints (see
+    :func:`simhash_signatures`; ``portable`` picks the token hash), pairs
+    blocked on any of four equal 16-bit bands, then Hamming <= 6."""
+    sig = simhash_signatures(docs, bits=62, portable=portable).select(
+        "doc_id", "simhash"
+    )
+    bands = sig.select(
+        "doc_id", "simhash",
+        F.explode(
+            F.array(*[
+                F.struct(F.lit(b).alias("band"),
+                         F.shiftright("simhash", 16 * b).bitwiseAND(F.lit(0xFFFF)).alias("key"))
+                for b in range(4)
+            ])
+        ).alias("bk"),
+    ).select("doc_id", "simhash", "bk.band", "bk.key")
+    l = bands.select(F.col("doc_id").alias("left_id"), F.col("simhash").alias("sl"), "band", "key")
+    r = bands.select(F.col("doc_id").alias("right_id"), F.col("simhash").alias("sr"), "band", "key")
+    pairs = (
+        l.join(r, ["band", "key"])
+        .filter(F.col("left_id") < F.col("right_id"))
+        .select(
+            "left_id", "right_id",
+            hamming64(F.col("sl"), F.col("sr")).cast("long").alias("hamming"),
+        )
+        .dropDuplicates(["left_id", "right_id"])
+    )
+    return pairs.filter(F.col("hamming") <= 6)
+
+
 # ---------------------------------------------------------------- jaccard
 
 def jaccard_pairs(
@@ -954,9 +967,10 @@ def jaccard_pairs(
 
     ``strategy='lsh'`` (default, scale path): MinHash-LSH candidates tuned
     for high recall at the threshold (r=2 rows/band, b=32 bands: collision
-    probability 1-(1-j^2)^32 = 0.9999 at j=0.5), then a cheap signature
-    estimate pre-filter, then EXACT Jaccard verification on the full
-    shingle arrays — only surviving pairs pay the array_intersect.  The
+    probability 1-(1-j^2)^32 = 0.9999 at j=0.5), then EXACT Jaccard
+    verification on the full shingle arrays.  There is no signature
+    estimate pre-filter: joining the signatures back per pair cost more
+    than exact-verifying the extra candidates (measured ~2x warm).  The
     reported jaccard is exact; completeness is bounded by LSH recall
     (>=99.99% at the threshold).
 
@@ -972,37 +986,48 @@ def jaccard_pairs(
         # codegen-fused recomputes).  Don't "deduplicate" this work.
         from financial_data_science_spark.operators.layout import fan_out_scan
 
-        cand = band_candidates(
-            docs, id_col, text_col, shingle_k=k, num_hashes=64, bands=32,
-            max_df=max_df,
-        )
+        sig = minhash_signatures(docs, id_col, text_col, k, 64, max_df=max_df)
+        cand = _bucket_self_pairs(lsh_banded(sig, id_col, "__id__", 64, 32, False))
         # fan the verify-side shingle build off an under-split scan
         # (shingle arrays are row-local; no-op at scale)
-        sh = (
-            fan_out_scan(docs, id_col)
-            .select(F.col(id_col), word_shingles(text_col, k).alias("__sh__"))
-            .withColumn("__n__", F.size("__sh__"))
-            .filter(F.col("__n__") > 0)
-        )
-        la = sh.select(F.col(id_col).alias("left_id"), F.col("__sh__").alias("__la__"),
-                       F.col("__n__").alias("__nl__"))
-        ra = sh.select(F.col(id_col).alias("right_id"), F.col("__sh__").alias("__ra__"),
-                       F.col("__n__").alias("__nr__"))
-        verified = (
-            cand.select("left_id", "right_id")
-            .join(la, "left_id")
-            .join(ra, "right_id")
-            .withColumn("__common__", F.size(F.array_intersect("__la__", "__ra__")))
-            .withColumn(
-                "jaccard",
-                F.col("__common__")
-                / (F.col("__nl__") + F.col("__nr__") - F.col("__common__")),
-            )
-        )
-        return verified.filter(F.col("jaccard") >= threshold).select(
-            "left_id", "right_id", "jaccard"
-        )
+        sh = _shingle_sets(fan_out_scan(docs, id_col), id_col, text_col, k)
+        return _verify_jaccard(cand, sh, id_col, threshold)
     return _jaccard_pairs_prefix(docs, id_col, text_col, k, threshold)
+
+
+def _shingle_sets(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """(id, ``__sh__`` distinct shingle array, ``__n__`` its size) for
+    every doc with at least one shingle."""
+    return (
+        docs.select(F.col(id_col), word_shingles(text_col, k).alias("__sh__"))
+        .withColumn("__n__", F.size("__sh__"))
+        .filter(F.col("__n__") > 0)
+    )
+
+
+def _verify_jaccard(
+    cand: DataFrame, sh: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """EXACT Jaccard of each ``(left_id, right_id)`` candidate on the
+    full :func:`_shingle_sets` arrays; keeps pairs at ``threshold`` or
+    above."""
+    la = sh.select(F.col(id_col).alias("left_id"), F.col("__sh__").alias("__la__"),
+                   F.col("__n__").alias("__nl__"))
+    ra = sh.select(F.col(id_col).alias("right_id"), F.col("__sh__").alias("__ra__"),
+                   F.col("__n__").alias("__nr__"))
+    verified = (
+        cand.join(la, "left_id")
+        .join(ra, "right_id")
+        .withColumn("__common__", F.size(F.array_intersect("__la__", "__ra__")))
+        .withColumn(
+            "jaccard",
+            F.col("__common__")
+            / (F.col("__nl__") + F.col("__nr__") - F.col("__common__")),
+        )
+    )
+    return verified.filter(F.col("jaccard") >= threshold).select(
+        "left_id", "right_id", "jaccard"
+    )
 
 
 def _jaccard_pairs_prefix(
@@ -1026,11 +1051,7 @@ def _jaccard_pairs_prefix(
     Shuffles: explode+count (df), explode+join (candidates), two id joins
     (verify) — all equi-joins on keys that stay balanced at scale.
     """
-    sh = (
-        docs.select(F.col(id_col), word_shingles(text_col, k).alias("__sh__"))
-        .withColumn("__n__", F.size("__sh__"))
-        .filter(F.col("__n__") > 0)
-    )
+    sh = _shingle_sets(docs, id_col, text_col, k)
     ex = sh.select(id_col, F.explode("__sh__").alias("shingle"))
     dfreq = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df__"))
     ordered = (
@@ -1072,23 +1093,7 @@ def _jaccard_pairs_prefix(
         .select("left_id", "right_id")
         .dropDuplicates(["left_id", "right_id"])
     )
-    la = sh.select(F.col(id_col).alias("left_id"), F.col("__sh__").alias("__la__"),
-                   F.col("__n__").alias("__nl__"))
-    ra = sh.select(F.col(id_col).alias("right_id"), F.col("__sh__").alias("__ra__"),
-                   F.col("__n__").alias("__nr__"))
-    verified = (
-        cand.join(la, "left_id")
-        .join(ra, "right_id")
-        .withColumn("__common__", F.size(F.array_intersect("__la__", "__ra__")))
-        .withColumn(
-            "jaccard",
-            F.col("__common__")
-            / (F.col("__nl__") + F.col("__nr__") - F.col("__common__")),
-        )
-    )
-    return verified.filter(F.col("jaccard") >= threshold).select(
-        "left_id", "right_id", "jaccard"
-    )
+    return _verify_jaccard(cand, sh, id_col, threshold)
 
 
 def exact_dedup(

@@ -1218,32 +1218,7 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     Portable 62-bit token hash (porthash.tokhash62) so the DuckDB oracle
     recomputes signatures and the band-blocked pair set exactly.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    sig = SIM.simhash_signatures(docs, bits=62, portable=True).select(
-        "doc_id", "simhash"
-    )
-    bands = sig.select(
-        "doc_id", "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band"),
-                         F.shiftright("simhash", 16 * b).bitwiseAND(F.lit(0xFFFF)).alias("key"))
-                for b in range(4)
-            ])
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.key")
-    l = bands.select(F.col("doc_id").alias("left_id"), F.col("simhash").alias("sl"), "band", "key")
-    r = bands.select(F.col("doc_id").alias("right_id"), F.col("simhash").alias("sr"), "band", "key")
-    pairs = (
-        l.join(r, ["band", "key"])
-        .filter(F.col("left_id") < F.col("right_id"))
-        .select(
-            "left_id", "right_id",
-            SIM.hamming64(F.col("sl"), F.col("sr")).cast("long").alias("hamming"),
-        )
-        .dropDuplicates(["left_id", "right_id"])
-    )
-    return pairs.filter(F.col("hamming") <= 6)
+    return SIM.simhash_pairs(load_table(spark, sf_dir, "documents"), portable=True)
 
 
 ORACLE["simhash_near_dups"] = _simhash_oracle_sql()

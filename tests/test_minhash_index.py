@@ -138,7 +138,7 @@ def test_at_rest_index_probe_skips_corpus_side_exchange(spark, tmp_path):
             inc, "doc_id", "text", PARAMS["shingle_k"],
             PARAMS["num_hashes"], PARAMS["seed"], portable=False,
         )
-        nb = MHI._banded(
+        nb = S.lsh_banded(
             sig, "doc_id", "new_id", PARAMS["num_hashes"],
             PARAMS["bands"], False,
         ).localCheckpoint(eager=True)

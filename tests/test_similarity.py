@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from financial_data_science_spark.functions import similarity as S
@@ -66,6 +67,41 @@ def test_simhash_near_dups_low_hamming(spark):
     assert h(0, 100) <= 12
     rand = [h(i, j) for i in range(5) for j in range(10, 15)]
     assert np.mean(rand) > 20
+
+
+def test_simhash_pairs_production_matches_brute_force(spark):
+    """The xxhash64 path has no SQL oracle: check its band blocking and
+    Hamming filter against every pair of its own fingerprints."""
+    docs = _docs(spark)
+    fp = dict(S.simhash_signatures(docs, bits=62).select("doc_id", "simhash")
+              .toPandas().to_numpy().tolist())
+    want = set()
+    for a in fp:
+        for b in fp:
+            if a < b:
+                x, y = int(fp[a]), int(fp[b])
+                shared = any((x >> 16 * k) & 0xFFFF == (y >> 16 * k) & 0xFFFF
+                             for k in range(4))
+                ham = bin(x ^ y).count("1")
+                if shared and ham <= 6:
+                    want.add((a, b, ham))
+    got = {tuple(map(int, r)) for r in S.simhash_pairs(docs).collect()}
+    assert (1, 200, 0) in want
+    assert got == want
+
+
+def test_lsh_bands_must_divide_num_hashes(spark):
+    # 64 hashes in 24 bands would band only h0..h47 while the estimate
+    # still divides by 64
+    docs = _docs(spark)
+    with pytest.raises(ValueError, match="must divide"):
+        S.minhash_candidates(docs, num_hashes=64, bands=24)
+
+
+def test_minhash_band_keys_rejects_rows_per_band_other_than_two(spark):
+    docs = _docs(spark)
+    with pytest.raises(ValueError, match="rows_per_band=2"):
+        S.minhash_band_keys(docs, num_hashes=12, bands=4)
 
 
 def test_cosine_topk_vs_numpy(spark):
