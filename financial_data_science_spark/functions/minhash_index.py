@@ -364,12 +364,12 @@ def minhash_compact_index(
     per append (the O(batch) write that keeps ingestion cheap) — after
     B batches the bucket table is B x n_buckets files and every probe
     pays B-fold open/footer overhead (measured growth in
-    tools/scale_probe_index_lifecycle.py: 32 files/batch).  This is the
-    maintenance job a deployment schedules between batches: read, eagerly
-    materialize (a plan cannot overwrite a table it scans), rewrite
-    bucketed+sorted exactly as the original write, so probe plans — and
-    their exchange-free corpus side — are unchanged.  Results are
-    row-identical; only the file layout changes.
+    ee5f3ba:tools/scale_probe_index_lifecycle.py: 32 files/batch).  This
+    is the maintenance job a deployment schedules between batches: read,
+    eagerly materialize (a plan cannot overwrite a table it scans),
+    rewrite bucketed+sorted exactly as the original write, so probe
+    plans — and their exchange-free corpus side — are unchanged.
+    Results are row-identical; only the file layout changes.
 
     The meta/stop tables are one-row/tiny and never appended to, so
     they are left alone.  Single-process stance matches the rest of the

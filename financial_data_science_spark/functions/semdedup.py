@@ -90,7 +90,7 @@ def kmeans_cell_split(
     spread sample; the lowest-id rule the top-level quantizer uses
     fails exactly on the mega-cell case, where the lowest ids can all
     sit in one corner and a single sub-centroid then captures the whole
-    blob — measured in tools/scale_probe_semdedup.py), coordinates
+    blob — measured in ee5f3ba:tools/scale_probe_semdedup.py), coordinates
     rounded to 6dp; each sweep assigns members to the argmax of
     ``round(cosine, 6)`` with ties to the lowest sub id and
     re-estimates centroids as 6dp-rounded coordinate means; a final
@@ -573,7 +573,7 @@ def semdedup_query_index(
       ids follow ingestion order), everything past rank ``cap`` is
       invisible — measured 0.14-0.20 decision recall on planted
       20-member families in a 764-member cell at tau above the
-      inter-family cosine (tools/scale_probe_semdedup.py, probe-recall
+      inter-family cosine (ee5f3ba:tools/scale_probe_semdedup.py, probe-recall
       FAMILY rows).
     - ``"stratified"``: every ``ceil(cnt/cap)``-th id-rank (ranks with
       ``(rn-1) % step == 0``), <= ``cap`` members evenly spaced over
@@ -679,7 +679,7 @@ def semdedup_query_with_pool(
     frozen index and the un-indexed ACCUMULATION POOL (the accepted
     survivors of batches since the last rebuild), in one DataFrame.
 
-    Why it exists (measured, tools/scale_probe_semdedup.py drift arm):
+    Why it exists (measured, ee5f3ba:tools/scale_probe_semdedup.py drift arm):
     a frozen index's recall decays purely through accumulation — over
     20 drifted batches decision recall fell 1.000 -> 0.268 while
     base-corpus dups stayed fully caught, and the pool-hit share

@@ -5923,7 +5923,7 @@ def semdedup_probe_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen index, same O(batch x cap) bound, but the <= cap
     representatives of a cell the splitter could not break are every
     ceil(cnt/cap)-th id-rank instead of the cap LOWEST ids.  Why it
-    exists (measured, tools/scale_probe_semdedup.py probe-recall
+    exists (measured, ee5f3ba:tools/scale_probe_semdedup.py probe-recall
     FAMILY rows): corpus ids follow ingestion order and real duplicate
     families cluster in it (crawl-adjacent boilerplate), so a probe's
     whole witness set is one contiguous id-run — the lowest-id policy

@@ -484,7 +484,7 @@ def test_compact_index_preserves_probe_and_shrinks_files(spark, tmp_path):
 
 def test_append_after_compact_equals_rebuild(spark, tmp_path):
     """Compaction mid-ingestion must compose with later appends (the
-    r13 lifecycle-loop shape, tools/scale_probe_index_lifecycle.py):
+    r13 lifecycle-loop shape, ee5f3ba:tools/scale_probe_index_lifecycle.py):
     build -> append -> COMPACT -> append again -> probe must equal a
     from-scratch rebuild over the same docs — compaction only changes
     the file layout, so rows appended after it land in the same bucket

@@ -500,7 +500,7 @@ def test_pool_cap_bounds_burst_but_keeps_witness(spark):
 
 def test_rebuild_cycle_restores_index_recall_and_drains_pool(spark):
     """The CLOSED lifecycle loop (r13 verdict item 2), pytest twin of
-    the rebuild_cycle arm in tools/scale_probe_semdedup.py: run the
+    the rebuild_cycle arm in ee5f3ba:tools/scale_probe_semdedup.py: run the
     MIGRATION.md recipe end-to-end — probe with pool, trigger =
     pool-hit share, rebuild past tolerance, re-probe — and pin each
     phase: (1) between rebuilds the lifecycle frame still decides a
