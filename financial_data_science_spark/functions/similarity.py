@@ -700,8 +700,7 @@ def lsh_banded(
     explode: the bucket join shuffles 3 small ints per row, and callers
     that need the similarity estimate re-join the one-row-per-doc
     signatures AFTER pair dedup (hauling the k-long array through both
-    sides of the bucket join and zipping it per collision measured
-    ~2x slower than the extra join).
+    sides of the bucket join costs more than the extra join).
 
     ``bands`` must divide ``num_hashes``: a remainder would band only
     the leading hashes while the estimate still divides by all of
