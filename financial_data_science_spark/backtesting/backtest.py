@@ -148,13 +148,15 @@ def portfolio_returns(
     constituent returns within each (beg, end] holding period (A4), join
     holdings on (rebaldate=beg, permno), weighted-sum per period."""
     per = compound_intervals(daily, intervals, "permno", ret_col=ret_col, alias="pret")
+    # named keys: holdings derived from ``daily`` (checkpointed or not)
+    # share its permno attribute, so ``holdings.permno == per.permno``
+    # would be a trivially-true predicate that only worked because
+    # Dataset.join re-resolves it
     j = holdings.join(
-        per,
-        (holdings.rebaldate == per.beg) & (holdings.permno == per.permno),
-        "inner",
+        per.withColumnRenamed("beg", "rebaldate"), ["rebaldate", "permno"], "inner"
     )
     return (
-        j.groupBy("beg", "end")
+        j.groupBy(F.col("rebaldate").alias("beg"), "end")
         .agg(
             F.sum(F.col("weight") * F.coalesce("pret", F.lit(0.0))).alias("ret"),
             F.count(F.lit(1)).alias("n_holdings"),

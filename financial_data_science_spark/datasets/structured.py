@@ -16,7 +16,7 @@ Conventions preserved from the reference:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from financial_data_science_spark.operators import (
@@ -24,11 +24,16 @@ from financial_data_science_spark.operators import (
     compound_intervals,
     compound_returns,
     event_window,
-    fractile_split,
     prevailing,
 )
 from financial_data_science_spark.operators.compounding import delist_adjusted_ret
+from financial_data_science_spark.operators.fractiles import bucket_expr, quantiles_expr
 from financial_data_science_spark.plans.calendar import TradingCalendar
+
+
+def _with_capco(cap: DataFrame) -> DataFrame:
+    """Permco-aggregated cap (J10) as a window-sum, no re-join."""
+    return cap.withColumn("capco", F.sum("cap").over(Window.partitionBy("permco")))
 
 
 class Stocks:
@@ -112,11 +117,29 @@ class CRSP(Stocks):
         self.dist = dist
         self.delist = delist
 
+    def _names_section(self, date: int, fields: list[str]) -> DataFrame:
+        """Prevailing ``names`` row per permno at ``date`` (J7)."""
+        return prevailing(
+            self.names.select("permno", "date", *fields), "permno", "date",
+            asof=date,
+        ).select("permno", *fields)
+
     def get_cap(self, date: int, use_shares: bool = False,
                 use_permco: bool = False) -> DataFrame:
         """Market cap cross-section (crsp.py:130-188): abs(prc) x shrout,
         optionally shares-table shrout (prevailing interval row J14) and
         permco-aggregated cap (J10 via window-sum, no re-join)."""
+        cap = self._cap_section(date, use_shares)
+        if use_permco:
+            if self.names is None:
+                raise ValueError("use_permco requires names table")
+            cap = _with_capco(
+                cap.join(F.broadcast(self._names_section(date, ["permco"])),
+                         "permno", "inner")
+            )
+        return cap
+
+    def _cap_section(self, date: int, use_shares: bool) -> DataFrame:
         sec = self.get_section("daily", ["prc", "shrout"], date)
         if use_shares:
             if self.shares is None:
@@ -129,39 +152,30 @@ class CRSP(Stocks):
             sec = sec.join(sh, "permno", "left").withColumn(
                 "shrout", F.coalesce("shrout_sh", "shrout")
             ).drop("shrout_sh")
-        cap = sec.withColumn("cap", F.abs(F.col("prc")) * F.col("shrout"))
-        if use_permco:
-            if self.names is None:
-                raise ValueError("use_permco requires names table")
-            nm = prevailing(
-                self.names.select("permno", "date", "permco"), "permno", "date",
-                asof=date,
-            ).select("permno", "permco")
-            from pyspark.sql import Window
-
-            cap = cap.join(F.broadcast(nm), "permno", "inner").withColumn(
-                "capco", F.sum("cap").over(Window.partitionBy("permco"))
-            )
-        return cap
+        return sec.withColumn("cap", F.abs(F.col("prc")) * F.col("shrout"))
 
     def get_universe(self, date: int, min_cap: float = 0.0) -> DataFrame:
         """P9/J9: investable universe screen at a date (crsp.py:203-252):
-        shrcd in (10,11), exchcd in (1,2,3), cap>0, NYSE-breakpoint decile."""
+        shrcd in (10,11), exchcd in (1,2,3), cap>0, NYSE-breakpoint decile.
+
+        One cross-section: the ``names`` section is taken once with
+        permco, shrcd and exchcd, and the NYSE breakpoints are a window
+        aggregate over the screened rows, not ``fractile_split``'s
+        broadcast of a second aggregate.  That second branch pruned
+        different columns and pushed ``exchcd == 1`` into its scans, so
+        no exchange was reused and the daily/shares/names lineage ran
+        twice per call."""
         if self.names is None:
             raise ValueError("get_universe requires names table")
-        cap = self.get_cap(date, use_shares=self.shares is not None, use_permco=True)
-        nm = prevailing(
-            self.names.select("permno", "date", "shrcd", "exchcd"), "permno",
-            "date", asof=date,
-        ).select("permno", "shrcd", "exchcd")
-        uni = (
-            cap.join(F.broadcast(nm), "permno", "inner")
-            .filter(
-                F.col("shrcd").isin(10, 11)
-                & F.col("exchcd").isin(1, 2, 3)
-                & (F.col("cap") > min_cap)
-                & (F.col("capco") > 0)
-            )
+        nm = self._names_section(date, ["permco", "shrcd", "exchcd"])
+        cap = self._cap_section(date, use_shares=self.shares is not None)
+        # capco sums over every security of the permco before the screen,
+        # as get_cap(use_permco=True) does
+        uni = _with_capco(cap.join(F.broadcast(nm), "permno", "inner")).filter(
+            F.col("shrcd").isin(10, 11)
+            & F.col("exchcd").isin(1, 2, 3)
+            & (F.col("cap") > min_cap)
+            & (F.col("capco") > 0)
         )
         # capco is a float window-SUM shared by every row of a permco, so
         # decile breakpoints routinely land EXACTLY on tied capco values;
@@ -170,9 +184,18 @@ class CRSP(Stocks):
         # Fixing the precision before breakpoints+bucketing makes the split
         # deterministic (6 dp ~ 1e9x the ulp of a dollar-scale cap).
         uni = uni.withColumn("capco", F.round("capco", 6))
-        return fractile_split(
-            uni, "capco", key_filter=F.col("exchcd") == 1, out="decile",
-            ascending=False, exact=True,
+        # exact NYSE decile breakpoints, bucketed strictly descending
+        # (fractile_split's semantics).  Bounded by construction: the
+        # window holds one row per security at one date.
+        probs = F.array(*[F.lit(p / 10.0) for p in range(1, 10)])
+        nyse = F.when(F.col("exchcd") == 1, F.col("capco").cast("double"))
+        breaks = quantiles_expr(nyse, probs, exact=True).over(
+            Window.partitionBy(F.lit(0))
+        )
+        cols = [c for c in uni.columns if c not in ("shrcd", "exchcd")]
+        return uni.select(
+            *cols, "shrcd", "exchcd",
+            bucket_expr("capco", breaks, ascending=False).alias("decile"),
         )
 
     def get_divamt(self, beg: int, end: int) -> DataFrame:

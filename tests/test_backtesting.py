@@ -69,6 +69,32 @@ def test_portfolio_returns_hand_case(spark):
     np.testing.assert_allclose(out["ret"].iloc[0], want, rtol=1e-12)
 
 
+def test_portfolio_returns_holdings_from_daily(spark, daily, daily_pdf):
+    """Holdings derived from the same ``daily`` frame share its permno
+    attribute: the join must still pair each holding with its own
+    security's compounded return."""
+    begs = [20230131, 20230228, 20230331]
+    intervals = spark.createDataFrame(
+        pd.DataFrame({"beg": begs, "end": begs[1:] + [20230428]})
+    )
+    holdings = daily.filter(F.col("date").isin(begs)).select(
+        F.col("date").alias("rebaldate"),
+        "permno",
+        (F.col("permno") - 10000).cast("double").alias("weight"),
+    )
+    got = portfolio_returns(holdings, daily, intervals).toPandas().set_index("beg")
+    ends = dict(zip(begs, begs[1:] + [20230428]))
+    for beg, end in ends.items():
+        held = daily_pdf[daily_pdf.date == beg]["permno"]
+        win = daily_pdf[(daily_pdf.date > beg) & (daily_pdf.date <= end)]
+        comp = win.groupby("permno")["ret"].apply(
+            lambda s: np.prod(1 + s.dropna()) - 1 if s.notna().any() else 0.0
+        )
+        want = sum((p - 10000) * comp[p] for p in held if p in comp.index)
+        np.testing.assert_allclose(got.loc[beg, "ret"], want, rtol=1e-12)
+        assert got.loc[beg, "end"] == end
+
+
 def test_turnover_deltas(spark):
     holdings = spark.createDataFrame(
         pd.DataFrame(

@@ -88,3 +88,24 @@ def test_june_universe_and_december_fiscal(spark):
             assert r.june_universe == want_june, (r.d, r.june_universe, want_june)
         if want_dec is not None:
             assert r.december_fiscal == want_dec, (r.d, r.december_fiscal, want_dec)
+
+
+def test_calendar_reads_do_not_rescan_the_source(spark):
+    """The dim is materialized at construction: plans over it carry no
+    scan of the frame it was built from, and its joins stay broadcast."""
+    from financial_data_science_spark.sources.testdata import load_table
+
+    sf = "/root/testdata/sf0.001"
+    li = load_table(spark, sf, "lineitem")
+    cal = TradingCalendar.from_dates(li.select(F.col("l_shipdate").alias("date")))
+    o = load_table(spark, sf, "orders").select("o_orderkey", "o_orderdate")
+    plans = {
+        "date_tuples": cal.date_tuples("1995-01-01", "1996-12-31", "month"),
+        "offset": cal.offset(o, "o_orderdate", 1, out="next_d"),
+    }
+    for name, df in plans.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "lineitem" not in plan, (name, plan)
+    offset_plan = plans["offset"]._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in offset_plan
+    assert "SortMergeJoin" not in offset_plan

@@ -52,6 +52,85 @@ def test_get_universe_screens(crsp):
     assert top >= bot
 
 
+def _final_plan(df) -> str:
+    """The executed (AQE final) plan of ``df`` after running it."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_get_universe_scans_each_input_once(spark, daily_pdf, names_pdf, tmp_path):
+    """One cross-section: names, daily and shares are each scanned once,
+    and the NYSE breakpoints are no broadcast cross join."""
+    shares_pdf = (
+        daily_pdf[daily_pdf.date.isin([20220103, 20230103])]
+        .rename(columns={"date": "shrsdt"})[["permno", "shrsdt", "shrout"]]
+    )
+    frames = {}
+    for name, pdf in (("daily", daily_pdf), ("names", names_pdf), ("shares", shares_pdf)):
+        pdf.to_parquet(tmp_path / name, index=False)
+        frames[name] = spark.read.parquet(str(tmp_path / name))
+    crsp = CRSP(frames["daily"], names=frames["names"], shares=frames["shares"])
+    plan = _final_plan(crsp.get_universe(20230331))
+    for name in frames:
+        assert plan.count(f"/{name}]") == 1, (name, plan)
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_get_universe_deciles_match_numpy(spark):
+    """Deciles vs numpy: NYSE-only linear-percentile breakpoints on 6-dp
+    capco, strict searchsorted, descending.  Permnos 5 and 6 share a
+    permco (both NYSE), so their tied capco IS a breakpoint; permno 20
+    (exchange 2) shares permno 2's permco and ties its capco; permno 30
+    (share code 12, screened out) still counts toward permno 8's capco."""
+    d = 20230331
+    caps = {p: 100.0 * p + 7.0 * (p % 3) for p in range(1, 12)}  # 11 NYSE
+    caps.update({20: 55.0, 21: 180.5, 22: 1000.0, 23: 3.0, 30: 40.0, 31: 500.0})
+    exch = {p: 1 for p in range(1, 12)}
+    exch.update({20: 2, 21: 3, 22: 2, 23: 3, 30: 1, 31: 4})
+    permco = {p: 700 + p for p in caps}
+    permco.update({6: permco[5], 20: permco[2], 30: permco[8]})
+    rows = []
+    for p, c in caps.items():
+        rows.append((p, d - 30, 1.0, 1.0))  # an older row the section skips
+        rows.append((p, d, -2.0 if p % 4 == 0 else 2.0, c / 2.0))
+    daily = pd.DataFrame(rows, columns=["permno", "date", "prc", "shrout"])
+    names = pd.DataFrame(
+        {
+            "permno": list(caps),
+            "date": [20200101] * len(caps),
+            "shrcd": [12 if p == 30 else 10 + p % 2 for p in caps],
+            "exchcd": [exch[p] for p in caps],
+            "permco": [permco[p] for p in caps],
+        }
+    )
+    crsp = CRSP(spark.createDataFrame(daily), names=spark.createDataFrame(names))
+    got = crsp.get_universe(d).toPandas().set_index("permno")
+
+    sec = daily[daily.date <= d].sort_values("date").groupby("permno").last()
+    ref = names.drop(columns="date").set_index("permno").join(sec, how="inner")
+    ref["cap"] = ref["prc"].abs() * ref["shrout"]
+    ref["capco"] = ref.groupby("permco")["cap"].transform("sum")
+    ref = ref[
+        ref.shrcd.isin([10, 11]) & ref.exchcd.isin([1, 2, 3])
+        & (ref.cap > 0) & (ref.capco > 0)
+    ].copy()
+    ref["capco"] = ref["capco"].round(6)
+    bp = np.percentile(
+        ref.loc[ref.exchcd == 1, "capco"], list(range(10, 100, 10)), method="linear"
+    )
+    ref["decile"] = len(bp) + 1 - np.searchsorted(bp, ref["capco"], side="left")
+
+    assert ref.loc[5, "capco"] == ref.loc[6, "capco"] and ref.loc[5, "capco"] in bp
+    assert ref.loc[20, "capco"] == ref.loc[2, "capco"] and ref.loc[2, "capco"] in bp
+    assert sorted(got.index) == sorted(ref.index)
+    got = got.loc[ref.index]
+    np.testing.assert_allclose(got["capco"], ref["capco"], rtol=0, atol=0)
+    assert got["decile"].tolist() == ref["decile"].tolist()
+
+
 def test_get_ret_with_delist(spark, monthly_pdf, daily):
     crsp = CRSP(daily, monthly=spark.createDataFrame(monthly_pdf))
     got = (
