@@ -160,11 +160,10 @@ class CRSP(Stocks):
 
         One cross-section: the ``names`` section is taken once with
         permco, shrcd and exchcd, and the NYSE breakpoints are a window
-        aggregate over the screened rows, not ``fractile_split``'s
-        broadcast of a second aggregate.  That second branch pruned
-        different columns and pushed ``exchcd == 1`` into its scans, so
-        no exchange was reused and the daily/shares/names lineage ran
-        twice per call."""
+        aggregate over the screened rows.  ``fractile_split``'s broadcast
+        breakpoint branch would prune other columns and push
+        ``exchcd == 1`` into its own scans, so no exchange is reused and
+        the daily/shares/names lineage would run twice."""
         if self.names is None:
             raise ValueError("get_universe requires names table")
         nm = self._names_section(date, ["permco", "shrcd", "exchcd"])

@@ -490,10 +490,9 @@ def event_window_trading_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     appeared), so the "shared" calendar subtrees just upgraded two
     cheap distinct-date scans into two extra full panel aggregates.
     Timing was par at best.  A real single walk needs a materialization
-    boundary.  ``TradingCalendar.from_dates`` now is one: it checkpoints
-    the dim when the query is built, so the calendar's distinct-date
-    lineitem pass runs at build and the timed plan reads the dim's rows
-    (build and timed are reported side by side in CHANGES.md)."""
+    boundary: ``TradingCalendar.from_dates`` checkpoints the dim when the
+    query is built, so the calendar's distinct-date lineitem pass runs at
+    build and the timed plan reads the dim's rows."""
     li = load_table(spark, sf_dir, "lineitem")
     panel = li.groupBy("l_suppkey", F.col("l_shipdate").alias("d")).agg(
         _r(F.sum("l_quantity"), 2).alias("qty")

@@ -74,17 +74,15 @@ def test_portfolio_returns_holdings_from_daily(spark, daily, daily_pdf):
     attribute: the join must still pair each holding with its own
     security's compounded return."""
     begs = [20230131, 20230228, 20230331]
-    intervals = spark.createDataFrame(
-        pd.DataFrame({"beg": begs, "end": begs[1:] + [20230428]})
-    )
+    ends = begs[1:] + [20230428]
+    intervals = spark.createDataFrame(pd.DataFrame({"beg": begs, "end": ends}))
     holdings = daily.filter(F.col("date").isin(begs)).select(
         F.col("date").alias("rebaldate"),
         "permno",
         (F.col("permno") - 10000).cast("double").alias("weight"),
     )
     got = portfolio_returns(holdings, daily, intervals).toPandas().set_index("beg")
-    ends = dict(zip(begs, begs[1:] + [20230428]))
-    for beg, end in ends.items():
+    for beg, end in zip(begs, ends):
         held = daily_pdf[daily_pdf.date == beg]["permno"]
         win = daily_pdf[(daily_pdf.date > beg) & (daily_pdf.date <= end)]
         comp = win.groupby("permno")["ret"].apply(

@@ -100,12 +100,13 @@ def test_calendar_reads_do_not_rescan_the_source(spark):
     cal = TradingCalendar.from_dates(li.select(F.col("l_shipdate").alias("date")))
     o = load_table(spark, sf, "orders").select("o_orderkey", "o_orderdate")
     plans = {
-        "date_tuples": cal.date_tuples("1995-01-01", "1996-12-31", "month"),
-        "offset": cal.offset(o, "o_orderdate", 1, out="next_d"),
+        name: df._jdf.queryExecution().executedPlan().toString()
+        for name, df in (
+            ("date_tuples", cal.date_tuples("1995-01-01", "1996-12-31", "month")),
+            ("offset", cal.offset(o, "o_orderdate", 1, out="next_d")),
+        )
     }
-    for name, df in plans.items():
-        plan = df._jdf.queryExecution().executedPlan().toString()
+    for name, plan in plans.items():
         assert "lineitem" not in plan, (name, plan)
-    offset_plan = plans["offset"]._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in offset_plan
-    assert "SortMergeJoin" not in offset_plan
+    assert "BroadcastHashJoin" in plans["offset"]
+    assert "SortMergeJoin" not in plans["offset"]
