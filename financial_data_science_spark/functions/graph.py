@@ -6,6 +6,10 @@ core measures are implemented directly as DataFrame iterations — each
 PageRank sweep is one join + one aggregation, the classic Pregel-as-SQL
 shape that scales to billions of edges (networkx does not).
 
+Every iterative kernel runs through one sweep loop, :func:`_iterate`:
+the kernel supplies its step and constants, the loop owns the lineage
+checkpoint cadence and the fixpoint stop.
+
 Coverage vs reference nodes_centrality (recipes/graph.py:185-231):
 degree, eigenvector, pagerank, hub/authority (HITS), closeness (for a
 queried source subset; all-vertex closeness is O(V*E*diam) — at cluster
@@ -20,23 +24,104 @@ degrades gracefully: cost is k-sources x diameter join+agg rounds.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _iterate(state, step, sweeps, every=1, until=None):
+    """The sweep loop of every iterative kernel in this module.
+
+    ``step(state, i)`` builds sweep ``i`` (1-based) lazily.  Every
+    ``every`` sweeps the state (a frame or a tuple of frames) is
+    materialized with an eager localCheckpoint, not cache: iterated
+    self-referencing joins re-alias attribute ids, which defeats cache
+    lookup and silently re-executes the full upstream lineage every sweep
+    (measured 20x slowdown); an RDD checkpoint truncates lineage
+    unconditionally.  On a cluster, checkpoint() to reliable storage is
+    the executor-loss-safe variant of the same discipline.  ``until(state,
+    i)`` then probes the checkpointed state for a scalar, so each sweep
+    runs once; the loop stops when the probe is None or repeats.
+    """
+    last = None
+    for i in range(1, sweeps + 1):
+        state = step(state, i)
+        if i % every == 0:
+            if isinstance(state, tuple):
+                state = tuple(s.localCheckpoint(eager=True) for s in state)
+            else:
+                state = state.localCheckpoint(eager=True)
+            if until is not None:
+                probe = until(state, i)
+                if probe is None or probe == last:
+                    break
+                last = probe
+    return state
+
+
+def _degree(df: DataFrame, by=None, name: str = "deg") -> DataFrame:
+    """Row count per ``by`` key as ``name``; the default key ``a`` AS
+    ``id`` gives the vertex degree of an :func:`_undirected` frame."""
+    return df.groupBy(F.col("a").alias("id") if by is None else by).agg(
+        F.count(F.lit(1)).alias(name)
+    )
+
+
+def _ids(e: DataFrame, a: str = "a", b: str | None = None) -> DataFrame:
+    """Distinct vertex ``id`` frame over column ``a`` of ``e`` (and ``b``)."""
+    ids = e.select(F.col(a).alias("id"))
+    return (ids if b is None else ids.union(e.select(F.col(b).alias("id")))).distinct()
+
+
+def _scaled(df: DataFrame, col: str, agg, out: str) -> DataFrame:
+    """``col`` divided by the one-row aggregate ``agg`` of the frame, as
+    ``out`` per id; the normalizer is crossJoined back, so it stays in the
+    plan (no driver round-trip per sweep)."""
+    return df.crossJoin(df.agg(agg.alias("__norm__"))).select(
+        "id", (F.col(col) / F.col("__norm__")).alias(out)
+    )
+
+
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """In/out/total degree per vertex."""
-    out_d = edges.groupBy(F.col(src).alias("id")).agg(
-        F.count(F.lit(1)).alias("out_degree")
-    )
-    in_d = edges.groupBy(F.col(dst).alias("id")).agg(
-        F.count(F.lit(1)).alias("in_degree")
-    )
+    out_d = _degree(edges, F.col(src).alias("id"), "out_degree")
+    in_d = _degree(edges, F.col(dst).alias("id"), "in_degree")
     return (
         out_d.join(in_d, "id", "outer")
         .fillna(0, subset=["out_degree", "in_degree"])
         .withColumn("degree", F.col("out_degree") + F.col("in_degree"))
     )
+
+
+def _rank_sweeps(e, verts, init, base, damping, max_iter):
+    """Sweeps of :func:`pagerank` and :func:`personalized_pagerank`:
+    rank_{t+1} = base + d * sum(rank/outdeg) from ``init`` over ``verts``.
+
+    Lineage is truncated every 3 sweeps.  Cadence trade (measured at
+    sf0.1, 8 sweeps): every=8 (one deep lazy plan) 5.5s, every=1 (a job
+    per sweep) 4.4s, every=2-3 ~3s — at test scale Catalyst
+    optimize/codegen time on the deep plan dominates, so frequent
+    truncation wins.  On a huge graph the rank-frame materialization
+    (O(V) per checkpoint) grows while the plan-depth cost stays fixed,
+    pushing the optimum up; a cadence change is its own measured decision.
+    """
+    out_deg = _degree(e, "src", "outdeg")
+    e_w = e.join(out_deg, "src").localCheckpoint(eager=True)
+    rank = base + F.lit(damping) * F.coalesce("csum", F.lit(0.0))
+
+    def sweep(ranks, _):
+        contribs = (
+            e_w.join(ranks, e_w.src == ranks.id)
+            .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
+            .groupBy("dst")
+            .agg(F.sum("c").alias("csum"))
+        )
+        return verts.join(contribs, verts.id == contribs.dst, "left").select(
+            "id", rank.alias("rank")
+        )
+
+    return _iterate(verts.select("id", init.alias("rank")), sweep, max_iter, every=3)
 
 
 def pagerank(
@@ -45,59 +130,21 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     max_iter: int = 10,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Iterative PageRank: rank_{t+1} = (1-d)/N + d * sum(rank/outdeg).
 
     Each sweep: join ranks to edges on src (one shuffle), aggregate
     contributions on dst (one shuffle).  Lineage is truncated with
     localCheckpoint every few sweeps so plans don't grow unboundedly —
-    the standard iterative-algorithm discipline on Spark.
-
-    Cadence trade (measured at sf0.1, 8 sweeps): every=8 (one deep lazy
-    plan) 5.5s, every=1 (a job per sweep) 4.4s, every=2-3 ~3s — at test
-    scale Catalyst optimize/codegen time on the deep plan dominates, so
-    frequent truncation wins.  On a huge graph the rank-frame
-    materialization (O(V) per checkpoint) grows while the plan-depth
-    cost stays fixed, pushing the optimum up — hence the knob.
+    the standard iterative-algorithm discipline on Spark (cadence and its
+    measurement: :func:`_rank_sweeps`).
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    # localCheckpoint (not cache) on the loop-invariant sides: iterated
-    # self-referencing joins re-alias attribute ids, which defeats cache
-    # lookup and silently re-executes the full upstream lineage every
-    # sweep (measured 20x slowdown); an RDD checkpoint truncates lineage
-    # unconditionally.  On a cluster, checkpoint() to reliable storage is
-    # the executor-loss-safe variant of the same discipline.
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    verts = _ids(e, "src", "dst").localCheckpoint(eager=True)
     n = verts.count()
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    e_w = e.join(out_deg, "src").localCheckpoint(eager=True)
-    ranks = verts.withColumn("rank", F.lit(1.0 / n))
-    for i in range(max_iter):
-        contribs = (
-            e_w.join(ranks, e_w.src == ranks.id)
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("csum"))
-        )
-        ranks = (
-            verts.join(contribs, verts.id == contribs.dst, "left")
-            .select(
-                "id",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.coalesce("csum", F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+    return _rank_sweeps(
+        e, verts, F.lit(1.0 / n), F.lit((1.0 - damping) / n), damping, max_iter
+    )
 
 
 def personalized_pagerank(
@@ -108,7 +155,6 @@ def personalized_pagerank(
     source_col: str = "id",
     damping: float = 0.85,
     max_iter: int = 10,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Personalized PageRank: teleport mass (1-d) returns ONLY to the
     ``sources`` set instead of uniformly — rank becomes proximity to the
@@ -124,12 +170,7 @@ def personalized_pagerank(
     on graphs with many sink nodes ranks sum to < 1 (relative ordering,
     the quantity users consume, is unaffected)."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    verts = _ids(e, "src", "dst").localCheckpoint(eager=True)
     # count only seeds PRESENT in the graph: out-of-graph seeds would
     # otherwise inflate ns while the verts join drops them, leaking
     # teleport mass so ranks no longer sum to ~1
@@ -144,36 +185,13 @@ def personalized_pagerank(
             "personalized_pagerank: no seed appears in the edge set "
             "(empty or fully out-of-graph sources frame)"
         )
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    e_w = e.join(out_deg, "src").localCheckpoint(eager=True)
     tagged = verts.join(
         F.broadcast(seeds.withColumn("__s__", F.lit(1))), "id", "left"
     ).localCheckpoint(eager=True)
     is_seed = F.col("__s__").isNotNull()
     base = F.when(is_seed, F.lit((1.0 - damping) / ns)).otherwise(F.lit(0.0))
-    ranks = tagged.select(
-        "id",
-        F.when(is_seed, F.lit(1.0 / ns)).otherwise(F.lit(0.0)).alias("rank"),
-    )
-    for i in range(max_iter):
-        contribs = (
-            e_w.join(ranks, e_w.src == ranks.id)
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("csum"))
-        )
-        ranks = (
-            tagged.join(contribs, tagged.id == contribs.dst, "left")
-            .select(
-                "id",
-                (
-                    base + F.lit(damping) * F.coalesce("csum", F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+    init = F.when(is_seed, F.lit(1.0 / ns)).otherwise(F.lit(0.0))
+    return _rank_sweeps(e, tagged, init, base, damping, max_iter)
 
 
 def connected_components(
@@ -182,48 +200,33 @@ def connected_components(
     """Label propagation to min-vertex-id per component — the dedup
     'cluster the near-dup pairs' step in an LLM pipeline (union-find as
     iterated joins; converges in O(diameter) sweeps)."""
-    # Loop-invariant edge set and per-iteration labels are materialized
-    # with localCheckpoint: iterated self-joins re-alias attribute ids and
-    # miss the cache, re-executing the (possibly expensive — e.g. LSH
-    # near-dup) upstream lineage every sweep.  Checkpoint FIRST, then test
-    # convergence on the materialized result, so each sweep runs exactly
-    # once.  Convergence test is join-free: min-propagation only ever
-    # lowers labels, so sum(comp) is strictly decreasing until fixpoint.
+    # The loop-invariant edge set is materialized too (see _iterate): the
+    # upstream lineage may be expensive (e.g. LSH near-dup pairs).
+    # Convergence test is join-free: min-propagation only ever lowers
+    # labels, so sum(comp) is strictly decreasing until fixpoint.
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = (
-        e.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    total = labels.agg(F.sum("comp")).collect()[0][0]
-    for i in range(max_iter):
+    labels = _ids(e).withColumn("comp", F.col("id")).localCheckpoint(eager=True)
+
+    def sweep(labels, _):
         neighbor_min = (
             e.join(labels, e.b == labels.id)
             .groupBy("a")
             .agg(F.min("comp").alias("ncomp"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.a, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce("ncomp", F.col("comp"))
-                ).alias("comp"),
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(neighbor_min, labels.id == neighbor_min.a, "left").select(
+            "id",
+            F.least(F.col("comp"), F.coalesce("ncomp", F.col("comp"))).alias("comp"),
         )
-        new_total = new_labels.agg(F.sum("comp")).collect()[0][0]
-        labels = new_labels
-        if new_total == total:
-            break
-        total = new_total
-    return labels
+
+    return _iterate(
+        labels, sweep, max_iter,
+        until=lambda labels, _: labels.agg(F.sum("comp")).collect()[0][0],
+    )
 
 
 def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -269,17 +272,13 @@ def link_scores(
     """
     if mode == "src_side":
         ez = edges.select(F.col(src).alias("u"), F.col(dst).alias("z")).distinct()
-        deg = ez.groupBy(F.col("u").alias("id")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        degz = ez.groupBy("z").agg(F.count(F.lit(1)).alias("degz"))
+        deg = _degree(ez, F.col("u").alias("id"))
+        degz = _degree(ez, "z", "degz")
         l = ez
         r = ez.select(F.col("u").alias("v"), "z")
     else:
         ue = _undirected(edges, src, dst)
-        deg = ue.groupBy(F.col("a").alias("id")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
+        deg = _degree(ue)
         degz = deg.select(F.col("id").alias("z"), F.col("deg").alias("degz"))
         l = ue.select(F.col("a").alias("u"), F.col("b").alias("z"))
         r = ue.select(F.col("a").alias("v"), F.col("b").alias("z"))
@@ -341,30 +340,25 @@ def label_propagation(
     from pyspark.sql import Window
 
     ue = _undirected(edges, src, dst).localCheckpoint(eager=True)
-    labels = (
-        ue.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("lab", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(iters):
+    labels = _ids(ue).withColumn("lab", F.col("id")).localCheckpoint(eager=True)
+    w = Window.partitionBy("a").orderBy(F.col("c").desc(), F.col("lab"))
+
+    def sweep(labels, _):
         cnt = (
             ue.join(labels, ue.b == labels.id)
             .groupBy("a", "lab")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        w = Window.partitionBy("a").orderBy(F.col("c").desc(), F.col("lab"))
         best = (
             cnt.withColumn("__rn__", F.row_number().over(w))
             .filter(F.col("__rn__") == 1)
             .select(F.col("a").alias("id"), F.col("lab").alias("blab"))
         )
-        labels = (
-            labels.join(best, "id", "left")
-            .select("id", F.coalesce("blab", "lab").alias("lab"))
-            .localCheckpoint(eager=True)
+        return labels.join(best, "id", "left").select(
+            "id", F.coalesce("blab", "lab").alias("lab")
         )
-    return labels
+
+    return _iterate(labels, sweep, iters)
 
 
 def eigenvector_centrality(
@@ -372,7 +366,6 @@ def eigenvector_centrality(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 8,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Eigenvector centrality by power iteration (reference
     recipes/graph.py:210-222 nodes_centrality 'eigenvector').
@@ -386,10 +379,10 @@ def eigenvector_centrality(
     result engine-reproducible for the oracle.
     """
     ue = _undirected(edges, src, dst).localCheckpoint(eager=True)
-    verts = ue.select(F.col("a").alias("id")).distinct().localCheckpoint(eager=True)
+    verts = _ids(ue).localCheckpoint(eager=True)
     n = verts.count()
-    x = verts.withColumn("x", F.lit(1.0 / n))
-    for i in range(max_iter):
+
+    def sweep(x, _):
         nbr = (
             ue.join(x, ue.b == x.id)
             .groupBy("a")
@@ -399,10 +392,9 @@ def eigenvector_centrality(
             x.join(nbr, x.id == nbr.a, "left")
             .select("id", (F.col("x") + F.coalesce("nx", F.lit(0.0))).alias("y"))
         )
-        norm = y.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("nrm"))
-        x = y.crossJoin(norm).select("id", (F.col("y") / F.col("nrm")).alias("x"))
-        if (i + 1) % checkpoint_every == 0:
-            x = x.localCheckpoint(eager=True)
+        return _scaled(y, "y", F.sqrt(F.sum(F.col("y") * F.col("y"))), "x")
+
+    x = _iterate(verts.withColumn("x", F.lit(1.0 / n)), sweep, max_iter, every=2)
     return x.select("id", F.col("x").alias("eigenvector"))
 
 
@@ -411,7 +403,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 8,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """HITS hub/authority scores (reference recipes/graph.py:222
     nodes_centrality 'hub'/'authority').
@@ -424,45 +415,27 @@ def hits(
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     e = e.localCheckpoint(eager=True)
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    verts = _ids(e, "src", "dst").localCheckpoint(eager=True)
     n = verts.count()
-    h = verts.withColumn("h", F.lit(1.0 / n))
-    a = None
-    for i in range(max_iter):
-        a_raw = (
-            e.join(h, e.src == h.id)
-            .groupBy("dst")
-            .agg(F.sum("h").alias("ar"))
+
+    def half(x, val, on, by, out):
+        # max-normalized sum of x.val over the edges joined on ``on``,
+        # per ``by`` endpoint; 0 where no edge arrives
+        raw = e.join(x, e[on] == x.id).groupBy(by).agg(F.sum(val).alias("r"))
+        y = verts.join(raw, verts.id == raw[by], "left").select(
+            "id", F.coalesce("r", F.lit(0.0)).alias(out)
         )
-        a = (
-            verts.join(a_raw, verts.id == a_raw.dst, "left")
-            .select("id", F.coalesce("ar", F.lit(0.0)).alias("a"))
-        )
-        amax = a.agg(F.max("a").alias("mx"))
-        a = a.crossJoin(amax).select("id", (F.col("a") / F.col("mx")).alias("a"))
-        h_raw = (
-            e.join(a, e.dst == a.id)
-            .groupBy("src")
-            .agg(F.sum("a").alias("hr"))
-        )
-        h = (
-            verts.join(h_raw, verts.id == h_raw.src, "left")
-            .select("id", F.coalesce("hr", F.lit(0.0)).alias("h"))
-        )
-        hmax = h.agg(F.max("h").alias("mx"))
-        h = h.crossJoin(hmax).select("id", (F.col("h") / F.col("mx")).alias("h"))
-        if (i + 1) % checkpoint_every == 0:
-            a = a.localCheckpoint(eager=True)
-            h = h.localCheckpoint(eager=True)
-    hsum = h.agg(F.sum("h").alias("s"))
-    asum = a.agg(F.sum("a").alias("s"))
-    hn = h.crossJoin(hsum).select("id", (F.col("h") / F.col("s")).alias("hub"))
-    an = a.crossJoin(asum).select("id", (F.col("a") / F.col("s")).alias("authority"))
+        return _scaled(y, out, F.max(out), out)
+
+    def sweep(ah, _):
+        a = half(ah[1], "h", "src", "dst", "a")
+        return a, half(a, "a", "dst", "src", "h")
+
+    a, h = _iterate(
+        (None, verts.withColumn("h", F.lit(1.0 / n))), sweep, max_iter, every=2
+    )
+    hn = _scaled(h, "h", F.sum("h"), "hub")
+    an = _scaled(a, "a", F.sum("a"), "authority")
     return hn.join(an, "id")
 
 
@@ -497,11 +470,7 @@ def modularity(
         .groupBy(F.col("la").alias("community"))
         .agg(F.count(F.lit(1)).alias("internal_edges"))
     )
-    deg = (
-        _undirected(edges, src, dst)
-        .groupBy(F.col("a").alias("vid"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _degree(_undirected(edges, src, dst), F.col("a").alias("vid"))
     ksum = (
         labels.join(deg, labels[id_col] == deg.vid, "left")
         .groupBy(F.col(label_col).alias("community"))
@@ -573,6 +542,44 @@ def community_quality(
     )
 
 
+def _bfs(edges, sources, src, dst, source_col, hops):
+    """Multi-source BFS of :func:`closeness_centrality` and
+    :func:`betweenness_sampled`: (undirected edges, vertex count, an
+    (s, node, d, sigma) frame of first-reach distance and shortest-path
+    count, deepest level reached).  Each sweep joins the frontier (nodes
+    first reached last sweep) to the edges and min-merges — the
+    groupBy-min is the simplest correct merge (an anti-join against
+    visited would save re-aggregating but self-referencing joins on
+    checkpointed frames re-alias attribute ids and get brittle).
+    """
+    ue = _undirected(edges, src, dst).localCheckpoint(eager=True)
+    dist = sources.select(F.col(source_col).alias("s")).distinct().select(
+        "s", F.col("s").alias("node"), F.lit(0).alias("d"), F.lit(1.0).alias("sigma")
+    )
+    n_nodes = _ids(ue).count()
+    depth = [0]
+
+    def sweep(dist, k):
+        frontier = dist.filter(F.col("d") == k - 1)
+        expanded = frontier.join(ue, frontier.node == ue.a).select(
+            "s", F.col("b").alias("node"), F.lit(k).alias("d"), "sigma"
+        )
+        # a new node's sigma sums its parents' (all on shortest paths)
+        known = F.max(F.when(F.col("d") < k, F.col("sigma")))
+        return dist.union(expanded).groupBy("s", "node").agg(
+            F.min("d").alias("d"), F.coalesce(known, F.sum("sigma")).alias("sigma")
+        )
+
+    def reached(dist, k):  # stop once a sweep reaches no node first
+        if dist.filter(F.col("d") == k).isEmpty():
+            return None
+        depth[0] = k
+        return k
+
+    dist = _iterate(dist.localCheckpoint(eager=True), sweep, hops, until=reached)
+    return ue, n_nodes, dist, depth[0]
+
+
 def closeness_centrality(
     edges: DataFrame,
     sources: DataFrame,
@@ -596,35 +603,7 @@ def closeness_centrality(
     Uses the Wasserman-Faust improved formula (networkx default):
     c(s) = ((r-1)/(n-1)) * ((r-1)/sum_dist) with r = vertices reached.
     """
-    ue = _undirected(edges, src, dst).localCheckpoint(eager=True)
-    n_nodes = (
-        ue.select(F.col("a").alias("id")).distinct().count()
-    )
-    seed = sources.select(F.col(source_col).alias("s")).distinct()
-    dist = seed.select("s", F.col("s").alias("node"), F.lit(0).alias("d"))
-    dist = dist.localCheckpoint(eager=True)
-    frontier = dist
-    for k in range(1, hops + 1):
-        # expand the frontier then min-merge with known distances — the
-        # groupBy-min is the simplest correct merge (an anti-join against
-        # visited would save re-aggregating but self-referencing joins on
-        # checkpointed frames re-alias attribute ids and get brittle)
-        expanded = (
-            frontier.join(ue, frontier.node == ue.a)
-            .select("s", F.col("b").alias("node"), F.lit(k).alias("d"))
-        )
-        merged = (
-            dist.union(expanded)
-            .groupBy("s", "node")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=True)
-        )
-        # new frontier = nodes first reached this sweep
-        frontier = merged.filter(F.col("d") == k)
-        if frontier.isEmpty():
-            dist = merged
-            break
-        dist = merged
+    _, n_nodes, dist, _ = _bfs(edges, sources, src, dst, source_col, hops)
     per_src = dist.filter(F.col("node") != F.col("s")).groupBy("s").agg(
         F.count(F.lit(1)).alias("r_minus_1"),
         F.sum("d").alias("sum_dist"),
@@ -664,9 +643,7 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
-    verts = e.select(F.col("a").alias("id")).union(
-        e.select(F.col("b").alias("id"))
-    ).distinct()
+    verts = _ids(e, "a", "b")
     return (
         verts.join(per_node, "id", "left").fillna(0, subset=["triangles"])
     )
@@ -679,11 +656,7 @@ def clustering_coefficient(
     recipes/graph.py:206 nodes_centrality 'clustering'); 0 for degree<2
     vertices (networkx convention)."""
     tri = triangles(edges, src, dst)
-    deg = (
-        _undirected(edges, src, dst)
-        .groupBy(F.col("a").alias("id"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _degree(_undirected(edges, src, dst))
     return tri.join(deg, "id").select(
         "id",
         "triangles",
@@ -704,7 +677,7 @@ def graph_info(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFram
     everything else is one aggregate over the degree frame."""
     ue = _undirected(edges, src, dst).localCheckpoint(eager=True)
     canon = ue.filter(F.col("a") < F.col("b"))
-    deg = ue.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
+    deg = _degree(ue)
     base = deg.agg(
         F.count(F.lit(1)).alias("nodes"),
         (F.sum("deg") / 2).cast("long").alias("edges"),
@@ -752,29 +725,30 @@ def k_core(
     subgraph-quality filter for dense-community extraction.
 
     Each sweep is one degree aggregate + one semi-join on the surviving
-    edge set, localCheckpoint'ed; convergence test is the (monotone
-    decreasing) surviving-vertex count, a join-free scalar.  Converges in
-    O(peeling-depth) sweeps.
+    edge set, localCheckpoint'ed; convergence test compares the (monotone
+    decreasing) kept-vertex count with the surviving-vertex count, a
+    join-free scalar.  Converges in O(peeling-depth) sweeps.
     """
+
+    def keep(ue):
+        return _degree(ue).filter(F.col("deg") >= k).select("id")
+
+    def peel(ue, _):
+        kept = keep(ue)
+        return ue.join(kept.withColumnRenamed("id", "a"), "a", "left_semi").join(
+            kept.withColumnRenamed("id", "b"), "b", "left_semi"
+        )
+
+    def peeling(ue, _):
+        # kept-vertex count, None once the next peel would drop no vertex
+        # (the fixpoint) or every vertex: one aggregate, no join
+        kept, alive = _degree(ue).agg(
+            F.sum((F.col("deg") >= k).cast("long")), F.count(F.lit(1))
+        ).first()
+        return kept if kept and kept < alive else None
+
     ue = _undirected(edges, src, dst).localCheckpoint(eager=True)
-    n_prev = None
-    for _ in range(max_iter):
-        deg = ue.groupBy(F.col("a").alias("id")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        keep = deg.filter(F.col("deg") >= k).select("id")
-        n = keep.count()
-        if n == 0:
-            return keep
-        if n_prev is not None and n == n_prev:
-            break
-        n_prev = n
-        ue = (
-            ue.join(keep.withColumnRenamed("id", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("id", "b"), "b", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-    return ue.select(F.col("a").alias("id")).distinct()
+    return keep(_iterate(ue, peel, max_iter, until=peeling))
 
 
 def degree_assortativity(
@@ -784,9 +758,7 @@ def degree_assortativity(
     Pearson correlation of endpoint degrees over the directed edge list
     (Newman 2002) — one degree aggregate, two joins, one corr()."""
     ue = _undirected(edges, src, dst)
-    deg = ue.groupBy(F.col("a").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
+    deg = _degree(ue)
     da = deg.select(F.col("id").alias("a"), F.col("deg").alias("da"))
     db = deg.select(F.col("id").alias("b"), F.col("deg").alias("db"))
     return ue.join(da, "a").join(db, "b").agg(
@@ -825,36 +797,21 @@ def betweenness_sampled(
     computation; per-level deltas are rounded to ``round_dp`` to keep the
     cross-engine float sums on a comparable grid.
     """
-    ue = _undirected(edges, src, dst).localCheckpoint(eager=True)
-    n_nodes = ue.select(F.col("a").alias("id")).distinct().count()
-    seed = sources.select(F.col(source_col).alias("s")).distinct()
-    k_sources = seed.count()
-    level = seed.select(
-        "s", F.col("s").alias("node"), F.lit(1.0).alias("sigma")
-    ).localCheckpoint(eager=True)
-    levels = [level]
-    visited = level.select("s", "node")
-    for _ in range(1, hops + 1):
-        # candidates via one frontier x edges join; sigma of a new node =
-        # sum of parent sigmas (all frontier parents are on shortest paths)
-        cand = level.join(ue, level.node == ue.a).select(
-            "s", F.col("b").alias("node"), "sigma"
-        )
-        nxt = (
-            cand.join(visited, ["s", "node"], "left_anti")
-            .groupBy("s", "node")
-            .agg(F.sum("sigma").alias("sigma"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        visited = visited.union(nxt.select("s", "node"))
-        level = nxt
-    # dependency back-propagation, deepest level first (delta there = 0)
-    delta = levels[-1].select("s", "node", F.lit(0.0).alias("delta"))
-    acc = [delta] if len(levels) > 1 else []
-    for L in range(len(levels) - 2, 0, -1):
+    ue, n_nodes, dist, depth = _bfs(edges, sources, src, dst, source_col, hops)
+    k_sources = dist.filter(F.col("d") == 0).count()
+    if depth == 0:
+        return ue.sparkSession.createDataFrame([], "id long, betweenness double")
+    levels = [
+        dist.filter(F.col("d") == L).select("s", "node", "sigma")
+        for L in range(depth + 1)
+    ]
+    # dependency back-propagation, deepest level first (delta there = 0);
+    # each sweep records the (checkpointed) delta it starts from
+    acc = []
+
+    def back(delta, i):
+        acc.append(delta)
+        L = len(levels) - 1 - i
         deeper = levels[L + 1].join(delta, ["s", "node"]).select(
             "s",
             F.col("node").alias("w"),
@@ -875,19 +832,16 @@ def betweenness_sampled(
                 ).alias("delta")
             )
         )
-        delta = (
+        return (
             vlev.select("s", "node")
             .join(contrib, ["s", "node"], "left")
             .withColumn("delta", F.coalesce(F.col("delta"), F.lit(0.0)))
-            .localCheckpoint(eager=True)
         )
-        acc.append(delta)
-    if not acc:
-        return ue.sparkSession.createDataFrame([], "id long, betweenness double")
-    from functools import reduce
 
+    deepest = levels[-1].select("s", "node", F.lit(0.0).alias("delta"))
+    acc.append(_iterate(deepest, back, len(levels) - 2))
     raw = (
-        reduce(lambda a, b: a.unionByName(b), acc)
+        reduce(DataFrame.unionByName, acc)
         .groupBy(F.col("node").alias("id"))
         .agg(F.sum("delta").alias("raw"))
     )

@@ -165,37 +165,6 @@ def cosine_topk(
     )
 
 
-def cosine_pairs(
-    left: DataFrame,
-    right: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All (left_id, right_id) pairs with cosine >= threshold, left broadcast.
-
-    Norms hoisted per side (one fold per row, not three per pair) —
-    bit-identical scores, see embedding_near_dups."""
-    l = F.broadcast(
-        left.select(
-            F.col(id_col).alias("left_id"),
-            F.col(vec_col).alias("__lv__"),
-            norm(F.col(vec_col)).alias("__ln__"),
-        )
-    )
-    out = (
-        right.withColumn("__rn__", norm(F.col(vec_col)))
-        .join(l, F.col("left_id") < F.col(id_col))
-        .select(
-            "left_id",
-            F.col(id_col).alias("right_id"),
-            (dot(F.col("__lv__"), F.col(vec_col))
-             / (F.col("__ln__") * F.col("__rn__"))).alias("score"),
-        )
-    )
-    return out.filter(F.col("score") >= threshold)
-
-
 def hyperplane_bucket(
     vec: Column, n_planes: int = 12, plane_offset: int = 0
 ) -> Column:

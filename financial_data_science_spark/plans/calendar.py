@@ -108,7 +108,17 @@ class TradingCalendar:
 
     def date_range(self, beg: int, end: int, freq: str = "daily") -> DataFrame:
         """Trading dates in [beg, end]; freq daily|week|month|quarter|year
-        returns period-end dates only (busday.py:230-280)."""
+        returns period-end dates only (busday.py:230-280).  Bounds take the
+        dim's date form: int YYYYMMDD on an int dim, an ISO date string or
+        ``datetime.date`` on a native date/timestamp dim."""
+        # an int bound against a date column would otherwise fail in
+        # analysis as DATATYPE_MISMATCH; dtypes reads the schema, no job
+        native = dict(self.dim.dtypes)["date"] in ("date", "timestamp", "timestamp_ntz")
+        if native and any(isinstance(b, int) for b in (beg, end)):
+            raise TypeError(
+                "TradingCalendar bounds on a date/timestamp calendar must be "
+                f"ISO date strings or datetime.date, got {beg!r}, {end!r}"
+            )
         d = self.dim.filter(F.col("date").between(beg, end))
         if freq != "daily":
             d = d.filter(F.col(f"is_{freq}_end"))

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from financial_data_science_spark.plans.calendar import TradingCalendar
@@ -48,6 +49,30 @@ def test_date_tuples_consecutive(spark, calendar_dates):
     assert (t["beg"] < t["end"]).all()
     # ends chain: beg of row i+1 == end of row i
     assert t["beg"].iloc[1:].tolist() == t["end"].iloc[:-1].tolist()
+
+
+def test_date_calendar_rejects_int_bounds(spark, calendar_dates):
+    """A dim built from a native date column takes ISO-string or date
+    bounds; an int YYYYMMDD bound raises a TypeError naming them."""
+    import datetime
+
+    dates = pd.to_datetime(pd.Series(calendar_dates).astype(str)).dt.date
+    cal = TradingCalendar.from_dates(
+        spark.createDataFrame(pd.DataFrame({"date": dates}))
+    )
+    for call in (cal.date_range, cal.date_tuples):
+        with pytest.raises(TypeError, match="ISO date strings or datetime.date"):
+            call(20220101, 20221231, "month")
+    got = cal.date_tuples("2022-01-01", datetime.date(2022, 12, 31)).count()
+    assert got == 11
+
+
+def test_month_key_is_yyyymm(spark):
+    from financial_data_science_spark.functions.dates import month_key
+
+    df = spark.createDataFrame(pd.DataFrame({"d": [20220103, 20221230, 19991231]}))
+    got = [r[0] for r in df.select(month_key("d")).collect()]
+    assert got == [202201, 202212, 199912]
 
 
 def test_week_and_quarter_flags(spark, calendar_dates):

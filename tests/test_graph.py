@@ -355,6 +355,41 @@ def test_betweenness_sampled_sources_scale_up(spark):
     assert abs(est.mean() - 0.2) < 1e-5
 
 
+@pytest.mark.parametrize("seeds", [None, [1, 4]], ids=["pagerank", "ppr"])
+def test_pagerank_matches_numpy_power_iteration(spark, seeds):
+    """Both PageRanks at a fixed max_iter equal a numpy power iteration of
+    the same update: no dangling redistribution (sink 5 leaks its mass),
+    teleport (1-d)/N, or (1-d)/|S| on the seeds S only.  7 sweeps end
+    between checkpoints, so the lazy tail is compared too."""
+    import numpy as np
+
+    from financial_data_science_spark.functions.graph import (
+        pagerank,
+        personalized_pagerank,
+    )
+
+    E = [(1, 2), (2, 3), (3, 1), (3, 4), (2, 4), (4, 5), (1, 5)]
+    nodes = sorted({x for e in E for x in e})
+    idx = {n: i for i, n in enumerate(nodes)}
+    outdeg = {a: sum(1 for x, _ in E if x == a) for a, _ in E}
+    M = np.zeros((len(nodes), len(nodes)))
+    for a, b in E:
+        M[idx[b], idx[a]] += 1.0 / outdeg[a]
+    d, iters = 0.85, 7
+    S = np.isin(nodes, seeds) if seeds else np.ones(len(nodes), bool)
+    r = np.where(S, 1.0 / S.sum(), 0.0)
+    for _ in range(iters):
+        r = np.where(S, (1 - d) / S.sum(), 0.0) + d * M @ r
+    df = spark.createDataFrame(pd.DataFrame(E, columns=["src", "dst"]))
+    if seeds:
+        seed_df = spark.createDataFrame(pd.DataFrame({"id": seeds}))
+        out = personalized_pagerank(df, seed_df, damping=d, max_iter=iters)
+    else:
+        out = pagerank(df, damping=d, max_iter=iters)
+    got = out.toPandas().set_index("id")["rank"]
+    np.testing.assert_allclose([got[n] for n in nodes], r, rtol=1e-12)
+
+
 def test_personalized_pagerank_mass_and_locality(spark):
     """PPR invariants on a two-component graph: all rank mass stays in
     the seed's component (teleport never crosses components); total mass

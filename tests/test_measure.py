@@ -58,3 +58,10 @@ def test_plans_strip_checkpoint_call_site(spark, tmp_path):
     plan = open(path).read()
     assert "RDD[] at localCheckpoint," in plan
     assert not re.search(r"\.java:\d|<unknown>:\d", plan)
+
+
+def test_measuring_session_hides_the_progress_bar(spark):
+    """The console progress bar shares the terminal with ``time``'s JSON
+    line; the measuring session turns it off."""
+    s = _measure().session()
+    assert s.conf.get("spark.ui.showConsoleProgress") == "false"

@@ -18,6 +18,7 @@ from financial_data_science_spark.functions.finance import (
     bootstrap_spot,
     forwards_from_spots,
     macaulay_duration,
+    modified_duration,
     max_drawdown,
     parkinson_var,
 )
@@ -54,11 +55,14 @@ def test_bond_bootstrap_jorion_ch5():
 
 
 def test_duration_zero_coupon():
-    """Zero-coupon n-period bond: Macaulay duration == n/m years."""
+    """Zero-coupon n-period bond: Macaulay duration == n/m years; modified
+    duration == Macaulay / (1 + ytm/m) = 3 / 1.03."""
     ytm = 0.06
     px = bond_price(0.0, 6, 2, ytm)
     d = macaulay_duration(0.0, 6, 2, px, ytm)
     np.testing.assert_allclose(d, 3.0, rtol=1e-12)
+    md = modified_duration(0.0, 6, 2, px, ytm)
+    np.testing.assert_allclose(md, 2.912621359223301, rtol=1e-12)
 
 
 def test_parkinson_and_drawdown(spark):

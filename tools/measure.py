@@ -180,6 +180,16 @@ def ab(rev: str, names: list[str]) -> int:
     return 0 if all(r["same_content"] for r in report.values()) else 1
 
 
+def session():
+    """The measuring session.  Spark's console progress bar writes to the
+    same terminal as the ``time`` JSON line and hides it, so it is off;
+    every other setting is ``get_spark``'s default."""
+    from financial_data_science_spark import get_spark
+
+    return get_spark("measure",
+                     extra_conf={"spark.ui.showConsoleProgress": "false"})
+
+
 def main(argv: list[str]) -> int:
     if not argv or argv[0] not in ("time", "ab", "plans") or (
             argv[0] == "ab" and len(argv) < 3):
@@ -188,9 +198,8 @@ def main(argv: list[str]) -> int:
     if cmd == "ab":
         return ab(args[0], args[1:])
     import bench
-    from financial_data_science_spark import get_spark
 
-    spark = get_spark("measure")
+    spark = session()
     if cmd == "time":
         out = timings(spark, args, bench.SF_DIR)
         print(json.dumps({"entries": out, "sf_dir": bench.SF_DIR}))
