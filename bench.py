@@ -320,7 +320,7 @@ def _production_curation_v3(spark, sf_dir):
             r["h"]
             for r in bench.select(
                 F.explode(
-                    PIPE.ngram_hashes(F.col("text"), 5, False)
+                    PIPE.ngram_hashes("text", 5, False)
                 ).alias("h")
             ).distinct().collect()
         ))

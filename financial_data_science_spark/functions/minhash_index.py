@@ -194,7 +194,7 @@ def minhash_query_index(
     nsig = sig.select(
         F.col(id_col).alias("new_id"), F.col("__sig__").alias("__nsig__")
     )
-    est = sig_match_fraction(F.col("__nsig__"), F.col("__csig__"), num_hashes)
+    est = sig_match_fraction("__nsig__", "__csig__", num_hashes)
     out = (
         pairs.join(nsig, "new_id")
         .join(index["sigs"], "corpus_id")

@@ -29,7 +29,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from financial_data_science_spark.functions.porthash import MOD, keyhash
-from financial_data_science_spark.functions.text import word_shingles
+from financial_data_science_spark.functions.sqltext import lam, sql_name
+from financial_data_science_spark.functions.text import word_shingles_sql
 
 
 def split_assign(
@@ -110,9 +111,9 @@ def pack_token_budget(
 
 
 def ngram_hashes(
-    text: Column, n: int = 8, portable: bool = True
+    text: str, n: int = 8, portable: bool = True
 ) -> Column:
-    """Distinct hashes of the word n-grams of ``text`` — the
+    """Distinct hashes of the word n-grams of the column named ``text`` — the
     contamination-screen unit (n=8..13 is the published
     deduplication/decontamination convention, e.g. GPT-3 appendix C uses
     13-gram overlap).  ``portable=True`` uses the arithmetic 31-bit
@@ -127,9 +128,10 @@ def ngram_hashes(
         # composed per-token fold: each character hashes ONCE, not once
         # per gram it appears in — bit-identical to tokhash31 over the
         # joined gram strings (porthash.gram_hashes31 docstring)
-        return gram_hashes31(tokens(F.lower(text)), k=n)
-    grams = word_shingles(text, k=n)
-    return F.array_distinct(F.transform(grams, lambda g: F.xxhash64(g)))
+        return gram_hashes31(tokens(F.lower(F.col(text))), k=n)
+    grams = word_shingles_sql(sql_name(text), n)
+    hashed = lam(lambda g: f"xxhash64({g})")
+    return F.expr(f"array_distinct(transform({grams}, {hashed}))")
 
 
 def contamination(
@@ -155,12 +157,12 @@ def contamination(
     # partitioning-order-independent.  No-op at scale.
     t = fan_out_scan(train, id_col).select(
         F.col(id_col),
-        F.explode(ngram_hashes(F.col(text_col), n, portable)).alias("__h__"),
+        F.explode(ngram_hashes(text_col, n, portable)).alias("__h__"),
     )
     b = F.broadcast(
         fan_out_scan(bench, id_col)
         .select(
-            F.explode(ngram_hashes(F.col(text_col), n, portable)).alias("__h__")
+            F.explode(ngram_hashes(text_col, n, portable)).alias("__h__")
         )
         .distinct()
         .withColumn("__hit__", F.lit(1))
@@ -232,7 +234,7 @@ def contamination_screen(
     from pyspark.broadcast import Broadcast
 
     g = df.withColumn(
-        "__grams__", ngram_hashes(F.col(text_col), n, portable)
+        "__grams__", ngram_hashes(text_col, n, portable)
     )
     if method == "overlap":
         vals = (
@@ -306,11 +308,11 @@ def contaminated_ids(
 
     t = fan_out_scan(train, id_col).select(
         F.col(id_col),
-        F.explode(ngram_hashes(F.col(text_col), n, portable)).alias("__h__"),
+        F.explode(ngram_hashes(text_col, n, portable)).alias("__h__"),
     )
     b = F.broadcast(
         fan_out_scan(bench, id_col).select(
-            F.explode(ngram_hashes(F.col(text_col), n, portable)).alias("__h__")
+            F.explode(ngram_hashes(text_col, n, portable)).alias("__h__")
         ).distinct()
     )
     return t.join(b, "__h__", "left_semi").select(id_col)
@@ -342,7 +344,7 @@ def contamination_screen_join(
     hit_ids = (
         docs.select(
             F.col(id_col),
-            F.explode(ngram_hashes(F.col(text_col), n, portable)).alias(
+            F.explode(ngram_hashes(text_col, n, portable)).alias(
                 "__h__"
             ),
         )

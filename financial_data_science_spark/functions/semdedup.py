@@ -56,11 +56,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from financial_data_science_spark.functions.similarity import cosine
-
-
-def _round_vec(col):
-    return F.transform(col, lambda x: F.round(x.cast("double"), 6))
+from financial_data_science_spark.functions.similarity import (
+    _assign_clusters,
+    _cosine_score,
+    _flat_cols,
+    _flat_dot,
+    _fold_norm,
+    _round_vec,
+    cosine_sql,
+    dot_sql,
+    ivf_build_index,
+    norm,
+    norm_sql,
+)
+from financial_data_science_spark.functions.sqltext import (
+    lam,
+    let_sql,
+    sql_double,
+    sql_name,
+)
 
 
 def kmeans_cell_split(
@@ -163,7 +177,7 @@ def _cell_split_levels(
                 F.explode(
                     F.array(*[F.lit(j) for j in range(1, nsub + 1)])
                 ).alias("__sub__"),
-                _round_vec(F.col("__v__")).alias("__cv__"),
+                F.expr(f"{_round_vec('__v__', 6)} AS __cv__"),
             )
             .filter(
                 F.col("__rn__")
@@ -183,7 +197,7 @@ def _cell_split_levels(
                 "__cell__",
                 "__id__",
                 "__sub__",
-                F.round(cosine(F.col("__v__"), F.col("__cv__")), 6).alias("__s__"),
+                F.expr(f"round({cosine_sql('__v__', '__cv__')}, 6) AS __s__"),
             )
             # argmax with ties to the lowest sub id: struct-max on
             # (s, -sub) — map-side combinable, same ordering as the
@@ -258,8 +272,6 @@ def semantic_dedup_pairs(
     in an unbounded cell; over-cap cells reach that bound through a
     rank-block join key (not a post-join filter), so the candidate
     fan-out the executor iterates is itself O(cell_size * budget_w)."""
-    from financial_data_science_spark.functions.similarity import ivf_build_index
-
     # fan_out=False: the binned frame feeds the cell-split sub-kmeans,
     # whose 6dp-rounded float avg sweeps must keep a deterministic
     # partial-merge order (fanning would make it fetch-order-dependent)
@@ -277,52 +289,41 @@ def semantic_dedup_pairs(
     # also satisfies the merge join's cell sort), where the old
     # partitionBy("cluster")-then-alias shape re-exchanged both sides
     # (r15; values unchanged — same keys, same data)
-    ranked = cells.select(
-        F.col("cluster").alias("cell"), F.col(id_col), F.col(vec_col)
-    ).select(
+    i, v = sql_name(id_col), sql_name(vec_col)
+    ranked = cells.selectExpr("cluster AS cell", i, v).selectExpr(
         "cell",
-        F.col(id_col),
-        F.col(vec_col),
-        F.row_number().over(
-            Window.partitionBy("cell").orderBy(id_col)
-        ).alias("__rn__"),
-        F.count(F.lit(1)).over(Window.partitionBy("cell")).alias("__cnt__"),
+        i,
+        v,
+        f"row_number() OVER (PARTITION BY cell ORDER BY {i}) AS __rn__",
+        "count(1) OVER (PARTITION BY cell) AS __cnt__",
     )
     # exact pair scoring on FLAT-UNPACKED columns with per-ROW norms
     # (similarity._flat_dot): the per-pair cosine() fold is interpreted
     # (CodegenFallback) and re-derives both norms per candidate; the
     # flat multiply-add chain compiles under codegen and is the same
-    # IEEE addition sequence, so every c6 double is bit-identical
-    from financial_data_science_spark.functions.similarity import (
-        _flat_cols,
-        _flat_dot,
-        norm as _norm,
-    )
-
+    # IEEE addition sequence, so every c6 double is bit-identical.
     # dim from the index's trained centroid rows (coordinate means over
     # the corpus, so len == corpus dim) — replaces the r14 _vec_dim
     # one-row driver peek with ZERO jobs (r15, build-time shave); empty
     # centroids mean an empty corpus, so the dim-0 chain scores no rows
     cents = index.get("centroids") or []
     dim = len(cents[0][1]) if cents else 0
-    l = ranked.select(
+    l = ranked.selectExpr(
         "cell",
-        F.col(id_col).alias("left_id"),
-        *_flat_cols(F.col(vec_col), "l", dim),
-        _norm(F.col(vec_col)).alias("__lnorm__"),
-        F.col("__rn__").alias("__lrn__"),
-        F.col("__cnt__"),
+        f"{i} AS left_id",
+        *_flat_cols(v, "l", dim),
+        f"{norm_sql(v)} AS __lnorm__",
+        "__rn__ AS __lrn__",
+        "__cnt__",
     )
-    r = ranked.select(
+    r = ranked.selectExpr(
         "cell",
-        F.col(id_col).alias("right_id"),
-        *_flat_cols(F.col(vec_col), "r", dim),
-        _norm(F.col(vec_col)).alias("__rnorm__"),
-        F.col("__rn__").alias("__rrn__"),
+        f"{i} AS right_id",
+        *_flat_cols(v, "r", dim),
+        f"{norm_sql(v)} AS __rnorm__",
+        "__rn__ AS __rrn__",
     )
-    raw_cos = _flat_dot("l", "r", dim) / (
-        F.col("__lnorm__") * F.col("__rnorm__")
-    )
+    raw_cos = f"{_flat_dot('l', 'r', dim)} / (__lnorm__ * __rnorm__)"
     # Two join arms so the JOIN FAN-OUT itself is bounded, not just the
     # emitted pairs: cells within cap join on the cell key (per-key
     # product <= cap^2); cells STILL over cap join on a rank-block key
@@ -333,36 +334,31 @@ def semantic_dedup_pairs(
     # cell-keyed product a post-join rank filter would still iterate
     # (the 10^16-pair point-mass case this module exists to bound).
     small = (
-        l.filter(F.col("__cnt__") <= cap)
+        l.filter(f"__cnt__ <= {cap}")
         .join(r, "cell")
-        .filter(F.col("__lrn__") < F.col("__rrn__"))
+        .filter("__lrn__ < __rrn__")
     )
-    blk_l = F.floor((F.col("__lrn__") - 1) / budget_w)
+    blk_l = f"FLOOR((__lrn__ - 1) / {budget_w})"
     big = (
-        l.filter(F.col("__cnt__") > cap)
-        .withColumn("__blk__", F.explode(F.array(blk_l, blk_l + 1)))
+        l.filter(f"__cnt__ > {cap}")
+        .withColumn("__blk__", F.expr(f"explode(array({blk_l}, {blk_l} + 1))"))
         .join(
-            r.withColumn(
-                "__blk__", F.floor((F.col("__rrn__") - 1) / budget_w)
-            ),
+            r.withColumn("__blk__", F.expr(f"FLOOR((__rrn__ - 1) / {budget_w})")),
             ["cell", "__blk__"],
         )
         .drop("__blk__")
-        .filter(
-            (F.col("__lrn__") < F.col("__rrn__"))
-            & (F.col("__rrn__") - F.col("__lrn__") <= budget_w)
-        )
+        .filter(f"__lrn__ < __rrn__ AND __rrn__ - __lrn__ <= {budget_w}")
     )
     return (
         small.unionByName(big)
-        .withColumn("c6", F.round(raw_cos, 6))
-        .filter(F.col("c6") >= tau)
-        .select(
+        .withColumn("c6", F.expr(f"round({raw_cos}, 6)"))
+        .filter(f"c6 >= {float(tau)!r}D")
+        .selectExpr(
             "cell",
             "left_id",
             "right_id",
-            F.round(F.col("c6"), 4).alias("cos"),
-            (F.col("__cnt__") > cap).alias("truncated"),
+            "round(c6, 4) AS cos",
+            f"__cnt__ > {cap} AS truncated",
         )
     )
 
@@ -390,7 +386,9 @@ def semdedup_build_index(
 
     Returns ``{"cells": DataFrame[(id, vec, cell, __rn__, __cnt__)],
     "centroids": rows, "levels": [per-level sub-centroid frames],
-    ...params}``.  ``__rn__``/``__cnt__`` pre-rank each cell by id so
+    "level_rows": [those frames collected, None for a skipped level],
+    ...params}``; probes route through ``level_rows`` and never write
+    to the dict.  ``__rn__``/``__cnt__`` pre-rank each cell by id so
     the probe's representative cap (see :func:`semdedup_query_index`)
     is a filter, not a per-batch window.  The quantizer is FROZEN, like
     the stop-shingle census: batches are assigned through the recorded
@@ -398,8 +396,6 @@ def semdedup_build_index(
     ingestion.  ``persist=True`` eagerly checkpoints the cell table
     (the at-rest stance; on a cluster write it bucketed by ``cell`` —
     the probe join key — via operators.skew.write_bucketed)."""
-    from financial_data_science_spark.functions.similarity import ivf_build_index
-
     # fan_out=False: the binned frame feeds the cell-split sub-kmeans,
     # whose 6dp-rounded float avg sweeps must keep a deterministic
     # partial-merge order (fanning would make it fetch-order-dependent)
@@ -426,6 +422,7 @@ def semdedup_build_index(
         "cells": cells,
         "centroids": index["centroids"],
         "levels": levels,
+        "level_rows": [None if c is None else c.collect() for c in levels],
         "id_col": id_col,
         "vec_col": vec_col,
         "nsub": nsub,
@@ -433,18 +430,14 @@ def semdedup_build_index(
     }
 
 
-def _level_literal(level_rows, similarity) -> "F.Column":
-    """``map<bigint, array<struct<sub,cv,cnorm>>>`` literal from one
+def _level_literal(level_rows) -> str:
+    """``map<bigint, array<struct<sub,cv,cnorm>>>`` literal text from one
     refinement level's collected sub-centroid rows — the per-CELL analog
-    of ``similarity._centroid_literal`` (same one-``F.expr``-string
-    build, same shortest-roundtrip double spelling, same inlined fold
-    norm, all argued there).  Level frames are bounded by STRUCTURE, not
-    corpus size (level d has <= nlist * nsub^d rows), so inlining stays
-    a few KB at any corpus scale."""
-
-    def d(x: float) -> str:
-        return f"CAST('{float(x)!r}' AS DOUBLE)"
-
+    of ``similarity._centroid_literal`` (same shared SQL text builders,
+    same shortest-roundtrip double spelling, same inlined fold norm, all
+    argued there).  Level frames are bounded by STRUCTURE, not corpus
+    size (level d has <= nlist * nsub^d rows), so inlining stays a few
+    KB at any corpus scale."""
     by_cell: dict[int, list] = {}
     for r in level_rows:
         by_cell.setdefault(int(r["__cell__"]), []).append(
@@ -453,12 +446,12 @@ def _level_literal(level_rows, similarity) -> "F.Column":
     parts = []
     for cell in sorted(by_cell):
         subs = ",".join(
-            f"named_struct('sub',{s},'cv',array({','.join(d(x) for x in cv)}),"
-            f"'cnorm',{d(similarity._fold_norm(cv))})"
+            f"named_struct('sub',{s},'cv',array({','.join(sql_double(x) for x in cv)}),"
+            f"'cnorm',{sql_double(_fold_norm(cv))})"
             for s, cv in sorted(by_cell[cell])
         )
         parts.append(f"CAST({cell} AS BIGINT),array({subs})")
-    return F.expr("map(" + ",".join(parts) + ")")
+    return "map(" + ",".join(parts) + ")"
 
 
 def _route_cells(
@@ -484,60 +477,35 @@ def _route_cells(
     ``max(struct(s, -sub))`` tie break.  Scores are the same
     ``round(dot/(norm*norm), 6)`` IEEE sequence — the row norm let-bound
     once, the sub-centroid norm inlined via ``_fold_norm`` (bit-equality
-    argued at ``_centroid_literal``) — so every cell id is identical."""
-    from financial_data_science_spark.functions import similarity
-    from financial_data_science_spark.functions.porthash import let_
-    from financial_data_science_spark.functions.similarity import (
-        _assign_clusters,
-        dot as _dot,
-        norm as _norm,
-    )
+    argued at ``_centroid_literal``) — so every cell id is identical.
 
-    id_col, vec_col = index["id_col"], index["vec_col"]
+    The level rows were collected when the index was built or read
+    (``level_rows``); routing only reads the index dict."""
     nsub = index["nsub"]
-    # per-index cache of the collected level rows: bounded driver-side
-    # plan-build peeks (same class as the centroid collect the index
-    # build already does), paid once per index dict, not per probe
-    rows_cache = index.get("_levels_rows")
-    if rows_cache is None:
-        rows_cache = [
-            None if c is None else c.collect() for c in index["levels"]
-        ]
-        index["_levels_rows"] = rows_cache
     probes = _assign_clusters(
-        vectors.select(
-            F.col(id_col).alias(out_id), F.col(vec_col).alias("__qv__")
+        vectors.selectExpr(
+            f"{sql_name(index['id_col'])} AS {sql_name(out_id)}",
+            f"{sql_name(index['vec_col'])} AS __qv__",
         ),
         "__qv__",
         index["centroids"],
         6,
-    ).withColumn("__cell__", F.col("cluster").cast("long")).drop("cluster")
-    qv = F.col("__qv__")
-    for level_rows in rows_cache:
-        if level_rows is None or not level_rows:
-            probes = probes.withColumn(
-                "__cell__", F.col("__cell__") * (nsub + 1)
-            )
+    ).withColumn("__cell__", F.expr("CAST(cluster AS BIGINT)")).drop("cluster")
+    for level_rows in index["level_rows"]:
+        if not level_rows:
+            probes = probes.withColumn("__cell__", F.expr(f"__cell__ * {nsub + 1}"))
             continue
-        lvl = _level_literal(level_rows, similarity)
-        best = let_(
-            _norm(qv),
-            lambda nv: F.array_max(
-                F.transform(
-                    F.element_at(lvl, F.col("__cell__")),
-                    lambda c: F.struct(
-                        F.round(
-                            _dot(qv, c["cv"]) / (nv * c["cnorm"]), 6
-                        ).alias("s"),
-                        (-c["sub"]).alias("negsub"),
-                    ),
-                )
-            ),
-        )
+        lvl = _level_literal(level_rows)
+
+        def best(nv: str) -> str:
+            score = _cosine_score("__qv__", nv, 6)
+            body = lam(lambda c: f"struct({score(c)} AS s, -{c}.sub AS negsub)")
+            return f"array_max(transform(element_at({lvl}, __cell__), {body}))"
+
+        sub = f"-{let_sql(norm_sql('__qv__'), best)}.negsub"
         probes = probes.withColumn(
             "__cell__",
-            F.col("__cell__") * (nsub + 1)
-            + F.coalesce((-best["negsub"]).cast("int"), F.lit(0)),
+            F.expr(f"__cell__ * {nsub + 1} + coalesce(CAST({sub} AS INT), 0)"),
         )
     return probes
 
@@ -629,12 +597,9 @@ def _pair_cos(qn_col: str, cv_col: str, cn_col: str):
     interpreted O(dim) folds to one dot fold.  Same operands in the same
     order — ``dot / (norm(q) * norm(c))`` — so every c6 double is
     bit-identical to the inline ``cosine`` it replaces (r15)."""
-    from financial_data_science_spark.functions.similarity import dot as _dot
-
-    return F.round(
-        _dot(F.col("__qv__"), F.col(cv_col))
-        / (F.col(qn_col) * F.col(cn_col)),
-        6,
+    return F.expr(
+        f"round({dot_sql('__qv__', sql_name(cv_col))} / "
+        f"({sql_name(qn_col)} * {sql_name(cn_col)}), 6)"
     )
 
 
@@ -643,16 +608,12 @@ def _join_reps(
 ) -> DataFrame:
     """The representative-capped cell join half of the index probe,
     over an already-routed batch (``(query_id, __qv__, __cell__)``)."""
-    from financial_data_science_spark.functions.similarity import norm as _norm
-
     id_col, vec_col = index["id_col"], index["vec_col"]
     cap = index["cap"]
-    rep_rows = _rep_rows(index, reps).withColumn(
-        "__cn__", _norm(F.col(vec_col))
-    )
+    rep_rows = _rep_rows(index, reps).withColumn("__cn__", norm(vec_col))
     return (
         probes.withColumnRenamed("__cell__", "cell")
-        .withColumn("__qn__", _norm(F.col("__qv__")))
+        .withColumn("__qn__", norm("__qv__"))
         .join(rep_rows.withColumnRenamed("cell", "cell"), "cell")
         .withColumn("c6", _pair_cos("__qn__", vec_col, "__cn__"))
         .filter(F.col("c6") >= tau)
@@ -707,8 +668,6 @@ def semdedup_query_with_pool(
     policy's truncation label, pool pairs are truncated only under
     ``pool_cap``.  Ids in ``queries`` and ``pool`` must be disjoint
     from each other and from the indexed ids."""
-    from financial_data_science_spark.functions.similarity import norm as _norm
-
     id_col = index["id_col"]
     vec_col = index["vec_col"]
     cap = index["cap"]
@@ -759,11 +718,11 @@ def semdedup_query_with_pool(
         F.lit("pool").alias("source"),
     )
     cands = rep_rows.unionByName(pool_rows).withColumn(
-        "__cn__", _norm(F.col("__cv__"))
+        "__cn__", norm("__cv__")
     )
     return (
         qcells.withColumnRenamed("__cell__", "cell")
-        .withColumn("__qn__", _norm(F.col("__qv__")))
+        .withColumn("__qn__", norm("__qv__"))
         .join(cands, "cell")
         .withColumn("c6", _pair_cos("__qn__", "__cv__", "__cn__"))
         .filter(F.col("c6") >= tau)
@@ -846,18 +805,23 @@ def semdedup_read_index(spark: SparkSession, table_prefix: str) -> dict:
         for r in spark.table(f"{table_prefix}_centroids").collect()
     )
     lvl = spark.table(f"{table_prefix}_levels")
-    present = {
-        r["level"] for r in lvl.select("level").distinct().collect()
-    }
+    # one collect of every level's sub-centroid rows (structurally tiny,
+    # see _level_literal): the routing literals need them, and the set
+    # of present levels falls out of the same rows
+    by_level: dict[int, list] = {}
+    for r in lvl.collect():
+        by_level.setdefault(r["level"], []).append(r)
+    depths = range(1, meta["max_depth"] + 1)
     levels = [
         lvl.filter(F.col("level") == d).select("__cell__", "__sub__", "__cv__")
-        if d in present else None
-        for d in range(1, meta["max_depth"] + 1)
+        if d in by_level else None
+        for d in depths
     ]
     return {
         "cells": spark.table(f"{table_prefix}_cells"),
         "centroids": cent_rows,
         "levels": levels,
+        "level_rows": [by_level.get(d) for d in depths],
         "id_col": meta["id_col"],
         "vec_col": meta["vec_col"],
         "nsub": meta["nsub"],

@@ -15,6 +15,10 @@ north star).  Design notes per operator:
     distance on band-partitioned candidates.
   - cosine ANN: brute-force top-k via broadcast of the (small) query side;
     LSH-bucketed variant via random-hyperplane signs for the scale path.
+
+The kernels write their expressions as Spark SQL text (see
+``functions/sqltext.py``): one ``F.expr`` call per expression instead
+of dozens of Column calls, with the same Catalyst plans.
 """
 
 from __future__ import annotations
@@ -22,26 +26,67 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from financial_data_science_spark.functions.text import word_shingles
+from financial_data_science_spark.functions.porthash import MOD
+from financial_data_science_spark.functions.sqltext import (
+    lam,
+    let_sql,
+    sql_double,
+    sql_name,
+)
+from financial_data_science_spark.functions.text import word_shingles_sql
 
 
 # ---------------------------------------------------------------- cosine
+#
+# One text definition per vector fold; the public helpers wrap it.  The
+# ``*_sql`` forms take SQL operands (quoted names or lambda paths such as
+# ``x_7.cv``) and return text; ``dot``/``norm``/``cosine``/``sqdist``
+# take column names and return a Column.
 
-def dot(a: Column, b: Column) -> Column:
-    """Dot product of two array<numeric> columns (JVM-side fold)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def dot_sql(a: str, b: str) -> str:
+    """Dot product of two array<numeric> operands (JVM-side fold)."""
+    prod = lam(lambda x, y: f"CAST({x} AS DOUBLE) * CAST({y} AS DOUBLE)")
+    add = lam(lambda x, y: f"{x} + {y}")
+    return f"aggregate(zip_with({a}, {b}, {prod}), 0.0D, {add})"
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+def norm_sql(a: str) -> str:
+    return f"SQRT({dot_sql(a, a)})"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def cosine_sql(a: str, b: str) -> str:
+    return f"{dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)})"
+
+
+def sqdist_sql(a: str, b: str) -> str:
+    """Squared L2 distance of two array<numeric> operands (JVM-side fold)."""
+
+    def sq(x: str, y: str) -> str:
+        d = f"(CAST({x} AS DOUBLE) - CAST({y} AS DOUBLE))"
+        return f"{d} * {d}"
+
+    add = lam(lambda x, y: f"{x} + {y}")
+    return f"aggregate(zip_with({a}, {b}, {lam(sq)}), 0.0D, {add})"
+
+
+def dot(a: str, b: str) -> Column:
+    """Dot product of the array columns named ``a`` and ``b``."""
+    return F.expr(dot_sql(sql_name(a), sql_name(b)))
+
+
+def norm(a: str) -> Column:
+    """L2 norm of the array column named ``a``."""
+    return F.expr(norm_sql(sql_name(a)))
+
+
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity of the array columns named ``a`` and ``b``."""
+    return F.expr(cosine_sql(sql_name(a), sql_name(b)))
+
+
+def sqdist(a: str, b: str) -> Column:
+    """Squared L2 distance of the array columns named ``a`` and ``b``."""
+    return F.expr(sqdist_sql(sql_name(a), sql_name(b)))
 
 
 def _vec_dim(df: DataFrame, vec_col: str) -> int:
@@ -69,39 +114,36 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int:
     return 0 if row is None else int(row["n"])
 
 
-def _flat_cols(vec: Column, prefix: str, dim: int) -> list:
-    """``dim`` double columns ``__<prefix>0__..`` unpacked from an array
-    column — the codegen-friendly carrier for exact scoring (see
-    :func:`_flat_dot`).  A missing element (null/ragged array) becomes a
-    null column, which nulls any product chain exactly as the zip_with
-    fold nulls its sum."""
-    return [
-        vec.getItem(i).cast("double").alias(f"__{prefix}{i}__")
-        for i in range(dim)
-    ]
+def _flat_cols(vec: str, prefix: str, dim: int) -> list:
+    """``selectExpr`` items for ``dim`` double columns ``__<prefix>0__..``
+    unpacked from the array operand ``vec`` — the codegen-friendly
+    carrier for exact scoring (see :func:`_flat_dot`).  A missing
+    element (null/ragged array) becomes a null column, which nulls any
+    product chain exactly as the zip_with fold nulls its sum."""
+    return [f"CAST({vec}[{i}] AS DOUBLE) AS __{prefix}{i}__" for i in range(dim)]
 
 
-def _flat_dot(pl: str, pr: str, dim: int) -> Column:
+def _flat_dot(pl: str, pr: str, dim: int) -> str:
     """Dot product over flat-unpacked columns as a left-to-right
-    multiply-add chain.  The array fold (:func:`dot`) is a higher-order
-    function — CodegenFallback, interpreted per element, the measured
-    wall of every exact-scoring stage — while this chain compiles under
-    whole-stage codegen.  ((0.0 + l0*r0) + l1*r1) + ... is the same
-    IEEE addition sequence as the fold, so scores are BIT-IDENTICAL."""
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + F.col(f"__{pl}{i}__") * F.col(f"__{pr}{i}__")
-    return acc
+    multiply-add chain (SQL text).  The array fold (:func:`dot`) is a
+    higher-order function — CodegenFallback, interpreted per element,
+    the measured wall of every exact-scoring stage — while this chain
+    compiles under whole-stage codegen.  ((0.0 + l0*r0) + l1*r1) + ...
+    is the same IEEE addition sequence as the fold, so scores are
+    BIT-IDENTICAL."""
+    terms = "".join(f" + __{pl}{i}__ * __{pr}{i}__" for i in range(dim))
+    return f"(0.0D{terms})"
 
 
-def _flat_sqdist(pl: str, pr: str, dim: int) -> Column:
-    """Squared L2 over flat-unpacked columns — same chain argument as
-    :func:`_flat_dot`, bit-identical to the :func:`sqdist` fold."""
-    acc = F.lit(0.0)
-    for i in range(dim):
-        d = F.col(f"__{pl}{i}__") - F.col(f"__{pr}{i}__")
-        acc = acc + d * d
-    return acc
+def _flat_sqdist(pl: str, pr: str, dim: int) -> str:
+    """Squared L2 over flat-unpacked columns (SQL text) — same chain
+    argument as :func:`_flat_dot`, bit-identical to the :func:`sqdist`
+    fold."""
+    terms = "".join(
+        f" + (__{pl}{i}__ - __{pr}{i}__) * (__{pl}{i}__ - __{pr}{i}__)"
+        for i in range(dim)
+    )
+    return f"(0.0D{terms})"
 
 
 def cosine_topk(
@@ -135,25 +177,20 @@ def cosine_topk(
     # just to read one row.
     dim = _vec_dim(corpus, vec_col)
     corpus = fan_out_scan(corpus, id_col)
+    ids, v, qid = sql_name(id_col), sql_name(vec_col), sql_name(query_id)
     q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias(query_id),
-            *_flat_cols(F.col(vec_col), "q", dim),
-            norm(F.col(vec_col)).alias("__qn__"),
+        queries.selectExpr(
+            f"{ids} AS {qid}", *_flat_cols(v, "q", dim), f"{norm_sql(v)} AS __qn__"
         )
     )
-    corpus = corpus.select(
-        F.col(id_col),
-        *_flat_cols(F.col(vec_col), "c", dim),
-        norm(F.col(vec_col)).alias("__cn__"),
+    corpus = corpus.selectExpr(
+        ids, *_flat_cols(v, "c", dim), f"{norm_sql(v)} AS __cn__"
     )
-    s = _flat_dot("q", "c", dim) / (F.col("__qn__") * F.col("__cn__"))
+    s = f"{_flat_dot('q', 'c', dim)} / (__qn__ * __cn__)"
     if round_dp is not None:
-        s = F.round(s, round_dp)
-    scored = corpus.join(q, F.col(query_id) != F.col(id_col)).select(
-        query_id,
-        F.col(id_col).alias("neighbor_id"),
-        s.alias("score"),
+        s = f"round({s}, {round_dp})"
+    scored = corpus.join(q, F.col(query_id) != F.col(id_col)).selectExpr(
+        qid, f"{ids} AS neighbor_id", f"{s} AS score"
     )
     w = Window.partitionBy(query_id).orderBy(
         F.col("score").desc(), F.col("neighbor_id").asc()
@@ -328,23 +365,21 @@ def embedding_near_dups(
     # dim peek moved above the fan call; the hoisted norms STAY as the
     # interpreted fold — swapping them for flat self-dot chains was
     # measured SLOWER here, the per-stage plan-bloat cost again.)
-    vec = F.col(vec_col)
-    lv = emb.select(
-        ids.alias("left_id"), *_flat_cols(vec, "l", dim),
-        norm(vec).alias("__ln__"),
+    i, v = sql_name(id_col), sql_name(vec_col)
+    lv = emb.selectExpr(
+        f"{i} AS left_id", *_flat_cols(v, "l", dim), f"{norm_sql(v)} AS __ln__"
     )
-    rv = emb.select(
-        ids.alias("right_id"), *_flat_cols(vec, "r", dim),
-        norm(vec).alias("__rn__"),
+    rv = emb.selectExpr(
+        f"{i} AS right_id", *_flat_cols(v, "r", dim), f"{norm_sql(v)} AS __rn__"
     )
-    score = _flat_dot("l", "r", dim) / (F.col("__ln__") * F.col("__rn__"))
-    scored = cands.join(lv, "left_id").join(rv, "right_id").select(
+    score = f"{_flat_dot('l', 'r', dim)} / (__ln__ * __rn__)"
+    scored = cands.join(lv, "left_id").join(rv, "right_id").selectExpr(
         "left_id",
         "right_id",
         # rounded BEFORE the threshold compare (round-before-compare
         # discipline: a cross-engine ulp at the boundary cannot flip
         # pair membership against an oracle)
-        F.round(score, 6).alias("score"),
+        f"round({score}, 6) AS score",
     )
     return scored.filter(F.col("score") >= threshold)
 
@@ -436,10 +471,10 @@ def minhash_band_keys(
 def _h64_shingles(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """(id, ``__h64__``) rows: each distinct k-shingle of a doc, hashed
     with xxhash64 right at the explode — the production census key."""
-    return docs.select(
-        F.col(id_col),
-        F.explode(word_shingles(text_col, k)).alias("__shingle__"),
-    ).select(id_col, F.xxhash64("__shingle__").alias("__h64__"))
+    i = sql_name(id_col)
+    return docs.selectExpr(
+        i, f"explode({word_shingles_sql(sql_name(text_col), k)}) AS __shingle__"
+    ).selectExpr(i, "xxhash64(__shingle__) AS __h64__")
 
 
 def _stop_set(
@@ -528,7 +563,6 @@ def minhash_signatures(
     # stage at plan-build time for a metadata-grade count.
     raw_docs = docs
     docs = fan_out_scan(docs, id_col)
-    p = (1 << 31) - 1
     coeffs = _minhash_coeffs(seed, num_hashes)
     tcol = F.col(text_col) if isinstance(text_col, str) else text_col
     if portable and max_df is None and stop_frame is None:
@@ -546,17 +580,7 @@ def minhash_signatures(
                 "__h0__"
             ),
         )
-        sig = exploded.groupBy(id_col).agg(
-            *[
-                F.min((F.col("__h0__") * F.lit(a) + F.lit(b)) % F.lit(p)).alias(
-                    f"h{i}"
-                )
-                for i, (a, b) in enumerate(coeffs)
-            ]
-        )
-        return sig.withColumn(
-            "__sig__", F.array(*[F.col(f"h{i}") for i in range(num_hashes)])
-        )
+        return _signature_agg(exploded, id_col, coeffs)
     if portable:
         # max_df needs the gram STRING too (the stop-shingle census and
         # anti-join key) — pair each distinct gram string with its
@@ -570,10 +594,8 @@ def minhash_signatures(
             F.explode(gram_structs31(tokens(F.lower(tcol)), shingle_k)).alias(
                 "__g__"
             ),
-        ).select(
-            id_col,
-            F.col("__g__.s").alias("__shingle__"),
-            F.col("__g__.h").alias("__h0pre__"),
+        ).selectExpr(
+            sql_name(id_col), "__g__.s AS __shingle__", "__g__.h AS __h0pre__"
         )
     else:
         # hash each distinct shingle ONCE and drop the string right at
@@ -586,11 +608,7 @@ def minhash_signatures(
         # counts (vs n^2/2^31 — real at corpus scale), which is why the
         # oracle path keeps its string census and this one does not.
         exploded = _h64_shingles(docs, id_col, text_col, shingle_k)
-    base_hash = (
-        F.col("__h0pre__")
-        if portable
-        else F.pmod(F.col("__h64__"), F.lit(p))
-    )
+    base_hash = "__h0pre__" if portable else f"pmod(__h64__, {MOD})"
     census_key = "__shingle__" if portable else "__h64__"
     if max_df is not None:
         # the census AND the hash aggregate both consume the exploded
@@ -619,37 +637,44 @@ def minhash_signatures(
         exploded = exploded.join(
             F.broadcast(stop_frame.select(census_key)), census_key, "left_anti"
         )
-    exploded = exploded.select(
-        id_col,
+    exploded = exploded.selectExpr(
+        sql_name(id_col),
         # one string hash per shingle; the k-family is affine mixes of it
         # (a_i*h+b_i mod p) — 64 multiply-adds instead of 64 string hashes
-        base_hash.alias("__h0__"),
+        f"{base_hash} AS __h0__",
     )
+    return _signature_agg(exploded, id_col, coeffs)
+
+
+def _signature_agg(exploded: DataFrame, id_col: str, coeffs: list) -> DataFrame:
+    """The signature aggregate over ``(id, __h0__)`` rows: ONE hash
+    aggregate with a ``min((a_i*h + b_i) % p)`` column ``h{i}`` per
+    affine pair (map-side partial combine), then the ``__sig__`` array
+    of all of them."""
     sig = exploded.groupBy(id_col).agg(
         *[
-            F.min((F.col("__h0__") * F.lit(a) + F.lit(b)) % F.lit(p)).alias(f"h{i}")
+            F.expr(f"min((__h0__ * {a} + {b}) % {MOD}) AS h{i}")
             for i, (a, b) in enumerate(coeffs)
         ]
     )
-    return sig.withColumn("__sig__", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]))
+    hs = ", ".join(f"h{i}" for i in range(len(coeffs)))
+    return sig.withColumn("__sig__", F.expr(f"array({hs})"))
 
 
-def lsh_band_key(b: int, rows_per_band: int, portable: bool) -> Column:
-    """Band key over ``h{i}`` signature columns — THE one definition of
-    the LSH band fold (murmur3-backed ``F.hash`` in production, the
-    65537-fold 31-bit arithmetic key when a SQL oracle must replay it).
+def lsh_band_key(b: int, rows_per_band: int, portable: bool) -> str:
+    """Band key over ``h{i}`` signature columns, as SQL text — THE one
+    definition of the LSH band fold (murmur3-backed ``hash`` in
+    production, the 65537-fold 31-bit arithmetic key when a SQL oracle
+    must replay it).
     Shared by :func:`minhash_candidates` and the incremental index
     (functions/minhash_index.py), folded here at the r12 re-seal after
     one round of documented duplication behind the sealed-floor pin."""
-    cols = [
-        F.col(f"h{i}")
-        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-    ]
+    cols = [f"h{i}" for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
     if not portable:
-        return F.hash(*cols)
-    acc = F.lit(0).cast("long")
+        return f"hash({', '.join(cols)})"
+    acc = "CAST(0 AS BIGINT)"
     for c in cols:  # (acc*65537 + h) % p — h < p so products stay < 2^48
-        acc = (acc * F.lit(65537) + c) % F.lit((1 << 31) - 1)
+        acc = f"({acc} * 65537 + {c}) % {MOD}"
     return acc
 
 
@@ -679,20 +704,14 @@ def lsh_banded(
             f"lsh_banded: bands={bands} must divide num_hashes={num_hashes}"
         )
     rpb = num_hashes // bands
-    return sig.select(
-        F.col(id_col).alias(out_id),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        lsh_band_key(b, rpb, portable).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__band__"),
-    ).select(out_id, "__band__.band", "__band__.bhash")
+    structs = ", ".join(
+        f"struct({b} AS band, {lsh_band_key(b, rpb, portable)} AS bhash)"
+        for b in range(bands)
+    )
+    out = sql_name(out_id)
+    return sig.selectExpr(
+        f"{sql_name(id_col)} AS {out}", f"explode(array({structs})) AS __band__"
+    ).selectExpr(out, "__band__.band", "__band__.bhash")
 
 
 def _bucket_self_pairs(banded: DataFrame) -> DataFrame:
@@ -712,13 +731,14 @@ def _bucket_self_pairs(banded: DataFrame) -> DataFrame:
     )
 
 
-def sig_match_fraction(lsig: Column, rsig: Column, num_hashes: int) -> Column:
-    """Share of the ``num_hashes`` min-hashes two signatures agree on —
-    the MinHash estimate of their Jaccard similarity."""
-    matched = F.size(
-        F.filter(F.zip_with(lsig, rsig, lambda a, b: a == b), lambda x: x)
-    )
-    return matched / F.lit(float(num_hashes))
+def sig_match_fraction(lsig: str, rsig: str, num_hashes: int) -> Column:
+    """Share of the ``num_hashes`` min-hashes the signature columns
+    named ``lsig`` and ``rsig`` agree on — the MinHash estimate of
+    their Jaccard similarity."""
+    eq = lam(lambda a, b: f"{a} = {b}")
+    pairs = f"zip_with({sql_name(lsig)}, {sql_name(rsig)}, {eq})"
+    matched = f"size(filter({pairs}, {lam(lambda x: x)}))"
+    return F.expr(f"{matched} / {float(num_hashes)!r}D")
 
 
 def stop_shingle_census(
@@ -818,7 +838,7 @@ def minhash_candidates(
     )
     ls = sig.select(F.col(id_col).alias("left_id"), F.col("__sig__").alias("__lsig__"))
     rs = sig.select(F.col(id_col).alias("right_id"), F.col("__sig__").alias("__rsig__"))
-    est = sig_match_fraction(F.col("__lsig__"), F.col("__rsig__"), num_hashes)
+    est = sig_match_fraction("__lsig__", "__rsig__", num_hashes)
     return (
         pairs.join(ls, "left_id")
         .join(rs, "right_id")
@@ -967,9 +987,12 @@ def _shingle_sets(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFr
     """(id, ``__sh__`` distinct shingle array, ``__n__`` its size) for
     every doc with at least one shingle."""
     return (
-        docs.select(F.col(id_col), word_shingles(text_col, k).alias("__sh__"))
-        .withColumn("__n__", F.size("__sh__"))
-        .filter(F.col("__n__") > 0)
+        docs.selectExpr(
+            sql_name(id_col),
+            f"{word_shingles_sql(sql_name(text_col), k)} AS __sh__",
+        )
+        .withColumn("__n__", F.expr("size(__sh__)"))
+        .filter("__n__ > 0")
     )
 
 
@@ -1094,51 +1117,54 @@ def _fold_norm(cv) -> float:
     return math.sqrt(acc)
 
 
-def _centroid_literal(cent_rows: list) -> Column:
-    """``array<struct<cluster,cv,cnorm>>`` literal built from collected
-    centroid rows — the broadcast-to-every-task form of the nlist-row
-    centroid table.  nlist x dim doubles, a few KB: cheaper to inline than
-    to broadcast-join.  The centroid norm rides along as a literal so the
-    per-row cosine is one dot product, not three folds.
+def _centroid_literal(cent_rows: list) -> str:
+    """``array<struct<cluster,cv,cnorm>>`` literal, as SQL text, from
+    collected centroid rows — the broadcast-to-every-task form of the
+    nlist-row centroid table.  nlist x dim doubles, a few KB: cheaper to
+    inline than to broadcast-join.  The centroid norm rides along as a
+    literal so the per-row cosine is one dot product, not three folds.
 
     (An unrolled multiply-add formulation was tried and measured 5x
     SLOWER: a dim x nlist flat Add chain explodes the expression tree and
     defeats codegen — the HOF fold over one array literal is the fast
     shape here.)
 
-    Built as ONE ``F.expr`` SQL string, not nested ``F.lit`` calls: the
-    lit/struct/array form costs nlist x (dim + 2) Py4J round trips
-    (~0.9s of pure driver time per call at 8x64, and the literal is
-    rebuilt every Lloyd sweep), while parsing one ~20 KB string is a
-    single gateway call.  Python ``repr`` doubles round-trip exactly
+    Built with the shared SQL text builders (``functions/sqltext.py``),
+    so the argmax kernels embed the literal in their own text and each
+    argmax is ONE ``F.expr`` call: the lit/struct/array Column form cost
+    nlist x (dim + 2) Py4J round trips (~0.9s of pure driver time per
+    call at 8x64, and the literal is rebuilt every Lloyd sweep).
+    ``sqltext.sql_double`` spells each value so it round-trips exactly
     through the SQL parser (checked in test_similarity), so the plan is
     bit-identical to the lit-built tree."""
-
-    def d(x: float) -> str:
-        # repr() is shortest-roundtrip; CAST guards exotic spellings
-        return f"CAST('{float(x)!r}' AS DOUBLE)"
-
     parts = []
     for c, cv in cent_rows:
-        arr = ",".join(d(x) for x in cv)
+        arr = ",".join(sql_double(x) for x in cv)
         parts.append(
             f"named_struct('cluster',{int(c)},'cv',array({arr}),"
-            f"'cnorm',{d(_fold_norm(cv))})"
+            f"'cnorm',{sql_double(_fold_norm(cv))})"
         )
-    return F.expr("array(" + ",".join(parts) + ")")
+    return "array(" + ",".join(parts) + ")"
 
 
-def sqdist(a: Column, b: Column) -> Column:
-    """Squared L2 distance of two array<numeric> columns (JVM-side fold)."""
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, z: acc + z,
+def _argmax_sql(lit: str, score) -> str:
+    """Text of the map-side argmax over a :func:`_centroid_literal`:
+    one ``struct(s, -cluster, cluster)`` per centroid and ``array_max``
+    of them, so the best score wins and ties go to the lowest cluster.
+    ``score(c)`` gives the score text of lambda variable ``c``."""
+    body = lam(
+        lambda c: f"struct({score(c)} AS s, -{c}.cluster AS negc, "
+        f"{c}.cluster AS cluster)"
+    )
+    return f"array_max(transform({lit}, {body}))"
+
+
+def _cosine_score(v: str, nv: str, round_dp: int):
+    """``round(dot(v, c.cv) / (|v| * c.cnorm), round_dp)`` for lambda
+    variable ``c``: the cosine against a literal centroid whose norm is
+    inlined, with the row norm ``nv`` let-bound by the caller."""
+    return lambda c: (
+        f"round({dot_sql(v, f'{c}.cv')} / ({nv} * {c}.cnorm), {round_dp})"
     )
 
 
@@ -1165,36 +1191,29 @@ def _assign_clusters(
     expression (CodegenFallback, no common-subexpression elimination),
     so a bare ``norm(v)`` referenced inside the per-centroid lambda
     re-ran the O(dim) self-dot fold once PER CENTROID — nlist folds per
-    row where one suffices.  ``porthash.let_`` evaluates it once; the
-    bound double is the identical value, so scores are bit-identical."""
-    from financial_data_science_spark.functions.porthash import let_
-
-    v = F.col(vec_col)
-
-    def _argmax(score):
-        return F.array_max(
-            F.transform(
-                _centroid_literal(cent_rows),
-                lambda c: F.struct(
-                    score(c).alias("s"),
-                    (-c["cluster"]).alias("negc"),
-                    c["cluster"].alias("cluster"),
-                ),
-            )
-        )
-
+    row where one suffices.  ``let_sql`` evaluates it once; the bound
+    double is the identical value, so scores are bit-identical.  The
+    whole argmax is one SQL text (``_centroid_literal``)."""
+    v, lit = sql_name(vec_col), _centroid_literal(cent_rows)
     if metric == "cosine":
-        best = let_(
-            norm(v),
-            lambda nv: _argmax(
-                lambda c: F.round(dot(v, c["cv"]) / (nv * c["cnorm"]), round_dp)
-            ),
+        best = let_sql(
+            norm_sql(v),
+            lambda nv: _argmax_sql(lit, _cosine_score(v, nv, round_dp)),
         )
     elif metric == "l2":
-        best = _argmax(lambda c: -F.round(sqdist(v, c["cv"]), round_dp))
+        best = _argmax_sql(
+            lit, lambda c: f"-round({sqdist_sql(v, f'{c}.cv')}, {round_dp})"
+        )
     else:
         raise ValueError(f"unknown metric {metric!r}")
-    return df.withColumn("cluster", best["cluster"])
+    return df.withColumn("cluster", F.expr(f"{best}.cluster"))
+
+
+def _round_vec(vec: str, round_dp: int) -> str:
+    """Text rounding each element of array operand ``vec`` to
+    ``round_dp`` places — the grid centroids are snapped to."""
+    rounded = lam(lambda x: f"round(CAST({x} AS DOUBLE), {round_dp})")
+    return f"transform({vec}, {rounded})"
 
 
 def _ivf_train_rows(
@@ -1221,7 +1240,7 @@ def _ivf_train_rows(
     oracle trains on exactly the same subset.  The sample is
     localCheckpointed once: the sweeps iterate over in-memory blocks, not
     repeated source scans."""
-    v = F.col(vec_col)
+    v = sql_name(vec_col)
     train = corpus.select(id_col, vec_col)
     if train_mod > 1:
         train = train.filter((F.col(id_col) % train_mod) == 0)
@@ -1234,7 +1253,7 @@ def _ivf_train_rows(
             F.row_number()
             .over(Window.partitionBy(F.lit(0)).orderBy(id_col))
             .alias("cluster"),
-            F.transform(v, lambda x: F.round(x.cast("double"), round_dp)).alias("cv"),
+            F.expr(f"{_round_vec(v, round_dp)} AS cv"),
         )
     )
     cent_rows = sorted((r["cluster"], list(r["cv"])) for r in init.collect())
@@ -1243,17 +1262,18 @@ def _ivf_train_rows(
             train.select(vec_col), vec_col, cent_rows, round_dp, metric
         )
         cells = (
-            asg.select("cluster", F.posexplode(v).alias("pos", "val"))
+            asg.selectExpr("cluster", f"posexplode({v}) AS (pos, val)")
             .groupBy("cluster", "pos")
-            .agg(F.round(F.avg(F.col("val").cast("double")), round_dp).alias("cavg"))
+            .agg(F.expr(f"round(avg(CAST(val AS DOUBLE)), {round_dp}) AS cavg"))
         )
+        by_pos = lam(lambda st: f"{st}.cavg")
         rows = (
             cells.groupBy("cluster")
             .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cavg"))),
-                    lambda st: st["cavg"],
-                ).alias("cv")
+                F.expr(
+                    "transform(array_sort(collect_list(struct(pos, cavg))), "
+                    f"{by_pos}) AS cv"
+                )
             )
             .collect()
         )
@@ -1310,37 +1330,35 @@ def _probe_clusters(
     nprobe, explode.  Shared by the IVF and IVF+PQ query paths.
     ``keep`` carries extra query-side columns (e.g. a label for filtered
     search) through unchanged."""
-    from financial_data_science_spark.functions.porthash import let_
-
-    qv = F.col("__qv__")
-    # query norm let-bound (r15): interpreted HOFs have no CSE, so a
-    # bare norm(qv) in the per-centroid lambda re-ran the O(dim) fold
-    # nlist times per query row; bound once, values bit-identical
-    probe_arr = let_(
-        norm(qv),
-        lambda nq: F.transform(
-            _centroid_literal(cent_rows),
-            lambda c: F.struct(
-                (-F.round(dot(qv, c["cv"]) / (nq * c["cnorm"]), 6)).alias("negs"),
-                c["cluster"].alias("cluster"),
-            ),
-        ),
-    )
     return (
         queries.select(
-            F.col(id_col).alias(query_id), F.col(vec_col).alias("__qv__"), *keep
+            F.expr(f"{sql_name(id_col)} AS {sql_name(query_id)}"),
+            F.expr(f"{sql_name(vec_col)} AS __qv__"),
+            *keep,
         )
-        .withColumn(
-            "cluster",
-            F.explode(
-                F.transform(
-                    F.slice(F.array_sort(probe_arr), 1, nprobe),
-                    lambda s: s["cluster"],
-                )
-            ),
-        )
+        .withColumn("cluster", F.expr(_probe_sql(cent_rows, nprobe)))
         .select(query_id, "__qv__", "cluster", *keep)
     )
+
+
+def _probe_sql(cent_rows: list, nprobe: int) -> str:
+    """Text exploding the ``nprobe`` best clusters of ``__qv__`` (see
+    :func:`_probe_clusters`).  The query norm is let-bound (r15):
+    interpreted HOFs have no CSE, so a bare norm in the per-centroid
+    lambda re-ran the O(dim) fold nlist times per query row; bound
+    once, values bit-identical."""
+    lit = _centroid_literal(cent_rows)
+
+    def scored(nq: str) -> str:
+        score = _cosine_score("__qv__", nq, 6)
+        body = lam(
+            lambda c: f"struct(-{score(c)} AS negs, {c}.cluster AS cluster)"
+        )
+        return f"transform({lit}, {body})"
+
+    probe_arr = let_sql(norm_sql("__qv__"), scored)
+    best = f"slice(array_sort({probe_arr}), 1, {nprobe})"
+    return f"explode(transform({best}, {lam(lambda p: f'{p}.cluster')}))"
 
 
 def ivf_build_index(
@@ -1414,10 +1432,9 @@ def ivf_query_index(
     needed after a filtered IVF query."""
     id_col, vec_col = index["id_col"], index["vec_col"]
     cent_rows, binned = index["centroids"], index["binned"]
-    v = F.col(vec_col)
     probes = _probe_clusters(
         queries, id_col, vec_col, cent_rows, nprobe, query_id, keep=qkeep
-    ).withColumn("__qn__", norm(F.col("__qv__")))
+    ).withColumn("__qn__", norm("__qv__"))
     # probes is |Q| x nprobe rows — broadcast it so the corpus-side bin
     # join is map-side; a hash shuffle on the nlist-value cluster key
     # would cap parallelism at nlist and skew on popular lists.
@@ -1426,24 +1443,22 @@ def ivf_query_index(
     # bit-identical scores, see embedding_near_dups; the persisted
     # index schema is untouched (the corpus norm is a lazy projection
     # on top of the loaded/checkpointed binned frame)
-    binned = binned.withColumn("__cn__", norm(v))
+    binned = binned.withColumn("__cn__", norm(vec_col))
     scored = F.broadcast(probes).join(binned, "cluster").filter(
         F.col(query_id) != F.col(id_col)
     )
     if candidate_filter is not None:
         scored = scored.filter(candidate_filter)
-    raw_dot = dot(F.col("__qv__"), v)
+    raw_dot = dot_sql("__qv__", sql_name(vec_col))
     scored = scored.select(
         query_id,
         *qkeep,
-        F.col(id_col).alias("neighbor_id"),
+        F.expr(f"{sql_name(id_col)} AS neighbor_id"),
         *index.get("payload", ()),
         # rounded to the 6dp grid BEFORE the top-k ordering so a
         # cross-engine ulp difference near a rank boundary cannot flip
         # membership vs the oracle (same discipline as the assignment)
-        F.round(
-            raw_dot / (F.col("__qn__") * F.col("__cn__")), 6
-        ).alias("score"),
+        F.expr(f"round({raw_dot} / (__qn__ * __cn__), 6) AS score"),
     )
     w = Window.partitionBy(query_id).orderBy(
         F.col("score").desc(), F.col("neighbor_id").asc()
@@ -1489,26 +1504,21 @@ def ivf_topk(
 
 # ---------------------------------------------------------------- PQ
 
-def _vec_array_literal(cent_rows: list) -> Column:
-    """array<array<double>> literal of centroid vectors POSITIONED by
-    cluster id (1-based — ``element_at(lit, code)`` fetches a code's
+def _vec_array_sql(cent_rows: list) -> str:
+    """array<array<double>> literal text of centroid vectors POSITIONED
+    by cluster id (1-based — ``element_at(lit, code)`` fetches a code's
     centroid).  Lloyd sweeps can empty a cluster, leaving id gaps; gap
     positions hold empty arrays so surviving ids still land at their own
     index (codes only ever reference surviving clusters, so a gap slot
-    is never read).  Same single-``F.expr`` construction as
-    _centroid_literal."""
-
-    def d(x: float) -> str:
-        return f"CAST('{float(x)!r}' AS DOUBLE)"
-
+    is never read).  Spelled like :func:`_centroid_literal`."""
     by_id = {int(c): cv for c, cv in cent_rows}
     parts = [
-        "array(" + ",".join(d(x) for x in by_id[c]) + ")"
+        "array(" + ",".join(sql_double(x) for x in by_id[c]) + ")"
         if c in by_id
         else "CAST(array() AS ARRAY<DOUBLE>)"
         for c in range(1, max(by_id) + 1)
     ]
-    return F.expr("array(" + ",".join(parts) + ")")
+    return "array(" + ",".join(parts) + ")"
 
 
 def _adc_luts(qvec: str, books: list, sub: int) -> dict:
@@ -1524,26 +1534,21 @@ def _adc_luts(qvec: str, books: list, sub: int) -> dict:
     double is unchanged; gap slots of the codebook literal (emptied
     Lloyd clusters) evaluate to null and are never selected (codes only
     reference surviving clusters)."""
+    q = sql_name(qvec)
+
     def _lut(j: int, book: list) -> Column:
-        # bind via closure, NOT lambda defaults: Spark maps the
-        # lambda's PARAMETER COUNT to the 1/2/3-arg higher-order
-        # variants (same trap documented at minhash_band_keys._affine)
-        qs = F.slice(F.col(qvec), j * sub + 1, sub)
-        return F.transform(
-            _vec_array_literal(book), lambda cent: sqdist(qs, cent)
-        )
+        qs = f"slice({q}, {j * sub + 1}, {sub})"
+        body = lam(lambda cent: sqdist_sql(qs, cent))
+        return F.expr(f"transform({_vec_array_sql(book)}, {body})")
 
     return {f"__lut{j}__": _lut(j, book) for j, book in enumerate(books)}
 
 
-def _adc_sum(m: int) -> Column:
-    """Left-associated ADC sum over the per-query LUT columns — the
-    same addition chain the per-pair form built, so doubles match."""
-    dist = None
-    for j in range(m):
-        term = F.element_at(F.col(f"__lut{j}__"), F.col("codes")[j])
-        dist = term if dist is None else dist + term
-    return dist
+def _adc_sum(m: int) -> str:
+    """Left-associated ADC sum over the per-query LUT columns (SQL
+    text) — the same addition chain the per-pair form built, so doubles
+    match."""
+    return " + ".join(f"element_at(__lut{j}__, codes[{j}])" for j in range(m))
 
 
 def pq_train(
@@ -1606,38 +1611,24 @@ def pq_encode(
     # loop (whose float avg aggregates must keep their partitioning).
     # No-op at scale / when the caller already fanned the frame.
     corpus = fan_out_scan(corpus, id_col)
-    from financial_data_science_spark.functions.porthash import let_
-
-    m = len(codebooks)
+    v = sql_name(vec_col)
     sub = len(codebooks[0][0][1])
-    cols = []
+    codes = []
     for j, book in enumerate(codebooks):
         # subvector slice let-bound (r15): the interpreted argmax has no
         # CSE, so a bare slice() in the per-centroid lambda re-copied
         # the subvector k times per row; bound once — codes identical
-        sv = F.slice(F.col(vec_col), j * sub + 1, sub)
         lit = _centroid_literal(book)
-
-        def _make_body(_lit):
-            # bind via closure, NOT lambda defaults: Spark maps the
-            # lambda's PARAMETER COUNT to the 1/2/3-arg HOF variants
-            def body(svb):
-                return F.array_max(
-                    F.transform(
-                        _lit,
-                        lambda c: F.struct(
-                            (-F.round(sqdist(svb, c["cv"]), 6)).alias("s"),
-                            (-c["cluster"]).alias("negc"),
-                            c["cluster"].alias("cluster"),
-                        ),
-                    )
-                )
-
-            return body
-
-        best = let_(sv, _make_body(lit))
-        cols.append(best["cluster"])
-    return corpus.select(id_col, F.array(*cols).alias(out))
+        best = let_sql(
+            f"slice({v}, {j * sub + 1}, {sub})",
+            lambda sv: _argmax_sql(
+                lit, lambda c: f"-round({sqdist_sql(sv, f'{c}.cv')}, 6)"
+            ),
+        )
+        codes.append(f"{best}.cluster")
+    return corpus.selectExpr(
+        sql_name(id_col), f"array({', '.join(codes)}) AS {sql_name(out)}"
+    )
 
 
 def pq_topk(
@@ -1678,7 +1669,7 @@ def pq_topk(
     scored = coded.join(q, F.col(query_id) != F.col(id_col)).select(
         query_id,
         F.col(id_col).alias("neighbor_id"),
-        F.round(_adc_sum(m), 6).alias("approx_d2"),
+        F.expr(f"round({_adc_sum(m)}, 6) AS approx_d2"),
     )
     w = Window.partitionBy(query_id).orderBy(
         F.col("approx_d2").asc(), F.col("neighbor_id").asc()
@@ -1825,7 +1816,7 @@ def ivfpq_query_index(
         *qkeep,
         F.col(id_col).alias("neighbor_id"),
         *payload,
-        F.round(_adc_sum(len(books)), 6).alias("approx_d2"),
+        F.expr(f"round({_adc_sum(len(books))}, 6) AS approx_d2"),
     )
     w = Window.partitionBy(query_id).orderBy(
         F.col("approx_d2").asc(), F.col("neighbor_id").asc()
@@ -1865,18 +1856,14 @@ def rerank_exact(
     # FLAT-UNPACKED columns (codegen multiply-add chain, bit-identical
     # to the interpreted array fold — see _flat_dot)
     dim = _vec_dim(corpus, vec_col)
-    qv = corpus.select(
-        F.col(id_col).alias(query_id),
-        *_flat_cols(F.col(vec_col), "q", dim),
-        norm(F.col(vec_col)).alias("__qn__"),
+    i, v = sql_name(id_col), sql_name(vec_col)
+    qid, nid = sql_name(query_id), sql_name(neighbor_id)
+    qv = corpus.selectExpr(
+        f"{i} AS {qid}", *_flat_cols(v, "q", dim), f"{norm_sql(v)} AS __qn__"
     )
-    nv = corpus.select(
-        F.col(id_col).alias(neighbor_id),
-        *_flat_cols(F.col(vec_col), "n", dim),
-        norm(F.col(vec_col)).alias("__nn__"),
+    nv = corpus.selectExpr(
+        f"{i} AS {nid}", *_flat_cols(v, "n", dim), f"{norm_sql(v)} AS __nn__"
     )
-    raw_cos = _flat_dot("q", "n", dim) / (F.col("__qn__") * F.col("__nn__"))
-    raw_l2 = _flat_sqdist("q", "n", dim)
     # candidates are |Q| x R pairs — small by construction — so FORCE the
     # broadcast (don't rely on autoBroadcastJoinThreshold seeing through
     # the projection): the full vector table must stream, never shuffle
@@ -1886,12 +1873,12 @@ def rerank_exact(
         .join(nv, neighbor_id)
     )
     if metric == "cosine":
-        score = F.round(raw_cos, 6)
+        score = f"{_flat_dot('q', 'n', dim)} / (__qn__ * __nn__)"
         order = F.col("score").desc()
     else:
-        score = F.round(raw_l2, 6)
+        score = _flat_sqdist("q", "n", dim)
         order = F.col("score").asc()
-    scored = paired.select(query_id, neighbor_id, score.alias("score"))
+    scored = paired.selectExpr(qid, nid, f"round({score}, 6) AS score")
     w = Window.partitionBy(query_id).orderBy(order, F.col(neighbor_id).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1953,10 +1940,9 @@ def _residual(vec_col: str, coarse_rows: list) -> Column:
     """Element-wise residual v - coarse_centroid[cluster] (map-side: the
     centroid table rides as a positional literal, the subtraction of
     identical doubles is FP-exact across engines)."""
-    cent = F.element_at(_vec_array_literal(coarse_rows), F.col("cluster"))
-    return F.zip_with(
-        F.col(vec_col), cent, lambda a, b: a.cast("double") - b
-    )
+    cent = f"element_at({_vec_array_sql(coarse_rows)}, cluster)"
+    diff = lam(lambda a, b: f"CAST({a} AS DOUBLE) - {b}")
+    return F.expr(f"zip_with({sql_name(vec_col)}, {cent}, {diff})")
 
 
 def ivfpq_residual_topk(
@@ -2031,37 +2017,8 @@ def ivfpq_residual_topk(
         res_enc.select(id_col, F.col("__rv__").alias("__enc__")),
         books, id_col, "__enc__",
     ).join(binned_enc.select(id_col, "cluster"), id_col)
-    # probes: top-nprobe coarse clusters per query (cosine, as in ivf);
-    # query norm let-bound (r15) — same no-CSE argument as
-    # _probe_clusters, values bit-identical
-    from financial_data_science_spark.functions.porthash import let_
-
-    qv = F.col("__qv__")
-    probe_arr = let_(
-        norm(qv),
-        lambda nq: F.transform(
-            _centroid_literal(coarse),
-            lambda c: F.struct(
-                (-F.round(dot(qv, c["cv"]) / (nq * c["cnorm"]), 6)).alias(
-                    "negs"
-                ),
-                c["cluster"].alias("cluster"),
-            ),
-        ),
-    )
-    probes = (
-        queries.select(F.col(id_col).alias(query_id), F.col(vec_col).alias("__qv__"))
-        .withColumn(
-            "cluster",
-            F.explode(
-                F.transform(
-                    F.slice(F.array_sort(probe_arr), 1, nprobe),
-                    lambda s: s["cluster"],
-                )
-            ),
-        )
-        .select(query_id, "__qv__", "cluster")
-    )
+    # probes: top-nprobe coarse clusters per query (cosine, as in ivf)
+    probes = _probe_clusters(queries, id_col, vec_col, coarse, nprobe, query_id)
     # query residual PER PROBED LIST, then ADC vs the coded residuals;
     # LUTs per (query, probe) row — the residual operand depends on the
     # probed cluster, so that row is exactly where the table belongs
@@ -2075,7 +2032,7 @@ def ivfpq_residual_topk(
         .select(
             query_id,
             F.col(id_col).alias("neighbor_id"),
-            F.round(_adc_sum(len(books)), 6).alias("approx_d2"),
+            F.expr(f"round({_adc_sum(len(books))}, 6) AS approx_d2"),
         )
     )
     w = Window.partitionBy(query_id).orderBy(
@@ -2108,10 +2065,7 @@ def _dim_stats(corpus: DataFrame, vec_col: str, round_dp: int = 6) -> tuple:
 
 
 def _dlist_literal(xs: list) -> Column:
-    def d(x: float) -> str:
-        return f"CAST('{float(x)!r}' AS DOUBLE)"
-
-    return F.expr("array(" + ",".join(d(x) for x in xs) + ")")
+    return F.expr("array(" + ",".join(sql_double(x) for x in xs) + ")")
 
 
 def sq8_encode(
@@ -2195,22 +2149,20 @@ def sq8_topk(
     # argument).
     coded = coded.withColumn(
         "__dv__", sq8_dequantize(F.col("codes"), mins, maxs)
-    ).withColumn("__cn__", norm(F.col("__dv__")))
+    ).withColumn("__cn__", norm("__dv__"))
+    v = sql_name(vec_col)
     q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias(query_id),
-            F.col(vec_col).alias("__qv__"),
-            norm(F.col(vec_col)).alias("__qn__"),
+        queries.selectExpr(
+            f"{sql_name(id_col)} AS {sql_name(query_id)}",
+            f"{v} AS __qv__",
+            f"{norm_sql(v)} AS __qn__",
         )
     )
-    raw_dot = dot(F.col("__qv__"), F.col("__dv__"))
-    scored = coded.join(q, F.col(query_id) != F.col(id_col)).select(
-        query_id,
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            raw_dot / (F.col("__qn__") * F.col("__cn__")),
-            6,
-        ).alias("score"),
+    raw_dot = dot_sql("__qv__", "__dv__")
+    scored = coded.join(q, F.col(query_id) != F.col(id_col)).selectExpr(
+        sql_name(query_id),
+        f"{sql_name(id_col)} AS neighbor_id",
+        f"round({raw_dot} / (__qn__ * __cn__), 6) AS score",
     )
     w = Window.partitionBy(query_id).orderBy(
         F.col("score").desc(), F.col("neighbor_id").asc()

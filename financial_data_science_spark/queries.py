@@ -1266,12 +1266,12 @@ def label_cosine_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-identical (see similarity.embedding_near_dups)
     a = emb.select("label", F.col("vec_id").alias("ida"),
                    F.col("embedding").alias("va"),
-                   SIM.norm(F.col("embedding")).alias("na"))
+                   SIM.norm("embedding").alias("na"))
     b = emb.select("label", F.col("vec_id").alias("idb"),
                    F.col("embedding").alias("vb"),
-                   SIM.norm(F.col("embedding")).alias("nb"))
+                   SIM.norm("embedding").alias("nb"))
     pairs = a.join(b, ["label"]).filter(F.col("ida") < F.col("idb"))
-    cos = SIM.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    cos = SIM.dot("va", "vb") / (F.col("na") * F.col("nb"))
     return pairs.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_pairs"),
         _r(F.avg(cos), 6).alias("avg_cos"),
@@ -4264,7 +4264,7 @@ def cosine_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # norm hoist is bit-identical (see similarity.embedding_near_dups)
     b = emb.withColumn(
         "bucket", SIM.hyperplane_bucket(F.col("embedding"), n_planes=6)
-    ).withColumn("__n__", SIM.norm(F.col("embedding")))
+    ).withColumn("__n__", SIM.norm("embedding"))
     qs = b.filter(F.col("vec_id") < 20)
     cand = (
         qs.alias("q")
@@ -4273,7 +4273,7 @@ def cosine_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("q.vec_id").alias("query_id"),
             F.col("c.vec_id").alias("neighbor_id"),
-            (SIM.dot(F.col("q.embedding"), F.col("c.embedding"))
+            (SIM.dot("q.embedding", "c.embedding")
              / (F.col("q.__n__") * F.col("c.__n__"))).alias("score"),
         )
     )
@@ -5171,7 +5171,7 @@ def stream_contamination_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bench = F.broadcast(
         docs.filter(F.col("doc_id") % 17 == 0)
-        .select(F.explode(ngram_hashes(F.col("text"), 5, True)).alias("__h__"))
+        .select(F.explode(ngram_hashes("text", 5, True)).alias("__h__"))
         .distinct()
     )
     stream = read_documents_stream(spark, sf_dir).filter(
@@ -5179,7 +5179,7 @@ def stream_contamination_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = stream.select(
         "doc_id", "ts",
-        F.explode(ngram_hashes(F.col("text"), 5, True)).alias("__h__"),
+        F.explode(ngram_hashes("text", 5, True)).alias("__h__"),
     )
     agg = (
         g.join(bench, "__h__")
@@ -5655,7 +5655,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         l.join(r, "cluster")
         .filter(F.col("left_id") < F.col("right_id"))
-        .withColumn("c6", F.round(cosine(F.col("__lv__"), F.col("__rv__")), 6))
+        .withColumn("c6", F.round(cosine("__lv__", "__rv__"), 6))
         .filter(F.col("c6") >= 0.4)
         .select(
             "cluster", "left_id", "right_id", _r("c6", 4).alias("cos")
@@ -6533,7 +6533,7 @@ def stream_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench_set = [
         r["__h__"]
         for r in docs.filter(F.col("doc_id") % 17 == 0)
-        .select(F.explode(ngram_hashes(F.col("text"), 5, True)).alias("__h__"))
+        .select(F.explode(ngram_hashes("text", 5, True)).alias("__h__"))
         .distinct()
         .collect()
     ]
@@ -6630,7 +6630,7 @@ def stream_curation_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench_set = [
         r["__h__"]
         for r in docs.filter(F.col("doc_id") % 17 == 0)
-        .select(F.explode(ngram_hashes(F.col("text"), 5, True)).alias("__h__"))
+        .select(F.explode(ngram_hashes("text", 5, True)).alias("__h__"))
         .distinct()
         .collect()
     ]
@@ -6754,7 +6754,7 @@ def stream_curation_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench_set = [
         r["__h__"]
         for r in docs.filter(F.col("doc_id") % 17 == 0)
-        .select(F.explode(ngram_hashes(F.col("text"), 5, True)).alias("__h__"))
+        .select(F.explode(ngram_hashes("text", 5, True)).alias("__h__"))
         .distinct()
         .collect()
     ]
@@ -8284,7 +8284,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         _flat_cols,
         _flat_dot,
         _vec_dim,
-        norm,
+        norm_sql,
     )
     from financial_data_science_spark.operators.layout import fan_out_scan
 
@@ -8298,26 +8298,26 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = _vec_dim(emb, "embedding")
     corpus = fan_out_scan(emb, "vec_id")
     q = F.broadcast(
-        emb.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("qlabel"),
-            *_flat_cols(F.col("embedding"), "q", dim),
-            norm(F.col("embedding")).alias("__qn__"),
+        emb.filter(F.col("vec_id") < 20).selectExpr(
+            "vec_id AS query_id",
+            "label AS qlabel",
+            *_flat_cols("embedding", "q", dim),
+            f"{norm_sql('embedding')} AS __qn__",
         )
     )
-    c = corpus.select(
+    c = corpus.selectExpr(
         "vec_id",
         "label",
-        *_flat_cols(F.col("embedding"), "c", dim),
-        norm(F.col("embedding")).alias("__cn__"),
+        *_flat_cols("embedding", "c", dim),
+        f"{norm_sql('embedding')} AS __cn__",
     )
-    sexpr = _flat_dot("q", "c", dim) / (F.col("__qn__") * F.col("__cn__"))
-    scored = c.join(q, F.col("label") != F.col("qlabel")).select(
+    sexpr = f"{_flat_dot('q', 'c', dim)} / (__qn__ * __cn__)"
+    scored = c.join(q, F.col("label") != F.col("qlabel")).selectExpr(
         "query_id",
         "qlabel",
-        F.col("vec_id").alias("negative_id"),
-        F.col("label").alias("neg_label"),
-        F.round(sexpr, 6).alias("s"),
+        "vec_id AS negative_id",
+        "label AS neg_label",
+        f"round({sexpr}, 6) AS s",
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("s").desc(), F.col("negative_id").asc()

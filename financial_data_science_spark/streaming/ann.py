@@ -83,15 +83,16 @@ def on_arrival_nearest(
     reserved id for corpora with negative ids)."""
     from financial_data_science_spark.functions.similarity import (
         _probe_clusters,
-        dot,
+        dot_sql,
         norm,
     )
+    from financial_data_science_spark.functions.sqltext import sql_name
 
-    binned = index["binned"].withColumn("__cn__", norm(F.col(vec_col)))
+    binned = index["binned"].withColumn("__cn__", norm(vec_col))
     probes = _probe_clusters(
         stream, id_col, vec_col, index["centroids"], nprobe, query_id,
         keep=(ts_col,),
-    ).withColumn("__qn__", norm(F.col("__qv__")))
+    ).withColumn("__qn__", norm("__qv__"))
     scored = (
         probes.join(binned, "cluster")
         .filter(F.col(query_id) != F.col(id_col))
@@ -99,11 +100,10 @@ def on_arrival_nearest(
             query_id,
             ts_col,
             F.col(id_col).alias("neighbor_id"),
-            F.round(
-                dot(F.col("__qv__"), F.col(vec_col))
-                / (F.col("__qn__") * F.col("__cn__")),
-                6,
-            ).alias("__s__"),
+            F.expr(
+                f"round({dot_sql('__qv__', sql_name(vec_col))} / "
+                "(__qn__ * __cn__), 6) AS __s__"
+            ),
         )
     )
     if flush_ts is not None:

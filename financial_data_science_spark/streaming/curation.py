@@ -256,10 +256,11 @@ def curate_and_tag_stream(
     )
     from financial_data_science_spark.functions.similarity import (
         _probe_clusters,
-        dot,
+        dot_sql,
         minhash_band_keys,
         norm,
     )
+    from financial_data_science_spark.functions.sqltext import sql_name
 
     p6 = _quality_p6(beta, feature_exprs, text_col)
     curated = contamination_screen(
@@ -296,11 +297,11 @@ def curate_and_tag_stream(
         ),
         id_col,
     )
-    binned = index["binned"].withColumn("__cn__", norm(F.col(vec_col)))
+    binned = index["binned"].withColumn("__cn__", norm(vec_col))
     probes = _probe_clusters(
         with_vec, id_col, "__v__", index["centroids"], nprobe, "__q__",
         keep=("__w__",),
-    ).withColumn("__qn__", norm(F.col("__qv__")))
+    ).withColumn("__qn__", norm("__qv__"))
     scored = (
         probes.join(binned, "cluster")
         .filter(F.col("__q__") != F.col(vec_id_col))
@@ -308,11 +309,10 @@ def curate_and_tag_stream(
             "__w__",
             "__q__",
             F.col(vec_id_col).alias("neighbor_id"),
-            F.round(
-                dot(F.col("__qv__"), F.col(vec_col))
-                / (F.col("__qn__") * F.col("__cn__")),
-                6,
-            ).alias("__s__"),
+            F.expr(
+                f"round({dot_sql('__qv__', sql_name(vec_col))} / "
+                "(__qn__ * __cn__), 6) AS __s__"
+            ),
         )
     )
     return (

@@ -30,7 +30,9 @@ def test_time_records_bench_v3_fields(spark):
     assert list(out) == NAMES
     for name, rec in out.items():
         assert set(rec) == {"runs", "steal", "rows", "build", "warmup",
-                            "sig"}
+                            "gateway", "sig"}
+        # building any entry makes at least one JVM call
+        assert rec["gateway"] > 0
         assert len(rec["runs"]) == len(rec["steal"]) == measure.N_RUNS
         assert all(0.0 <= s <= 100.0 for s in rec["steal"])
         assert rec["rows"] == Q[name](spark, SF).count()

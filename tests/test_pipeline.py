@@ -124,7 +124,7 @@ def test_contamination_screen_matches_join_form(spark):
     bench_hashes = [
         r["__h__"]
         for r in docs.filter(F.col("doc_id") % 17 == 0)
-        .select(F.explode(ngram_hashes(F.col("text"), 5, True)).alias("__h__"))
+        .select(F.explode(ngram_hashes("text", 5, True)).alias("__h__"))
         .distinct()
         .collect()
     ]
@@ -178,7 +178,7 @@ def test_screen_kernels_agree(spark):
     bench_hashes = [
         r["h"]
         for r in bench.select(
-            F.explode(ngram_hashes(F.col("text"), 5, False)).alias("h")
+            F.explode(ngram_hashes("text", 5, False)).alias("h")
         ).distinct().collect()
     ]
     pandas_kept = {
@@ -246,7 +246,7 @@ def test_embedding_near_dups_subset_of_exact(spark):
         .select(
             F.col("a.vec_id").alias("l"),
             F.col("b.vec_id").alias("r"),
-            F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 6).alias("s"),
+            F.round(cosine("a.embedding", "b.embedding"), 6).alias("s"),
         )
         .filter(F.col("s") >= 0.4)
         .toPandas()

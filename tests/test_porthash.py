@@ -95,7 +95,7 @@ def test_gram_hashes31_composed_parity(spark):
     pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     for k in (2, 3, 5):
         old = F.array_distinct(
-            F.transform(word_shingles(F.col("text"), k), lambda g: tokhash31(g))
+            F.transform(word_shingles("text", k), lambda g: tokhash31(g))
         )
         new = gram_hashes31(tokens(F.lower(F.col("text"))), k)
         d = (

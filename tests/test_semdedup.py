@@ -106,7 +106,7 @@ def test_no_guard_matches_plain_within_cell_pairs(spark):
                  "cluster")
     plain = (
         l.join(r, "cluster").filter(F.col("li") < F.col("ri"))
-        .withColumn("c6", F.round(cosine(F.col("lv"), F.col("rv")), 6))
+        .withColumn("c6", F.round(cosine("lv", "rv"), 6))
         .filter(F.col("c6") >= 0.4)
         .select("li", "ri")
         .toPandas()
@@ -201,6 +201,32 @@ def test_semdedup_index_probe_finds_planted_dups(spark):
     # cross pairs only ever touch representatives: per query, per cell,
     # never more than cap corpus comparisons even for the 40-row mass
     assert out.groupby("new_vec_id").size().max() <= 12
+
+
+def test_probe_leaves_the_index_dict_unchanged(spark):
+    """Routing reads the level rows the build collected: two probes
+    leave the caller's index dict exactly as built, with no routing
+    cache written into it."""
+    from financial_data_science_spark.functions.semdedup import (
+        semdedup_build_index,
+        semdedup_query_index,
+    )
+
+    rng = np.random.default_rng(41)
+    rows = list(enumerate(_spread_blob(rng, np.ones(DIM), 30, 0.4)
+                          + _spread_blob(rng, -np.ones(DIM), 8, 0.4)))
+    idx = semdedup_build_index(
+        _emb_df(spark, rows), nlist=2, iters=2, cap=12, nsub=2,
+        sub_iters=1, max_depth=1,
+    )
+    # a split level, so routing reads collected level rows
+    assert any(level is not None for level in idx["levels"])
+    before = dict(idx)
+    batch = _emb_df(spark, [(1000, rows[5][1]), (1001, rows[33][1])])
+    for _ in range(2):
+        assert semdedup_query_index(batch, idx, tau=0.95).count() >= 1
+    assert idx.keys() == before.keys()
+    assert all(idx[k] is before[k] for k in before)
 
 
 def test_semdedup_index_at_rest_roundtrip(spark, tmp_path):

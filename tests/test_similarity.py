@@ -193,7 +193,7 @@ def test_document_filter_gate_verdicts(spark):
 
 
 def test_centroid_literal_expr_matches_lit_built_tree(spark):
-    """_centroid_literal builds its array<struct> via ONE F.expr string
+    """_centroid_literal spells its array<struct> as ONE SQL string
     (the nested-lit form costs nlist x dim Py4J round trips per Lloyd
     sweep); repr-doubles must round-trip the SQL parser bit-exactly,
     including subnormals, negative-zero-sum artifacts, and DBL_MAX."""
@@ -213,7 +213,7 @@ def test_centroid_literal_expr_matches_lit_built_tree(spark):
         ]
     )
     df = spark.range(1).select(
-        lit_built.alias("o"), S._centroid_literal(rows).alias("n")
+        lit_built.alias("o"), F.expr(S._centroid_literal(rows)).alias("n")
     )
     assert df.select((F.col("o") == F.col("n")).alias("eq")).first()["eq"]
 
@@ -871,7 +871,7 @@ def test_semantic_dedup_matches_numpy_blocking(spark):
     got = (
         l.join(r, "cluster")
         .filter(F.col("left_id") < F.col("right_id"))
-        .withColumn("c6", F.round(cosine(F.col("lv"), F.col("rv")), 6))
+        .withColumn("c6", F.round(cosine("lv", "rv"), 6))
         .filter(F.col("c6") >= tau)
         .select("cluster", "left_id", "right_id", "c6")
         .toPandas()

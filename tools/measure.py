@@ -10,9 +10,10 @@ factor is bench.py's $SPARK_GRAFT_SF_DIR (default sf0.1).
 ``time`` builds each entry once, pays one untimed warmup count, then
 times ``bench.time_entry``'s 3 counts against the same plan.  It prints
 one JSON line ``{"entries": {name: record}, "sf_dir": ...}``; a record
-holds runs, per-run steal (% of all CPU time), rows, build, warmup and
-``sig`` = [count, sum of xxhash64 over the rows], an untimed content
-signature.
+holds runs, per-run steal (% of all CPU time), rows, build, warmup,
+``gateway`` = the Py4J round trips the build made (see
+:class:`gateway_calls`) and ``sig`` = [count, sum of xxhash64 over the
+rows], an untimed content signature.
 
 ``ab`` checks REV out into a temporary git worktree and runs 10 pairs
 of ``time`` subprocesses, one per side, alternating which side goes
@@ -88,6 +89,39 @@ def _entry(name: str):
     return bench.EXTRA.get(name) or Q[name]
 
 
+class gateway_calls:
+    """Count the Py4J gateway round trips made while the block runs::
+
+        with gateway_calls() as gw:
+            df = build()
+        gw.n
+
+    Every driver call into the JVM is one ``send_command`` on a Py4J
+    client-server connection: a Column or DataFrame method, a collect's
+    result fetch, and in PySpark 4.1 about eight more per Column call
+    that record its Python call site.  Calls from every thread count.
+    Blocks nest; each restores the method it found."""
+
+    def __enter__(self):
+        from py4j.clientserver import ClientServerConnection
+
+        self.n = 0
+        self._send = send = ClientServerConnection.send_command
+
+        def counted(conn, *args, **kwargs):
+            self.n += 1
+            return send(conn, *args, **kwargs)
+
+        ClientServerConnection.send_command = counted
+        return self
+
+    def __exit__(self, *exc):
+        from py4j.clientserver import ClientServerConnection
+
+        ClientServerConnection.send_command = self._send
+        return False
+
+
 def signature(df) -> list:
     """[count, sum of xxhash64 over all columns]: equal signatures mean
     the same rows with overwhelming probability, in any order."""
@@ -105,12 +139,20 @@ def timings(spark, names: list[str], sf_dir: str) -> dict[str, dict]:
     h.warm_tables(spark, sf_dir)
     out = {}
     for name in names:
-        rec, df = h.time_entry(spark, _entry(name), sf_dir, N_RUNS)
+        entry, gw = _entry(name), gateway_calls()
+
+        def build(spark, sf_dir, entry=entry, gw=gw):
+            with gw:
+                return entry(spark, sf_dir)
+
+        rec, df = h.time_entry(spark, build, sf_dir, N_RUNS)
+        rec["gateway"] = gw.n
         rec["sig"] = signature(df)
         out[name] = rec
         print(f"# {name}: runs={rec['runs']} steal={rec['steal']} "
               f"rows={rec['rows']} build={rec['build']} "
-              f"warmup={rec['warmup']}", file=sys.stderr, flush=True)
+              f"warmup={rec['warmup']} gateway={rec['gateway']}",
+              file=sys.stderr, flush=True)
     return out
 
 
