@@ -33,7 +33,11 @@ from financial_data_science_spark.functions.sqltext import (
     sql_double,
     sql_name,
 )
-from financial_data_science_spark.functions.text import word_shingles_sql
+# word_shingles is re-exported: callers read it as similarity.word_shingles
+from financial_data_science_spark.functions.text import (  # noqa: F401
+    word_shingles,
+    word_shingles_sql,
+)
 
 
 # ---------------------------------------------------------------- cosine
@@ -1504,7 +1508,7 @@ def ivf_topk(
 
 # ---------------------------------------------------------------- PQ
 
-def _vec_array_sql(cent_rows: list) -> str:
+def _vec_array_literal(cent_rows: list) -> str:
     """array<array<double>> literal text of centroid vectors POSITIONED
     by cluster id (1-based — ``element_at(lit, code)`` fetches a code's
     centroid).  Lloyd sweeps can empty a cluster, leaving id gaps; gap
@@ -1539,7 +1543,7 @@ def _adc_luts(qvec: str, books: list, sub: int) -> dict:
     def _lut(j: int, book: list) -> Column:
         qs = f"slice({q}, {j * sub + 1}, {sub})"
         body = lam(lambda cent: sqdist_sql(qs, cent))
-        return F.expr(f"transform({_vec_array_sql(book)}, {body})")
+        return F.expr(f"transform({_vec_array_literal(book)}, {body})")
 
     return {f"__lut{j}__": _lut(j, book) for j, book in enumerate(books)}
 
@@ -1940,7 +1944,7 @@ def _residual(vec_col: str, coarse_rows: list) -> Column:
     """Element-wise residual v - coarse_centroid[cluster] (map-side: the
     centroid table rides as a positional literal, the subtraction of
     identical doubles is FP-exact across engines)."""
-    cent = f"element_at({_vec_array_sql(coarse_rows)}, cluster)"
+    cent = f"element_at({_vec_array_literal(coarse_rows)}, cluster)"
     diff = lam(lambda a, b: f"CAST({a} AS DOUBLE) - {b}")
     return F.expr(f"zip_with({sql_name(vec_col)}, {cent}, {diff})")
 

@@ -300,7 +300,7 @@ def test_pq_vec_literal_survives_empty_clusters(spark):
     """_vec_array_literal positions centroids at their cluster id even
     when Lloyd empties a cluster (gap slots hold empty arrays that codes
     can never reference)."""
-    lit = S._vec_array_literal([(1, [1.0, 2.0]), (3, [5.0, 6.0])])
+    lit = F.expr(S._vec_array_literal([(1, [1.0, 2.0]), (3, [5.0, 6.0])]))
     got = spark.range(1).select(lit.alias("a")).first()["a"]
     assert got == [[1.0, 2.0], [], [5.0, 6.0]]
     assert spark.range(1).select(
