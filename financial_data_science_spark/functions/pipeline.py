@@ -184,7 +184,6 @@ def contamination_screen(
     text_col: str = "text",
     n: int = 5,
     portable: bool = True,
-    method: str = "pandas",
 ) -> DataFrame:
     """Drop rows whose ``text_col`` shares ANY n-gram hash with the
     (driver-collected) benchmark set — the per-ROW, stateless
@@ -212,22 +211,14 @@ def contamination_screen(
     the doc's columns ride through Arrow once — that is the screen's
     pass-through anyway.
 
-    ``method`` picks the membership kernel (both per-row/stateless, so
-    either composes into an append-mode streaming DAG; measured
-    three-way vs the batch join form in SCALE.md):
+    The frozenset probe is the one membership kernel: O(grams) per doc
+    with early exit, its cost independent of |bench|.  A pure-JVM
+    ``arrays_overlap`` against a broadcast one-row bench array (per-doc
+    work O(|bench|)) measured slower at both suite sizes in SCALE.md.
+    A batch caller that wants the join form anti-joins
+    :func:`contaminated_ids` out of the docs.
 
-    - ``"pandas"`` (default): Arrow-batched frozenset probe — O(grams)
-      per doc with early exit, interpreted per-gram.  Wins when the
-      benchmark set is LARGE (the realistic shape: the set-probe cost
-      is independent of |bench|).
-    - ``"overlap"``: pure-JVM ``arrays_overlap`` against the benchmark
-      array riding in from a broadcast ONE-ROW static frame (a
-      stream-static broadcast join, stateless).  Spark's kernel builds
-      a hash set from the SMALLER array and probes with the larger, so
-      per-doc work is O(|bench|) once |bench| > grams-per-doc — fast
-      for small suites, degrades linearly with suite size.
-
-    ``bench_hashes`` may be an iterable of hashes OR (pandas method) a
+    ``bench_hashes`` may be an iterable of hashes OR a
     pre-created ``pyspark.Broadcast`` of a frozenset, letting a caller
     that screens repeatedly in one session create/unpersist ONE
     broadcast instead of leaking one per call."""
@@ -236,24 +227,6 @@ def contamination_screen(
     g = df.withColumn(
         "__grams__", ngram_hashes(text_col, n, portable)
     )
-    if method == "overlap":
-        vals = (
-            sorted(bench_hashes.value)
-            if isinstance(bench_hashes, Broadcast)
-            else sorted({int(h) for h in bench_hashes})
-        )
-        bench_df = spark.createDataFrame(
-            [(vals,)], "__bench__ array<long>"
-        )
-        j = g.join(F.broadcast(bench_df), F.lit(True), "inner")
-        return j.filter(
-            F.col("__grams__").isNull()
-            | ~F.coalesce(
-                F.arrays_overlap("__grams__", "__bench__"), F.lit(False)
-            )
-        ).drop("__grams__", "__bench__")
-    if method != "pandas":
-        raise ValueError(f"unknown method: {method!r}")
     bc = (
         bench_hashes
         if isinstance(bench_hashes, Broadcast)
@@ -316,42 +289,6 @@ def contaminated_ids(
         ).distinct()
     )
     return t.join(b, "__h__", "left_semi").select(id_col)
-
-
-def contamination_screen_join(
-    docs: DataFrame,
-    spark: SparkSession,
-    bench_hashes,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-    portable: bool = True,
-) -> DataFrame:
-    """BATCH twin of :func:`contamination_screen`: explode the doc's
-    n-gram hashes, broadcast LEFT-SEMI join against the benchmark table
-    (ONE hash table built per task, O(1) probe per gram — the
-    algorithmically right shape when both corpus and suite are large),
-    then LEFT ANTI join the contaminated ids out of the doc frame.
-
-    Not streaming-composable: the contaminated-id side derives from the
-    stream itself and stream-stream LEFT ANTI is unsupported — use
-    :func:`contamination_screen` (per-row, stateless) in a streaming
-    DAG.  Here the anti join shuffles docs on ``id_col`` (hit ids are
-    NOT assumed broadcastable: contamination rate is data-dependent)."""
-    bench_df = spark.createDataFrame(
-        [(int(h),) for h in {int(x) for x in bench_hashes}], "__h__ long"
-    )
-    hit_ids = (
-        docs.select(
-            F.col(id_col),
-            F.explode(ngram_hashes(text_col, n, portable)).alias(
-                "__h__"
-            ),
-        )
-        .join(F.broadcast(bench_df), "__h__", "left_semi")
-        .select(id_col)
-    )
-    return docs.join(hit_ids, id_col, "left_anti")
 
 
 def chunk_documents(

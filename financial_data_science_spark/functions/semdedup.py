@@ -430,6 +430,15 @@ def semdedup_build_index(
     }
 
 
+# Rows one refinement level may inline into the routing literal.  Each
+# row spells a dim-long double array into the SQL text the driver parses
+# and every routing task carries: at 64 dims 1,024 rows are ~1.8 MB of
+# text, 64x the largest level a catalog query builds (nlist=8, nsub=2,
+# max_depth=1: at most 16 rows).  A level past it (it grows as
+# nlist * nsub^depth) fails loudly instead of growing the text further.
+_LEVEL_LITERAL_MAX_ROWS = 1024
+
+
 def _level_literal(level_rows) -> str:
     """``map<bigint, array<struct<sub,cv,cnorm>>>`` literal text from one
     refinement level's collected sub-centroid rows — the per-CELL analog
@@ -437,7 +446,15 @@ def _level_literal(level_rows) -> str:
     same shortest-roundtrip double spelling, same inlined fold norm, all
     argued there).  Level frames are bounded by STRUCTURE, not corpus
     size (level d has <= nlist * nsub^d rows), so inlining stays a few
-    KB at any corpus scale."""
+    KB at any corpus scale; a level over ``_LEVEL_LITERAL_MAX_ROWS``
+    raises a ``ValueError``."""
+    if len(level_rows) > _LEVEL_LITERAL_MAX_ROWS:
+        raise ValueError(
+            f"semdedup routing level has {len(level_rows)} sub-centroid "
+            f"rows, over the {_LEVEL_LITERAL_MAX_ROWS}-row literal cap; a "
+            "level holds up to nlist * nsub^depth rows, so lower nlist, "
+            "nsub or max_depth"
+        )
     by_cell: dict[int, list] = {}
     for r in level_rows:
         by_cell.setdefault(int(r["__cell__"]), []).append(

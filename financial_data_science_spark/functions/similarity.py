@@ -150,6 +150,28 @@ def _flat_sqdist(pl: str, pr: str, dim: int) -> str:
     return f"(0.0D{terms})"
 
 
+def _top_k(
+    scored: DataFrame,
+    query_id: str,
+    by: str,
+    k: int,
+    ascending: bool,
+    neighbor_id: str = "neighbor_id",
+) -> DataFrame:
+    """The ANN query tail every ranker in this module ends in: the ``k``
+    best rows per ``query_id`` by score column ``by`` (descending for
+    cosine, ascending for distances), ties to the lowest
+    ``neighbor_id`` — a ``row_number`` window on ``query_id``, the one
+    Exchange after the scoring stages."""
+    order = F.col(by).asc() if ascending else F.col(by).desc()
+    w = Window.partitionBy(query_id).orderBy(order, F.col(neighbor_id).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .drop("rank")
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -196,14 +218,7 @@ def cosine_topk(
     scored = corpus.join(q, F.col(query_id) != F.col(id_col)).selectExpr(
         qid, f"{ids} AS neighbor_id", f"{s} AS score"
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _top_k(scored, query_id, "score", k, ascending=False)
 
 
 def hyperplane_bucket(
@@ -1237,6 +1252,12 @@ def _ivf_train_rows(
     map-side combinable) for the coordinate means.  Only the nlist-row
     centroid frame is ever collected.
 
+    Deterministic, no RNG: init = the ``nlist`` lowest-id vectors,
+    assignment scores and centroid means are rounded to ``round_dp``
+    (ties to the lowest cluster id), so the engine- and
+    partitioning-dependent float sums snap to a reproducible grid and
+    the DuckDB oracle replays the training bit-for-bit.
+
     ``train_mod > 1`` trains the quantizer on the deterministic 1-in-mod
     id subset (``id % mod == 0``) — the standard IVF recipe (a coarse
     quantizer never needs the full corpus; at 100 TB you train on a
@@ -1285,40 +1306,6 @@ def _ivf_train_rows(
     return cent_rows
 
 
-def ivf_kmeans_centroids(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nlist: int = 8,
-    iters: int = 3,
-    round_dp: int = 6,
-    train_mod: int = 1,
-) -> DataFrame:
-    """Deterministic coarse quantizer for IVF: Lloyd's iterations with
-    cosine assignment.
-
-    Init = the ``nlist`` lowest-id corpus vectors; each sweep assigns every
-    vector to its max-cosine centroid (ties to the lowest cluster id) and
-    re-estimates centroids as the coordinate mean of members, rounded to
-    ``round_dp`` so the floating sums (whose accumulation order is
-    engine/partitioning-dependent) snap to a reproducible grid — the same
-    determinism discipline as the breakpoint operators.  Assignment scores
-    are rounded likewise before the argmax.  Fixed iteration count, no RNG:
-    the DuckDB oracle replays the training bit-for-bit.
-
-    Scale shape: assignment is a map-side argmax against an inlined
-    centroid literal (zero Exchange); the update is one posexplode +
-    two-level aggregation.  Nothing is driver-side but the loop control
-    and the nlist-row centroid collect between sweeps.
-    """
-    cent_rows = _ivf_train_rows(
-        corpus, id_col, vec_col, nlist, iters, round_dp, train_mod
-    )
-    return corpus.sparkSession.createDataFrame(
-        [(c, list(cv)) for c, cv in cent_rows], "cluster int, cv array<double>"
-    )
-
-
 def _probe_clusters(
     queries: DataFrame,
     id_col: str,
@@ -1363,6 +1350,28 @@ def _probe_sql(cent_rows: list, nprobe: int) -> str:
     probe_arr = let_sql(norm_sql("__qv__"), scored)
     best = f"slice(array_sort({probe_arr}), 1, {nprobe})"
     return f"explode(transform({best}, {lam(lambda p: f'{p}.cluster')}))"
+
+
+def _probe_join(
+    probes: DataFrame,
+    lists: DataFrame,
+    query_id: str,
+    id_col: str,
+    candidate_filter=None,
+) -> DataFrame:
+    """Candidate rows of the inverted-list paths: the probed lists of
+    ``lists`` joined on ``cluster``, self-pairs dropped, and the
+    optional ``candidate_filter`` applied BEFORE the top-k window (so
+    top-k means "best k satisfying the predicate").  The probes are
+    |Q| x nprobe rows, so they broadcast and the corpus-side join is
+    map-side; a hash shuffle on the nlist-value cluster key would cap
+    parallelism at nlist and skew on popular lists."""
+    scored = F.broadcast(probes).join(lists, "cluster").filter(
+        F.col(query_id) != F.col(id_col)
+    )
+    if candidate_filter is not None:
+        scored = scored.filter(candidate_filter)
+    return scored
 
 
 def ivf_build_index(
@@ -1439,20 +1448,13 @@ def ivf_query_index(
     probes = _probe_clusters(
         queries, id_col, vec_col, cent_rows, nprobe, query_id, keep=qkeep
     ).withColumn("__qn__", norm("__qv__"))
-    # probes is |Q| x nprobe rows — broadcast it so the corpus-side bin
-    # join is map-side; a hash shuffle on the nlist-value cluster key
-    # would cap parallelism at nlist and skew on popular lists.
     # Norms hoisted per SIDE below the join (one fold per corpus row /
     # per probe row, evaluated before the hash-table probe fans out) —
-    # bit-identical scores, see embedding_near_dups; the persisted
-    # index schema is untouched (the corpus norm is a lazy projection
-    # on top of the loaded/checkpointed binned frame)
+    # bit-identical scores, see embedding_near_dups; the index schema
+    # is untouched (the corpus norm is a lazy projection on top of the
+    # checkpointed binned frame)
     binned = binned.withColumn("__cn__", norm(vec_col))
-    scored = F.broadcast(probes).join(binned, "cluster").filter(
-        F.col(query_id) != F.col(id_col)
-    )
-    if candidate_filter is not None:
-        scored = scored.filter(candidate_filter)
+    scored = _probe_join(probes, binned, query_id, id_col, candidate_filter)
     raw_dot = dot_sql("__qv__", sql_name(vec_col))
     scored = scored.select(
         query_id,
@@ -1464,14 +1466,7 @@ def ivf_query_index(
         # membership vs the oracle (same discipline as the assignment)
         F.expr(f"round({raw_dot} / (__qn__ * __cn__), 6) AS score"),
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _top_k(scored, query_id, "score", k, ascending=False)
 
 
 def ivf_topk(
@@ -1525,10 +1520,11 @@ def _vec_array_literal(cent_rows: list) -> str:
     return "array(" + ",".join(parts) + ")"
 
 
-def _adc_luts(qvec: str, books: list, sub: int) -> dict:
-    """Per-query ADC lookup tables (faiss's dist_table): LUT j is an
-    array<double> whose entry c = ||q_j - book_j[c]||^2, computed ONCE
-    on the (broadcast) query/probe side.  Per candidate the ADC
+def _adc_luts(df: DataFrame, qvec: str, books: list, sub: int) -> DataFrame:
+    """``df`` plus per-query ADC lookup tables (faiss's dist_table),
+    columns ``__lut0__..``: LUT j is an array<double> whose entry c =
+    ||q_j - book_j[c]||^2 for the query vector column ``qvec``,
+    computed ONCE on the (broadcast) query/probe side.  Per candidate the ADC
     distance is then m array lookups + adds instead of m interpreted
     subvector sqdist folds — the work drops from m*sub ops per pair to
     m, paying m*k*sub once per query row (wins whenever a probe scores
@@ -1539,13 +1535,14 @@ def _adc_luts(qvec: str, books: list, sub: int) -> dict:
     Lloyd clusters) evaluate to null and are never selected (codes only
     reference surviving clusters)."""
     q = sql_name(qvec)
-
-    def _lut(j: int, book: list) -> Column:
+    for j, book in enumerate(books):
         qs = f"slice({q}, {j * sub + 1}, {sub})"
         body = lam(lambda cent: sqdist_sql(qs, cent))
-        return F.expr(f"transform({_vec_array_literal(book)}, {body})")
-
-    return {f"__lut{j}__": _lut(j, book) for j, book in enumerate(books)}
+        df = df.withColumn(
+            f"__lut{j}__",
+            F.expr(f"transform({_vec_array_literal(book)}, {body})"),
+        )
+    return df
 
 
 def _adc_sum(m: int) -> str:
@@ -1667,22 +1664,13 @@ def pq_topk(
     q = queries.select(
         F.col(id_col).alias(query_id), F.col(vec_col).alias("__qv__")
     )
-    for name, col in _adc_luts("__qv__", books, sub).items():
-        q = q.withColumn(name, col)
-    q = F.broadcast(q)
+    q = F.broadcast(_adc_luts(q, "__qv__", books, sub))
     scored = coded.join(q, F.col(query_id) != F.col(id_col)).select(
         query_id,
         F.col(id_col).alias("neighbor_id"),
         F.expr(f"round({_adc_sum(m)}, 6) AS approx_d2"),
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("approx_d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .drop("rank")
-    )
+    return _top_k(scored, query_id, "approx_d2", topk, ascending=True)
 
 
 def ivfpq_topk(
@@ -1806,30 +1794,17 @@ def ivfpq_query_index(
         queries, id_col, vec_col, coarse, nprobe, query_id, keep=qkeep
     )
     # ADC lookup tables built once per probe row on the broadcast side
-    for name, col in _adc_luts("__qv__", books, sub).items():
-        probes = probes.withColumn(name, col)
-    scored = (
-        F.broadcast(probes)
-        .join(coded, "cluster")
-        .filter(F.col(query_id) != F.col(id_col))
-    )
-    if candidate_filter is not None:
-        scored = scored.filter(candidate_filter)
-    scored = scored.select(
+    probes = _adc_luts(probes, "__qv__", books, sub)
+    scored = _probe_join(
+        probes, coded, query_id, id_col, candidate_filter
+    ).select(
         query_id,
         *qkeep,
         F.col(id_col).alias("neighbor_id"),
         *payload,
         F.expr(f"round({_adc_sum(len(books))}, 6) AS approx_d2"),
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("approx_d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .drop("rank")
-    )
+    return _top_k(scored, query_id, "approx_d2", topk, ascending=True)
 
 
 def rerank_exact(
@@ -1878,16 +1853,12 @@ def rerank_exact(
     )
     if metric == "cosine":
         score = f"{_flat_dot('q', 'n', dim)} / (__qn__ * __nn__)"
-        order = F.col("score").desc()
     else:
         score = _flat_sqdist("q", "n", dim)
-        order = F.col("score").asc()
     scored = paired.selectExpr(qid, nid, f"round({score}, 6) AS score")
-    w = Window.partitionBy(query_id).orderBy(order, F.col(neighbor_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
+    return _top_k(
+        scored, query_id, "score", k, ascending=metric == "l2",
+        neighbor_id=neighbor_id,
     )
 
 
@@ -1992,17 +1963,7 @@ def ivfpq_residual_topk(
     train = res if train_mod <= 1 else res.filter(
         (F.col(id_col) % train_mod) == 0
     )
-    books = []
-    for j in range(m):
-        sliced = train.select(
-            F.col(id_col), F.slice("__rv__", j * sub + 1, sub).alias("__sv__")
-        )
-        books.append(
-            _ivf_train_rows(
-                sliced, id_col, "__sv__", nlist=k, iters=iters,
-                train_mod=1, metric="l2",
-            )
-        )
+    books = pq_train(train, id_col, "__rv__", dim, m, k, iters, train_mod=1)
     # ENCODE lineage fans BEFORE the assignment (r15): pq_encode's
     # internal fan sat ABOVE the assign+residual projections, so those
     # row-local stages still ran on the single scan task; fanning the
@@ -2027,26 +1988,13 @@ def ivfpq_residual_topk(
     # LUTs per (query, probe) row — the residual operand depends on the
     # probed cluster, so that row is exactly where the table belongs
     pr = probes.withColumn("__qr__", _residual("__qv__", coarse))
-    for name, col in _adc_luts("__qr__", books, sub).items():
-        pr = pr.withColumn(name, col)
-    pr = F.broadcast(pr)
-    scored = (
-        pr.join(coded, "cluster")
-        .filter(F.col(query_id) != F.col(id_col))
-        .select(
-            query_id,
-            F.col(id_col).alias("neighbor_id"),
-            F.expr(f"round({_adc_sum(len(books))}, 6) AS approx_d2"),
-        )
+    pr = _adc_luts(pr, "__qr__", books, sub)
+    scored = _probe_join(pr, coded, query_id, id_col).select(
+        query_id,
+        F.col(id_col).alias("neighbor_id"),
+        F.expr(f"round({_adc_sum(len(books))}, 6) AS approx_d2"),
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("approx_d2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .drop("rank")
-    )
+    return _top_k(scored, query_id, "approx_d2", topk, ascending=True)
 
 
 # ---------------------------------------------------------------- SQ8
@@ -2168,126 +2116,5 @@ def sq8_topk(
         f"{sql_name(id_col)} AS neighbor_id",
         f"round({raw_dot} / (__qn__ * __cn__), 6) AS score",
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _top_k(scored, query_id, "score", k, ascending=False)
 
-
-# ------------------------------------------------- index persistence
-
-def save_ivfpq_index(index: dict, store, name: str) -> None:
-    """Persist a trained IVF+PQ index through the named parquet Store
-    (datasets.lookup.Store — S19): three tables, no pickles.
-
-    ``{name}__coarse``   (cluster, cv)            — coarse centroids
-    ``{name}__books``    (subspace, cluster, cv)  — PQ codebooks
-    ``{name}__coded``    (id, codes, cluster)     — the encoded corpus
-
-    This is the cluster deployment shape of :func:`ivfpq_build_index`'s
-    ``persist=True``: train once anywhere, write the m-bytes-per-vector
-    coded corpus + a few KB of centroids, and every later query session
-    pays probe + ADC only.  At scale, write ``__coded`` bucketed by
-    ``cluster`` so probes prune files instead of scanning."""
-    spark = index["coded"].sparkSession
-    coarse = spark.createDataFrame(
-        [(int(c), [float(x) for x in cv]) for c, cv in index["coarse"]],
-        "cluster int, cv array<double>",
-    )
-    books = spark.createDataFrame(
-        [
-            (j, int(c), [float(x) for x in cv])
-            for j, book in enumerate(index["books"])
-            for c, cv in book
-        ],
-        "subspace int, cluster int, cv array<double>",
-    )
-    store.dump(coarse, f"{name}__coarse")
-    store.dump(books, f"{name}__books")
-    store.dump(index["coded"], f"{name}__coded")
-
-
-def load_ivfpq_index(
-    spark,
-    store,
-    name: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Load a persisted IVF+PQ index back into the dict shape
-    ivfpq_query_index consumes.  The centroid/codebook tables are tiny
-    (nlist + m*k rows) and collect to driver literals — the same
-    inline-literal scoring shape training produces; the coded corpus
-    stays a lazy DataFrame scan."""
-    coarse = sorted(
-        (r["cluster"], list(r["cv"]))
-        for r in store.load(spark, f"{name}__coarse").collect()
-    )
-    brows = store.load(spark, f"{name}__books").collect()
-    nsub = max(r["subspace"] for r in brows) + 1
-    books = [
-        sorted(
-            (r["cluster"], list(r["cv"]))
-            for r in brows
-            if r["subspace"] == j
-        )
-        for j in range(nsub)
-    ]
-    coded = store.load(spark, f"{name}__coded")
-    dim = len(books[0][0][1]) * nsub
-    # payload columns survive the parquet round trip inside __coded;
-    # restore the index's payload tuple by inference so filtered search
-    # works off a reloaded artifact exactly as off a fresh build
-    payload = tuple(
-        c for c in coded.columns
-        if c not in (id_col, vec_col, "codes", "cluster")
-    )
-    return {"coarse": coarse, "books": books, "coded": coded,
-            "id_col": id_col, "vec_col": vec_col, "dim": dim,
-            "payload": payload}
-
-
-def save_ivf_index(index: dict, store, name: str) -> None:
-    """Persist a trained full-precision IVF index through the named
-    parquet Store — the artifact shape of :func:`ivf_build_index`, two
-    tables, no pickles:
-
-    ``{name}__centroids`` (cluster, cv)                    — quantizer
-    ``{name}__binned``    (id, vec, payload..., cluster)   — inverted lists
-
-    At scale write ``__binned`` bucketed by ``cluster`` so probes prune
-    files instead of scanning; payload columns (filtered search) ride
-    in the binned table."""
-    spark = index["binned"].sparkSession
-    cents = spark.createDataFrame(
-        [(int(c), [float(x) for x in cv]) for c, cv in index["centroids"]],
-        "cluster int, cv array<double>",
-    )
-    store.dump(cents, f"{name}__centroids")
-    store.dump(index["binned"], f"{name}__binned")
-
-
-def load_ivf_index(
-    spark,
-    store,
-    name: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Load a persisted IVF index back into the dict shape
-    ivf_query_index consumes; payload columns are re-inferred from the
-    binned table so filtered search works unchanged."""
-    cents = sorted(
-        (r["cluster"], list(r["cv"]))
-        for r in store.load(spark, f"{name}__centroids").collect()
-    )
-    binned = store.load(spark, f"{name}__binned")
-    payload = tuple(
-        c for c in binned.columns if c not in (id_col, vec_col, "cluster")
-    )
-    return {"centroids": cents, "binned": binned, "id_col": id_col,
-            "vec_col": vec_col, "payload": payload}

@@ -502,7 +502,8 @@ def global_cumsum(
     the window's.  Otherwise falls back to ``repartitionByRange`` +
     ``spark_partition_id`` (two full-data exchanges).  Output values
     are block-boundary-independent; pass a UNIQUE ordering (ties make
-    any cumsum ambiguous).
+    the running sum inside a tie ambiguous; the rows after it stay
+    exact).
     """
     order_l = [order] if isinstance(order, str) else list(order)
     numeric = {"int", "bigint", "smallint", "tinyint", "float", "double"}
@@ -530,23 +531,20 @@ def global_cumsum(
         Window.unboundedPreceding, 0
     )
     local = d.withColumn(out, F.sum(F.col(col)).over(wl))
-    # block totals = the LAST row's local cumsum per block (max over the
-    # (order, cum) struct — lexicographic max is the last row in window
-    # order), NOT a fresh sum over d: a groupBy(d) plants a partial
-    # aggregate UNDER its exchange, so its exchange never canonicalizes
-    # equal to the window's and the full input lineage was computed
-    # twice per action.  Reading totals off `local` makes both consumers
-    # share the window's exchange (ReusedExchange), one input walk
-    # (r15).  Exact for the integer columns every caller sums; a double
-    # column changes accumulation order only in the same way the
-    # two-phase split itself already did.
-    last = F.max(
-        F.struct(*[F.col(c) for c in order_l], F.col(out).alias("__lv__"))
-    )
+    # block totals = a whole-block window sum of `col` over d.  Not the
+    # last row's local cumsum: under tied order keys the last row is
+    # ambiguous.  Not a groupBy(d) sum: its partial aggregate sits UNDER
+    # its exchange, so that exchange never canonicalizes equal to the
+    # window's and the input lineage runs twice per action (a sum over
+    # `local` plans the same: the unused cumsum window is pruned).  The
+    # same partition and order keep the exchange identical, so both
+    # consumers share it (ReusedExchange).  Exact for the integer
+    # columns every caller sums.
+    wblk = wl.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     totals = (
-        local.groupBy("__blk__")
-        .agg(last.alias("__last__"))
-        .select("__blk__", F.col("__last__.__lv__").alias("__tot__"))
+        d.withColumn("__tot__", F.sum(F.col(col)).over(wblk))
+        .groupBy("__blk__")
+        .agg(F.max("__tot__").alias("__tot__"))
     )
     # bounded by construction: num_blocks rows
     woff = tiny_ordered_window("__blk__").rowsBetween(Window.unboundedPreceding, -1)

@@ -157,15 +157,12 @@ def test_contamination_screen_matches_join_form(spark):
 
 
 def test_screen_kernels_agree(spark):
-    """All membership kernels keep the identical doc set: the Arrow
-    frozenset probe, the JVM arrays_overlap form, the explode->semi->
-    anti join form, and the raw contaminated_ids complement — including
-    on null text (gram-less -> clean) and with a pre-created Broadcast
-    (caller-owned lifecycle)."""
+    """The Arrow frozenset screen keeps exactly the complement of the
+    broadcast semi-join's contaminated_ids, also with a pre-created
+    Broadcast (caller-owned lifecycle)."""
     from financial_data_science_spark.functions.pipeline import (
         contaminated_ids,
         contamination_screen,
-        contamination_screen_join,
         ngram_hashes,
     )
     from financial_data_science_spark.sources.testdata import load_table
@@ -184,18 +181,6 @@ def test_screen_kernels_agree(spark):
     pandas_kept = {
         r["doc_id"]
         for r in contamination_screen(
-            train, spark, bench_hashes, n=5, portable=False, method="pandas"
-        ).select("doc_id").collect()
-    }
-    overlap_kept = {
-        r["doc_id"]
-        for r in contamination_screen(
-            train, spark, bench_hashes, n=5, portable=False, method="overlap"
-        ).select("doc_id").collect()
-    }
-    join_kept = {
-        r["doc_id"]
-        for r in contamination_screen_join(
             train, spark, bench_hashes, n=5, portable=False
         ).select("doc_id").collect()
     }
@@ -206,7 +191,7 @@ def test_screen_kernels_agree(spark):
         ).collect()
     }
     all_train = {r["doc_id"] for r in train.select("doc_id").collect()}
-    assert pandas_kept == overlap_kept == join_kept == all_train - hit
+    assert pandas_kept == all_train - hit
     assert 0 < len(pandas_kept) < len(all_train)
     # pre-created Broadcast: accepted, same result, caller unpersists
     bc = spark.sparkContext.broadcast(
@@ -215,16 +200,11 @@ def test_screen_kernels_agree(spark):
     bc_kept = {
         r["doc_id"]
         for r in contamination_screen(
-            train, spark, bc, n=5, portable=False, method="pandas"
+            train, spark, bc, n=5, portable=False
         ).select("doc_id").collect()
     }
     bc.unpersist()
     assert bc_kept == pandas_kept
-    # unknown method fails loudly
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown method"):
-        contamination_screen(train, spark, bench_hashes, method="nope")
 
 
 def test_embedding_near_dups_subset_of_exact(spark):

@@ -8,7 +8,7 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -264,6 +264,33 @@ def test_global_cumsum_matches_pandas_any_blocking(spark, nb, d):
         .toPandas().sort_values("ks")["cumsum"].to_numpy()
     )
     assert (got2 == want).all()
+
+
+@given(rows=st.lists(st.tuples(st.integers(0, 9), st.integers(-20, 20)),
+                     min_size=1, max_size=30),
+       nb=st.integers(2, 4))
+@example(
+    rows=[(k, 1) for k in range(10) if k != 4] + [(4, v) for v in (5, -3, 7, -9)],
+    nb=2,
+)
+@SLOW
+def test_global_cumsum_tied_keys_keep_the_frame_total(spark, rows, nb):
+    """Under tied order keys the running sum inside a tie is ambiguous,
+    but each block's total is not: with duplicated keys and signed
+    values, the row with the unique largest key carries the frame total
+    (for an in-place ``out == col`` call too)."""
+    from financial_data_science_spark.operators.windows import global_cumsum
+
+    top = max(k for k, _ in rows) + 1
+    rows = rows + [(top, 3)]
+    df = spark.createDataFrame(rows, "k long, x long")
+    total = sum(v for _, v in rows)
+    for out in ("cumsum", "x"):
+        got = (
+            global_cumsum(df, "k", "x", out=out, num_blocks=nb)
+            .filter(F.col("k") == top).collect()
+        )
+        assert [r[out] for r in got] == [total]
 
 
 @given(w=st.lists(st.floats(min_value=0.05, max_value=1.0), min_size=2, max_size=4),

@@ -229,6 +229,23 @@ def test_probe_leaves_the_index_dict_unchanged(spark):
     assert all(idx[k] is before[k] for k in before)
 
 
+def test_routing_literal_refuses_an_oversized_level():
+    """A refinement level grows as nlist * nsub^depth rows, all inlined
+    into the routing SQL text.  The largest level a catalog query builds
+    (nlist=8, nsub=2, depth 1: 16 rows) still builds; a level of
+    nlist=32, nsub=8, depth 2 (2,048 rows) raises a ValueError naming
+    the parameters to lower."""
+    from financial_data_science_spark.functions.semdedup import _level_literal
+
+    def level(n):
+        return [{"__cell__": i // 2, "__sub__": i % 2 + 1, "__cv__": [0.5, -0.25]}
+                for i in range(n)]
+
+    assert _level_literal(level(16)).startswith("map(")
+    with pytest.raises(ValueError, match=r"nlist.*nsub.*max_depth"):
+        _level_literal(level(32 * 8**2))
+
+
 def test_semdedup_index_at_rest_roundtrip(spark, tmp_path):
     """write -> read -> probe must equal the in-memory probe (params
     from meta, skipped levels restored as the skip arm)."""

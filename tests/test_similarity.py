@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -142,7 +144,7 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
 
     from financial_data_science_spark.functions.similarity import (
         cosine_topk,
-        ivf_kmeans_centroids,
+        ivf_build_index,
         ivf_topk,
     )
     from financial_data_science_spark.sources.testdata import load_table
@@ -165,9 +167,10 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
     assert hits / total >= 0.5, f"recall {hits}/{total}"
 
     # quantizer sanity: every centroid row is a finite dim-64 vector
-    cents = ivf_kmeans_centroids(emb, nlist=8, iters=3).toPandas()
-    assert len(cents) <= 8 and cents["cluster"].is_unique
-    assert all(len(c) == 64 for c in cents["cv"])
+    cents = ivf_build_index(emb, nlist=8, iters=3)["centroids"]
+    clusters = [c for c, _ in cents]
+    assert len(cents) <= 8 and len(set(clusters)) == len(clusters)
+    assert all(len(cv) == 64 and all(map(math.isfinite, cv)) for _, cv in cents)
 
 
 def test_dedup_canonical_keep_structure(spark):
@@ -560,41 +563,6 @@ def test_ivf_filtered_search_matches_postfilter_topk(spark):
     )
 
 
-def test_ivfpq_index_store_roundtrip(spark, tmp_path):
-    """save_ivfpq_index/load_ivfpq_index through the parquet Store: the
-    reloaded index must answer queries exactly like the in-memory one
-    (train once anywhere, query from any later session)."""
-    import numpy as np
-    import pandas as pd
-
-    import financial_data_science_spark.functions.similarity as S
-    from financial_data_science_spark.datasets.lookup import Store
-
-    rng = np.random.RandomState(3)
-    M = rng.randn(200, 16)
-    M /= np.linalg.norm(M, axis=1, keepdims=True)
-    emb = spark.createDataFrame(
-        pd.DataFrame(
-            [(i, M[i].tolist()) for i in range(200)],
-            columns=["vec_id", "embedding"],
-        )
-    )
-    q = emb.filter(F.col("vec_id") < 6)
-    index = S.ivfpq_build_index(emb, dim=16, nlist=4, m=4, k=4, iters=2,
-                                persist=True)
-    want = S.ivfpq_query_index(q, index, nprobe=2, topk=3).toPandas()
-    store = Store(str(tmp_path))
-    S.save_ivfpq_index(index, store, "ix")
-    assert "ix__coded" in store
-    back = S.load_ivfpq_index(spark, store, "ix")
-    got = S.ivfpq_query_index(q, back, nprobe=2, topk=3).toPandas()
-    key = ["query_id", "neighbor_id"]
-    pd.testing.assert_frame_equal(
-        want.sort_values(key).reset_index(drop=True),
-        got.sort_values(key).reset_index(drop=True),
-    )
-
-
 def test_logistic_irls_matches_numpy_reference(spark):
     """classifier.logistic_irls (distributed BIGINT-quantized sums +
     adjugate solve) must land within 1e-3 of an unquantized pure-numpy
@@ -740,52 +708,6 @@ def test_logistic_model_store_roundtrip(spark, tmp_path):
     assert traj2 == traj
 
 
-def test_ivf_index_store_roundtrip_with_payload(spark, tmp_path):
-    """save_ivf_index/load_ivf_index through the parquet Store: the
-    reloaded full-precision index must answer FILTERED queries exactly
-    like the in-memory one — payload columns survive the round trip and
-    are re-inferred on load."""
-    import numpy as np
-    import pandas as pd
-
-    import financial_data_science_spark.functions.similarity as S
-    from financial_data_science_spark.datasets.lookup import Store
-
-    rng = np.random.RandomState(5)
-    M = rng.randn(200, 8)
-    M /= np.linalg.norm(M, axis=1, keepdims=True)
-    emb = spark.createDataFrame(
-        pd.DataFrame(
-            [(i, M[i].tolist(), i % 3) for i in range(200)],
-            columns=["vec_id", "embedding", "label"],
-        )
-    )
-    q = emb.filter(F.col("vec_id") < 6).select(
-        "vec_id", "embedding", F.col("label").alias("qlabel")
-    )
-    index = S.ivf_build_index(emb, nlist=4, iters=2, persist=True,
-                              payload=("label",))
-
-    def run(ix):
-        return S.ivf_query_index(
-            q, ix, k=3, nprobe=2, qkeep=("qlabel",),
-            candidate_filter=F.col("label") != F.col("qlabel"),
-        ).toPandas()
-
-    want = run(index)
-    store = Store(str(tmp_path))
-    S.save_ivf_index(index, store, "ix")
-    assert "ix__binned" in store
-    back = S.load_ivf_index(spark, store, "ix")
-    assert back["payload"] == ("label",)
-    got = run(back)
-    key = ["query_id", "neighbor_id"]
-    pd.testing.assert_frame_equal(
-        want.sort_values(key).reset_index(drop=True),
-        got.sort_values(key).reset_index(drop=True),
-    )
-
-
 def test_hash_census_matches_string_census(spark):
     """The production (xxhash64) stop-shingle path censuses document
     frequency on the 64-bit hash with the gram string dropped at the
@@ -899,3 +821,81 @@ def test_semantic_dedup_matches_numpy_blocking(spark):
     assert got_pairs == want
     # the planted near-identical pairs are same-cluster by construction
     assert {(3, 24), (10, 25)} <= got_pairs
+
+
+def _dup_corpus(spark):
+    """Six 8-dim base vectors, each stored under four ids (id i holds
+    base i % 6): every query meets runs of equal scores, and ids 0..5
+    (the Lloyd inits) are distinct vectors."""
+    base = np.random.RandomState(17).randn(6, 8)
+    return spark.createDataFrame(
+        pd.DataFrame(
+            [(i, base[i % 6].tolist()) for i in range(24)],
+            columns=["vec_id", "embedding"],
+        )
+    )
+
+
+def _all_pairs(q, emb):
+    return (
+        q.select(F.col("vec_id").alias("query_id"))
+        .crossJoin(emb.select(F.col("vec_id").alias("neighbor_id")))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+    )
+
+
+# ranker -> (score column, ascending, run(queries, corpus, k)); the
+# inverted-list rankers probe one of three lists, so some queries see
+# fewer candidates than the full corpus
+_RANKERS = {
+    "cosine_topk": ("score", False, lambda q, e, k: S.cosine_topk(q, e, k=k)),
+    "ivf_query_index": ("score", False, lambda q, e, k: S.ivf_topk(
+        q, e, k=k, nlist=3, nprobe=1, iters=2)),
+    "pq_topk": ("approx_d2", True, lambda q, e, k: S.pq_topk(
+        q, e, dim=8, m=2, k=4, topk=k, iters=2)),
+    "ivfpq_query_index": ("approx_d2", True, lambda q, e, k: S.ivfpq_topk(
+        q, e, dim=8, nlist=3, nprobe=1, m=2, k=4, topk=k, iters=2)),
+    "rerank_exact": ("score", False, lambda q, e, k: S.rerank_exact(
+        _all_pairs(q, e), e, k=k)),
+    "rerank_exact_l2": ("score", True, lambda q, e, k: S.rerank_exact(
+        _all_pairs(q, e), e, k=k, metric="l2")),
+    "ivfpq_residual_topk": ("approx_d2", True, lambda q, e, k:
+        S.ivfpq_residual_topk(q, e, dim=8, nlist=3, nprobe=1, m=2, k=4,
+                              topk=k, iters=2)),
+    "sq8_topk": ("score", False, lambda q, e, k: S.sq8_topk(q, e, k=k)),
+}
+
+
+@pytest.mark.parametrize("ranker", list(_RANKERS))
+def test_ranker_keeps_min_k_rows_and_breaks_ties_to_lowest_id(spark, ranker):
+    """The shared top-k contract on a corpus of duplicated vectors: each
+    query gets min(k, candidates) rows, the k best by the ranker's score
+    order (descending cosine, ascending approx_d2 / L2), and ties go to
+    the lowest neighbor_id.  The candidates and their scores come from
+    the same ranker with k above every candidate count."""
+    by, ascending, run = _RANKERS[ranker]
+    emb = _dup_corpus(spark)
+    q = emb.filter(F.col("vec_id") < 3)
+    k = 2
+    full = run(q, emb, 100).toPandas()
+    got = run(q, emb, k).toPandas()
+    ranked = full.sort_values(
+        ["query_id", by, "neighbor_id"], ascending=[True, ascending, True]
+    )
+    # each query has three duplicates of itself, so the top-2 splits a
+    # run of equal scores: the tie-break is exercised
+    assert (ranked.groupby("query_id")[by].nth(k - 1).to_numpy()
+            == ranked.groupby("query_id")[by].nth(k).to_numpy()).all()
+    n_cand = full.groupby("query_id").size()
+    assert (n_cand <= 23).all() and len(n_cand) == 3
+    if ranker in ("cosine_topk", "pq_topk", "rerank_exact",
+                  "rerank_exact_l2", "sq8_topk"):
+        assert (n_cand == 23).all()
+    assert got.groupby("query_id").size().to_dict() == (
+        n_cand.clip(upper=k).to_dict()
+    )
+    key = ["query_id", "neighbor_id"]
+    want = ranked.groupby("query_id").head(k)
+    assert sorted(map(tuple, got[key].to_numpy())) == sorted(
+        map(tuple, want[key].to_numpy())
+    )
