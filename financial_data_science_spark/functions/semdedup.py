@@ -46,6 +46,14 @@ per-key product <= ``2 * budget_w^2`` (O(n * budget_w) candidates per
 cell); nothing is all-pairs and nothing but nsub-row centroid frames
 is ever checkpointed.
 
+Ingestion shape: :func:`semdedup_build_index` bins the standing corpus
+once, in memory (``persist=True`` checkpoints the cell table), and
+:func:`semdedup_query_index` / :func:`semdedup_query_with_pool` probe it
+per arriving batch; the index is rebuilt, never appended to.  Both the
+one-shot pairs and the index build run the same ranked cell table
+(:func:`_ranked_cells`).  The at-rest write/read pair had no caller and
+is gone; it last lives at commit 194cb1f.
+
 Reference: no counterpart (the reference repo has no semantic dedup);
 method from the public SemDeDup paper, guards from standard blocking
 practice (sorted-neighborhood is the classic bounded-blocking rule).
@@ -53,7 +61,7 @@ practice (sorted-neighborhood is the classic bounded-blocking rule).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from financial_data_science_spark.functions.similarity import (
@@ -86,16 +94,20 @@ def kmeans_cell_split(
     nsub: int = 4,
     sub_iters: int = 2,
     max_depth: int = 1,
-) -> DataFrame:
+) -> tuple[DataFrame, list]:
     """Split every cell with more than ``cap`` members into up to
     ``nsub`` sub-cells by re-running the deterministic Lloyd quantizer
     within the cell; repeat ``max_depth`` times.
 
-    Returns ``binned`` with ``cell_col`` replaced by the refined cell id
-    under the injective encoding ``cell * (nsub + 1) + sub`` (``sub`` =
-    0 for members of small cells, 1..nsub inside split cells), so every
-    refinement level nests inside the previous numbering and the DuckDB
-    oracle replays ids arithmetically.
+    Returns ``(refined, levels)``.  ``refined`` is ``binned`` with
+    ``cell_col`` replaced by the refined cell id under the injective
+    encoding ``cell * (nsub + 1) + sub`` (``sub`` = 0 for members of
+    small cells, 1..nsub inside split cells), so every refinement level
+    nests inside the previous numbering and the DuckDB oracle replays
+    ids arithmetically.  ``levels`` holds each level's FINAL
+    sub-centroid frame (``(__cell__, __sub__, __cv__)``; ``None`` for a
+    skipped level) — what :func:`semdedup_query_index` routes NEW
+    vectors through.
 
     Determinism contract (same rounding discipline as
     similarity._ivf_train_rows, per cell): init = the members at the
@@ -117,26 +129,6 @@ def kmeans_cell_split(
     mega-cells pays Spark's scheduling cost once, not per cell.  The
     per-sweep centroid frame (<= n_oversized * nsub rows) is eagerly
     checkpointed to keep the sweep-over-sweep plan flat."""
-    out, _levels = _cell_split_levels(
-        binned, id_col, vec_col, cell_col, cap, nsub, sub_iters, max_depth
-    )
-    return out
-
-
-def _cell_split_levels(
-    binned: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cell_col: str,
-    cap: int,
-    nsub: int,
-    sub_iters: int,
-    max_depth: int,
-) -> tuple[DataFrame, list]:
-    """:func:`kmeans_cell_split` body, additionally returning each
-    level's FINAL sub-centroid frame (``(__cell__, __sub__, __cv__)``;
-    ``None`` for a skipped level) — what :func:`semdedup_query_index`
-    needs to route NEW vectors through the same refinement chain."""
     if nsub < 2:
         raise ValueError("kmeans_cell_split: nsub must be >= 2")
     out = binned.withColumn("__cell__", F.col(cell_col).cast("long"))
@@ -243,6 +235,52 @@ def _cell_split_levels(
     return out.withColumn(cell_col, F.col("__cell__")).drop("__cell__"), levels
 
 
+def _ranked_cells(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    nlist: int,
+    iters: int,
+    train_mod: int,
+    cap: int,
+    nsub: int,
+    sub_iters: int,
+    max_depth: int,
+) -> tuple[DataFrame, list, list]:
+    """The ranked cell table ``(cell, id, vec, __rn__, __cnt__)`` both
+    the one-shot pairs and the index build run: IVF k-means blocking
+    (the shared deterministic quantizer), the recursive cell split, then
+    each member's id-rank and its cell's size.  Returns ``(ranked,
+    centroids, levels)``: the table, the trained top-level centroid
+    rows, and the split's per-level sub-centroid frames."""
+    # fan_out=False: the binned frame feeds the cell-split sub-kmeans,
+    # whose 6dp-rounded float avg sweeps must keep a deterministic
+    # partial-merge order (fanning would make it fetch-order-dependent)
+    index = ivf_build_index(
+        emb, id_col=id_col, vec_col=vec_col, nlist=nlist, iters=iters,
+        train_mod=train_mod, fan_out=False,
+    )
+    cells, levels = kmeans_cell_split(
+        index["binned"], id_col, vec_col, "cluster", cap, nsub, sub_iters,
+        max_depth,
+    )
+    # alias cluster -> cell BEFORE the windows so the window exchange's
+    # partitioning attribute IS the pair join's key: the within-cap join
+    # arms then need no re-shuffle on cell (the window's (cell, id) sort
+    # also satisfies the merge join's cell sort), where the old
+    # partitionBy("cluster")-then-alias shape re-exchanged both sides
+    # (r15; values unchanged — same keys, same data)
+    i, v = sql_name(id_col), sql_name(vec_col)
+    ranked = cells.selectExpr("cluster AS cell", i, v).selectExpr(
+        "cell",
+        i,
+        v,
+        f"row_number() OVER (PARTITION BY cell ORDER BY {i}) AS __rn__",
+        "count(1) OVER (PARTITION BY cell) AS __cnt__",
+    )
+    return ranked, index["centroids"], levels
+
+
 def semantic_dedup_pairs(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -272,30 +310,9 @@ def semantic_dedup_pairs(
     in an unbounded cell; over-cap cells reach that bound through a
     rank-block join key (not a post-join filter), so the candidate
     fan-out the executor iterates is itself O(cell_size * budget_w)."""
-    # fan_out=False: the binned frame feeds the cell-split sub-kmeans,
-    # whose 6dp-rounded float avg sweeps must keep a deterministic
-    # partial-merge order (fanning would make it fetch-order-dependent)
-    index = ivf_build_index(
-        emb, id_col=id_col, vec_col=vec_col, nlist=nlist, iters=iters,
-        train_mod=train_mod, fan_out=False,
-    )
-    cells = kmeans_cell_split(
-        index["binned"], id_col, vec_col, "cluster", cap, nsub, sub_iters,
+    ranked, cents, _ = _ranked_cells(
+        emb, id_col, vec_col, nlist, iters, train_mod, cap, nsub, sub_iters,
         max_depth,
-    )
-    # alias cluster -> cell BEFORE the windows so the window exchange's
-    # partitioning attribute IS the pair join's key: the within-cap join
-    # arms then need no re-shuffle on cell (the window's (cell, id) sort
-    # also satisfies the merge join's cell sort), where the old
-    # partitionBy("cluster")-then-alias shape re-exchanged both sides
-    # (r15; values unchanged — same keys, same data)
-    i, v = sql_name(id_col), sql_name(vec_col)
-    ranked = cells.selectExpr("cluster AS cell", i, v).selectExpr(
-        "cell",
-        i,
-        v,
-        f"row_number() OVER (PARTITION BY cell ORDER BY {i}) AS __rn__",
-        "count(1) OVER (PARTITION BY cell) AS __cnt__",
     )
     # exact pair scoring on FLAT-UNPACKED columns with per-ROW norms
     # (similarity._flat_dot): the per-pair cosine() fold is interpreted
@@ -306,8 +323,8 @@ def semantic_dedup_pairs(
     # the corpus, so len == corpus dim) — replaces the r14 _vec_dim
     # one-row driver peek with ZERO jobs (r15, build-time shave); empty
     # centroids mean an empty corpus, so the dim-0 chain scores no rows
-    cents = index.get("centroids") or []
     dim = len(cents[0][1]) if cents else 0
+    i, v = sql_name(id_col), sql_name(vec_col)
     l = ranked.selectExpr(
         "cell",
         f"{i} AS left_id",
@@ -384,44 +401,27 @@ def semdedup_build_index(
     both per call — right for a one-shot sweep, wrong per batch at
     100 TB, the same argument as the MinHash index).
 
-    Returns ``{"cells": DataFrame[(id, vec, cell, __rn__, __cnt__)],
-    "centroids": rows, "levels": [per-level sub-centroid frames],
-    "level_rows": [those frames collected, None for a skipped level],
-    ...params}``; probes route through ``level_rows`` and never write
-    to the dict.  ``__rn__``/``__cnt__`` pre-rank each cell by id so
-    the probe's representative cap (see :func:`semdedup_query_index`)
-    is a filter, not a per-batch window.  The quantizer is FROZEN, like
-    the stop-shingle census: batches are assigned through the recorded
+    Returns ``{"cells": DataFrame[(cell, id, vec, __rn__, __cnt__)],
+    "centroids": rows, "level_rows": [each refinement level's collected
+    sub-centroid rows, None for a skipped level], ...params}``; probes
+    route through ``level_rows`` and never write to the dict.  The cell
+    table is :func:`_ranked_cells`, the one :func:`semantic_dedup_pairs`
+    pairs: ``__rn__``/``__cnt__`` pre-rank each cell by id so the
+    probe's representative cap (see :func:`semdedup_query_index`) is a
+    filter, not a per-batch window.  The quantizer is FROZEN, like the
+    stop-shingle census: batches are assigned through the recorded
     centroid chain, and the corpus statistics never drift under
-    ingestion.  ``persist=True`` eagerly checkpoints the cell table
-    (the at-rest stance; on a cluster write it bucketed by ``cell`` —
-    the probe join key — via operators.skew.write_bucketed)."""
-    # fan_out=False: the binned frame feeds the cell-split sub-kmeans,
-    # whose 6dp-rounded float avg sweeps must keep a deterministic
-    # partial-merge order (fanning would make it fetch-order-dependent)
-    index = ivf_build_index(
-        emb, id_col=id_col, vec_col=vec_col, nlist=nlist, iters=iters,
-        train_mod=train_mod, fan_out=False,
-    )
-    binned, levels = _cell_split_levels(
-        index["binned"], id_col, vec_col, "cluster", cap, nsub, sub_iters,
+    ingestion.  ``persist=True`` eagerly checkpoints the cell table, so
+    every probe reads the checkpointed rows."""
+    cells, cents, levels = _ranked_cells(
+        emb, id_col, vec_col, nlist, iters, train_mod, cap, nsub, sub_iters,
         max_depth,
-    )
-    cells = binned.select(
-        F.col("cluster").alias("cell"),
-        F.col(id_col),
-        F.col(vec_col),
-        F.row_number().over(
-            Window.partitionBy("cluster").orderBy(id_col)
-        ).alias("__rn__"),
-        F.count(F.lit(1)).over(Window.partitionBy("cluster")).alias("__cnt__"),
     )
     if persist:
         cells = cells.localCheckpoint(eager=True)
     return {
         "cells": cells,
-        "centroids": index["centroids"],
-        "levels": levels,
+        "centroids": cents,
         "level_rows": [None if c is None else c.collect() for c in levels],
         "id_col": id_col,
         "vec_col": vec_col,
@@ -496,7 +496,7 @@ def _route_cells(
     once, the sub-centroid norm inlined via ``_fold_norm`` (bit-equality
     argued at ``_centroid_literal``) — so every cell id is identical.
 
-    The level rows were collected when the index was built or read
+    The level rows were collected when the index was built
     (``level_rows``); routing only reads the index dict."""
     nsub = index["nsub"]
     probes = _assign_clusters(
@@ -535,11 +535,11 @@ def semdedup_query_index(
     reps: str = "lowest",
 ) -> DataFrame:
     """Per-batch half: semantic near-dup pairs between arriving vectors
-    and the indexed corpus — assignment is MAP-SIDE (top-level argmax
-    against the inlined centroid literal, then one broadcast join +
-    argmax per recorded refinement level; skipped levels are pure id
-    arithmetic), so per-batch cost is O(batch) plus the within-cell
-    candidate join.
+    and the indexed corpus — assignment is MAP-SIDE (:func:`_route_cells`:
+    one projection that takes the argmax against the inlined centroid
+    literal, then against each recorded refinement level's sub-centroid
+    map literal; skipped levels are pure id arithmetic), so per-batch
+    cost is O(batch) plus the within-cell candidate join.
 
     Candidate bound: in a cell the splitter left over ``cap``, each new
     vector compares against only ``cap`` REPRESENTATIVES of the cell —
@@ -570,9 +570,9 @@ def semdedup_query_index(
       recall unchanged (0.88-0.93; any deterministic cap-subset has
       the same expectation there).
 
-    Both are probe-time filters over the persisted ``__rn__``/
-    ``__cnt__`` ranks, so either policy can probe any at-rest index
-    unchanged.  PAIR-list completeness inside truncated cells is
+    Both are probe-time filters over the index's precomputed
+    ``__rn__``/``__cnt__`` ranks, so either policy probes the same
+    built index unchanged.  PAIR-list completeness inside truncated cells is
     bounded by design under either policy (pair recall 0.16-0.37 at
     cap 64-256 on the spread blob) — the dedup DECISION is the
     preserved object; the residual spread-cell trade is the
@@ -583,8 +583,11 @@ def semdedup_query_index(
     ``round(cosine, 6) >= tau``.  Ids in ``queries`` must be disjoint
     from the indexed ids (same contract as minhash_query_index)."""
     query_id = query_id or f"new_{index['id_col']}"
-    probes = _route_cells(queries, index, query_id)
-    return _join_reps(probes, index, tau, query_id, reps)
+    return _score_cells(
+        _route_cells(queries, index, query_id), _rep_rows(index, reps),
+        query_id, tau, index["vec_col"], index["id_col"],
+        F.col("__cnt__") > index["cap"],
+    )
 
 
 def _rep_rows(index: dict, reps: str) -> DataFrame:
@@ -607,38 +610,42 @@ def _rep_rows(index: dict, reps: str) -> DataFrame:
     return index["cells"].filter((F.col("__cnt__") <= cap) | rep_pick)
 
 
-def _pair_cos(qn_col: str, cv_col: str, cn_col: str):
-    """``round(cosine(__qv__, cv), 6)`` with BOTH norms hoisted to
-    per-row columns (``qn_col`` under the probe projection, ``cn_col``
-    under the candidate projection): the per-PAIR work drops from three
-    interpreted O(dim) folds to one dot fold.  Same operands in the same
-    order — ``dot / (norm(q) * norm(c))`` — so every c6 double is
-    bit-identical to the inline ``cosine`` it replaces (r15)."""
-    return F.expr(
-        f"round({dot_sql('__qv__', sql_name(cv_col))} / "
-        f"({sql_name(qn_col)} * {sql_name(cn_col)}), 6)"
-    )
-
-
-def _join_reps(
-    probes: DataFrame, index: dict, tau: float, query_id: str, reps: str
+def _score_cells(
+    probes: DataFrame,
+    cands: DataFrame,
+    query_id: str,
+    tau: float,
+    cv_col: str,
+    corpus_id: str,
+    truncated: Column,
+    *extra: str,
 ) -> DataFrame:
-    """The representative-capped cell join half of the index probe,
-    over an already-routed batch (``(query_id, __qv__, __cell__)``)."""
-    id_col, vec_col = index["id_col"], index["vec_col"]
-    cap = index["cap"]
-    rep_rows = _rep_rows(index, reps).withColumn("__cn__", norm(vec_col))
+    """The one scoring tail of both index probes: routed probes
+    ``(query_id, __qv__, __cell__)`` join their cell's candidate rows,
+    and pairs with ``round(cosine, 6) >= tau`` come out as
+    ``(query_id, corpus_id, cos, truncated, *extra)``.
+
+    Both norms are hoisted to per-row columns (``__qn__`` under the
+    probe projection, ``__cn__`` under the candidate projection), so the
+    per-PAIR work is one dot fold instead of three interpreted O(dim)
+    folds.  Same operands in the same order — ``dot / (norm(q) *
+    norm(c))`` — so every c6 double is bit-identical to the inline
+    ``cosine`` it replaces (r15)."""
+    c6 = (
+        f"round({dot_sql('__qv__', sql_name(cv_col))} / (__qn__ * __cn__), 6)"
+    )
     return (
         probes.withColumnRenamed("__cell__", "cell")
         .withColumn("__qn__", norm("__qv__"))
-        .join(rep_rows.withColumnRenamed("cell", "cell"), "cell")
-        .withColumn("c6", _pair_cos("__qn__", vec_col, "__cn__"))
+        .join(cands.withColumn("__cn__", norm(cv_col)), "cell")
+        .withColumn("c6", F.expr(c6))
         .filter(F.col("c6") >= tau)
         .select(
             query_id,
-            F.col(id_col).alias("corpus_id"),
+            F.col(corpus_id).alias("corpus_id"),
             F.round(F.col("c6"), 4).alias("cos"),
-            (F.col("__cnt__") > cap).alias("truncated"),
+            truncated.alias("truncated"),
+            *extra,
         )
     )
 
@@ -685,9 +692,7 @@ def semdedup_query_with_pool(
     policy's truncation label, pool pairs are truncated only under
     ``pool_cap``.  Ids in ``queries`` and ``pool`` must be disjoint
     from each other and from the indexed ids."""
-    id_col = index["id_col"]
-    vec_col = index["vec_col"]
-    cap = index["cap"]
+    id_col, vec_col, cap = index["id_col"], index["vec_col"], index["cap"]
     query_id = query_id or f"new_{id_col}"
     # the batch routes ONCE and joins ONCE: both arms' candidate rows —
     # index representatives and routed pool members — are unioned into
@@ -734,113 +739,7 @@ def semdedup_query_with_pool(
         p_trunc.alias("__trunc__"),
         F.lit("pool").alias("source"),
     )
-    cands = rep_rows.unionByName(pool_rows).withColumn(
-        "__cn__", norm("__cv__")
+    return _score_cells(
+        qcells, rep_rows.unionByName(pool_rows), query_id, tau, "__cv__",
+        "__corpus_id__", F.col("__trunc__"), "source",
     )
-    return (
-        qcells.withColumnRenamed("__cell__", "cell")
-        .withColumn("__qn__", norm("__qv__"))
-        .join(cands, "cell")
-        .withColumn("c6", _pair_cos("__qn__", "__cv__", "__cn__"))
-        .filter(F.col("c6") >= tau)
-        .select(
-            query_id,
-            F.col("__corpus_id__").alias("corpus_id"),
-            F.round(F.col("c6"), 4).alias("cos"),
-            F.col("__trunc__").alias("truncated"),
-            "source",
-        )
-    )
-
-
-def semdedup_write_index(
-    index: dict, table_prefix: str, n_buckets: int = 32,
-) -> None:
-    """Persist a :func:`semdedup_build_index` result AT REST:
-    ``{prefix}_cells`` bucketed by ``cell`` (the probe join key — a
-    large probe batch then joins co-located buckets),
-    ``{prefix}_centroids`` (the top-level quantizer),
-    ``{prefix}_levels`` (every refinement level's sub-centroids under a
-    ``level`` column; a skipped level simply has no rows), and a
-    one-row ``{prefix}_meta`` carrying the structural params — like the
-    MinHash index's meta, they are DATA: probing under a different
-    cap/nsub/depth silently yields wrong cells, not an error.
-
-    No append mode, deliberately: unlike MinHash signatures (per-doc-
-    independent, append-exact), the cell table's representative ranks
-    and counts are corpus-order statistics, and the frozen quantizer
-    itself ages as the corpus distribution moves — the production
-    cadence is probe-per-batch between PERIODIC REBUILDS (batch the
-    accepted vectors, rebuild on a maintenance schedule), the standard
-    ANN-index lifecycle."""
-    from pyspark.sql import types as T
-
-    from financial_data_science_spark.operators.skew import write_bucketed
-
-    cells = index["cells"]
-    spark = cells.sparkSession
-    write_bucketed(cells, f"{table_prefix}_cells", ["cell"], n_buckets,
-                   sort_key=["cell"], mode="overwrite")
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in cv]) for c, cv in index["centroids"]],
-        "cluster int, cv array<double>",
-    ).write.mode("overwrite").saveAsTable(f"{table_prefix}_centroids")
-    lvl_schema = T.StructType([
-        T.StructField("level", T.IntegerType()),
-        T.StructField("__cell__", T.LongType()),
-        T.StructField("__sub__", T.IntegerType()),
-        T.StructField("__cv__", T.ArrayType(T.DoubleType())),
-    ])
-    lvl = spark.createDataFrame([], lvl_schema)
-    for d, cents in enumerate(index["levels"], 1):
-        if cents is not None:
-            lvl = lvl.unionByName(
-                cents.select(
-                    F.lit(d).alias("level"),
-                    F.col("__cell__"),
-                    F.col("__sub__").cast("int").alias("__sub__"),
-                    F.col("__cv__").cast("array<double>").alias("__cv__"),
-                )
-            )
-    lvl.write.mode("overwrite").saveAsTable(f"{table_prefix}_levels")
-    spark.createDataFrame(
-        [(index["id_col"], index["vec_col"], int(index["nsub"]),
-          int(index["cap"]), len(index["levels"]))],
-        "id_col string, vec_col string, nsub int, cap int, max_depth int",
-    ).write.mode("overwrite").saveAsTable(f"{table_prefix}_meta")
-
-
-def semdedup_read_index(spark: SparkSession, table_prefix: str) -> dict:
-    """Re-open an at-rest semantic dedup index written by
-    :func:`semdedup_write_index` — structural params come from the
-    persisted meta; nothing is the caller's to remember.  Levels with
-    no persisted sub-centroids are restored as the skip arm (pure id
-    arithmetic), exactly as built."""
-    meta = spark.table(f"{table_prefix}_meta").collect()[0]
-    cent_rows = sorted(
-        (r["cluster"], list(r["cv"]))
-        for r in spark.table(f"{table_prefix}_centroids").collect()
-    )
-    lvl = spark.table(f"{table_prefix}_levels")
-    # one collect of every level's sub-centroid rows (structurally tiny,
-    # see _level_literal): the routing literals need them, and the set
-    # of present levels falls out of the same rows
-    by_level: dict[int, list] = {}
-    for r in lvl.collect():
-        by_level.setdefault(r["level"], []).append(r)
-    depths = range(1, meta["max_depth"] + 1)
-    levels = [
-        lvl.filter(F.col("level") == d).select("__cell__", "__sub__", "__cv__")
-        if d in by_level else None
-        for d in depths
-    ]
-    return {
-        "cells": spark.table(f"{table_prefix}_cells"),
-        "centroids": cent_rows,
-        "levels": levels,
-        "level_rows": [by_level.get(d) for d in depths],
-        "id_col": meta["id_col"],
-        "vec_col": meta["vec_col"],
-        "nsub": meta["nsub"],
-        "cap": meta["cap"],
-    }

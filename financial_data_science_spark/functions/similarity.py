@@ -44,8 +44,8 @@ from financial_data_science_spark.functions.text import (  # noqa: F401
 #
 # One text definition per vector fold; the public helpers wrap it.  The
 # ``*_sql`` forms take SQL operands (quoted names or lambda paths such as
-# ``x_7.cv``) and return text; ``dot``/``norm``/``cosine``/``sqdist``
-# take column names and return a Column.
+# ``x_7.cv``) and return text; ``dot``/``norm``/``cosine`` take column
+# names and return a Column.
 
 def dot_sql(a: str, b: str) -> str:
     """Dot product of two array<numeric> operands (JVM-side fold)."""
@@ -86,11 +86,6 @@ def norm(a: str) -> Column:
 def cosine(a: str, b: str) -> Column:
     """Cosine similarity of the array columns named ``a`` and ``b``."""
     return F.expr(cosine_sql(sql_name(a), sql_name(b)))
-
-
-def sqdist(a: str, b: str) -> Column:
-    """Squared L2 distance of the array columns named ``a`` and ``b``."""
-    return F.expr(sqdist_sql(sql_name(a), sql_name(b)))
 
 
 def _vec_dim(df: DataFrame, vec_col: str) -> int:
@@ -141,8 +136,8 @@ def _flat_dot(pl: str, pr: str, dim: int) -> str:
 
 def _flat_sqdist(pl: str, pr: str, dim: int) -> str:
     """Squared L2 over flat-unpacked columns (SQL text) — same chain
-    argument as :func:`_flat_dot`, bit-identical to the :func:`sqdist`
-    fold."""
+    argument as :func:`_flat_dot`, bit-identical to the
+    :func:`sqdist_sql` fold."""
     terms = "".join(
         f" + (__{pl}{i}__ - __{pr}{i}__) * (__{pl}{i}__ - __{pr}{i}__)"
         for i in range(dim)

@@ -80,6 +80,46 @@ def _plan_size_bytes(df: DataFrame) -> int:
     return -1 if size >= _STATS_UNKNOWN else size
 
 
+# physical operators whose RDD keeps its input's partition count
+_NARROW = frozenset(
+    ("WholeStageCodegenExec", "InputAdapter", "ColumnarToRowExec",
+     "ProjectExec", "FilterExec", "SortExec", "WindowExec",
+     "WindowGroupLimitExec")
+)
+
+
+def _num_partitions(df: DataFrame) -> int:
+    """Partition count ``df`` is planned with, read without a job.
+
+    ``df.rdd.getNumPartitions()`` executes the plan to build the RDD;
+    on an adaptive plan that first runs every query stage (a broadcast
+    or a shuffle) as a job.  This walks the physical plan instead, down
+    narrow operators and broadcast joins' streamed sides, to the node
+    that sets the count: a scan's splits or a shuffle's width.  Adaptive
+    execution may still shrink a shuffle's width when it runs (coalesced
+    partitions, an empty relation); the count here is the planned one.
+    Any other shape (a union, a sort-merge join, a cache, a bucketed or
+    partition-pruned scan) keeps the RDD count.  Raises what ``df.rdd``
+    raises on an unconvertible plan."""
+    plan = df._jdf.queryExecution().executedPlan()
+    while True:
+        kind = plan.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            plan = plan.executedPlan()
+        elif kind in _NARROW:
+            plan = plan.child()
+        elif kind == "BroadcastHashJoinExec":
+            plan = plan.streamedPlan()
+        elif kind == "ShuffleExchangeExec":
+            return plan.numPartitions()
+        elif kind == "RDDScanExec" or kind == "FileSourceScanExec" and (
+            not plan.bucketedScan() and plan.partitionFilters().isEmpty()
+        ):
+            return plan.inputRDD().getNumPartitions()
+        else:
+            return df.rdd.getNumPartitions()
+
+
 def compact_width(df: DataFrame) -> int:
     """Width to COMPACT a small reused intermediate to before an eager
     checkpoint, or 0 to leave the layout alone.
@@ -102,7 +142,7 @@ def compact_width(df: DataFrame) -> int:
         return 0
     want = max(1, -(-size // _COMPACT_BYTES_PER_PART))
     try:
-        current = df.rdd.getNumPartitions()
+        current = _num_partitions(df)
     except Exception:  # unconvertible plans: leave layout alone
         return 0
     return want if want < current else 0
@@ -127,7 +167,7 @@ def fan_out_scan(df: DataFrame, *keys: str) -> DataFrame:
     if size >= 0 and _FAN_BYTES_PER_TASK > 0:
         target = min(target, max(1, -(-size // _FAN_BYTES_PER_TASK)))
     try:
-        current = df.rdd.getNumPartitions()
+        current = _num_partitions(df)
     except Exception:  # unconvertible plans: leave layout alone
         return df
     if current >= target:

@@ -1079,10 +1079,9 @@ def minhash_index_frozen_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental LSH dedup with a FROZEN stop-shingle census — the
     configuration a production ingest actually runs (r11 verdict item 4,
     now API: minhash_build_index(max_df=)).  The census is taken ONCE
-    over the standing corpus (doc_id % 5 != 0), persisted with the
-    index, and the arriving increment hashes UNDER that frozen set —
-    never its own df census, whose drift would stale every at-rest
-    signature.  The oracle censuses the corpus side only and applies
+    over the standing corpus (doc_id % 5 != 0), carried in the index,
+    and the arriving increment hashes UNDER that frozen set — never its
+    own df census, whose drift would stale every indexed signature.  The oracle censuses the corpus side only and applies
     the one frozen set to both halves, so a per-batch re-census on the
     Spark side would hash-mismatch."""
     from financial_data_science_spark.functions import minhash_index as MHI
@@ -5687,7 +5686,7 @@ def _cell_split_sql_body(
     max_depth: int, cap: int, nsub: int, sub_iters: int, dim: int,
 ) -> str:
     """Shared WITH-chain body of the recursive cell split replay
-    (semdedup._cell_split_levels): per unrolled level — per-cell counts,
+    (semdedup.kmeans_cell_split): per unrolled level — per-cell counts,
     oversized set, evenly-spaced-rank init, unrolled Lloyd sweeps with
     rounded grids and ties-to-lowest-sub, final assignment, injective
     renumbering cell*(nsub+1)+sub.  Starts from ``binned`` (the shared
@@ -5933,8 +5932,8 @@ def semdedup_probe_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter-family cosine), while stratified reps carry a coverage
     guarantee (any id-run of length >= ceil(cnt/cap) contains a rep:
     decision recall 1.000 on the same families, isotropic-blob recall
-    unchanged).  Probe-time filter over the persisted ranks — the SAME
-    at-rest index serves both policies.  The oracle replays the full
+    unchanged).  Probe-time filter over the index's precomputed ranks —
+    the SAME built index serves both policies.  The oracle replays the full
     chain with the stratified rank predicate (integer // = Spark's
     div)."""
     from financial_data_science_spark.functions.semdedup import (
@@ -6120,7 +6119,7 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingestion-time shape of the incremental dedup index: the arriving
     increment is a STREAM, and each micro-batch's band keys — the
     stateless per-row minhash_band_keys fold, append-safe because it is
-    a projection, not an aggregate — join the AT-REST corpus bucket
+    a projection, not an aggregate — join the checkpointed corpus bucket
     table (functions/minhash_index.py) as a stream-static equi-join
     with ZERO state rows: no watermark, no dedup state, every collision
     row emits in the micro-batch that observes it and the operator

@@ -175,11 +175,10 @@ def _ewma_run(
     alpha: float,
     adjust: bool,
 ) -> tuple[list[tuple], float | None, float]:
-    """The shared per-key EWMA recursion: fold sorted (ts_us, value) rows
+    """The per-key EWMA recursion: fold sorted (ts_us, value) rows
     through the two-double carry, returning output rows + new carry.
-    Both stateful APIs (applyInPandasWithState and
-    transformWithStateInPandas) drive exactly this function, so their
-    semantics cannot drift apart."""
+    The state function of :func:`stream_ewma` (``_make_ewma_fn``)
+    drives it once per key and micro-batch."""
     lam = 1.0 - alpha
     nan = float("nan")
     out = []
@@ -263,72 +262,4 @@ def stream_ewma(
         stateStructType=_EWMA_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_ewma_tws(
-    ticks: DataFrame,
-    alpha: float,
-    adjust: bool = True,
-    key_col: str = "key",
-    ts_col: str = "ts_us",
-    value_col: str = "value",
-) -> DataFrame:
-    """``transformWithStateInPandas`` twin of :func:`stream_ewma` — the
-    Spark 4 arbitrary-stateful-processing API (typed value state in the
-    RocksDB state store) running the IDENTICAL two-double recursion via
-    the shared ``_ewma_run`` fold, so the two APIs cannot diverge.
-
-    Where ``applyInPandasWithState`` gives one opaque state tuple per
-    key, the processor API composes named state variables, timers, and
-    TTL; this operator only needs one value state, but it is the shape
-    new stateful operators should take going forward.  Requires
-    ``spark.sql.streaming.stateStore.providerClass`` =
-    ``...RocksDBStateStoreProvider`` (the only provider supporting
-    transformWithState) — set it on the session before starting the
-    query; parity with stream_ewma across micro-batches is the test
-    oracle.  NOTE: the TWS Python runner also needs ``google.protobuf``,
-    which this container lacks, so the parity test is capability-gated
-    (skipped-if-no-protobuf) exactly like the Pillow decode path; the
-    recursion itself is the shared fold stream_ewma's green tests cover.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    nan = float("nan")
-
-    class EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # num is NaN-encoded while unseeded (value state can't hold
-            # None inside a non-null struct field portably)
-            self._carry = handle.getValueState("carry", _EWMA_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            pdf = pd.concat(list(rows), ignore_index=True).sort_values("ts_us")
-            if self._carry.exists():
-                num, den = self._carry.get()
-                if num != num:  # NaN marker -> unseeded
-                    num = None
-            else:
-                num, den = None, 0.0
-            out, num, den = _ewma_run(key[0], pdf, num, den, alpha, adjust)
-            self._carry.update((nan if num is None else num, den))
-            yield pd.DataFrame(out, columns=["key", "ts_us", "value", "ewma"])
-
-        def close(self) -> None:
-            pass
-
-    src = ticks.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(ts_col).cast("long").alias("ts_us"),
-        F.col(value_col).cast("double").alias("value"),
-    )
-    return src.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=EwmaProcessor(),
-        outputStructType=EWMA_SCHEMA,
-        outputMode="append",
-        timeMode="None",
     )

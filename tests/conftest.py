@@ -8,40 +8,11 @@ codes.  Seed fixed; generators are pure functions of the seed.
 
 from __future__ import annotations
 
-import os
-import sys
-
 import numpy as np
 import pandas as pd
 import pytest
 
-
-def _enable_protobuf_shim() -> None:
-    """If no protobuf wheel is installed but the machine's google-cloud-sdk
-    carries the runtime, activate tests/proto_shim BEFORE the Spark JVM
-    launches: PYTHONPATH so every spawned Python worker runs the
-    sitecustomize shim, plus the same fixup in-process for the driver.
-    Inert when a real google.protobuf is importable (see the shim's
-    docstring for the jar-resource namespace-ghost gotcha and why the
-    version-guard no-op is safe here)."""
-    import importlib.util
-
-    shim = os.path.join(os.path.dirname(os.path.abspath(__file__)), "proto_shim")
-    # load by file path (a system sitecustomize may already own the name);
-    # the module import itself runs enable() in-process for the driver
-    spec = importlib.util.spec_from_file_location(
-        "_fds_proto_shim", os.path.join(shim, "sitecustomize.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    if not mod._real_protobuf():
-        return  # nothing usable on this machine; tests keep skipping
-    os.environ["PYTHONPATH"] = shim + os.pathsep + os.environ.get("PYTHONPATH", "")
-
-
-_enable_protobuf_shim()
-
-from financial_data_science_spark import get_spark  # noqa: E402
+from financial_data_science_spark import get_spark
 
 SEED = 42
 

@@ -86,3 +86,41 @@ def test_fan_out_preserves_minhash_results(spark):
         (r["left_id"], r["right_id"], r["est_jaccard"]) for r in single.collect()
     )
     assert rows_f == rows_s
+
+
+def test_fan_out_decides_without_a_job(spark):
+    """Deciding whether to fan out runs no Spark job.  On an adaptive
+    plan over a broadcast join, ``df.rdd.getNumPartitions()`` first runs
+    the plan's query stages as jobs; the count is read from the plan
+    instead: a scan's splits, or a shuffle's planned width."""
+    from financial_data_science_spark.operators.layout import (
+        _FAN_BYTES_PER_TASK,
+        _plan_size_bytes,
+    )
+    from financial_data_science_spark.operators.prevailing import keep_extremum
+    from financial_data_science_spark.sources.testdata import load_table
+
+    docs = load_table(spark, SF, "documents")
+    seen = docs.select("doc_id").filter(F.col("doc_id") % 7 == 0)
+    scanned = docs.join(F.broadcast(seen), "doc_id", "left_anti")
+    # the ingestion shape: a per-key dedup (one shuffle), then the
+    # anti-join against ids already stored
+    shuffled = keep_extremum(docs, ["doc_id"], ["n_chars"]).join(
+        F.broadcast(seen), "doc_id", "left_anti"
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for frame, planned in (
+        (scanned, docs.rdd.getNumPartitions()),
+        (shuffled, int(spark.conf.get("spark.sql.shuffle.partitions"))),
+    ):
+        before = dag.nextJobId()
+        fanned = fan_out_scan(frame, "doc_id")
+        assert dag.nextJobId() - before == 0
+        want = min(
+            spark.sparkContext.defaultParallelism,
+            max(1, -(-_plan_size_bytes(frame) // _FAN_BYTES_PER_TASK)),
+        )
+        if planned >= want:
+            assert fanned is frame
+        else:
+            assert fanned.rdd.getNumPartitions() == want

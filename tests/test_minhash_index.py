@@ -105,62 +105,6 @@ def test_empty_increment(spark):
     assert MHI.minhash_query_index(empty, idx).count() == 0
 
 
-def test_at_rest_index_probe_skips_corpus_side_exchange(spark, tmp_path):
-    """minhash_write_index buckets the table by the probe join key
-    (band, bhash); the probe join's index side must read co-located
-    buckets — the 100 TB contract: only the increment shuffles.
-    Asserted behaviorally: with broadcast off (forcing SMJ), the
-    at-rest plan carries exactly one fewer Exchange than the same query
-    against the in-memory index, and the bucket scan reads Bucketed."""
-    docs = _docs(spark)
-    corpus, inc = _split(docs)
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS mhidx LOCATION '{tmp_path}/mhidx'")
-    idx = MHI.minhash_build_index(corpus, portable=False, **PARAMS)
-    MHI.minhash_write_index(idx, "mhidx.t", n_buckets=4)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        reopened = MHI.minhash_read_index(
-            spark, "mhidx.t", portable=False, **PARAMS
-        )
-        got = MHI.minhash_query_index(inc, reopened).toPandas()
-        want = _cross_pairs_full_batch(docs, portable=False)
-        assert {
-            (int(n), int(c), float(e))
-            for n, c, e in got[["new_id", "corpus_id", "est_jaccard"]].to_numpy()
-        } == want
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # isolate the bucket-join stage: identical probe side (one
-        # materialized banded increment) joined against (a) the
-        # materialized in-memory bucket frame and (b) the at-rest
-        # bucketed table.  (a) must exchange BOTH sides for the SMJ;
-        # (b) must exchange only the probe — exactly one fewer.
-        sig = S.minhash_signatures(
-            inc, "doc_id", "text", PARAMS["shingle_k"],
-            PARAMS["num_hashes"], PARAMS["seed"], portable=False,
-        )
-        nb = S.lsh_banded(
-            sig, "doc_id", "new_id", PARAMS["num_hashes"],
-            PARAMS["bands"], False,
-        ).localCheckpoint(eager=True)
-        mem_buckets = idx["buckets"].localCheckpoint(eager=True)
-        plan_mem = (
-            nb.join(mem_buckets, ["band", "bhash"])
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        plan_rest = (
-            nb.join(reopened["buckets"], ["band", "bhash"])
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "Bucketed: true" in plan_rest
-        n_mem = plan_mem.count("Exchange hashpartitioning")
-        n_rest = plan_rest.count("Exchange hashpartitioning")
-        assert (n_mem, n_rest) == (2, 1), (n_mem, n_rest)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS mhidx.t_buckets")
-        spark.sql("DROP TABLE IF EXISTS mhidx.t_sigs")
-
-
 def test_stream_probe_matches_batch_and_holds_zero_state(spark, tmp_path):
     """The streaming arm (catalog stream_minhash_index_probe kernel):
     per-row minhash_band_keys folds must collide bit-for-bit with the
@@ -225,85 +169,6 @@ def test_stream_probe_matches_batch_and_holds_zero_state(spark, tmp_path):
     assert progress is None or progress["stateOperators"] in ([], None)
 
 
-def _pairs_key(df):
-    return {
-        (int(n), int(c), float(e))
-        for n, c, e in df[["new_id", "corpus_id", "est_jaccard"]].to_numpy()
-    }
-
-
-def test_append_equals_rebuild(spark):
-    """The ingestion loop's append half: minhash_append_index(corpus idx,
-    batch) must yield an index whose probe results are IDENTICAL to an
-    index built from scratch on corpus+batch — per-doc-independent
-    signatures make incremental maintenance exact.  Covers both the
-    lazy-union and the persist=True (compacting checkpoint) branches."""
-    docs = _docs(spark)
-    corpus, inc = _split(docs)
-    # treat the increment as already-ingested; probe with a THIRD batch
-    probe_batch = docs.filter(F.col("doc_id").isin([1, 7, 115])).select(
-        (F.col("doc_id") + 1000).alias("doc_id"), "text"
-    )
-    rebuilt = MHI.minhash_build_index(
-        corpus.unionByName(inc), portable=True, **PARAMS
-    )
-    want = _pairs_key(MHI.minhash_query_index(probe_batch, rebuilt).toPandas())
-    assert want, "probe batch must collide with something"
-    base = MHI.minhash_build_index(corpus, portable=True, **PARAMS)
-    for persist in (False, True):
-        grown = MHI.minhash_append_index(base, inc, persist=persist)
-        got = _pairs_key(
-            MHI.minhash_query_index(probe_batch, grown).toPandas()
-        )
-        assert got == want, f"persist={persist}"
-    # the increment-only frames carry exactly the batch's rows
-    assert set(
-        r["corpus_id"] for r in grown["new_sigs"].collect()
-    ) == set(r["doc_id"] for r in inc.select("doc_id").collect())
-
-
-def test_append_at_rest_loop(spark, tmp_path):
-    """The production ingestion loop lives AT REST: write the base index
-    bucketed, append a batch by writing ONLY the increment frames with
-    mode='append' (same bucket spec, O(batch) rows written), re-open,
-    and probe — results must equal the from-scratch rebuild."""
-    docs = _docs(spark)
-    corpus, inc = _split(docs)
-    probe_batch = docs.filter(F.col("doc_id").isin([1, 7, 115])).select(
-        (F.col("doc_id") + 1000).alias("doc_id"), "text"
-    )
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS mhapp LOCATION '{tmp_path}/mhapp'"
-    )
-    try:
-        base = MHI.minhash_build_index(corpus, portable=True, **PARAMS)
-        MHI.minhash_write_index(base, "mhapp.t", n_buckets=4)
-        grown = MHI.minhash_append_index(
-            MHI.minhash_read_index(spark, "mhapp.t", portable=True, **PARAMS),
-            inc,
-        )
-        MHI.minhash_write_index(
-            {"buckets": grown["new_buckets"], "sigs": grown["new_sigs"]},
-            "mhapp.t", n_buckets=4, mode="append",
-        )
-        reopened = MHI.minhash_read_index(
-            spark, "mhapp.t", portable=True, **PARAMS
-        )
-        got = _pairs_key(
-            MHI.minhash_query_index(probe_batch, reopened).toPandas()
-        )
-        rebuilt = MHI.minhash_build_index(
-            corpus.unionByName(inc), portable=True, **PARAMS
-        )
-        want = _pairs_key(
-            MHI.minhash_query_index(probe_batch, rebuilt).toPandas()
-        )
-        assert got == want and want
-    finally:
-        spark.sql("DROP TABLE IF EXISTS mhapp.t_buckets")
-        spark.sql("DROP TABLE IF EXISTS mhapp.t_sigs")
-
-
 # ---------------------------------------------------------- frozen census
 
 
@@ -356,178 +221,16 @@ def test_frozen_census_increment_equals_batch_under_same_census(spark):
         assert any((n, c) == (100, 3) for n, c, _ in got)
 
 
-def test_frozen_census_append_uses_corpus_census(spark):
-    """Appended batches hash under the FROZEN corpus census (never a
-    per-batch re-census): append + probe equals a from-scratch rebuild
-    over corpus+batch that applies the same frozen set via stop_frame."""
-    docs = _boilerplate_docs(spark)
-    corpus, inc = _split(docs)
-    probe = spark.createDataFrame(
-        pd.DataFrame([(500, docs.filter(F.col("doc_id") == 3)
-                       .collect()[0]["text"])], columns=["doc_id", "text"])
-    )
-    idx = MHI.minhash_build_index(corpus, portable=True, max_df=0.25, **PARAMS)
-    grown = MHI.minhash_append_index(idx, inc)
-    got = _pairs_set(MHI.minhash_query_index(probe, grown).toPandas())
-    rebuilt = MHI.minhash_build_index(
-        corpus.unionByName(inc), portable=True, stop_frame=idx["stop"], **PARAMS
-    )
-    want = _pairs_set(MHI.minhash_query_index(probe, rebuilt).toPandas())
-    assert got == want and want
-
-
 def test_census_and_stop_frame_are_mutually_exclusive(spark):
+    """A signature pass takes a census or a frozen stop set, never both:
+    a per-batch re-census on top of a frozen set would drift the kept
+    shingles."""
+    import pytest
+
     docs = _boilerplate_docs(spark)
     corpus, _ = _split(docs)
     idx = MHI.minhash_build_index(corpus, portable=True, max_df=0.25, **PARAMS)
-    import pytest
-
-    with pytest.raises(ValueError, match="not both"):
-        MHI.minhash_build_index(
-            corpus, portable=True, max_df=0.25, stop_frame=idx["stop"], **PARAMS
-        )
     with pytest.raises(ValueError, match="not both"):
         S.minhash_signatures(
             corpus, max_df=0.25, stop_frame=idx["stop"]
         )
-
-
-# ------------------------------------------------------- at-rest meta
-
-
-def test_at_rest_meta_roundtrip_and_validation(spark, tmp_path):
-    """The hash-family params and the frozen stop set are INDEX DATA:
-    written with it, read back without caller args, and validated
-    against any explicitly passed value (advisor r11: a silent mismatch
-    yields empty collisions, not an error)."""
-    import pytest
-
-    docs = _boilerplate_docs(spark)
-    corpus, inc = _split(docs)
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS mhmeta LOCATION '{tmp_path}/mh'")
-    try:
-        idx = MHI.minhash_build_index(
-            corpus, portable=True, max_df=0.25, **PARAMS
-        )
-        MHI.minhash_write_index(idx, "mhmeta.t", n_buckets=4)
-        # read back with NO params: everything comes from {prefix}_meta
-        reopened = MHI.minhash_read_index(spark, "mhmeta.t")
-        for k in ("shingle_k", "num_hashes", "bands", "seed", "portable"):
-            assert reopened[k] == (idx[k] if k != "portable" else True)
-        assert reopened["stop"] is not None
-        got = _pairs_set(MHI.minhash_query_index(inc, reopened).toPandas())
-        want = _pairs_set(MHI.minhash_query_index(inc, idx).toPandas())
-        assert got == want and want
-        # explicit args must match the at-rest meta
-        with pytest.raises(ValueError, match="contradict"):
-            MHI.minhash_read_index(spark, "mhmeta.t", num_hashes=64)
-        # appending rows hashed under a different family must refuse
-        other = MHI.minhash_build_index(
-            inc, portable=True, num_hashes=8, bands=4, shingle_k=3, seed=42
-        )
-        with pytest.raises(ValueError, match="do not match"):
-            MHI.minhash_write_index(other, "mhmeta.t", n_buckets=4,
-                                    mode="append")
-        # overwriting with an uncensused index drops the stale stop set
-        plain = MHI.minhash_build_index(corpus, portable=True, **PARAMS)
-        MHI.minhash_write_index(plain, "mhmeta.t", n_buckets=4)
-        assert MHI.minhash_read_index(spark, "mhmeta.t")["stop"] is None
-    finally:
-        for t in ("t_buckets", "t_sigs", "t_meta", "t_stop"):
-            spark.sql(f"DROP TABLE IF EXISTS mhmeta.{t}")
-
-
-def test_compact_index_preserves_probe_and_shrinks_files(spark, tmp_path):
-    """Append-mode writes land one file set per batch; compaction must
-    rewrite into ONE set per table (same bucket spec — the probe plan
-    and its results must be identical before/after)."""
-    import glob
-
-    docs = _docs(spark)
-    corpus, inc = _split(docs)
-    half = inc.filter(F.col("doc_id") < 110)
-    rest = inc.filter(F.col("doc_id") >= 110)
-    probe = docs.filter(F.col("doc_id").isin([1, 7, 115])).select(
-        (F.col("doc_id") + 1000).alias("doc_id"), "text"
-    )
-    wh = f"{tmp_path}/mhcmp"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS mhcmp LOCATION '{wh}'")
-    try:
-        base = MHI.minhash_build_index(corpus, portable=True, **PARAMS)
-        MHI.minhash_write_index(base, "mhcmp.t", n_buckets=4)
-        for batch in (half, rest):
-            grown = MHI.minhash_append_index(
-                MHI.minhash_read_index(spark, "mhcmp.t"), batch
-            )
-            MHI.minhash_write_index(
-                {"buckets": grown["new_buckets"], "sigs": grown["new_sigs"]},
-                "mhcmp.t", n_buckets=4, mode="append",
-            )
-        n_before = len(glob.glob(f"{wh}/t_buckets/*.parquet"))
-        want = _pairs_key(
-            MHI.minhash_query_index(
-                probe, MHI.minhash_read_index(spark, "mhcmp.t")
-            ).toPandas()
-        )
-        MHI.minhash_compact_index(spark, "mhcmp.t", n_buckets=4)
-        n_after = len(glob.glob(f"{wh}/t_buckets/*.parquet"))
-        assert n_after < n_before and n_after <= 4
-        reopened = MHI.minhash_read_index(spark, "mhcmp.t")
-        got = _pairs_key(MHI.minhash_query_index(probe, reopened).toPandas())
-        assert got == want and want
-        # params still come from the untouched meta table
-        assert reopened["num_hashes"] == PARAMS["num_hashes"]
-    finally:
-        for t in ("t_buckets", "t_sigs", "t_meta", "t_stop"):
-            spark.sql(f"DROP TABLE IF EXISTS mhcmp.{t}")
-
-
-def test_append_after_compact_equals_rebuild(spark, tmp_path):
-    """Compaction mid-ingestion must compose with later appends (the
-    r13 lifecycle-loop shape, ee5f3ba:tools/scale_probe_index_lifecycle.py):
-    build -> append -> COMPACT -> append again -> probe must equal a
-    from-scratch rebuild over the same docs — compaction only changes
-    the file layout, so rows appended after it land in the same bucket
-    spec and the evidence set is unchanged."""
-    docs = _docs(spark)
-    corpus, inc = _split(docs)
-    half = inc.filter(F.col("doc_id") < 110)
-    rest = inc.filter(F.col("doc_id") >= 110)
-    probe = docs.filter(F.col("doc_id").isin([1, 7, 115])).select(
-        (F.col("doc_id") + 1000).alias("doc_id"), "text"
-    )
-    wh = f"{tmp_path}/mhcmp2"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS mhcmp2 LOCATION '{wh}'")
-    try:
-        base = MHI.minhash_build_index(corpus, portable=True, **PARAMS)
-        MHI.minhash_write_index(base, "mhcmp2.t", n_buckets=4)
-        grown = MHI.minhash_append_index(
-            MHI.minhash_read_index(spark, "mhcmp2.t"), half
-        )
-        MHI.minhash_write_index(
-            {"buckets": grown["new_buckets"], "sigs": grown["new_sigs"]},
-            "mhcmp2.t", n_buckets=4, mode="append",
-        )
-        MHI.minhash_compact_index(spark, "mhcmp2.t", n_buckets=4)
-        grown = MHI.minhash_append_index(
-            MHI.minhash_read_index(spark, "mhcmp2.t"), rest
-        )
-        MHI.minhash_write_index(
-            {"buckets": grown["new_buckets"], "sigs": grown["new_sigs"]},
-            "mhcmp2.t", n_buckets=4, mode="append",
-        )
-        got = _pairs_key(
-            MHI.minhash_query_index(
-                probe, MHI.minhash_read_index(spark, "mhcmp2.t")
-            ).toPandas()
-        )
-        rebuilt = MHI.minhash_build_index(
-            corpus.unionByName(inc), portable=True, **PARAMS
-        )
-        want = _pairs_key(
-            MHI.minhash_query_index(probe, rebuilt).toPandas()
-        )
-        assert got == want and want
-    finally:
-        for t in ("t_buckets", "t_sigs", "t_meta", "t_stop"):
-            spark.sql(f"DROP TABLE IF EXISTS mhcmp2.{t}")

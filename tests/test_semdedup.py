@@ -50,7 +50,7 @@ def test_split_breaks_spread_mega_cell(spark):
     idx = ivf_build_index(emb, nlist=2, iters=2)
     pre = idx["binned"].groupBy("cluster").count().toPandas()
     assert pre["count"].max() >= 55  # the blob really is one cell
-    cells = kmeans_cell_split(
+    cells, _ = kmeans_cell_split(
         idx["binned"], cap=20, nsub=4, sub_iters=2, max_depth=1
     )
     post = cells.groupBy("cluster").count().toPandas()
@@ -116,7 +116,7 @@ def test_no_guard_matches_plain_within_cell_pairs(spark):
     )
     # skip-level parity: cell ids renumbered by (nsub+1) even with no
     # split (the static-SQL oracle always applies the arithmetic)
-    cells = kmeans_cell_split(b, cap=100, nsub=2, sub_iters=2, max_depth=1)
+    cells, _ = kmeans_cell_split(b, cap=100, nsub=2, sub_iters=2, max_depth=1)
     got = sorted(set(r["cluster"] for r in cells.select("cluster").collect()))
     want = sorted(set(r["cluster"] * 3 for r in b.select("cluster").collect()))
     assert got == want
@@ -130,10 +130,10 @@ def test_max_depth_recursion_tightens_cells(spark):
     )]
     emb = _emb_df(spark, rows)
     idx = ivf_build_index(emb, nlist=1, iters=1)
-    d1 = kmeans_cell_split(idx["binned"], cap=10, nsub=2, sub_iters=1,
-                           max_depth=1)
-    d2 = kmeans_cell_split(idx["binned"], cap=10, nsub=2, sub_iters=1,
-                           max_depth=2)
+    d1, _ = kmeans_cell_split(idx["binned"], cap=10, nsub=2, sub_iters=1,
+                              max_depth=1)
+    d2, _ = kmeans_cell_split(idx["binned"], cap=10, nsub=2, sub_iters=1,
+                              max_depth=2)
     m1 = d1.groupBy("cluster").count().agg(F.max("count")).collect()[0][0]
     m2 = d2.groupBy("cluster").count().agg(F.max("count")).collect()[0][0]
     assert m2 < m1
@@ -154,8 +154,8 @@ def test_split_is_partitioning_invariant(spark):
     base = idx["binned"].localCheckpoint(eager=True)
 
     def cells_of(frame):
-        out = kmeans_cell_split(frame, cap=12, nsub=3, sub_iters=2,
-                                max_depth=2)
+        out, _ = kmeans_cell_split(frame, cap=12, nsub=3, sub_iters=2,
+                                   max_depth=2)
         return {r["vec_id"]: r["cluster"] for r in
                 out.select("vec_id", "cluster").collect()}
 
@@ -220,7 +220,7 @@ def test_probe_leaves_the_index_dict_unchanged(spark):
         sub_iters=1, max_depth=1,
     )
     # a split level, so routing reads collected level rows
-    assert any(level is not None for level in idx["levels"])
+    assert any(rows is not None for rows in idx["level_rows"])
     before = dict(idx)
     batch = _emb_df(spark, [(1000, rows[5][1]), (1001, rows[33][1])])
     for _ in range(2):
@@ -244,94 +244,6 @@ def test_routing_literal_refuses_an_oversized_level():
     assert _level_literal(level(16)).startswith("map(")
     with pytest.raises(ValueError, match=r"nlist.*nsub.*max_depth"):
         _level_literal(level(32 * 8**2))
-
-
-def test_semdedup_index_at_rest_roundtrip(spark, tmp_path):
-    """write -> read -> probe must equal the in-memory probe (params
-    from meta, skipped levels restored as the skip arm)."""
-    from financial_data_science_spark.functions.semdedup import (
-        semdedup_build_index,
-        semdedup_query_index,
-        semdedup_read_index,
-        semdedup_write_index,
-    )
-
-    rng = np.random.default_rng(47)
-    rows = [(i, v) for i, v in enumerate(
-        _spread_blob(rng, np.ones(DIM), 40, 0.4)
-        + _spread_blob(rng, -np.ones(DIM), 10, 0.4)
-    )]
-    emb = _emb_df(spark, rows)
-    batch = _emb_df(spark, [(1000 + i, rows[i][1]) for i in (2, 7, 44)])
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS sdidx LOCATION '{tmp_path}/sd'")
-    try:
-        # max_depth=2 so level 2 is typically the SKIP arm (cells small
-        # after one split) — the restored index must replay it
-        idx = semdedup_build_index(
-            emb, nlist=2, iters=2, cap=12, nsub=2, sub_iters=1, max_depth=2,
-            persist=True,
-        )
-        want = semdedup_query_index(batch, idx, tau=0.9).toPandas()
-        semdedup_write_index(idx, "sdidx.t", n_buckets=4)
-        re = semdedup_read_index(spark, "sdidx.t")
-        assert (re["nsub"], re["cap"], re["id_col"]) == (2, 12, "vec_id")
-        assert len(re["levels"]) == len(idx["levels"])
-        got = semdedup_query_index(batch, re, tau=0.9).toPandas()
-        key = lambda d: {(int(q), int(c), float(s), bool(t)) for q, c, s, t in
-                         d[["new_vec_id", "corpus_id", "cos", "truncated"]]
-                         .to_numpy()}
-        assert key(got) == key(want) and len(want) >= 3
-    finally:
-        for t in ("t_cells", "t_centroids", "t_levels", "t_meta"):
-            spark.sql(f"DROP TABLE IF EXISTS sdidx.{t}")
-
-
-def test_at_rest_cells_probe_skips_corpus_side_exchange(spark, tmp_path):
-    """semdedup_write_index buckets the cell table by the probe join
-    key; a LARGE batch join (too big to broadcast) must then exchange
-    ONLY the batch side — the same 100 TB contract the MinHash index
-    pins (one fewer Exchange than the in-memory cell frame, bucketed
-    scan visible in the plan)."""
-    from financial_data_science_spark.functions.semdedup import (
-        semdedup_build_index,
-        semdedup_read_index,
-        semdedup_write_index,
-    )
-
-    rng = np.random.default_rng(53)
-    rows = [(i, v) for i, v in enumerate(
-        _spread_blob(rng, np.ones(DIM), 40, 0.4)
-    )]
-    emb = _emb_df(spark, rows)
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS sdpl LOCATION '{tmp_path}/sdpl'")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        idx = semdedup_build_index(
-            emb, nlist=2, iters=1, cap=50, nsub=2, sub_iters=1, max_depth=1,
-            persist=True,
-        )
-        semdedup_write_index(idx, "sdpl.t", n_buckets=4)
-        re = semdedup_read_index(spark, "sdpl.t")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        probes = _emb_df(spark, [(1000 + i, rows[i % 40][1]) for i in range(20)]) \
-            .select("vec_id", F.lit(0).cast("long").alias("cell")) \
-            .localCheckpoint(eager=True)
-        plan_mem = (
-            probes.join(idx["cells"], "cell")
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        plan_rest = (
-            probes.join(re["cells"], "cell")
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "Bucketed: true" in plan_rest
-        n_mem = plan_mem.count("Exchange hashpartitioning")
-        n_rest = plan_rest.count("Exchange hashpartitioning")
-        assert n_rest == n_mem - 1, (n_mem, n_rest)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        for t in ("t_cells", "t_centroids", "t_levels", "t_meta"):
-            spark.sql(f"DROP TABLE IF EXISTS sdpl.{t}")
 
 
 def test_stratified_reps_cover_id_contiguous_families(spark):
@@ -451,55 +363,6 @@ def test_query_with_pool_unions_index_and_pool_pairs(spark):
     exact = out[out["cos"] >= 0.999]
     dec = exact.groupby("new_vec_id")["source"].apply(set)
     assert dec[1001] == {"pool"} and dec[1000] == {"index"}
-
-
-def test_query_with_pool_on_at_rest_index(spark, tmp_path):
-    """The between-rebuilds step must run against a re-opened at-rest
-    index unchanged (write -> read -> query_with_pool == the in-memory
-    result): the pool routing uses the restored centroid chain, so an
-    ingestion loop can hold ONLY the table prefix + the small pool
-    between rebuilds."""
-    from financial_data_science_spark.functions.semdedup import (
-        semdedup_build_index,
-        semdedup_query_with_pool,
-        semdedup_read_index,
-        semdedup_write_index,
-    )
-
-    rng = np.random.default_rng(61)
-    rows = [(i, v) for i, v in enumerate(
-        _spread_blob(rng, np.ones(DIM), 40, 0.4)
-        + _spread_blob(rng, -np.ones(DIM), 10, 0.4)
-    )]
-    emb = _emb_df(spark, rows)
-    pool = _emb_df(spark, [
-        (500 + j, np.ones(DIM) + rng.normal(0, 0.4, DIM)) for j in range(4)
-    ] + [(504, rows[2][1])])   # pool twin of the batch's first probe
-    batch = _emb_df(spark, [(1000 + i, rows[i][1]) for i in (2, 44)])
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS sdpool LOCATION '{tmp_path}/sdp'"
-    )
-    try:
-        idx = semdedup_build_index(
-            emb, nlist=2, iters=2, cap=12, nsub=2, sub_iters=1, max_depth=2,
-            persist=True,
-        )
-        want = semdedup_query_with_pool(batch, idx, pool, tau=0.9).toPandas()
-        semdedup_write_index(idx, "sdpool.t", n_buckets=4)
-        re = semdedup_read_index(spark, "sdpool.t")
-        got = semdedup_query_with_pool(batch, re, pool, tau=0.9).toPandas()
-        key = lambda d: {
-            (int(q), int(c), float(s), bool(t), src)
-            for q, c, s, t, src in d[
-                ["new_vec_id", "corpus_id", "cos", "truncated", "source"]
-            ].to_numpy()
-        }
-        assert key(got) == key(want)
-        assert (want["source"] == "pool").any()
-        assert (want["source"] == "index").any()
-    finally:
-        for t in ("t_cells", "t_centroids", "t_levels", "t_meta"):
-            spark.sql(f"DROP TABLE IF EXISTS sdpool.{t}")
 
 
 def test_pool_cap_bounds_burst_but_keeps_witness(spark):

@@ -6,7 +6,6 @@ from __future__ import annotations
 import os
 
 import pandas as pd
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -237,102 +236,3 @@ def test_stream_ewma_recursion_matches_pandas_with_nans():
             outs.append(next(fn(("k",), iter([pdf]), state)))
         got = pd.concat(outs, ignore_index=True)["ewma"].to_numpy()
         assert np.allclose(got, want.to_numpy(), atol=1e-12, equal_nan=True), adjust
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's Python runner needs google.protobuf, "
-    "absent in this container (environment-blocked, like Pillow: the "
-    "operator is capability-gated, the recursion itself is the shared "
-    "_ewma_run fold that stream_ewma's green parity tests already cover)",
-)
-def test_stream_ewma_tws_parity_with_applyinpandas(spark, tmp_path):
-    """The transformWithStateInPandas twin must produce byte-identical
-    EWMA output to the applyInPandasWithState path across micro-batches
-    (both drive the shared _ewma_run fold; this checks the state
-    encode/decode round trip through the RocksDB store, including the
-    NaN unseeded marker)."""
-    import numpy as np
-
-    from financial_data_science_spark.streaming.stateful import (
-        stream_ewma,
-        stream_ewma_tws,
-    )
-
-    rng = np.random.default_rng(5)
-    n = 400
-    pdf = pd.DataFrame(
-        {
-            "key": [f"k{i % 7}" for i in range(n)],
-            "ts_us": np.arange(n) * 1000,
-            "value": rng.normal(size=n),
-        }
-    )
-    # leading nulls for one key + interior gaps exercise the seeding path
-    pdf.loc[pdf.key == "k3", "value"] = pdf.loc[pdf.key == "k3", "value"].where(
-        pdf.loc[pdf.key == "k3"].ts_us > 50_000
-    )
-    pdf.loc[(pdf.index % 31 == 0), "value"] = None
-    cut = n // 2
-    d = str(tmp_path / "tws")
-    os.makedirs(d)
-    for i, part in enumerate((pdf.iloc[:cut], pdf.iloc[cut:])):
-        f = f"{d}/b{i}.parquet"
-        spark.createDataFrame(part, TICK_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f)
-        now = 1_700_000_000 + i * 100
-        os.utime(f, (now, now))
-
-    old = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        results = {}
-        for label, op in (("apply", stream_ewma), ("tws", stream_ewma_tws)):
-            for adjust in (True, False):
-                stream = (
-                    spark.readStream.schema(TICK_SCHEMA)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(f"{d}/*.parquet")
-                )
-                out = op(stream, alpha=0.15, adjust=adjust)
-                q = (
-                    out.writeStream.outputMode("append")
-                    .format("memory")
-                    .queryName(f"ewma_{label}_{adjust}")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(120)
-                results[(label, adjust)] = (
-                    spark.table(f"ewma_{label}_{adjust}")
-                    .toPandas()
-                    .sort_values(["key", "ts_us"])
-                    .reset_index(drop=True)
-                )
-        for adjust in (True, False):
-            a, b = results[("apply", adjust)], results[("tws", adjust)]
-            assert len(a) == len(b) == n
-            pd.testing.assert_frame_equal(a, b)
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", old
-            )
