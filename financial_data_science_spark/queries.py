@@ -780,6 +780,53 @@ def range_bucket_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LLM-pipeline: dedup / similarity / text (north-star extensions)
 # =====================================================================
 
+def _words_sql(text: str = "text", lower: bool = True) -> str:
+    """The oracles' whitespace tokenizer over the ``text`` column: the
+    DuckDB twin of functions/text.tokens (lower-cased unless
+    ``lower=False``), empty tokens dropped."""
+    src = f"lower({text})" if lower else text
+    return f"list_filter(regexp_split_to_array(trim({src}), '\\s+'), w -> w != '')"
+
+
+# the oracles' whitespace token count (functions/text.n_tokens)
+_NTOK_SQL = f"len({_words_sql(lower=False)})"
+
+
+def _shingle_ctes(n: int = 3, source: str = "documents",
+                  with_len: bool = False) -> str:
+    """``toks(doc_id, w)`` word tokens of ``source``, ``sh(doc_id,
+    grams)`` each doc's distinct word ``n``-grams and ``ex(doc_id,
+    shingle)`` one row per gram (``with_len`` adds the doc's gram count
+    ``n``): the shingle SQL of every Jaccard, MinHash and contamination
+    oracle."""
+    gram = ", ".join("w[i]" if j == 0 else f"w[i+{j}]" for j in range(n))
+    n_col = "len(grams) AS n, " if with_len else ""
+    return f"""
+    toks AS (
+      SELECT doc_id, {_words_sql()} AS w
+      FROM {source}),
+    sh AS (
+      SELECT doc_id,
+             list_distinct(list_transform(range(1, greatest(len(w) - {n - 2}, 1)),
+               i -> concat_ws(' ', {gram}))) AS grams
+      FROM toks),
+    ex AS (SELECT doc_id, {n_col}unnest(grams) AS shingle FROM sh)"""
+
+
+# word-3-gram Jaccard through the shingle inverted index (no cross
+# join): ``cc`` counts each sharing pair's common shingles, ``pr`` keeps
+# the pairs at jaccard >= 0.5
+_JACCARD_PAIRS_CTE = _shingle_ctes(with_len=True) + """,
+    cc AS (
+      SELECT a.doc_id AS left_id, b.doc_id AS right_id,
+             a.n AS nl, b.n AS nr, count(*) AS common
+      FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY 1, 2, 3, 4),
+    pr AS (
+      SELECT left_id, right_id FROM cc
+      WHERE common / (nl + nr - common) >= 0.5)"""
+
+
 @query(
     "dedup_exact_docs",
     """
@@ -795,24 +842,11 @@ def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "jaccard_near_dups",
-    """
-    WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), w -> w != '') AS w
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(w) - 1, 1)),
-               i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS grams
-      FROM toks),
-    e AS (SELECT doc_id, len(grams) AS n, unnest(grams) AS shingle FROM sh),
-    c AS (
-      SELECT a.doc_id AS left_id, b.doc_id AS right_id,
-             a.n AS nl, b.n AS nr, count(*) AS common
-      FROM e a JOIN e b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2, 3, 4)
+    f"""
+    WITH {_JACCARD_PAIRS_CTE}
     SELECT left_id, right_id,
            round(common / (nl + nr - common), 6) AS jaccard
-    FROM c WHERE common / (nl + nr - common) >= 0.5
+    FROM cc WHERE common / (nl + nr - common) >= 0.5
     """,
 )
 def jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -823,6 +857,80 @@ def jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("left_id", "right_id", _r("jaccard").alias("jaccard"))
 
 
+def _minhash_sig_chain_sql(
+    num_hashes: int,
+    bands: int,
+    seed: int = 42,
+    source: str = "documents",
+    max_df: float | int | None = None,
+    census_on: str | None = None,
+) -> str:
+    """The one WITH-prefix of every portable MinHash replay: the shingle
+    CTEs of ``source`` -> optional stop-shingle filter -> polynomial base
+    hash -> affine min family (random.Random(seed), the coefficients of
+    similarity.minhash_signatures) -> signature array ``sa(doc_id, sig)``
+    -> one band key per (doc_id, band) in ``banded(doc_id, sig, band,
+    bhash)``.
+
+    ``max_df`` replays the stop-shingle census: a shingle is dropped when
+    its document frequency over the census docs exceeds floor(max_df *
+    |census docs|) for a float (the Spark side's double product +
+    truncation) or max_df for an int (sklearn-style TYPE dispatch).  The
+    census docs are all of ``source`` (the per-batch census), or those
+    matching the doc_id predicate ``census_on`` (a corpus-frozen census
+    whose one stop set filters every doc)."""
+    import random
+
+    from financial_data_science_spark.functions.porthash import MOD, sql_tokhash31
+
+    assert num_hashes // bands == 2, "band key fold is written for rows_per_band=2"
+    rng = random.Random(seed)
+    coeffs = [(rng.randrange(1, MOD), rng.randrange(0, MOD))
+              for _ in range(num_hashes)]
+    mins = ",\n             ".join(
+        f"min((h * {a} + {b}) % {MOD}) AS h{i}" for i, (a, b) in enumerate(coeffs)
+    )
+    sig_list = "[" + ", ".join(f"h{i}" for i in range(num_hashes)) + "]"
+    stop_ctes, hash_src = "", "ex"
+    if max_df is not None:
+        where = f" WHERE {census_on}" if census_on else ""
+        limit_sql = (
+            f"CAST(floor({max_df} * (SELECT count(*) FROM {source}{where})) AS BIGINT)"
+            if isinstance(max_df, float) else str(int(max_df)))
+        stop_ctes = f""",
+    dfc AS (SELECT shingle, count(*) AS df FROM ex{where} GROUP BY 1),
+    stop AS (SELECT shingle FROM dfc WHERE df > {limit_sql}),
+    exf AS (SELECT e.doc_id, e.shingle FROM ex e ANTI JOIN stop s USING (shingle))"""
+        hash_src = "exf"
+    return f"""
+    WITH {_shingle_ctes(source=source)}{stop_ctes},
+    h0 AS (SELECT doc_id, {sql_tokhash31('shingle')} AS h FROM {hash_src}),
+    sig AS (SELECT doc_id,
+             {mins}
+            FROM h0 GROUP BY doc_id),
+    sa AS (SELECT doc_id, {sig_list} AS sig FROM sig),
+    banded AS (
+      SELECT doc_id, sig, CAST(band AS INTEGER) AS band,
+             (sig[2*band+1] * 65537 + sig[2*band+2]) % {MOD} AS bhash
+      FROM sa, range(0, {bands}) t(band))"""
+
+
+def _minhash_pairs_sql(num_hashes: int, pair: str,
+                       names: tuple[str, str] = ("left_id", "right_id")) -> str:
+    """Tail of the MinHash pair oracles over ``banded``: the band-bucket
+    self-join on the ``l``/``r`` pair predicate ``pair``, one row per
+    distinct pair with its signature-match estimate, kept at >= 0.4."""
+    est = (f"len(list_filter(range(1, {num_hashes + 1}), "
+           f"i -> l.sig[i] = r.sig[i])) / {num_hashes}.0")
+    return f"""
+    SELECT DISTINCT l.doc_id AS {names[0]}, r.doc_id AS {names[1]},
+           {est} AS est_jaccard
+    FROM banded l JOIN banded r
+      ON l.band = r.band AND l.bhash = r.bhash AND {pair}
+    WHERE {est} >= 0.4
+    """
+
+
 def _minhash_oracle_sql(
     num_hashes: int = 64,
     bands: int = 32,
@@ -830,67 +938,11 @@ def _minhash_oracle_sql(
     max_df: float | int | None = None,
 ) -> str:
     """DuckDB recompute of the ENTIRE portable MinHash+LSH pipeline:
-    shingles -> polynomial base hash -> affine min-family -> band keys ->
-    bucket join -> signature-match estimate.  Same affine coefficients as
-    minhash_signatures (random.Random(seed)).  ``max_df`` replays the
-    stop-shingle census (df <= floor(frac * |docs|)) — the same double
-    product + truncation as the Spark side, so the kept-shingle set is
-    identical."""
-    import random
-
-    from financial_data_science_spark.functions.porthash import MOD, sql_tokhash31
-
-    rng = random.Random(seed)
-    coeffs = [(rng.randrange(1, MOD), rng.randrange(0, MOD)) for _ in range(num_hashes)]
-    rpb = num_hashes // bands
-    mins = ",\n             ".join(
-        f"min((h * {a} + {b}) % {MOD}) AS h{i}" for i, (a, b) in enumerate(coeffs)
-    )
-    sig_list = "[" + ", ".join(f"h{i}" for i in range(num_hashes)) + "]"
-    assert rpb == 2, "band key fold below is written for rows_per_band=2"
-    stop_ctes = ""
-    hash_src = "ex"
-    if max_df is not None:
-        # mirror the Spark side's sklearn-style TYPE dispatch
-        # (similarity.minhash_signatures): float = corpus fraction,
-        # int = absolute document count
-        if isinstance(max_df, float):
-            limit_sql = (
-                f"CAST(floor({max_df} * (SELECT count(*) FROM documents)) AS BIGINT)"
-            )
-        else:
-            limit_sql = str(int(max_df))
-        stop_ctes = f""",
-    dfc AS (SELECT shingle, count(*) AS df FROM ex GROUP BY 1),
-    exf AS (
-      SELECT e.doc_id, e.shingle FROM ex e JOIN dfc d USING (shingle)
-      WHERE d.df <= {limit_sql})"""
-        hash_src = "exf"
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), w -> w != '') AS w
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(w) - 1, 1)),
-               i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS grams
-      FROM toks),
-    ex AS (SELECT doc_id, unnest(grams) AS shingle FROM sh){stop_ctes},
-    h0 AS (SELECT doc_id, {sql_tokhash31('shingle')} AS h FROM {hash_src}),
-    sig AS (SELECT doc_id,
-             {mins}
-            FROM h0 GROUP BY doc_id),
-    sa AS (SELECT doc_id, {sig_list} AS sig FROM sig),
-    banded AS (
-      SELECT doc_id, sig, band,
-             (sig[2*band+1] * 65537 + sig[2*band+2]) % {MOD} AS bhash
-      FROM sa, range(0, {bands}) t(band))
-    SELECT DISTINCT l.doc_id AS left_id, r.doc_id AS right_id,
-           len(list_filter(range(1, {num_hashes + 1}), i -> l.sig[i] = r.sig[i])) / {num_hashes}.0 AS est_jaccard
-    FROM banded l JOIN banded r
-      ON l.band = r.band AND l.bhash = r.bhash AND l.doc_id < r.doc_id
-    WHERE len(list_filter(range(1, {num_hashes + 1}), i -> l.sig[i] = r.sig[i])) / {num_hashes}.0 >= 0.4
-    """
+    the signature chain (with the per-batch stop-shingle census when
+    ``max_df`` is set), the bucket join and the signature-match
+    estimate."""
+    return (_minhash_sig_chain_sql(num_hashes, bands, seed, max_df=max_df)
+            + _minhash_pairs_sql(num_hashes, "l.doc_id < r.doc_id"))
 
 
 @query("minhash_lsh_candidates", None)
@@ -929,66 +981,24 @@ def minhash_lsh_stopshingle(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE["minhash_lsh_stopshingle"] = _minhash_oracle_sql(max_df=0.25)
 
 
-def _minhash_sig_chain_sql(num_hashes: int, seed: int = 42) -> str:
-    """Shared WITH-prefix of the portable MinHash replay — tokens ->
-    distinct 3-gram shingles -> polynomial base hash -> affine min
-    family -> signature array ``sa(doc_id, sig)``.  One definition for
-    the r11 oracle generators so the tokenization/shingle SQL cannot
-    drift between them (the older r5-era generators inline the same
-    text with extra arms — max_df census, per-doc band rows — and are
-    kept verbatim for record stability; edit HERE first and mirror
-    there if the shared chain ever changes)."""
-    import random
-
-    from financial_data_science_spark.functions.porthash import MOD, sql_tokhash31
-
-    rng = random.Random(seed)
-    coeffs = [(rng.randrange(1, MOD), rng.randrange(0, MOD))
-              for _ in range(num_hashes)]
-    mins = ",\n             ".join(
-        f"min((h * {a} + {b}) % {MOD}) AS h{i}" for i, (a, b) in enumerate(coeffs)
-    )
-    sig_list = "[" + ", ".join(f"h{i}" for i in range(num_hashes)) + "]"
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), w -> w != '') AS w
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(w) - 1, 1)),
-               i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS grams
-      FROM toks),
-    ex AS (SELECT doc_id, unnest(grams) AS shingle FROM sh),
-    h0 AS (SELECT doc_id, {sql_tokhash31('shingle')} AS h FROM ex),
-    sig AS (SELECT doc_id,
-             {mins}
-            FROM h0 GROUP BY doc_id),
-    sa AS (SELECT doc_id, {sig_list} AS sig FROM sig)"""
-
-
 def _minhash_index_oracle_sql(
     num_hashes: int = 64, bands: int = 32, seed: int = 42, split_mod: int = 5,
+    max_df: float | None = None,
 ) -> str:
-    """DuckDB replay of INCREMENTAL LSH dedup: the shared portable
-    signature chain over ALL docs (signatures are per-doc-independent,
-    so computing both sides together is exactly the build+query split),
-    then the bucket join restricted to cross pairs — increment
-    (doc_id % split_mod = 0) vs corpus (rest)."""
-    from financial_data_science_spark.functions.porthash import MOD
-
-    assert num_hashes // bands == 2, "band key fold is written for rows_per_band=2"
-    return _minhash_sig_chain_sql(num_hashes, seed) + f""",
-    banded AS (
-      SELECT doc_id, sig, band,
-             (sig[2*band+1] * 65537 + sig[2*band+2]) % {MOD} AS bhash
-      FROM sa, range(0, {bands}) t(band))
-    SELECT DISTINCT n.doc_id AS new_id, c.doc_id AS corpus_id,
-           len(list_filter(range(1, {num_hashes + 1}), i -> n.sig[i] = c.sig[i])) / {num_hashes}.0 AS est_jaccard
-    FROM banded n JOIN banded c
-      ON n.band = c.band AND n.bhash = c.bhash
-    WHERE n.doc_id % {split_mod} = 0 AND c.doc_id % {split_mod} != 0
-      AND len(list_filter(range(1, {num_hashes + 1}), i -> n.sig[i] = c.sig[i])) / {num_hashes}.0 >= 0.4
-    """
+    """DuckDB replay of INCREMENTAL LSH dedup: the signature chain over
+    ALL docs (signatures are per-doc-independent, so computing both
+    sides together is exactly the build+query split), then the bucket
+    join restricted to cross pairs — increment (doc_id % split_mod = 0)
+    vs corpus (rest).  ``max_df`` freezes the stop-shingle census on the
+    corpus side and filters both halves by that one set; a per-batch
+    census would use the increment's own df, and this SQL proves the
+    Spark side does not."""
+    corpus = f"doc_id % {split_mod} != 0"
+    return (_minhash_sig_chain_sql(num_hashes, bands, seed, max_df=max_df,
+                                   census_on=corpus)
+            + _minhash_pairs_sql(num_hashes,
+                                 f"l.doc_id % {split_mod} = 0 AND r.{corpus}",
+                                 ("new_id", "corpus_id")))
 
 
 @query("minhash_index_increment", None)
@@ -1016,64 +1026,6 @@ def minhash_index_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE["minhash_index_increment"] = _minhash_index_oracle_sql()
 
 
-def _minhash_index_frozen_oracle_sql(
-    num_hashes: int = 64, bands: int = 32, seed: int = 42, split_mod: int = 5,
-    max_df: float = 0.005,
-) -> str:
-    """DuckDB replay of the FROZEN-CENSUS incremental probe: the
-    stop-shingle census is computed over the CORPUS side only (df >
-    floor(max_df * |corpus|) — the standing-corpus freeze rule), every
-    doc's grams (corpus AND increment) are filtered by that one frozen
-    set, then the shared signature/band/cross-join chain runs as in
-    _minhash_index_oracle_sql.  A per-batch census would use the
-    increment's own df — this SQL proves the Spark side does not."""
-    import random
-
-    from financial_data_science_spark.functions.porthash import MOD, sql_tokhash31
-
-    assert num_hashes // bands == 2, "band key fold is written for rows_per_band=2"
-    rng = random.Random(seed)
-    coeffs = [(rng.randrange(1, MOD), rng.randrange(0, MOD))
-              for _ in range(num_hashes)]
-    mins = ",\n             ".join(
-        f"min((h * {a} + {b}) % {MOD}) AS h{i}" for i, (a, b) in enumerate(coeffs)
-    )
-    sig_list = "[" + ", ".join(f"h{i}" for i in range(num_hashes)) + "]"
-    limit_sql = (f"CAST(floor({max_df} * (SELECT count(*) FROM documents "
-                 f"WHERE doc_id % {split_mod} != 0)) AS BIGINT)")
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), w -> w != '') AS w
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(w) - 1, 1)),
-               i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS grams
-      FROM toks),
-    ex AS (SELECT doc_id, unnest(grams) AS shingle FROM sh),
-    dfc AS (
-      SELECT shingle, count(*) AS df FROM ex
-      WHERE doc_id % {split_mod} != 0 GROUP BY 1),
-    stop AS (SELECT shingle FROM dfc WHERE df > {limit_sql}),
-    exf AS (SELECT e.doc_id, e.shingle FROM ex e ANTI JOIN stop s USING (shingle)),
-    h0 AS (SELECT doc_id, {sql_tokhash31('shingle')} AS h FROM exf),
-    sig AS (SELECT doc_id,
-             {mins}
-            FROM h0 GROUP BY doc_id),
-    sa AS (SELECT doc_id, {sig_list} AS sig FROM sig),
-    banded AS (
-      SELECT doc_id, sig, band,
-             (sig[2*band+1] * 65537 + sig[2*band+2]) % {MOD} AS bhash
-      FROM sa, range(0, {bands}) t(band))
-    SELECT DISTINCT n.doc_id AS new_id, c.doc_id AS corpus_id,
-           len(list_filter(range(1, {num_hashes + 1}), i -> n.sig[i] = c.sig[i])) / {num_hashes}.0 AS est_jaccard
-    FROM banded n JOIN banded c
-      ON n.band = c.band AND n.bhash = c.bhash
-    WHERE n.doc_id % {split_mod} = 0 AND c.doc_id % {split_mod} != 0
-      AND len(list_filter(range(1, {num_hashes + 1}), i -> n.sig[i] = c.sig[i])) / {num_hashes}.0 >= 0.4
-    """
-
-
 @query("minhash_index_frozen_census", None)
 def minhash_index_frozen_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental LSH dedup with a FROZEN stop-shingle census — the
@@ -1095,7 +1047,7 @@ def minhash_index_frozen_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MHI.minhash_query_index(increment, index, min_est=0.4)
 
 
-ORACLE["minhash_index_frozen_census"] = _minhash_index_frozen_oracle_sql()
+ORACLE["minhash_index_frozen_census"] = _minhash_index_oracle_sql(max_df=0.005)
 
 
 def _minhash_bucket_oracle_sql(num_hashes: int = 8, bands: int = 4,
@@ -1111,35 +1063,8 @@ def _minhash_bucket_oracle_sql(num_hashes: int = 8, bands: int = 4,
     doc id on every band-key row (no DISTINCT) — the input shape of
     order-free novelty replays that aggregate over buckets themselves
     (e.g. min-doc-per-bucket-per-window)."""
-    import random
-
-    from financial_data_science_spark.functions.porthash import MOD, sql_tokhash31
-
-    rng = random.Random(seed)
-    coeffs = [(rng.randrange(1, MOD), rng.randrange(0, MOD))
-              for _ in range(num_hashes)]
-    mins = ",\n             ".join(
-        f"min((h * {a} + {b}) % {MOD}) AS h{i}" for i, (a, b) in enumerate(coeffs)
-    )
-    sig_list = "[" + ", ".join(f"h{i}" for i in range(num_hashes)) + "]"
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), w -> w != '') AS w
-      FROM {source}),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(w) - 1, 1)),
-               i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS grams
-      FROM toks),
-    ex AS (SELECT doc_id, unnest(grams) AS shingle FROM sh),
-    h0 AS (SELECT doc_id, {sql_tokhash31('shingle')} AS h FROM ex),
-    sig AS (SELECT doc_id,
-             {mins}
-            FROM h0 GROUP BY doc_id),
-    sa AS (SELECT doc_id, {sig_list} AS sig FROM sig)
-    SELECT {"doc_id, " if per_doc else "DISTINCT "}CAST(band AS INTEGER) AS band,
-           (sig[2*band+1] * 65537 + sig[2*band+2]) % {MOD} AS bhash
-    FROM sa, range(0, {bands}) t(band)
+    return _minhash_sig_chain_sql(num_hashes, bands, seed, source) + f"""
+    SELECT {"doc_id, " if per_doc else "DISTINCT "}band, bhash FROM banded
     """
 
 
@@ -1194,7 +1119,7 @@ def _simhash_oracle_sql(bits: int = 62) -> str:
     )
     return f"""
     WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), w -> w != '') AS w
+      SELECT doc_id, {_words_sql()} AS w
       FROM documents),
     tk AS (SELECT doc_id, unnest(w) AS tok FROM toks),
     th AS (SELECT doc_id, {sql_tokhash62('tok')} AS h FROM tk),
@@ -1279,10 +1204,10 @@ def label_cosine_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_quality",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id, n_chars,
-             list_filter(regexp_split_to_array(trim(text), '\\s+'), w -> w != '') AS w
+             {_words_sql(lower=False)} AS w
       FROM documents)
     SELECT doc_id, n_chars, len(w) AS n_tokens,
            round(list_sum(list_transform(w, x -> len(x)))::DOUBLE / len(w), 6) AS avg_token_len,
@@ -1307,10 +1232,10 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lang_id",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id, lang,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), w -> w != '') AS w
+             {_words_sql()} AS w
       FROM documents),
     h AS (
       SELECT doc_id, lang,
@@ -1336,10 +1261,10 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bpe_token_counts",
-    """
+    f"""
     SELECT doc_id,
            len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r]')) AS n_bpe,
-           len(list_filter(regexp_split_to_array(trim(text), '\\s+'), w -> w != '')) AS n_ws
+           len({_words_sql(lower=False)}) AS n_ws
     FROM documents
     """,
 )
@@ -1358,7 +1283,7 @@ def _fingerprint_oracle_sql() -> str:
 
     return f"""
     WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), w -> w != '') AS w
+      SELECT doc_id, {_words_sql()} AS w
       FROM documents)
     SELECT doc_id,
            list_reduce(list_prepend(0::BIGINT, list_transform(w, t -> {sql_tokhash31('t')})),
@@ -2479,11 +2404,10 @@ def max_drawdown_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tfidf_top_terms",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                                w -> w != '')) AS term
+             unnest({_words_sql()}) AS term
       FROM documents),
     tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM toks GROUP BY 1, 2),
     dfreq AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1),
@@ -2541,11 +2465,10 @@ def pii_pattern_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "repetition_quality",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                         w -> w != '') AS w
+             {_words_sql()} AS w
       FROM documents),
     f AS (
       SELECT doc_id, w, len(w) AS nw,
@@ -3552,25 +3475,6 @@ def supply_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(_r("assortativity").alias("assortativity"))
 
 
-# jaccard >= 0.5 pair generation shared with the jaccard_near_dups oracle
-_JACCARD_PAIRS_CTE = """
-    toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), w -> w != '') AS w
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(w) - 1, 1)),
-               i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS grams
-      FROM toks),
-    ex AS (SELECT doc_id, len(grams) AS n, unnest(grams) AS shingle FROM sh),
-    cc AS (
-      SELECT a.doc_id AS left_id, b.doc_id AS right_id,
-             a.n AS nl, b.n AS nr, count(*) AS common
-      FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2, 3, 4),
-    pr AS (
-      SELECT left_id, right_id FROM cc
-      WHERE common / (nl + nr - common) >= 0.5)"""
 
 
 @query(
@@ -3614,8 +3518,7 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp AS (SELECT id, min(r) AS comp FROM reach GROUP BY id),
     scored AS (
       SELECT c.comp, c.id,
-             len(list_filter(regexp_split_to_array(trim(lower(d.text)), '\\s+'),
-                             w -> w != '')) AS ntok
+             len({_words_sql("d.text")}) AS ntok
       FROM comp c JOIN documents d ON d.doc_id = c.id),
     ranked AS (
       SELECT *, row_number() OVER (PARTITION BY comp
@@ -3656,11 +3559,10 @@ def dedup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "document_filter_gate",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id, text,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                         w -> w != '') AS w
+             {_words_sql()} AS w
       FROM documents),
     feat AS (
       SELECT doc_id, len(w) AS ntok,
@@ -5063,10 +4965,10 @@ ORACLE["hash_split_assign"] = _hash_split_oracle_sql()
 
 @query(
     "token_budget_packing",
-    """
+    f"""
     WITH d AS (
       SELECT doc_id,
-             len(list_filter(regexp_split_to_array(trim(text), '\\s+'), w -> w != '')) AS n_tokens
+             len({_words_sql(lower=False)}) AS n_tokens
       FROM documents),
     c AS (
       SELECT doc_id, n_tokens,
@@ -5097,16 +4999,8 @@ def token_budget_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _contamination_oracle_sql(n: int = 5) -> str:
     from financial_data_science_spark.functions.porthash import sql_tokhash31
 
-    gram = "concat_ws(' ', " + ", ".join(f"w[i+{j}]" for j in range(n)) + ")"
     return f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), w -> w != '') AS w
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, greatest(len(w) - {n - 2}, 1)),
-               i -> {gram})) AS grams
-      FROM toks),
+    WITH {_shingle_ctes(n)},
     hs AS (
       SELECT doc_id,
              list_distinct(list_transform(grams, g -> {sql_tokhash31('g')})) AS h
@@ -5208,8 +5102,7 @@ def _irls_feats_sql() -> str:
     the same expressions the Spark entry builds (ln/exp are the only
     engine-dependent steps and both sit upstream of the BIGINT
     quantization, see functions/classifier.py)."""
-    ntok = ("len(list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "w -> w != ''))")
+    ntok = _NTOK_SQL
     return f"""
     WITH feats AS MATERIALIZED (
       SELECT CAST(lang = 'en' AS DOUBLE) AS y,
@@ -5377,8 +5270,6 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NTOK_SQL = ("len(list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-             "w -> w != ''))")
 ORACLE["quality_classifier_score"] = _irls_oracle_sql(final=f"""
     SELECT doc_id, round(p6, 4) AS prob FROM (
       SELECT doc_id,
@@ -5558,8 +5449,7 @@ def quality_classifier_irls_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NDISTINCT_SQL = ("len(list_distinct(list_filter(regexp_split_to_array("
-                  "trim(text), '\\s+'), w -> w != '')))")
+_NDISTINCT_SQL = f"len(list_distinct({_words_sql(lower=False)}))"
 ORACLE["quality_classifier_irls_k3"] = _irls_oracle_sql_k([
     f"ln(1.0 + {_NTOK_SQL})",
     f"CAST(n_chars AS DOUBLE) / (1.0 + {_NTOK_SQL})",
@@ -6097,19 +5987,12 @@ def _stream_index_probe_oracle_sql(
 ) -> str:
     """DuckDB replay of the streaming index probe: per-doc band keys
     (the same portable fold minhash_band_keys computes row-wise) from
-    the shared signature chain, split into increment and corpus halves,
+    the signature chain, split into increment and corpus halves,
     joined on the band key — the collision-evidence SET is order-free,
     so the streaming join's append output replays exactly."""
-    from financial_data_science_spark.functions.porthash import MOD
-
-    assert num_hashes // bands == 2, "band fold is written for rows_per_band=2"
-    return _minhash_sig_chain_sql(num_hashes, seed) + f""",
-    bk AS (
-      SELECT doc_id, CAST(band AS INTEGER) AS band,
-             (sig[2*band+1] * 65537 + sig[2*band+2]) % {MOD} AS bhash
-      FROM sa, range(0, {bands}) t(band))
+    return _minhash_sig_chain_sql(num_hashes, bands, seed) + f"""
     SELECT n.doc_id AS new_id, c.doc_id AS corpus_id, n.band, n.bhash
-    FROM bk n JOIN bk c ON n.band = c.band AND n.bhash = c.bhash
+    FROM banded n JOIN banded c ON n.band = c.band AND n.bhash = c.bhash
     WHERE n.doc_id % {split_mod} = 0 AND c.doc_id % {split_mod} != 0
     """
 
@@ -6174,8 +6057,7 @@ def _curation_oracle_sql() -> str:
     return f"""
     WITH toks AS (
       SELECT doc_id, text,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                         w -> w != '') AS w
+             {_words_sql()} AS w
       FROM documents),
     feat AS (
       SELECT doc_id, text, len(w) AS n_tokens,
@@ -6303,8 +6185,7 @@ def _curation_v2_oracle_sql() -> str:
                    ELSE 0 END)),
     toks AS (
       SELECT doc_id, text,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                         w -> w != '') AS w
+             {_words_sql()} AS w
       FROM mixed),
     feat AS (
       SELECT doc_id, text, len(w) AS n_tokens,
@@ -7484,10 +7365,10 @@ def ticker_bridge_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_chunking",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(text), '\\s+'), w -> w != '') AS w
+             {_words_sql(lower=False)} AS w
       FROM documents),
     base AS (
       SELECT doc_id, w,
@@ -7552,12 +7433,11 @@ ORACLE["mixture_sample_sources"] = _mixture_oracle_sql()
 
 @query(
     "pad_sequences_batch",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id, doc_id % 7 AS batch,
              list_transform(
-               list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                           w -> w != '')[1:30],
+               {_words_sql(lower=False)}[1:30],
                w -> strlen(w)::BIGINT) AS ids
       FROM documents),
     m AS (SELECT *, max(len(ids)) OVER (PARTITION BY batch) AS mx FROM t)
