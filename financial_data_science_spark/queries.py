@@ -458,9 +458,13 @@ def event_range_agg_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "n_nearby", "sum_value")
 
 
-@query(
-    "event_window_trading_days",
-    """
+def _supplier_event_ctes(right: int) -> str:
+    """panel/cal/anchors/rel/gathered: the supplier event study's window
+    gather — daily shipped quantity per supplier, the ship dates
+    numbered as a trading calendar, the anchor days (qty > 90) and each
+    anchor's window of relative days -2..``right`` with the panel's qty
+    (NULL on a day the supplier shipped nothing)."""
+    return f"""
     WITH panel AS (
       SELECT l_suppkey, l_shipdate AS d, round(sum(l_quantity), 2) AS qty
       FROM lineitem GROUP BY l_suppkey, l_shipdate),
@@ -470,10 +474,43 @@ def event_range_agg_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors AS (SELECT l_suppkey, d AS anchor_d FROM panel WHERE qty > 90),
     rel AS (SELECT a.l_suppkey, a.anchor_d, c.day_num + r.rel AS num2, r.rel
             FROM anchors a JOIN cal c ON a.anchor_d = c.d
-            CROSS JOIN (SELECT unnest(range(-2, 3)) AS rel) r)
-    SELECT rel.l_suppkey, rel.anchor_d, rel.rel, p.qty
-    FROM rel JOIN cal c2 ON rel.num2 = c2.day_num
-    LEFT JOIN panel p ON p.l_suppkey = rel.l_suppkey AND p.d = c2.d
+            CROSS JOIN (SELECT unnest(range(-2, {right + 1})) AS rel) r),
+    gathered AS (
+      SELECT rel.l_suppkey, rel.anchor_d, rel.rel, p.qty
+      FROM rel JOIN cal c2 ON rel.num2 = c2.day_num
+      LEFT JOIN panel p ON p.l_suppkey = rel.l_suppkey AND p.d = c2.d)"""
+
+
+def _supplier_event_window(spark: SparkSession, sf_dir: str, right: int):
+    """Spark side of _supplier_event_ctes: the (qty > 90) anchor events
+    gathered over relative days -2..``right`` of the lineitem ship-date
+    calendar.  Returns the gathered frame and the calendar."""
+    li = load_table(spark, sf_dir, "lineitem")
+    panel = li.groupBy("l_suppkey", F.col("l_shipdate").alias("d")).agg(
+        _r(F.sum("l_quantity"), 2).alias("qty")
+    )
+    cal = TradingCalendar.from_dates(li.select(F.col("l_shipdate").alias("date")))
+    anchors = panel.filter(F.col("qty") > 90).select(
+        "l_suppkey", F.col("d").alias("anchor_d")
+    )
+    gathered = event_window(
+        anchors,
+        panel.withColumnRenamed("d", "fact_d"),
+        by="l_suppkey",
+        event_date="anchor_d",
+        fact_date="fact_d",
+        values=["qty"],
+        left=-2,
+        right=right,
+        calendar=cal.dim,
+    )
+    return gathered, cal
+
+
+@query(
+    "event_window_trading_days",
+    _supplier_event_ctes(2) + """
+    SELECT l_suppkey, anchor_d, rel, qty FROM gathered
     """,
 )
 def event_window_trading_days(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -493,25 +530,7 @@ def event_window_trading_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary: ``TradingCalendar.from_dates`` checkpoints the dim when the
     query is built, so the calendar's distinct-date lineitem pass runs at
     build and the timed plan reads the dim's rows."""
-    li = load_table(spark, sf_dir, "lineitem")
-    panel = li.groupBy("l_suppkey", F.col("l_shipdate").alias("d")).agg(
-        _r(F.sum("l_quantity"), 2).alias("qty")
-    )
-    cal = TradingCalendar.from_dates(li.select(F.col("l_shipdate").alias("date")))
-    anchors = panel.filter(F.col("qty") > 90).select(
-        "l_suppkey", F.col("d").alias("anchor_d")
-    )
-    out = event_window(
-        anchors,
-        panel.withColumnRenamed("d", "fact_d"),
-        by="l_suppkey",
-        event_date="anchor_d",
-        fact_date="fact_d",
-        values=["qty"],
-        left=-2,
-        right=2,
-        calendar=cal.dim,
-    )
+    out, _ = _supplier_event_window(spark, sf_dir, right=2)
     return out.select("l_suppkey", "anchor_d", F.col("rel").cast("long").alias("rel"), "qty")
 
 
@@ -825,6 +844,35 @@ _JACCARD_PAIRS_CTE = _shingle_ctes(with_len=True) + """,
     pr AS (
       SELECT left_id, right_id FROM cc
       WHERE common / (nl + nr - common) >= 0.5)"""
+
+
+def _gate_ctes(source: str = "documents") -> str:
+    """``toks``/``feat``: the heuristic quality gate's features over
+    ``source`` (functions/text.quality_verdict: token count, duplicate-
+    word fraction, alphabetic fraction); ``keep``: the docs every rule
+    passes; ``ded``: their exact dedup (min doc_id per identical
+    text)."""
+    return f"""
+    toks AS (
+      SELECT doc_id, text,
+             {_words_sql()} AS w
+      FROM {source}),
+    feat AS (
+      SELECT doc_id, text, len(w) AS n_tokens,
+             CASE WHEN len(w) > 0
+                  THEN 1.0 - len(list_distinct(w)) / len(w)::DOUBLE
+                  ELSE 0.0 END AS dup_word_frac,
+             CASE WHEN len(text) > 0
+                  THEN len(regexp_extract_all(text, '[A-Za-z]'))::DOUBLE / len(text)
+                  ELSE 0.0 END AS alpha_frac
+      FROM toks),
+    keep AS (
+      SELECT doc_id, text, n_tokens FROM feat
+      WHERE NOT (n_tokens < 5) AND NOT (dup_word_frac > 0.6)
+        AND NOT (alpha_frac < 0.5)),
+    ded AS (
+      SELECT min(doc_id) AS doc_id, min(n_tokens) AS n_tokens
+      FROM keep GROUP BY text)"""
 
 
 @query(
@@ -3560,21 +3608,9 @@ def dedup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "document_filter_gate",
     f"""
-    WITH toks AS (
-      SELECT doc_id, text,
-             {_words_sql()} AS w
-      FROM documents),
-    feat AS (
-      SELECT doc_id, len(w) AS ntok,
-             CASE WHEN len(w) > 0
-                  THEN 1.0 - len(list_distinct(w)) / len(w)::DOUBLE
-                  ELSE 0.0 END AS dup_word_frac,
-             CASE WHEN len(text) > 0
-                  THEN len(regexp_extract_all(text, '[A-Za-z]'))::DOUBLE / len(text)
-                  ELSE 0.0 END AS alpha_frac
-      FROM toks)
+    WITH {_gate_ctes()}
     SELECT doc_id,
-           CASE WHEN ntok < 5 THEN 'too_short'
+           CASE WHEN n_tokens < 5 THEN 'too_short'
                 WHEN dup_word_frac > 0.6 THEN 'repetitive'
                 WHEN alpha_frac < 0.5 THEN 'low_alpha'
                 ELSE 'keep' END AS verdict
@@ -4193,23 +4229,9 @@ ORACLE["cosine_ann_bucketed"] = _ann_oracle_sql()
 
 @query(
     "car_by_relative_day",
-    """
-    WITH panel AS (
-      SELECT l_suppkey, l_shipdate AS d, round(sum(l_quantity), 2) AS qty
-      FROM lineitem GROUP BY l_suppkey, l_shipdate),
-    cal AS (
-      SELECT d, row_number() OVER (ORDER BY d) AS day_num
-      FROM (SELECT DISTINCT l_shipdate AS d FROM lineitem)),
-    anchors AS (SELECT l_suppkey, d AS anchor_d FROM panel WHERE qty > 90),
-    rel AS (SELECT a.l_suppkey, a.anchor_d, c.day_num + r.rel AS num2, r.rel
-            FROM anchors a JOIN cal c ON a.anchor_d = c.d
-            CROSS JOIN (SELECT unnest(range(-2, 3)) AS rel) r),
-    gathered AS (
-      SELECT rel.l_suppkey, rel.anchor_d, rel.rel, coalesce(p.qty, 0) AS qty
-      FROM rel JOIN cal c2 ON rel.num2 = c2.day_num
-      LEFT JOIN panel p ON p.l_suppkey = rel.l_suppkey AND p.d = c2.d),
+    _supplier_event_ctes(2) + """,
     car AS (
-      SELECT rel, sum(qty) OVER (PARTITION BY l_suppkey, anchor_d
+      SELECT rel, sum(coalesce(qty, 0)) OVER (PARTITION BY l_suppkey, anchor_d
                                  ORDER BY rel ROWS UNBOUNDED PRECEDING) AS cum
       FROM gathered)
     SELECT rel, round(avg(cum), 6) AS mean_car, count(*)::BIGINT AS n_events
@@ -4220,25 +4242,8 @@ def car_by_relative_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10+W4: event-study CAR — gather the event window (J4), running-sum
     per event over relative days, then the cross-event portfolio mean per
     relative day (eventstudy.py:119-124, 228-262)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    panel = li.groupBy("l_suppkey", F.col("l_shipdate").alias("d")).agg(
-        _r(F.sum("l_quantity"), 2).alias("qty")
-    )
-    cal = TradingCalendar.from_dates(li.select(F.col("l_shipdate").alias("date")))
-    anchors = panel.filter(F.col("qty") > 90).select(
-        "l_suppkey", F.col("d").alias("anchor_d")
-    )
-    gathered = event_window(
-        anchors,
-        panel.withColumnRenamed("d", "fact_d"),
-        by="l_suppkey",
-        event_date="anchor_d",
-        fact_date="fact_d",
-        values=["qty"],
-        left=-2,
-        right=2,
-        calendar=cal.dim,
-    ).withColumn("qty", F.coalesce("qty", F.lit(0.0)))
+    gathered, _ = _supplier_event_window(spark, sf_dir, right=2)
+    gathered = gathered.withColumn("qty", F.coalesce("qty", F.lit(0.0)))
     wcar = (
         Window.partitionBy("l_suppkey", "anchor_d")
         .orderBy("rel")
@@ -4253,24 +4258,10 @@ def car_by_relative_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "event_study_corrected",
-    """
-    WITH panel AS (
-      SELECT l_suppkey, l_shipdate AS d, round(sum(l_quantity), 2) AS qty
-      FROM lineitem GROUP BY l_suppkey, l_shipdate),
-    cal AS (
-      SELECT d, row_number() OVER (ORDER BY d) AS day_num
-      FROM (SELECT DISTINCT l_shipdate AS d FROM lineitem)),
-    anchors AS (SELECT l_suppkey, d AS anchor_d FROM panel WHERE qty > 90),
-    rel AS (SELECT a.l_suppkey, a.anchor_d, c.day_num + r.rel AS num2, r.rel
-            FROM anchors a JOIN cal c ON a.anchor_d = c.d
-            CROSS JOIN (SELECT unnest(range(-2, 7)) AS rel) r),
-    gathered AS (
-      SELECT rel.l_suppkey, rel.anchor_d, rel.rel, coalesce(p.qty, 0) AS qty
-      FROM rel JOIN cal c2 ON rel.num2 = c2.day_num
-      LEFT JOIN panel p ON p.l_suppkey = rel.l_suppkey AND p.d = c2.d),
+    _supplier_event_ctes(6) + """,
     car AS (
       SELECT l_suppkey, anchor_d, rel,
-             sum(qty) OVER (PARTITION BY l_suppkey, anchor_d
+             sum(coalesce(qty, 0)) OVER (PARTITION BY l_suppkey, anchor_d
                             ORDER BY rel ROWS UNBOUNDED PRECEDING) AS cum
       FROM gathered),
     port AS (SELECT anchor_d, rel, avg(cum) AS v FROM car GROUP BY 1, 2),
@@ -4309,25 +4300,8 @@ def event_study_corrected(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rho=None) is pytest-verified against a numpy replication."""
     from financial_data_science_spark.backtesting.eventstudy import corrected_stats
 
-    li = load_table(spark, sf_dir, "lineitem")
-    panel = li.groupBy("l_suppkey", F.col("l_shipdate").alias("d")).agg(
-        _r(F.sum("l_quantity"), 2).alias("qty")
-    )
-    cal = TradingCalendar.from_dates(li.select(F.col("l_shipdate").alias("date")))
-    anchors = panel.filter(F.col("qty") > 90).select(
-        "l_suppkey", F.col("d").alias("anchor_d")
-    )
-    gathered = event_window(
-        anchors,
-        panel.withColumnRenamed("d", "fact_d"),
-        by="l_suppkey",
-        event_date="anchor_d",
-        fact_date="fact_d",
-        values=["qty"],
-        left=-2,
-        right=6,
-        calendar=cal.dim,
-    ).withColumn("qty", F.coalesce("qty", F.lit(0.0)))
+    gathered, cal = _supplier_event_window(spark, sf_dir, right=6)
+    gathered = gathered.withColumn("qty", F.coalesce("qty", F.lit(0.0)))
     wcar = (
         Window.partitionBy("l_suppkey", "anchor_d")
         .orderBy("rel")
@@ -5096,18 +5070,21 @@ ORACLE["stream_contamination_flags"] = f"""
     """
 
 
+# the quality model's features: log token count and mean chars per token
+_X12_SQL = (f"ln(1.0 + {_NTOK_SQL}) AS x1,\n"
+            f"             CAST(n_chars AS DOUBLE) / (1.0 + {_NTOK_SQL}) AS x2")
+
+
 def _irls_feats_sql() -> str:
     """Shared feature CTE for the IRLS oracle: label = (lang = 'en'),
     x1 = ln(1 + whitespace-token count), x2 = mean chars per token —
     the same expressions the Spark entry builds (ln/exp are the only
     engine-dependent steps and both sit upstream of the BIGINT
     quantization, see functions/classifier.py)."""
-    ntok = _NTOK_SQL
     return f"""
     WITH feats AS MATERIALIZED (
       SELECT CAST(lang = 'en' AS DOUBLE) AS y,
-             ln(1.0 + {ntok}) AS x1,
-             CAST(n_chars AS DOUBLE) / (1.0 + {ntok}) AS x2
+             {_X12_SQL}
       FROM documents)"""
 
 
@@ -5270,15 +5247,16 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# each doc's p6 score under the IRLS model's final betas (s3)
+_P6_SQL = f"""
+    SELECT doc_id,
+           round(1.0 / (1.0 + exp(-(s3.b0 + s3.b1 * f.x1
+                                    + s3.b2 * f.x2))), 6) AS p6
+    FROM (SELECT doc_id,
+            {_X12_SQL}
+          FROM documents) f, s3"""
 ORACLE["quality_classifier_score"] = _irls_oracle_sql(final=f"""
-    SELECT doc_id, round(p6, 4) AS prob FROM (
-      SELECT doc_id,
-             round(1.0 / (1.0 + exp(-(s3.b0 + s3.b1 * f.x1
-                                      + s3.b2 * f.x2))), 6) AS p6
-      FROM (SELECT doc_id,
-              ln(1.0 + {_NTOK_SQL}) AS x1,
-              CAST(n_chars AS DOUBLE) / (1.0 + {_NTOK_SQL}) AS x2
-            FROM documents) f, s3
+    SELECT doc_id, round(p6, 4) AS prob FROM ({_P6_SQL}
       ORDER BY p6 DESC, doc_id ASC LIMIT 10)""")
 
 
@@ -6055,26 +6033,7 @@ def _curation_oracle_sql() -> str:
     h = sql_keyhash("doc_id")
     b = f"CAST(floor((({h}) * 10000) / {MOD}.0) AS BIGINT)"
     return f"""
-    WITH toks AS (
-      SELECT doc_id, text,
-             {_words_sql()} AS w
-      FROM documents),
-    feat AS (
-      SELECT doc_id, text, len(w) AS n_tokens,
-             CASE WHEN len(w) > 0
-                  THEN 1.0 - len(list_distinct(w)) / len(w)::DOUBLE
-                  ELSE 0.0 END AS dup_word_frac,
-             CASE WHEN len(text) > 0
-                  THEN len(regexp_extract_all(text, '[A-Za-z]'))::DOUBLE / len(text)
-                  ELSE 0.0 END AS alpha_frac
-      FROM toks),
-    keep AS (
-      SELECT doc_id, text, n_tokens FROM feat
-      WHERE NOT (n_tokens < 5) AND NOT (dup_word_frac > 0.6)
-        AND NOT (alpha_frac < 0.5)),
-    ded AS (
-      SELECT min(doc_id) AS doc_id, min(n_tokens) AS n_tokens
-      FROM keep GROUP BY text),
+    WITH {_gate_ctes()},
     sp AS (
       SELECT doc_id, n_tokens,
              CASE WHEN {b} < 9000 THEN 'train' ELSE 'val' END AS split
@@ -6183,31 +6142,12 @@ def _curation_v2_oracle_sql() -> str:
                    WHEN 'src4' THEN 7500  WHEN 'src5' THEN 7500
                    WHEN 'src6' THEN 5000  WHEN 'src7' THEN 2500
                    ELSE 0 END)),
-    toks AS (
-      SELECT doc_id, text,
-             {_words_sql()} AS w
-      FROM mixed),
-    feat AS (
-      SELECT doc_id, text, len(w) AS n_tokens,
-             CASE WHEN len(w) > 0
-                  THEN 1.0 - len(list_distinct(w)) / len(w)::DOUBLE
-                  ELSE 0.0 END AS dup_word_frac,
-             CASE WHEN len(text) > 0
-                  THEN len(regexp_extract_all(text, '[A-Za-z]'))::DOUBLE / len(text)
-                  ELSE 0.0 END AS alpha_frac
-      FROM toks),
-    keep AS (
-      SELECT doc_id, text, n_tokens FROM feat
-      WHERE NOT (n_tokens < 5) AND NOT (dup_word_frac > 0.6)
-        AND NOT (alpha_frac < 0.5)),
-    ded AS (
-      SELECT min(doc_id) AS doc_id, min(n_tokens) AS n FROM keep
-      GROUP BY text),
+    {_gate_ctes("mixed")},
     ch AS (
       SELECT doc_id,
-             unnest(range(0, greatest(CAST(ceil((n - 64) / 56.0) AS BIGINT),
+             unnest(range(0, greatest(CAST(ceil((n_tokens - 64) / 56.0) AS BIGINT),
                                       0) + 1)) AS chunk_id,
-             n
+             n_tokens AS n
       FROM ded),
     ct AS (
       SELECT doc_id, chunk_id,
@@ -6272,6 +6212,39 @@ def corpus_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE["corpus_curation_pipeline_v2"] = _curation_v2_oracle_sql()
 
 
+def _curated_ctes(kept: str = "kept", novel: bool = False) -> str:
+    """The trained-gate curation replay: ``scored`` each doc's p6 under
+    the IRLS model, ``contam`` the training docs sharing a 5-gram with
+    the doc_id % 17 == 0 benchmark, ``med`` the median p6, and ``kept``
+    the above-median, uncontaminated training docs.  ``novel=True`` adds
+    the horizon-window novelty replay: ``bk`` each kept doc's band keys
+    and ``novel`` the min doc_id per (3-minute window, band, bhash) —
+    ts = 1577836800 + doc_id seconds and 1577836800 % 180 == 0, so the
+    epoch-aligned window id of a doc is (1577836800 + doc_id) / 180."""
+    ctes = f"""
+    scored AS (
+      SELECT doc_id, p6 FROM ({_irls_oracle_sql(final=_P6_SQL)})),
+    contam AS (
+      SELECT doc_id FROM ({_contamination_oracle_sql()})
+      WHERE n_contaminated > 0),
+    med AS (SELECT quantile_cont(p6, 0.5) AS m FROM scored),
+    {kept} AS (
+      SELECT d.doc_id, d.text
+      FROM documents d JOIN scored s ON s.doc_id = d.doc_id, med
+      WHERE s.p6 > med.m AND d.doc_id % 17 != 0
+        AND d.doc_id NOT IN (SELECT doc_id FROM contam))"""
+    if novel:
+        ctes += f""",
+    bk AS (
+      SELECT doc_id, band, bhash
+      FROM ({_minhash_bucket_oracle_sql(source=kept, per_doc=True)})),
+    novel AS (
+      SELECT CAST(floor((1577836800 + doc_id) / 180) AS BIGINT) AS wid,
+             band, bhash, min(doc_id) AS doc_id
+      FROM bk GROUP BY 1, 2, 3)"""
+    return ctes
+
+
 @query("corpus_curation_pipeline_v3", None)
 def corpus_curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curation v3 — the pipeline with a TRAINED gate: IRLS-train the
@@ -6330,24 +6303,7 @@ def corpus_curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE["corpus_curation_pipeline_v3"] = f"""
-    WITH scored AS (
-      SELECT doc_id, p6 FROM ({_irls_oracle_sql(final=f'''
-    SELECT doc_id,
-           round(1.0 / (1.0 + exp(-(s3.b0 + s3.b1 * f.x1
-                                    + s3.b2 * f.x2))), 6) AS p6
-    FROM (SELECT doc_id,
-            ln(1.0 + {_NTOK_SQL}) AS x1,
-            CAST(n_chars AS DOUBLE) / (1.0 + {_NTOK_SQL}) AS x2
-          FROM documents) f, s3''')})),
-    contam AS (
-      SELECT doc_id FROM ({_contamination_oracle_sql()})
-      WHERE n_contaminated > 0),
-    med AS (SELECT quantile_cont(p6, 0.5) AS m FROM scored),
-    clean AS (
-      SELECT d.doc_id, d.text
-      FROM documents d JOIN scored s ON s.doc_id = d.doc_id, med
-      WHERE s.p6 > med.m AND d.doc_id % 17 != 0
-        AND d.doc_id NOT IN (SELECT doc_id FROM contam)),
+    WITH {_curated_ctes("clean")},
     ded AS (SELECT min(doc_id) AS doc_id, text FROM clean GROUP BY text),
     tok AS (SELECT doc_id, CAST({_NTOK_SQL} AS BIGINT) AS n_tokens FROM ded),
     c AS (SELECT doc_id, n_tokens,
@@ -6358,6 +6314,51 @@ ORACLE["corpus_curation_pipeline_v3"] = f"""
                FROM c)
     SELECT doc_id, n_tokens, shard FROM packed
     """
+
+
+def _curation_offline_leg(docs: DataFrame) -> tuple[tuple, float, list]:
+    """The offline leg of the stream_curation_* queries (bounded
+    collects, made once in batch): IRLS-train the quality model on the
+    doc features (3 sweeps), collect the median p6 score and the
+    benchmark (doc_id % 17 == 0) 5-gram hash set.  Returns the betas,
+    the median and the hash list."""
+    from financial_data_science_spark.functions.classifier import (
+        logistic_irls,
+    )
+    from financial_data_science_spark.functions.pipeline import ngram_hashes
+
+    feats = _doc_quality_feats(docs, materialize=True)
+    traj = logistic_irls(feats, ["x1", "x2"], "y", iters=3)
+    b = traj[-1]
+    scored = feats.select(
+        _r(
+            F.lit(1.0)
+            / (F.lit(1.0) + F.exp(-(F.lit(b["b0"]) + F.lit(b["b1"]) * F.col("x1")
+                                    + F.lit(b["b2"]) * F.col("x2")))),
+            6,
+        ).alias("p6")
+    )
+    med = scored.agg(F.percentile("p6", F.lit(0.5)).alias("m")).collect()[0]["m"]
+    bench_set = [
+        r["__h__"]
+        for r in docs.filter(F.col("doc_id") % 17 == 0)
+        .select(F.explode(ngram_hashes("text", 5, True)).alias("__h__"))
+        .distinct()
+        .collect()
+    ]
+    return (b["b0"], b["b1"], b["b2"]), med, bench_set
+
+
+def _curation_flush_ts(docs: DataFrame):
+    """Flush sentinel of the horizon-window stream_curation_* queries:
+    one tick past the last possible 3-minute window end (+0s watermark
+    delay), so the drained replay emits everything."""
+    from datetime import datetime, timezone
+
+    max_id = docs.agg(F.max("doc_id")).collect()[0][0]
+    return datetime.fromtimestamp(
+        1577836800 + (max_id // 180 + 1) * 180 + 1, tz=timezone.utc
+    )
 
 
 @query("stream_curation_pipeline", None)
@@ -6384,10 +6385,6 @@ def stream_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     inventory of clean, high-quality docs (order-free, so the oracle is
     the batch replay: IRLS chain -> median -> contamination -> bucket
     SQL over the kept set)."""
-    from financial_data_science_spark.functions.classifier import (
-        logistic_irls,
-    )
-    from financial_data_science_spark.functions.pipeline import ngram_hashes
     from financial_data_science_spark.streaming.curation import (
         curate_document_stream,
     )
@@ -6397,26 +6394,7 @@ def stream_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    # ---- batch prep (bounded collects, the offline leg) ----
-    feats = _doc_quality_feats(docs, materialize=True)
-    traj = logistic_irls(feats, ["x1", "x2"], "y", iters=3)
-    b = traj[-1]
-    scored = feats.select(
-        _r(
-            F.lit(1.0)
-            / (F.lit(1.0) + F.exp(-(F.lit(b["b0"]) + F.lit(b["b1"]) * F.col("x1")
-                                    + F.lit(b["b2"]) * F.col("x2")))),
-            6,
-        ).alias("p6")
-    )
-    med = scored.agg(F.percentile("p6", F.lit(0.5)).alias("m")).collect()[0]["m"]
-    bench_set = [
-        r["__h__"]
-        for r in docs.filter(F.col("doc_id") % 17 == 0)
-        .select(F.explode(ngram_hashes("text", 5, True)).alias("__h__"))
-        .distinct()
-        .collect()
-    ]
+    beta, med, bench_set = _curation_offline_leg(docs)
 
     # ---- the streaming DAG (streaming/curation.py assembles it) ----
     stream = read_documents_stream(spark, sf_dir).filter(
@@ -6424,7 +6402,7 @@ def stream_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     buckets = curate_document_stream(
         stream, spark,
-        beta=(b["b0"], b["b1"], b["b2"]),
+        beta=beta,
         score_cut=med,
         bench_hashes=bench_set,
     ).select("band", "bhash")
@@ -6438,24 +6416,7 @@ def stream_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE["stream_curation_pipeline"] = f"""
-    WITH scored AS (
-      SELECT doc_id, p6 FROM ({_irls_oracle_sql(final=f'''
-    SELECT doc_id,
-           round(1.0 / (1.0 + exp(-(s3.b0 + s3.b1 * f.x1
-                                    + s3.b2 * f.x2))), 6) AS p6
-    FROM (SELECT doc_id,
-            ln(1.0 + {_NTOK_SQL}) AS x1,
-            CAST(n_chars AS DOUBLE) / (1.0 + {_NTOK_SQL}) AS x2
-          FROM documents) f, s3''')})),
-    contam AS (
-      SELECT doc_id FROM ({_contamination_oracle_sql()})
-      WHERE n_contaminated > 0),
-    med AS (SELECT quantile_cont(p6, 0.5) AS m FROM scored),
-    kept AS (
-      SELECT d.doc_id, d.text
-      FROM documents d JOIN scored s ON s.doc_id = d.doc_id, med
-      WHERE s.p6 > med.m AND d.doc_id % 17 != 0
-        AND d.doc_id NOT IN (SELECT doc_id FROM contam))
+    WITH {_curated_ctes()}
     SELECT band, bhash
     FROM ({_minhash_bucket_oracle_sql(source="kept")})
     """
@@ -6479,12 +6440,6 @@ def stream_curation_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     curated doc.  The bounded replay drains through the flush sentinel
     (streaming/windows.sentinel_stream) so every real window emits
     under the memory-sink harness."""
-    from datetime import datetime, timezone
-
-    from financial_data_science_spark.functions.classifier import (
-        logistic_irls,
-    )
-    from financial_data_science_spark.functions.pipeline import ngram_hashes
     from financial_data_science_spark.streaming.curation import (
         curate_document_stream,
     )
@@ -6494,39 +6449,15 @@ def stream_curation_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    # ---- batch prep (bounded collects, the offline leg) ----
-    feats = _doc_quality_feats(docs, materialize=True)
-    traj = logistic_irls(feats, ["x1", "x2"], "y", iters=3)
-    b = traj[-1]
-    scored = feats.select(
-        _r(
-            F.lit(1.0)
-            / (F.lit(1.0) + F.exp(-(F.lit(b["b0"]) + F.lit(b["b1"]) * F.col("x1")
-                                    + F.lit(b["b2"]) * F.col("x2")))),
-            6,
-        ).alias("p6")
-    )
-    med = scored.agg(F.percentile("p6", F.lit(0.5)).alias("m")).collect()[0]["m"]
-    bench_set = [
-        r["__h__"]
-        for r in docs.filter(F.col("doc_id") % 17 == 0)
-        .select(F.explode(ngram_hashes("text", 5, True)).alias("__h__"))
-        .distinct()
-        .collect()
-    ]
-    # flush sentinel: one tick past the last possible 3-minute window
-    # end (+0s watermark delay), so the drained replay emits everything
-    max_id = docs.agg(F.max("doc_id")).collect()[0][0]
-    flush_ts = datetime.fromtimestamp(
-        1577836800 + (max_id // 180 + 1) * 180 + 1, tz=timezone.utc
-    )
+    beta, med, bench_set = _curation_offline_leg(docs)
+    flush_ts = _curation_flush_ts(docs)
 
     stream = read_documents_stream(spark, sf_dir).filter(
         F.col("doc_id") % 17 != 0
     )
     novel = curate_document_stream(
         stream, spark,
-        beta=(b["b0"], b["b1"], b["b2"]),
+        beta=beta,
         score_cut=med,
         bench_hashes=bench_set,
         novelty_window="3 minutes",
@@ -6547,34 +6478,9 @@ def stream_curation_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("wid", "band", "bhash", "doc_id")
 
 
-# window replay as in stream_curation_tagged: ts = 1577836800 + doc_id
-# seconds and 1577836800 % 180 == 0, so the epoch-aligned 3-minute
-# window id of a doc is (1577836800 + doc_id) / 180
 ORACLE["stream_curation_bounded"] = f"""
-    WITH scored AS (
-      SELECT doc_id, p6 FROM ({_irls_oracle_sql(final=f'''
-    SELECT doc_id,
-           round(1.0 / (1.0 + exp(-(s3.b0 + s3.b1 * f.x1
-                                    + s3.b2 * f.x2))), 6) AS p6
-    FROM (SELECT doc_id,
-            ln(1.0 + {_NTOK_SQL}) AS x1,
-            CAST(n_chars AS DOUBLE) / (1.0 + {_NTOK_SQL}) AS x2
-          FROM documents) f, s3''')})),
-    contam AS (
-      SELECT doc_id FROM ({_contamination_oracle_sql()})
-      WHERE n_contaminated > 0),
-    med AS (SELECT quantile_cont(p6, 0.5) AS m FROM scored),
-    kept AS (
-      SELECT d.doc_id, d.text
-      FROM documents d JOIN scored s ON s.doc_id = d.doc_id, med
-      WHERE s.p6 > med.m AND d.doc_id % 17 != 0
-        AND d.doc_id NOT IN (SELECT doc_id FROM contam)),
-    bk AS (
-      SELECT doc_id, band, bhash
-      FROM ({_minhash_bucket_oracle_sql(source="kept", per_doc=True)}))
-    SELECT CAST(floor((1577836800 + doc_id) / 180) AS BIGINT) AS wid,
-           band, bhash, min(doc_id) AS doc_id
-    FROM bk GROUP BY 1, 2, 3
+    WITH {_curated_ctes(novel=True)}
+    SELECT wid, band, bhash, doc_id FROM novel
     """
 
 
@@ -6598,12 +6504,6 @@ def stream_curation_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/windows.sentinel_stream), so every real window emits
     under the memory-sink harness — the parity complete mode would
     give, at append-mode state cost."""
-    from datetime import datetime, timezone
-
-    from financial_data_science_spark.functions.classifier import (
-        logistic_irls,
-    )
-    from financial_data_science_spark.functions.pipeline import ngram_hashes
     from financial_data_science_spark.functions.similarity import (
         ivf_build_index,
     )
@@ -6619,39 +6519,16 @@ def stream_curation_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # ---- offline legs (bounded): quality model, cut, bench grams,
     # IVF index over the existing corpus ----
-    feats = _doc_quality_feats(docs, materialize=True)
-    traj = logistic_irls(feats, ["x1", "x2"], "y", iters=3)
-    b = traj[-1]
-    scored = feats.select(
-        _r(
-            F.lit(1.0)
-            / (F.lit(1.0) + F.exp(-(F.lit(b["b0"]) + F.lit(b["b1"]) * F.col("x1")
-                                    + F.lit(b["b2"]) * F.col("x2")))),
-            6,
-        ).alias("p6")
-    )
-    med = scored.agg(F.percentile("p6", F.lit(0.5)).alias("m")).collect()[0]["m"]
-    bench_set = [
-        r["__h__"]
-        for r in docs.filter(F.col("doc_id") % 17 == 0)
-        .select(F.explode(ngram_hashes("text", 5, True)).alias("__h__"))
-        .distinct()
-        .collect()
-    ]
+    beta, med, bench_set = _curation_offline_leg(docs)
     index = ivf_build_index(emb, nlist=8, iters=3, train_mod=4, persist=True)
-    # flush sentinel: one tick past the last possible 3-minute window
-    # end (+0s watermark delay), so the drained replay emits everything
-    max_id = docs.agg(F.max("doc_id")).collect()[0][0]
-    flush_ts = datetime.fromtimestamp(
-        1577836800 + (max_id // 180 + 1) * 180 + 1, tz=timezone.utc
-    )
+    flush_ts = _curation_flush_ts(docs)
 
     stream = read_documents_stream(spark, sf_dir).filter(
         F.col("doc_id") % 17 != 0
     )
     tagged = curate_and_tag_stream(
         stream, spark,
-        beta=(b["b0"], b["b1"], b["b2"]),
+        beta=beta,
         score_cut=med,
         bench_hashes=bench_set,
         index=index,
@@ -6670,37 +6547,10 @@ def stream_curation_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "neighbor_id", "score")
 
 
-# the novelty window replay: ts = 1577836800 + doc_id seconds and
-# 1577836800 % 180 == 0, so Spark's epoch-aligned 3-minute tumbling
-# window of a doc is exactly doc_id // 180 (constant offset dropped by
-# the GROUP BY); the IVF chain CTEs are the verbatim ann_ivf_topk
-# quantizer (leading WITH stripped so they splice into this WITH)
+# the IVF chain CTEs are the ann_ivf_topk quantizer (leading WITH
+# stripped so they splice into this WITH)
 ORACLE["stream_curation_tagged"] = f"""
-    WITH scored AS (
-      SELECT doc_id, p6 FROM ({_irls_oracle_sql(final=f'''
-    SELECT doc_id,
-           round(1.0 / (1.0 + exp(-(s3.b0 + s3.b1 * f.x1
-                                    + s3.b2 * f.x2))), 6) AS p6
-    FROM (SELECT doc_id,
-            ln(1.0 + {_NTOK_SQL}) AS x1,
-            CAST(n_chars AS DOUBLE) / (1.0 + {_NTOK_SQL}) AS x2
-          FROM documents) f, s3''')})),
-    contam AS (
-      SELECT doc_id FROM ({_contamination_oracle_sql()})
-      WHERE n_contaminated > 0),
-    med AS (SELECT quantile_cont(p6, 0.5) AS m FROM scored),
-    kept AS (
-      SELECT d.doc_id, d.text
-      FROM documents d JOIN scored s ON s.doc_id = d.doc_id, med
-      WHERE s.p6 > med.m AND d.doc_id % 17 != 0
-        AND d.doc_id NOT IN (SELECT doc_id FROM contam)),
-    bk AS (
-      SELECT doc_id, band, bhash
-      FROM ({_minhash_bucket_oracle_sql(source="kept", per_doc=True)})),
-    novel AS (
-      SELECT CAST(floor(doc_id / 180) AS BIGINT) AS wid, band, bhash,
-             min(doc_id) AS doc_id
-      FROM bk GROUP BY 1, 2, 3),
+    WITH {_curated_ctes(novel=True)},
     nq AS (SELECT DISTINCT doc_id FROM novel),
     {_ivf_chain_sql().strip().removeprefix("WITH")},
     probes AS (
