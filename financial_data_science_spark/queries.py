@@ -2968,47 +2968,106 @@ def dated_lookup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "key", "val")
 
 
-def _ivf_chain_sql(
-    nlist: int = 8, iters: int = 3, dim: int = 64, train_mod: int = 4,
-    where: str = "",
-) -> str:
-    """The shared WITH-chain of the deterministic IVF replay — training
-    sweeps through the full-corpus ``binned`` CTE — reused verbatim by
-    the topk oracle and the recall oracle so both replay the identical
-    quantizer.  ``where`` restricts the indexed corpus (e.g.
-    ``" WHERE vec_id % 5 != 0"`` for the ingestion-split oracles);
-    the train sample and binning then cover only that subset, exactly
-    as building the index on a filtered frame does."""
-    head = f"""
+def _emb_ctes(train_mod: int = 4, where: str = "") -> str:
+    """``e(vec_id, v)``: the embeddings (restricted by ``where``, e.g.
+    ``" WHERE vec_id % 5 != 0"``) and ``et`` their 1-in-``train_mod``
+    training sample."""
+    return f"""
     WITH e AS MATERIALIZED (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings{where}),
-    et AS MATERIALIZED (SELECT * FROM e WHERE vec_id % {train_mod} = 0),
-    c0 AS MATERIALIZED (
+    et AS MATERIALIZED (SELECT * FROM e WHERE vec_id % {train_mod} = 0)"""
+
+
+# the IVF ranking score: cosine rounded to the 6dp grid, best first
+_COS_DESC = "round(list_cosine_similarity(e.v, c.cv), 6) DESC"
+
+
+def _nearest_sql(cols: str, src: str, cents: str, order: str = _COS_DESC,
+                 where: str = "") -> str:
+    """Every ``src`` row (alias ``e``) against every ``cents`` centroid
+    (alias ``c``), ranked per e.vec_id by ``order`` with ties to the
+    lower cluster: ``rn = 1`` is the nearest cell."""
+    return f"""
+        SELECT {cols},
+               row_number() OVER (PARTITION BY e.vec_id
+                 ORDER BY {order}, c.cluster) AS rn
+        FROM {src} e, {cents} c{where}"""
+
+
+def _lloyd_ctes(src: str, col: str, k: int, iters: int, dim: int,
+                order: str, a: str = "a", c: str = "c") -> str:
+    """Deterministic k-means over the ``col`` vectors of ``src``: ``{c}0``
+    holds the k lowest-id vectors rounded to 6dp; sweep t assigns each
+    vector to its nearest centroid by ``order`` (``{a}t``) and takes
+    rounded coordinate means (``{c}t``).  MATERIALIZED per sweep (CTE
+    inlining would double the tree per iteration)."""
+    sql = f""",
+    {c}0 AS MATERIALIZED (
       SELECT row_number() OVER (ORDER BY vec_id) AS cluster,
-             list_transform(v, x -> round(x, 6)) AS cv
-      FROM (SELECT vec_id, v FROM et ORDER BY vec_id LIMIT {nlist}))"""
-    step = f""",
-    a{{k}} AS MATERIALIZED (
-      SELECT vec_id, cluster FROM (
-        SELECT e.vec_id, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC,
-                          c.cluster) AS rn
-        FROM et e, c{{prev}} c) WHERE rn = 1),
-    c{{k}} AS MATERIALIZED (
+             list_transform({col}, x -> round(x, 6)) AS cv
+      FROM (SELECT vec_id, {col} FROM {src} ORDER BY vec_id LIMIT {k}))"""
+    for t in range(1, iters + 1):
+        nearest = _nearest_sql("e.vec_id, c.cluster", src, f"{c}{t - 1}", order)
+        sql += f""",
+    {a}{t} AS MATERIALIZED (
+      SELECT vec_id, cluster FROM ({nearest}) WHERE rn = 1),
+    {c}{t} AS MATERIALIZED (
       SELECT cluster, list(av ORDER BY i) AS cv FROM (
-        SELECT a.cluster, i, round(avg(e.v[i]), 6) AS av
-        FROM a{{k}} a JOIN et e ON e.vec_id = a.vec_id, range(1, {dim + 1}) t(i)
+        SELECT a.cluster, i, round(avg(e.{col}[i]), 6) AS av
+        FROM {a}{t} a JOIN {src} e ON e.vec_id = a.vec_id,
+             range(1, {dim + 1}) t(i)
         GROUP BY a.cluster, i) GROUP BY cluster)"""
-    body = "".join(step.format(k=i, prev=i - 1) for i in range(1, iters + 1))
-    return head + body + f""",
+    return sql
+
+
+def _ivf_chain_sql(
+    nlist: int = 8, iters: int = 3, dim: int = 64, train_mod: int = 4,
+    where: str = "", prefix: str = "",
+) -> str:
+    """The one coarse quantizer of every IVF replay: cosine k-means on the
+    training sample (``{prefix}c*`` centroids, ``{prefix}a*``
+    assignments), then the full-corpus ``binned(vec_id, v, cluster)``.
+    ``where`` restricts the indexed corpus (e.g. ``" WHERE vec_id % 5 !=
+    0"`` for the ingestion-split oracles); the train sample and binning
+    then cover only that subset, exactly as building the index on a
+    filtered frame does."""
+    c = f"{prefix}c"
+    nearest = _nearest_sql("e.vec_id, e.v, c.cluster", "e", f"{c}{iters}")
+    return (_emb_ctes(train_mod, where)
+            + _lloyd_ctes("et", "v", nlist, iters, dim, _COS_DESC,
+                          f"{prefix}a", c)
+            + f""",
     binned AS MATERIALIZED (
-      SELECT vec_id, v, cluster FROM (
-        SELECT e.vec_id, e.v, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC,
-                          c.cluster) AS rn
-        FROM e, c{iters} c) WHERE rn = 1)"""
+      SELECT vec_id, v, cluster FROM ({nearest}) WHERE rn = 1)""")
+
+
+def _probes_cte(cents: str, where: str, nprobe: int | None = None,
+                name: str = "probes") -> str:
+    """``{name}(query_id, qv, cluster, rn)``: each query vector (the
+    ``e`` rows matching ``where``) ranked against the ``cents``
+    centroids, its ``nprobe`` nearest cells kept (all when None)."""
+    nearest = _nearest_sql("e.vec_id AS query_id, e.v AS qv, c.cluster",
+                           "e", cents, where=f" WHERE {where}")
+    keep = "" if nprobe is None else f" WHERE rn <= {nprobe}"
+    return f"""
+    {name} AS (
+      SELECT query_id, qv, cluster, rn FROM ({nearest}){keep})"""
+
+
+def _ivf_topk_sql(k: int, query_id: str = "query_id") -> str:
+    """Tail of the IVF top-k replays: exact rounded cosine of each probe
+    against the vectors binned in its cell, the ``k`` best per query
+    (ties to the lower neighbor id)."""
+    return f""",
+    cand AS (
+      SELECT p.query_id, b.vec_id AS neighbor_id,
+             round(list_cosine_similarity(p.qv, b.v), 6) AS s
+      FROM probes p JOIN binned b ON b.cluster = p.cluster
+      WHERE b.vec_id != p.query_id)
+    SELECT query_id AS {query_id}, neighbor_id, round(s, 4) AS score FROM (
+      SELECT *, row_number() OVER (PARTITION BY query_id
+                  ORDER BY s DESC, neighbor_id) AS rn
+      FROM cand) WHERE rn <= {k}"""
 
 
 def _ivf_oracle_sql(
@@ -3020,26 +3079,10 @@ def _ivf_oracle_sql(
     coarse quantizer trains on a sample, assignment covers everything),
     cosine-argmax assignment with rounded scores, rounded coordinate-mean
     updates, full-corpus binning, nprobe probing, and exact within-list
-    top-k.  MATERIALIZED per sweep (CTE inlining would double the tree
-    per iteration)."""
-    chain = _ivf_chain_sql(nlist, iters, dim, train_mod)
-    return chain + f""",
-    probes AS (
-      SELECT query_id, qv, cluster FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC,
-                          c.cluster) AS rn
-        FROM e, c{iters} c WHERE e.vec_id < 20) WHERE rn <= {nprobe}),
-    scored AS (
-      SELECT p.query_id, b.vec_id AS neighbor_id,
-             round(list_cosine_similarity(p.qv, b.v), 6) AS s
-      FROM probes p JOIN binned b ON b.cluster = p.cluster
-      WHERE b.vec_id != p.query_id)
-    SELECT query_id, neighbor_id, round(s, 4) AS score FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY s DESC, neighbor_id) AS rn
-      FROM scored) WHERE rn <= {k}"""
+    top-k."""
+    return (_ivf_chain_sql(nlist, iters, dim, train_mod) + ","
+            + _probes_cte(f"c{iters}", "e.vec_id < 20", nprobe)
+            + _ivf_topk_sql(k))
 
 
 @query("ann_ivf_topk", None)
@@ -3181,14 +3224,8 @@ def _ann_recall_oracle_sql(
     membership and flake mean_recall by ~1/(nq*k)."""
     chain = _ivf_chain_sql(nlist, iters, dim, train_mod)
     np_list = ", ".join(str(int(t)) for t in nprobes)
-    return chain + f""",
-    pall AS MATERIALIZED (
-      SELECT query_id, qv, cluster, rn FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC,
-                          c.cluster) AS rn
-        FROM e, c{iters} c WHERE e.vec_id < {nq})),
+    pall = _probes_cte(f"c{iters}", f"e.vec_id < {nq}", name="pall")
+    return chain + f""",{pall},
     exact AS MATERIALIZED (
       SELECT query_id, neighbor_id FROM (
         SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
@@ -6553,22 +6590,8 @@ ORACLE["stream_curation_tagged"] = f"""
     WITH {_curated_ctes(novel=True)},
     nq AS (SELECT DISTINCT doc_id FROM novel),
     {_ivf_chain_sql().strip().removeprefix("WITH")},
-    probes AS (
-      SELECT query_id, qv, cluster FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC,
-                          c.cluster) AS rn
-        FROM e JOIN nq ON nq.doc_id = e.vec_id, c3 c) WHERE rn <= 2),
-    cand AS (
-      SELECT p.query_id, b.vec_id AS neighbor_id,
-             round(list_cosine_similarity(p.qv, b.v), 6) AS s
-      FROM probes p JOIN binned b ON b.cluster = p.cluster
-      WHERE b.vec_id != p.query_id)
-    SELECT query_id AS doc_id, neighbor_id, round(s, 4) AS score FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY s DESC, neighbor_id) AS rn
-      FROM cand) WHERE rn <= 1
+    {_probes_cte("c3", "e.vec_id IN (SELECT doc_id FROM nq)", 2).strip()}
+    {_ivf_topk_sql(1, query_id="doc_id")}
     """
 
 
@@ -7359,6 +7382,66 @@ def batch_assign_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE["batch_assign_epochs"] = _batch_assign_oracle_sql()
 
 
+def _pq_ctes(train: str, enc: str, col: str, m: int, k: int, iters: int,
+             dim: int) -> str:
+    """The PQ codebooks and codes of every PQ replay: per subspace j,
+    ``s{j}`` slices the ``col`` vectors of ``train``, L2 Lloyd trains
+    its ``k``-centroid codebook ``c{j}_*`` (round-before-argmin
+    assignment, rounded coordinate means) and ``code{j}`` encodes every
+    ``enc`` row to its nearest codeword."""
+    sub = dim // m
+
+    def sqd(sv: str) -> str:
+        return (f"round(list_sum(list_transform(range(1, {sub + 1}), "
+                f"i -> ({sv}[i] - c.cv[i]) * ({sv}[i] - c.cv[i]))), 6) ASC")
+
+    sql = ""
+    for j in range(m):
+        lo, hi = j * sub + 1, (j + 1) * sub
+        nearest = _nearest_sql("e.vec_id, c.cluster", enc, f"c{j}_{iters}",
+                               sqd(f"e.{col}[{lo}:{hi}]"))
+        sql += f""",
+    s{j} AS MATERIALIZED (SELECT vec_id, {col}[{lo}:{hi}] AS sv FROM {train})"""
+        sql += _lloyd_ctes(f"s{j}", "sv", k, iters, sub, sqd("e.sv"),
+                           f"a{j}_", f"c{j}_")
+        sql += f""",
+    code{j} AS MATERIALIZED (
+      SELECT vec_id, cluster AS code FROM ({nearest}) WHERE rn = 1)"""
+    return sql
+
+
+def _pq_topk_sql(m: int, dim: int, iters: int, topk: int, qv: str,
+                 pairs: str, q: str = "p.query_id", b: str = "b.vec_id",
+                 joins: str = "", where: str = "") -> str:
+    """Tail of the PQ replays: each (query ``q``, candidate ``b``) pair of
+    ``pairs`` scored by ADC — the query vector ``qv`` against the
+    candidate's codewords, summed over the m subspaces — and the
+    ``topk`` smallest per query kept.  ``joins``/``where`` add candidate
+    joins and predicates before the ranking (filtered search)."""
+    sub = dim // m
+    adc = " + ".join(
+        f"list_sum(list_transform(range(1, {sub + 1}), i -> "
+        f"({qv}[{j * sub + 1} + i - 1] - c{j}.cv[i]) * "
+        f"({qv}[{j * sub + 1} + i - 1] - c{j}.cv[i])))"
+        for j in range(m)
+    )
+    code_joins = " ".join(
+        f"JOIN code{j} ON code{j}.vec_id = {b} "
+        f"JOIN c{j}_{iters} c{j} ON c{j}.cluster = code{j}.code"
+        for j in range(m)
+    )
+    return f"""
+    SELECT query_id, neighbor_id, round(approx_d2, 4) AS approx_d2 FROM (
+      SELECT {q} AS query_id, {b} AS neighbor_id,
+             round({adc}, 6) AS approx_d2,
+             row_number() OVER (PARTITION BY {q}
+               ORDER BY round({adc}, 6) ASC, {b}) AS rn
+      FROM {pairs} {code_joins}
+      {joins}
+      WHERE {b} != {q} {where}) WHERE rn <= {topk}
+    """
+
+
 def _pq_oracle_sql(
     dim: int = 64,
     m: int = 2,
@@ -7371,77 +7454,12 @@ def _pq_oracle_sql(
     """DuckDB replay of the ENTIRE deterministic PQ pipeline: per-subspace
     L2 Lloyd training (init = k lowest-id TRAINING subvectors, rounded;
     round-before-argmin assignment; rounded coordinate means), full-corpus
-    encoding, and ADC top-k.  Same structure as _ivf_oracle_sql with the
-    cosine score swapped for squared L2."""
-    sub = dim // m
-    parts = [
-        """
-    WITH e AS MATERIALIZED (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    et AS MATERIALIZED (SELECT * FROM e WHERE vec_id % {tm} = 0)""".format(
-            tm=train_mod
-        )
-    ]
-
-    def sqd(sv: str, cv: str) -> str:
-        return (
-            f"round(list_sum(list_transform(range(1, {sub + 1}), "
-            f"i -> ({sv}[i] - {cv}[i]) * ({sv}[i] - {cv}[i]))), 6)"
-        )
-
-    for j in range(m):
-        lo, hi = j * sub + 1, (j + 1) * sub
-        parts.append(f""",
-    s{j} AS MATERIALIZED (SELECT vec_id, v[{lo}:{hi}] AS sv FROM et),
-    c{j}_0 AS MATERIALIZED (
-      SELECT row_number() OVER (ORDER BY vec_id) AS cluster,
-             list_transform(sv, x -> round(x, 6)) AS cv
-      FROM (SELECT vec_id, sv FROM s{j} ORDER BY vec_id LIMIT {k}))""")
-        for t in range(1, iters + 1):
-            parts.append(f""",
-    a{j}_{t} AS MATERIALIZED (
-      SELECT vec_id, cluster FROM (
-        SELECT s.vec_id, c.cluster,
-               row_number() OVER (PARTITION BY s.vec_id
-                 ORDER BY {sqd('s.sv', 'c.cv')} ASC, c.cluster) AS rn
-        FROM s{j} s, c{j}_{t - 1} c) WHERE rn = 1),
-    c{j}_{t} AS MATERIALIZED (
-      SELECT cluster, list(av ORDER BY i) AS cv FROM (
-        SELECT a.cluster, i, round(avg(s.sv[i]), 6) AS av
-        FROM a{j}_{t} a JOIN s{j} s ON s.vec_id = a.vec_id,
-             range(1, {sub + 1}) t(i)
-        GROUP BY a.cluster, i) GROUP BY cluster)""")
-        # full-corpus encode for subspace j
-        parts.append(f""",
-    code{j} AS MATERIALIZED (
-      SELECT vec_id, cluster AS code FROM (
-        SELECT e.vec_id, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {sqd(f'e.v[{lo}:{hi}]', 'c.cv')} ASC, c.cluster)
-                 AS rn
-        FROM e, c{j}_{iters} c) WHERE rn = 1)""")
-    adc_terms = " + ".join(
-        "list_sum(list_transform(range(1, {s}), i -> "
-        "(q.v[{lo} + i - 1] - c{j}.cv[i]) * (q.v[{lo} + i - 1] - c{j}.cv[i])))".format(
-            s=sub + 1, lo=j * sub + 1, j=j
-        )
-        for j in range(m)
-    )
-    code_joins = " ".join(
-        f"JOIN code{j} ON code{j}.vec_id = x.vec_id "
-        f"JOIN c{j}_{iters} c{j} ON c{j}.cluster = code{j}.code"
-        for j in range(m)
-    )
-    parts.append(f"""
-    SELECT query_id, neighbor_id, round(approx_d2, 4) AS approx_d2 FROM (
-      SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-             round({adc_terms}, 6) AS approx_d2,
-             row_number() OVER (PARTITION BY q.vec_id
-               ORDER BY round({adc_terms}, 6) ASC, x.vec_id) AS rn
-      FROM (SELECT * FROM e WHERE vec_id < {nq}) q, e x {code_joins}
-      WHERE x.vec_id != q.vec_id) WHERE rn <= {topk}
-    """)
-    return "".join(parts)
+    encoding, and ADC top-k — the _pq_ctes codebooks scored by
+    _pq_topk_sql."""
+    return (_emb_ctes(train_mod) + _pq_ctes("et", "e", "v", m, k, iters, dim)
+            + _pq_topk_sql(m, dim, iters, topk, "q.v",
+                           f"(SELECT * FROM e WHERE vec_id < {nq}) q, e x",
+                           q="q.vec_id", b="x.vec_id"))
 
 
 @query("ann_pq_topk", None)
@@ -7481,112 +7499,20 @@ def _ivfpq_oracle_sql(
     filter_joins: str = "",
     filter_where: str = "",
 ) -> str:
-    """DuckDB replay of the composed IVF+PQ pipeline: the cosine coarse
-    quantizer (ivf oracle shape, CTEs ``cc*``) restricts each query to
-    nprobe lists; per-subspace L2 PQ codebooks (pq oracle shape, CTEs
-    ``c{j}_*``/``code{j}``) supply the ADC scores inside the probed
+    """DuckDB replay of the composed IVF+PQ pipeline: the _ivf_chain_sql
+    coarse quantizer (CTE prefix ``c``: ``cc*``/``ca*``, clear of the PQ
+    names) restricts each query to nprobe lists; the _pq_ctes codebooks
+    (``c{j}_*``/``code{j}``) supply the ADC scores inside the probed
     lists.  ``filter_joins``/``filter_where`` inject extra candidate
     joins and predicates INSIDE the ranking (before ``rn <= topk``) —
     the filtered-search replay (probe aliases: ``p`` query side, ``b``
     candidate side)."""
-    sub = dim // m
-    parts = [f"""
-    WITH e AS MATERIALIZED (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    et AS MATERIALIZED (SELECT * FROM e WHERE vec_id % {train_mod} = 0),
-    cc0 AS MATERIALIZED (
-      SELECT row_number() OVER (ORDER BY vec_id) AS cluster,
-             list_transform(v, x -> round(x, 6)) AS cv
-      FROM (SELECT vec_id, v FROM et ORDER BY vec_id LIMIT {nlist}))"""]
-    for t in range(1, iters + 1):
-        parts.append(f""",
-    ca{t} AS MATERIALIZED (
-      SELECT vec_id, cluster FROM (
-        SELECT e.vec_id, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC,
-                          c.cluster) AS rn
-        FROM et e, cc{t - 1} c) WHERE rn = 1),
-    cc{t} AS MATERIALIZED (
-      SELECT cluster, list(av ORDER BY i) AS cv FROM (
-        SELECT a.cluster, i, round(avg(e.v[i]), 6) AS av
-        FROM ca{t} a JOIN et e ON e.vec_id = a.vec_id, range(1, {dim + 1}) t(i)
-        GROUP BY a.cluster, i) GROUP BY cluster)""")
-    parts.append(f""",
-    binned AS MATERIALIZED (
-      SELECT vec_id, cluster FROM (
-        SELECT e.vec_id, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC,
-                          c.cluster) AS rn
-        FROM e, cc{iters} c) WHERE rn = 1),
-    probes AS (
-      SELECT query_id, qv, cluster FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC,
-                          c.cluster) AS rn
-        FROM e, cc{iters} c WHERE e.vec_id < {nq}) WHERE rn <= {nprobe})""")
-
-    def sqd(sv: str, cv: str) -> str:
-        return (
-            f"round(list_sum(list_transform(range(1, {sub + 1}), "
-            f"i -> ({sv}[i] - {cv}[i]) * ({sv}[i] - {cv}[i]))), 6)"
-        )
-
-    for j in range(m):
-        lo, hi = j * sub + 1, (j + 1) * sub
-        parts.append(f""",
-    s{j} AS MATERIALIZED (SELECT vec_id, v[{lo}:{hi}] AS sv FROM et),
-    c{j}_0 AS MATERIALIZED (
-      SELECT row_number() OVER (ORDER BY vec_id) AS cluster,
-             list_transform(sv, x -> round(x, 6)) AS cv
-      FROM (SELECT vec_id, sv FROM s{j} ORDER BY vec_id LIMIT {k}))""")
-        for t in range(1, iters + 1):
-            parts.append(f""",
-    a{j}_{t} AS MATERIALIZED (
-      SELECT vec_id, cluster FROM (
-        SELECT s.vec_id, c.cluster,
-               row_number() OVER (PARTITION BY s.vec_id
-                 ORDER BY {sqd('s.sv', 'c.cv')} ASC, c.cluster) AS rn
-        FROM s{j} s, c{j}_{t - 1} c) WHERE rn = 1),
-    c{j}_{t} AS MATERIALIZED (
-      SELECT cluster, list(av ORDER BY i) AS cv FROM (
-        SELECT a.cluster, i, round(avg(s.sv[i]), 6) AS av
-        FROM a{j}_{t} a JOIN s{j} s ON s.vec_id = a.vec_id,
-             range(1, {sub + 1}) t(i)
-        GROUP BY a.cluster, i) GROUP BY cluster)""")
-        parts.append(f""",
-    code{j} AS MATERIALIZED (
-      SELECT vec_id, cluster AS code FROM (
-        SELECT e.vec_id, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {sqd(f'e.v[{lo}:{hi}]', 'c.cv')} ASC, c.cluster)
-                 AS rn
-        FROM e, c{j}_{iters} c) WHERE rn = 1)""")
-    adc_terms = " + ".join(
-        "list_sum(list_transform(range(1, {s}), i -> "
-        "(p.qv[{lo} + i - 1] - c{j}.cv[i]) * (p.qv[{lo} + i - 1] - c{j}.cv[i])))".format(
-            s=sub + 1, lo=j * sub + 1, j=j
-        )
-        for j in range(m)
-    )
-    code_joins = " ".join(
-        f"JOIN code{j} ON code{j}.vec_id = b.vec_id "
-        f"JOIN c{j}_{iters} c{j} ON c{j}.cluster = code{j}.code"
-        for j in range(m)
-    )
-    parts.append(f"""
-    SELECT query_id, neighbor_id, round(approx_d2, 4) AS approx_d2 FROM (
-      SELECT p.query_id, b.vec_id AS neighbor_id,
-             round({adc_terms}, 6) AS approx_d2,
-             row_number() OVER (PARTITION BY p.query_id
-               ORDER BY round({adc_terms}, 6) ASC, b.vec_id) AS rn
-      FROM probes p JOIN binned b ON b.cluster = p.cluster {code_joins}
-      {filter_joins}
-      WHERE b.vec_id != p.query_id {filter_where}) WHERE rn <= {topk}
-    """)
-    return "".join(parts)
+    return (_ivf_chain_sql(nlist, iters, dim, train_mod, prefix="c") + ","
+            + _probes_cte(f"cc{iters}", f"e.vec_id < {nq}", nprobe)
+            + _pq_ctes("et", "e", "v", m, k, iters, dim)
+            + _pq_topk_sql(m, dim, iters, topk, "p.qv",
+                           "probes p JOIN binned b ON b.cluster = p.cluster",
+                           joins=filter_joins, where=filter_where))
 
 
 @query("ann_ivfpq_topk", None)
@@ -7700,112 +7626,20 @@ def _ivfpq_residual_oracle_sql(
     training/binning as in the ivfpq oracle, then residuals
     v - coarse_cv[cluster] feed PQ training (on the 1-in-mod subset),
     encoding, and a per-probed-list query residual for the ADC."""
-    sub = dim // m
-    parts = [f"""
-    WITH e AS MATERIALIZED (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    et AS MATERIALIZED (SELECT * FROM e WHERE vec_id % {train_mod} = 0),
-    cc0 AS MATERIALIZED (
-      SELECT row_number() OVER (ORDER BY vec_id) AS cluster,
-             list_transform(v, x -> round(x, 6)) AS cv
-      FROM (SELECT vec_id, v FROM et ORDER BY vec_id LIMIT {nlist}))"""]
-    for t in range(1, iters + 1):
-        parts.append(f""",
-    ca{t} AS MATERIALIZED (
-      SELECT vec_id, cluster FROM (
-        SELECT e.vec_id, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC,
-                          c.cluster) AS rn
-        FROM et e, cc{t - 1} c) WHERE rn = 1),
-    cc{t} AS MATERIALIZED (
-      SELECT cluster, list(av ORDER BY i) AS cv FROM (
-        SELECT a.cluster, i, round(avg(e.v[i]), 6) AS av
-        FROM ca{t} a JOIN et e ON e.vec_id = a.vec_id, range(1, {dim + 1}) t(i)
-        GROUP BY a.cluster, i) GROUP BY cluster)""")
-    parts.append(f""",
-    binned AS MATERIALIZED (
-      SELECT vec_id, v, cluster FROM (
-        SELECT e.vec_id, e.v, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC,
-                          c.cluster) AS rn
-        FROM e, cc{iters} c) WHERE rn = 1),
+    return (_ivf_chain_sql(nlist, iters, dim, train_mod, prefix="c") + f""",
     resv AS MATERIALIZED (
       SELECT b.vec_id, b.cluster,
              list_transform(range(1, {dim + 1}), i -> b.v[i] - c.cv[i]) AS rv
       FROM binned b JOIN cc{iters} c ON c.cluster = b.cluster),
-    rest AS MATERIALIZED (SELECT * FROM resv WHERE vec_id % {train_mod} = 0),
-    probes AS (
-      SELECT query_id, qv, cluster FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC,
-                          c.cluster) AS rn
-        FROM e, cc{iters} c WHERE e.vec_id < {nq}) WHERE rn <= {nprobe}),
+    rest AS MATERIALIZED (SELECT * FROM resv WHERE vec_id % {train_mod} = 0),"""
+            + _probes_cte(f"cc{iters}", f"e.vec_id < {nq}", nprobe) + f""",
     probesr AS (
       SELECT p.query_id, p.cluster,
              list_transform(range(1, {dim + 1}), i -> p.qv[i] - c.cv[i]) AS qr
-      FROM probes p JOIN cc{iters} c ON c.cluster = p.cluster)""")
-
-    def sqd(sv: str, cv: str) -> str:
-        return (
-            f"round(list_sum(list_transform(range(1, {sub + 1}), "
-            f"i -> ({sv}[i] - {cv}[i]) * ({sv}[i] - {cv}[i]))), 6)"
-        )
-
-    for j in range(m):
-        lo, hi = j * sub + 1, (j + 1) * sub
-        parts.append(f""",
-    s{j} AS MATERIALIZED (SELECT vec_id, rv[{lo}:{hi}] AS sv FROM rest),
-    c{j}_0 AS MATERIALIZED (
-      SELECT row_number() OVER (ORDER BY vec_id) AS cluster,
-             list_transform(sv, x -> round(x, 6)) AS cv
-      FROM (SELECT vec_id, sv FROM s{j} ORDER BY vec_id LIMIT {k}))""")
-        for t in range(1, iters + 1):
-            parts.append(f""",
-    a{j}_{t} AS MATERIALIZED (
-      SELECT vec_id, cluster FROM (
-        SELECT s.vec_id, c.cluster,
-               row_number() OVER (PARTITION BY s.vec_id
-                 ORDER BY {sqd('s.sv', 'c.cv')} ASC, c.cluster) AS rn
-        FROM s{j} s, c{j}_{t - 1} c) WHERE rn = 1),
-    c{j}_{t} AS MATERIALIZED (
-      SELECT cluster, list(av ORDER BY i) AS cv FROM (
-        SELECT a.cluster, i, round(avg(s.sv[i]), 6) AS av
-        FROM a{j}_{t} a JOIN s{j} s ON s.vec_id = a.vec_id,
-             range(1, {sub + 1}) t(i)
-        GROUP BY a.cluster, i) GROUP BY cluster)""")
-        parts.append(f""",
-    code{j} AS MATERIALIZED (
-      SELECT vec_id, cluster AS code FROM (
-        SELECT r.vec_id, c.cluster,
-               row_number() OVER (PARTITION BY r.vec_id
-                 ORDER BY {sqd(f'r.rv[{lo}:{hi}]', 'c.cv')} ASC, c.cluster)
-                 AS rn
-        FROM resv r, c{j}_{iters} c) WHERE rn = 1)""")
-    adc_terms = " + ".join(
-        "list_sum(list_transform(range(1, {s}), i -> "
-        "(p.qr[{lo} + i - 1] - c{j}.cv[i]) * (p.qr[{lo} + i - 1] - c{j}.cv[i])))".format(
-            s=sub + 1, lo=j * sub + 1, j=j
-        )
-        for j in range(m)
-    )
-    code_joins = " ".join(
-        f"JOIN code{j} ON code{j}.vec_id = b.vec_id "
-        f"JOIN c{j}_{iters} c{j} ON c{j}.cluster = code{j}.code"
-        for j in range(m)
-    )
-    parts.append(f"""
-    SELECT query_id, neighbor_id, round(approx_d2, 4) AS approx_d2 FROM (
-      SELECT p.query_id, b.vec_id AS neighbor_id,
-             round({adc_terms}, 6) AS approx_d2,
-             row_number() OVER (PARTITION BY p.query_id
-               ORDER BY round({adc_terms}, 6) ASC, b.vec_id) AS rn
-      FROM probesr p JOIN binned b ON b.cluster = p.cluster {code_joins}
-      WHERE b.vec_id != p.query_id) WHERE rn <= {topk}
-    """)
-    return "".join(parts)
+      FROM probes p JOIN cc{iters} c ON c.cluster = p.cluster)"""
+            + _pq_ctes("rest", "resv", "rv", m, k, iters, dim)
+            + _pq_topk_sql(m, dim, iters, topk, "p.qr",
+                           "probesr p JOIN binned b ON b.cluster = p.cluster"))
 
 
 @query("ann_ivfpq_residual", None)
@@ -8201,14 +8035,8 @@ def _ivf_filtered_oracle_sql(
     quantizer chain as ann_ivf_topk's oracle, with the label-inequality
     applied before the within-list top-k ranking."""
     chain = _ivf_chain_sql(nlist, iters, dim, train_mod)
-    return chain + f""",
-    probes AS (
-      SELECT query_id, qv, cluster FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c.cluster,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC,
-                          c.cluster) AS rn
-        FROM e, c{iters} c WHERE e.vec_id < {nq}) WHERE rn <= {nprobe}),
+    probes = _probes_cte(f"c{iters}", f"e.vec_id < {nq}", nprobe)
+    return chain + f""",{probes},
     scored AS (
       SELECT p.query_id, ql.label AS qlabel, b.vec_id AS neighbor_id,
              nl.label AS neg_label,
