@@ -8060,20 +8060,25 @@ ORACLE["hard_negative_mining_ivf"] = _ivf_filtered_oracle_sql()
 # BPE tokenizer training (LLM-pipeline extension, functions/bpe.py)
 # =====================================================================
 
-def _bpe_chain_ctes(num_merges: int, passes: int) -> str:
-    """Shared DuckDB CTE chain replaying BPE training decision-for-
-    decision: word frequencies -> symbol strings -> per-iteration
-    (pair-count aggregate, deterministic argmax b{k}, bounded-pass
-    merge rewrite s{k}) — the same integer counts, lexicographic
-    tie-break, and left-to-right replace semantics as functions/bpe.py."""
-    head = """
+def _bpe_chain_ctes(num_merges: int, passes: int,
+                    carry_word: bool = False) -> str:
+    """DuckDB CTE chain replaying BPE training decision-for-decision:
+    word frequencies -> symbol strings -> per-iteration (pair-count
+    aggregate, deterministic argmax b{k}, bounded-pass merge rewrite
+    s{k}) — the same integer counts, lexicographic tie-break, and
+    left-to-right replace semantics as functions/bpe.py.
+    ``carry_word=True`` keeps a ``word`` column on s0..s{n}, so a
+    downstream CTE can map each distinct word to its segmented tokens;
+    the training decisions are the same, as freq rides one row per
+    distinct word either way."""
+    word = "word, " if carry_word else ""
+    head = f"""
     WITH wf AS MATERIALIZED (
       SELECT word, count(*) AS freq FROM (
-        SELECT unnest(list_filter(regexp_split_to_array(trim(lower(text)),
-          '\\s+'), w -> w != '')) AS word
+        SELECT unnest({_words_sql()}) AS word
         FROM documents) GROUP BY 1),
     s0 AS MATERIALIZED (
-      SELECT array_to_string(regexp_split_to_array(word, ''), ' ')
+      SELECT {word}array_to_string(regexp_split_to_array(word, ''), ' ')
              || ' </w>' AS s, freq
       FROM wf)"""
     step = """,
@@ -8084,7 +8089,7 @@ def _bpe_chain_ctes(num_merges: int, passes: int) -> str:
       GROUP BY 1, 2),
     b{k} AS (SELECT a, b, cnt FROM p{k} ORDER BY cnt DESC, a, b LIMIT 1),
     s{k} AS MATERIALIZED (
-      SELECT trim({repl}) AS s, freq FROM s{prev}, b{k})"""
+      SELECT {word}trim({repl}) AS s, freq FROM s{prev}, b{k})"""
     repl = "' ' || s || ' '"
     for _ in range(passes):
         repl = (
@@ -8092,7 +8097,7 @@ def _bpe_chain_ctes(num_merges: int, passes: int) -> str:
             "' ' || a || b || ' ')"
         )
     return head + "".join(
-        step.format(k=i, prev=i - 1, repl=repl)
+        step.format(k=i, prev=i - 1, repl=repl, word=word)
         for i in range(1, num_merges + 1)
     )
 
@@ -8170,44 +8175,6 @@ ORACLE["bpe_segment_tokens"] = _bpe_chain_ctes(8, 4) + """
     ORDER BY cnt DESC, token ASC LIMIT 20"""
 
 
-def _bpe_word_chain_ctes(num_merges: int, passes: int) -> str:
-    """Variant of _bpe_chain_ctes that CARRIES the word through every
-    merge sweep (s0..s{n} keep a ``word`` column), so downstream CTEs
-    can map each distinct word to its segmented token count — needed by
-    the per-document tokenize-and-pack oracle.  Training decisions
-    (pair counts, argmax, rewrites) are identical: freq rides one row
-    per distinct word either way."""
-    head = """
-    WITH wf AS MATERIALIZED (
-      SELECT word, count(*) AS freq FROM (
-        SELECT unnest(list_filter(regexp_split_to_array(trim(lower(text)),
-          '\\s+'), w -> w != '')) AS word
-        FROM documents) GROUP BY 1),
-    s0 AS MATERIALIZED (
-      SELECT word, array_to_string(regexp_split_to_array(word, ''), ' ')
-             || ' </w>' AS s, freq
-      FROM wf)"""
-    step = """,
-    p{k} AS (
-      SELECT arr[i] AS a, arr[i + 1] AS b, CAST(sum(freq) AS BIGINT) AS cnt
-      FROM (SELECT unnest(range(1, len(arr))) AS i, arr, freq
-            FROM (SELECT string_split(s, ' ') AS arr, freq FROM s{prev}))
-      GROUP BY 1, 2),
-    b{k} AS (SELECT a, b, cnt FROM p{k} ORDER BY cnt DESC, a, b LIMIT 1),
-    s{k} AS MATERIALIZED (
-      SELECT word, trim({repl}) AS s, freq FROM s{prev}, b{k})"""
-    repl = "' ' || s || ' '"
-    for _ in range(passes):
-        repl = (
-            f"replace({repl}, ' ' || a || ' ' || b || ' ', "
-            "' ' || a || b || ' ')"
-        )
-    return head + "".join(
-        step.format(k=i, prev=i - 1, repl=repl)
-        for i in range(1, num_merges + 1)
-    )
-
-
 @query("bpe_tokenize_and_pack", None)
 def bpe_tokenize_and_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end tokenizer-to-shards pipeline — the step a training
@@ -8240,11 +8207,10 @@ def bpe_tokenize_and_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["bpe_tokenize_and_pack"] = _bpe_word_chain_ctes(8, 4) + """,
+ORACLE["bpe_tokenize_and_pack"] = _bpe_chain_ctes(8, 4, carry_word=True) + f""",
     wc AS (SELECT word, len(string_split(s, ' ')) AS ntok FROM s8),
     words AS (
-      SELECT doc_id, unnest(list_filter(regexp_split_to_array(trim(lower(text)),
-        '\\s+'), w -> w != '')) AS word
+      SELECT doc_id, unnest({_words_sql()}) AS word
       FROM documents),
     dt AS (
       SELECT d.doc_id, CAST(COALESCE(sum(wc.ntok), 0) AS BIGINT) AS n_bpe
