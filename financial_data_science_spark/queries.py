@@ -7561,12 +7561,6 @@ def _ivfpq_cache_key(spark: SparkSession, sf_dir: str) -> tuple:
     return (spark.sparkContext.applicationId, sf_dir, mtime)
 
 
-def clear_ivfpq_index_cache() -> None:
-    """Drop all cached train-once indexes (for tools that rewrite sf
-    dirs in-process and want deterministic rebuilds)."""
-    _IVFPQ_INDEX_CACHE.clear()
-
-
 def _shared_ivfpq_index(spark: SparkSession, sf_dir: str) -> dict:
     """The standing IVFPQ index both query-only entries reuse — built
     once per (session, data version), with the label payload stored so

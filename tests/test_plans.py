@@ -427,7 +427,7 @@ def test_ann_family_plan_fingerprints(spark, monkeypatch):
     session default of 32: at a few CPUs the two size-derived fan widths
     of ann_ivfpq_residual coincide and their exchanges collapse into one
     textual node."""
-    from financial_data_science_spark.queries import Q, clear_ivfpq_index_cache
+    from financial_data_science_spark.queries import _IVFPQ_INDEX_CACHE, Q
 
     monkeypatch.setattr(SparkContext, "defaultParallelism",
                         property(lambda self: 32))
@@ -441,7 +441,7 @@ def test_ann_family_plan_fingerprints(spark, monkeypatch):
         got = {pat: plan.count(pat) for pat in want}
         if got != want:
             diffs[name] = {"want": want, "got": got}
-    clear_ivfpq_index_cache()
+    _IVFPQ_INDEX_CACHE.clear()
     assert not diffs, diffs
 
 
