@@ -845,6 +845,17 @@ _JACCARD_PAIRS_CTE = _shingle_ctes(with_len=True) + """,
       SELECT left_id, right_id FROM cc
       WHERE common / (nl + nr - common) >= 0.5)"""
 
+# ... plus ``reach(id, r)``: every doc reachable from each paired doc
+# through those pairs (recursive; comp = min reachable id)
+_JACCARD_REACH_CTE = _JACCARD_PAIRS_CTE + """,
+    ue AS (SELECT left_id AS a, right_id AS b FROM pr
+           UNION SELECT right_id, left_id FROM pr),
+    nodes AS (SELECT DISTINCT a AS id FROM ue),
+    reach AS (
+      SELECT id, id AS r FROM nodes
+      UNION
+      SELECT re.id, ue.b AS r FROM reach re JOIN ue ON ue.a = re.r)"""
+
 
 def _gate_ctes(source: str = "documents") -> str:
     """``toks``/``feat``: the heuristic quality gate's features over
@@ -3565,14 +3576,7 @@ def supply_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "near_dup_clusters",
     f"""
-    WITH RECURSIVE {_JACCARD_PAIRS_CTE},
-    ue AS (SELECT left_id AS a, right_id AS b FROM pr
-           UNION SELECT right_id, left_id FROM pr),
-    nodes AS (SELECT DISTINCT a AS id FROM ue),
-    reach AS (
-      SELECT id, id AS r FROM nodes
-      UNION
-      SELECT re.id, ue.b AS r FROM reach re JOIN ue ON ue.a = re.r)
+    WITH RECURSIVE {_JACCARD_REACH_CTE}
     SELECT id, min(r) AS comp FROM reach GROUP BY id
     """,
 )
@@ -3592,14 +3596,7 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_canonical_keep",
     f"""
-    WITH RECURSIVE {_JACCARD_PAIRS_CTE},
-    ue AS (SELECT left_id AS a, right_id AS b FROM pr
-           UNION SELECT right_id, left_id FROM pr),
-    nodes AS (SELECT DISTINCT a AS id FROM ue),
-    reach AS (
-      SELECT id, id AS r FROM nodes
-      UNION
-      SELECT re.id, ue.b AS r FROM reach re JOIN ue ON ue.a = re.r),
+    WITH RECURSIVE {_JACCARD_REACH_CTE},
     comp AS (SELECT id, min(r) AS comp FROM reach GROUP BY id),
     scored AS (
       SELECT c.comp, c.id,
