@@ -1657,12 +1657,21 @@ def _supply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the DuckDB twin of _supply_edges, and ``ue`` its undirected,
+# loop-free edge list (both directions)
+_SUPPLY_E_SQL = """
+      SELECT DISTINCT l.l_suppkey AS src, o.o_custkey AS dst
+      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey"""
+_SUPPLY_UE_CTE = f"""
+    e0 AS MATERIALIZED ({_SUPPLY_E_SQL}),
+    ue AS MATERIALIZED (SELECT src AS a, dst AS b FROM e0 WHERE src != dst
+           UNION SELECT dst, src FROM e0 WHERE src != dst)"""
+
+
 @query(
     "supply_graph_degrees",
-    """
-    WITH e AS (
-      SELECT DISTINCT l.l_suppkey AS src, o.o_custkey AS dst
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+    f"""
+    WITH e AS ({_SUPPLY_E_SQL}),
     outs AS (SELECT src AS id, count(*) AS out_degree FROM e GROUP BY src),
     ins AS (SELECT dst AS id, count(*) AS in_degree FROM e GROUP BY dst)
     SELECT coalesce(outs.id, ins.id) AS id,
@@ -1679,29 +1688,34 @@ def supply_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     return degrees(_supply_edges(spark, sf_dir))
 
 
+def _rank_sweeps_sql(iters: int, damping: float, teleport: str,
+                     seeds_join: str = "") -> str:
+    """``r1``..``r{iters}``: the PageRank sweeps over ``verts``, ``deg``
+    and ``e`` from ``r0`` — each vertex gets ``teleport`` (formatted with
+    ``base`` = 1 - damping) plus the damped in-flow sum(rank / outdeg)
+    of its in-neighbors.  ``seeds_join`` adds a join for the teleport
+    term (personalized PageRank)."""
+    teleport = teleport.format(base=1.0 - damping)
+    return "".join(f""",
+    r{k} AS MATERIALIZED (
+      SELECT v.id, {teleport} + {damping} * coalesce(c.csum, 0) AS rank
+      FROM verts v {seeds_join}LEFT JOIN (
+        SELECT e.dst AS id, sum(p.rank / d.outdeg) AS csum
+        FROM r{k - 1} p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
+        GROUP BY 1) c ON c.id = v.id)""" for k in range(1, iters + 1))
+
+
 def _pagerank_oracle_sql(iters: int = 8, damping: float = 0.85) -> str:
     """Fixed-iteration PageRank as a generated chain of CTEs — one CTE per
     sweep, mirroring graph.pagerank's update exactly (no dangling-mass
     redistribution; missing in-edges -> (1-d)/N)."""
-    head = """
-    WITH e AS MATERIALIZED (
-      SELECT DISTINCT l.l_suppkey AS src, o.o_custkey AS dst
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+    head = f"""
+    WITH e AS MATERIALIZED ({_SUPPLY_E_SQL}),
     verts AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
     nv AS MATERIALIZED (SELECT count(*)::DOUBLE AS n FROM verts),
     deg AS MATERIALIZED (SELECT src, count(*)::DOUBLE AS outdeg FROM e GROUP BY 1),
     r0 AS (SELECT id, 1.0 / (SELECT n FROM nv) AS rank FROM verts)"""
-    step = """,
-    r{k} AS MATERIALIZED (
-      SELECT v.id, {base} / (SELECT n FROM nv) + {d} * coalesce(c.csum, 0) AS rank
-      FROM verts v LEFT JOIN (
-        SELECT e.dst AS id, sum(p.rank / d.outdeg) AS csum
-        FROM r{prev} p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY 1) c ON c.id = v.id)"""
-    body = "".join(
-        step.format(k=k, prev=k - 1, base=1.0 - damping, d=damping)
-        for k in range(1, iters + 1)
-    )
+    body = _rank_sweeps_sql(iters, damping, "{base} / (SELECT n FROM nv)")
     return head + body + f"\n    SELECT id, round(rank, 6) AS rank FROM r{iters}"
 
 
@@ -1722,10 +1736,8 @@ ORACLE["supply_graph_pagerank"] = _pagerank_oracle_sql()
 def _ppr_oracle_sql(iters: int = 8, damping: float = 0.85) -> str:
     """Personalized-PageRank CTE chain: teleport mass returns only to the
     seed set (suppliers with key < 10)."""
-    head = """
-    WITH e AS MATERIALIZED (
-      SELECT DISTINCT l.l_suppkey AS src, o.o_custkey AS dst
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+    head = f"""
+    WITH e AS MATERIALIZED ({_SUPPLY_E_SQL}),
     verts AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
     seeds AS MATERIALIZED (
       SELECT DISTINCT l_suppkey AS id FROM lineitem WHERE l_suppkey < 10),
@@ -1736,20 +1748,10 @@ def _ppr_oracle_sql(iters: int = 8, damping: float = 0.85) -> str:
              CASE WHEN s.id IS NOT NULL THEN 1.0 / (SELECT n FROM ns)
                   ELSE 0.0 END AS rank
       FROM verts v LEFT JOIN seeds s ON s.id = v.id)"""
-    step = """,
-    r{k} AS MATERIALIZED (
-      SELECT v.id,
-             (CASE WHEN s.id IS NOT NULL
-                   THEN {base} / (SELECT n FROM ns) ELSE 0.0 END)
-             + {d} * coalesce(c.csum, 0) AS rank
-      FROM verts v LEFT JOIN seeds s ON s.id = v.id LEFT JOIN (
-        SELECT e.dst AS id, sum(p.rank / d.outdeg) AS csum
-        FROM r{prev} p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY 1) c ON c.id = v.id)"""
-    body = "".join(
-        step.format(k=k, prev=k - 1, base=1.0 - damping, d=damping)
-        for k in range(1, iters + 1)
-    )
+    teleport = ("(CASE WHEN s.id IS NOT NULL"
+                " THEN {base} / (SELECT n FROM ns) ELSE 0.0 END)")
+    body = _rank_sweeps_sql(iters, damping, teleport,
+                            "LEFT JOIN seeds s ON s.id = v.id ")
     return head + body + f"""
     SELECT id, round(rank, 6) AS rank FROM r{iters} WHERE rank > 0"""
 
@@ -1782,10 +1784,8 @@ ORACLE["supply_personalized_pagerank"] = _ppr_oracle_sql()
 
 @query(
     "supply_link_prediction",
-    """
-    WITH e AS (
-      SELECT DISTINCT l.l_suppkey AS src, o.o_custkey AS dst
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+    f"""
+    WITH e AS ({_SUPPLY_E_SQL}),
     deg AS (SELECT src, count(*)::BIGINT AS d FROM e GROUP BY 1),
     degz AS (SELECT dst, count(*)::BIGINT AS dz FROM e GROUP BY 1),
     hop2 AS (
@@ -1824,12 +1824,8 @@ def _label_prop_oracle_sql(iters: int = 5) -> str:
     """Generated fixed-sweep synchronous label propagation mirroring
     graph.label_propagation: adopt the most frequent neighbor label, ties
     to the smallest label."""
-    head = """
-    WITH e0 AS MATERIALIZED (
-      SELECT DISTINCT l.l_suppkey AS src, o.o_custkey AS dst
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-    ue AS MATERIALIZED (SELECT src AS a, dst AS b FROM e0 WHERE src != dst
-           UNION SELECT dst, src FROM e0 WHERE src != dst),
+    head = f"""
+    WITH {_SUPPLY_UE_CTE},
     l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS lab FROM ue)"""
     step = """,
     c{k} AS MATERIALIZED (SELECT ue.a AS id, p.lab, count(*) AS c
@@ -1856,13 +1852,6 @@ def supply_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE["supply_communities"] = _label_prop_oracle_sql()
 
-
-_SUPPLY_UE_CTE = """
-    e0 AS MATERIALIZED (
-      SELECT DISTINCT l.l_suppkey AS src, o.o_custkey AS dst
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-    ue AS MATERIALIZED (SELECT src AS a, dst AS b FROM e0 WHERE src != dst
-           UNION SELECT dst, src FROM e0 WHERE src != dst)"""
 
 
 def _eigenvector_oracle_sql(iters: int = 8) -> str:
@@ -1902,10 +1891,8 @@ ORACLE["supply_eigenvector"] = _eigenvector_oracle_sql()
 def _hits_oracle_sql(iters: int = 8) -> str:
     """Fixed-iteration HITS: a = A'h (max-norm), h = Aa (max-norm), final
     sum normalization — mirroring graph.hits exactly."""
-    head = """
-    WITH e AS MATERIALIZED (
-      SELECT DISTINCT l.l_suppkey AS src, o.o_custkey AS dst
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+    head = f"""
+    WITH e AS MATERIALIZED ({_SUPPLY_E_SQL}),
     verts AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
     h0 AS MATERIALIZED (SELECT id, 1.0 / (SELECT count(*) FROM verts) AS h FROM verts)"""
     step = """,
@@ -3861,10 +3848,10 @@ def monthly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "holdings_turnover",
-    """
-    WITH h AS (
+# ``hs(permno, weight, seq)``: each supplier's share of its month's
+# shipped quantity, the months numbered 1.. by ``seq``
+_MONTHLY_WEIGHTS_CTES = """
+    h AS (
       SELECT date_trunc('month', l_shipdate) AS rebaldate, l_suppkey AS permno,
              sum(l_quantity) / sum(sum(l_quantity))
                OVER (PARTITION BY date_trunc('month', l_shipdate)) AS weight
@@ -3872,7 +3859,13 @@ def monthly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     s AS (
       SELECT rebaldate, row_number() OVER (ORDER BY rebaldate) AS seq
       FROM (SELECT DISTINCT rebaldate FROM h)),
-    hs AS (SELECT permno, weight, seq FROM h JOIN s USING (rebaldate)),
+    hs AS (SELECT permno, weight, seq FROM h JOIN s USING (rebaldate))"""
+
+
+@query(
+    "holdings_turnover",
+    f"""
+    WITH {_MONTHLY_WEIGHTS_CTES},
     oj AS (
       SELECT coalesce(c.seq, p.seq + 1) AS seq,
              coalesce(c.permno, p.permno) AS permno,
@@ -4490,9 +4483,22 @@ def sql_front_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_SQL_FRONT_END)
 
 
+# ``holdings(rebaldate, permno, weight)``: each supplier's share of its
+# month's shipped quantity, rebalanced the day before the month starts
+_HOLDINGS_CTES = """
+    hq AS (
+      SELECT date_trunc('month', l_shipdate) - INTERVAL 1 DAY AS rebaldate,
+             l_suppkey AS permno, sum(l_quantity) AS qty
+      FROM lineitem GROUP BY 1, 2),
+    holdings AS (
+      SELECT rebaldate, permno,
+             qty / sum(qty) OVER (PARTITION BY rebaldate) AS weight
+      FROM hq)"""
+
+
 @query(
     "portfolio_monthly_returns",
-    """
+    f"""
     WITH months AS (
       SELECT DISTINCT date_trunc('month', l_shipdate) AS m FROM lineitem),
     intervals AS (
@@ -4505,14 +4511,7 @@ def sql_front_end(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT i.beg, i."end", d.permno, product(1 + d.ret) - 1 AS pret
       FROM daily d JOIN intervals i ON d.date > i.beg AND d.date <= i."end"
       GROUP BY 1, 2, 3),
-    hq AS (
-      SELECT date_trunc('month', l_shipdate) - INTERVAL 1 DAY AS rebaldate,
-             l_suppkey AS permno, sum(l_quantity) AS qty
-      FROM lineitem GROUP BY 1, 2),
-    holdings AS (
-      SELECT rebaldate, permno,
-             qty / sum(qty) OVER (PARTITION BY rebaldate) AS weight
-      FROM hq)
+    {_HOLDINGS_CTES}
     SELECT pret.beg, pret."end",
            round(sum(h.weight * coalesce(pret.pret, 0)), 6) AS ret,
            count(*)::BIGINT AS n_holdings
@@ -4562,16 +4561,8 @@ def portfolio_monthly_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "smoothed_holdings",
-    """
-    WITH h AS (
-      SELECT date_trunc('month', l_shipdate) AS rebaldate, l_suppkey AS permno,
-             sum(l_quantity) / sum(sum(l_quantity))
-               OVER (PARTITION BY date_trunc('month', l_shipdate)) AS weight
-      FROM lineitem GROUP BY 1, 2),
-    s AS (
-      SELECT rebaldate, row_number() OVER (ORDER BY rebaldate) AS seq
-      FROM (SELECT DISTINCT rebaldate FROM h)),
-    hs AS (SELECT permno, weight, seq FROM h JOIN s USING (rebaldate)),
+    f"""
+    WITH {_MONTHLY_WEIGHTS_CTES},
     x AS (
       SELECT t.seq AS seq, hs.permno, sum(hs.weight) AS sw
       FROM hs JOIN (SELECT DISTINCT seq FROM s) t
@@ -4712,19 +4703,12 @@ def adf_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "daily_portfolio_performance",
-    """
+    f"""
     WITH daily AS (
       SELECT l_suppkey AS permno, l_shipdate AS date,
              avg(l_discount) AS ret, avg(l_tax) AS retx
       FROM lineitem GROUP BY 1, 2),
-    hq AS (
-      SELECT date_trunc('month', l_shipdate) - INTERVAL 1 DAY AS rebaldate,
-             l_suppkey AS permno, sum(l_quantity) AS qty
-      FROM lineitem GROUP BY 1, 2),
-    holdings AS (
-      SELECT rebaldate, permno,
-             qty / sum(qty) OVER (PARTITION BY rebaldate) AS weight
-      FROM hq),
+    {_HOLDINGS_CTES},
     tag AS (
       SELECT d.permno, d.date, d.ret, d.retx, max(r.rebaldate) AS rebaldate
       FROM daily d
@@ -5639,6 +5623,16 @@ def _cell_split_sql_body(
     return body
 
 
+def _ranked_cells_sql(src: str) -> str:
+    """Each (vec_id, v, cell) row of ``src`` with its id-rank ``rn`` in
+    its cell and the cell's size ``cnt``."""
+    return f"""
+      SELECT vec_id, v, cell,
+             row_number() OVER (PARTITION BY cell ORDER BY vec_id) AS rn,
+             count(*) OVER (PARTITION BY cell) AS cnt
+      FROM {src}"""
+
+
 def _semantic_dedup_capped_oracle_sql(
     nlist: int = 8, iters: int = 3, dim: int = 64, train_mod: int = 4,
     tau: float = 0.4, cap: int = 16, nsub: int = 2, sub_iters: int = 2,
@@ -5655,11 +5649,7 @@ def _semantic_dedup_capped_oracle_sql(
     chain = _ivf_chain_sql(nlist, iters, dim, train_mod)
     body = _cell_split_sql_body(max_depth, cap, nsub, sub_iters, dim)
     return chain + body + f""",
-    ranked AS (
-      SELECT vec_id, v, cell,
-             row_number() OVER (PARTITION BY cell ORDER BY vec_id) AS rn,
-             count(*) OVER (PARTITION BY cell) AS cnt
-      FROM cells{max_depth})
+    ranked AS ({_ranked_cells_sql(f"cells{max_depth}")})
     SELECT l.cell, l.vec_id AS left_id, r.vec_id AS right_id,
            round(round(list_cosine_similarity(l.v, r.v), 6), 4) AS cos,
            l.cnt > {cap} AS truncated
@@ -5740,41 +5730,41 @@ def _semdedup_route_sql(
 def _semdedup_index_oracle_sql(
     nlist: int = 8, iters: int = 3, dim: int = 64, train_mod: int = 4,
     tau: float = 0.4, cap: int = 16, nsub: int = 2, sub_iters: int = 2,
-    max_depth: int = 1, split_mod: int = 5, reps: str = "lowest",
+    max_depth: int = 1, reps: str = "lowest",
+    corpus: str = "vec_id % 5 != 0", batch: str = "vec_id % 5 = 0",
+    pool: str | None = None,
 ) -> str:
     """DuckDB replay of the BIN-ONCE / probe-per-batch semantic dedup
     (semdedup.semdedup_build_index + semdedup_query_index): the IVF
-    chain and the shared split body run over the CORPUS side only
-    (vec_id % split_mod != 0 — the frozen quantizer), then the batch
-    (vec_id % split_mod = 0) is routed through the SAME recorded chain
+    chain and the shared split body run over the ``corpus`` slice only
+    (the frozen quantizer), then the ``batch`` slice is routed through
+    the SAME recorded chain
     — top-level argmax against c{iters}, then per level an argmax over
     the level's final sub-centroids (LEFT join: cells that never split
     contribute sub = 0) — and joined against the corpus cells'
     representatives (full cell when cnt <= cap, else cap members under
     the ``reps`` policy: the cap lowest-id ranks, or every
     ceil(cnt/cap)-th rank for ``stratified`` — integer `//` replays
-    Spark's `div` exactly; pairs labeled truncated)."""
+    Spark's `div` exactly; pairs labeled truncated).  ``pool`` routes
+    that slice too (``p{max_depth}``) and labels these pairs source
+    'index': the first arm of the pool-probe replay."""
     if reps == "lowest":
         rep_pred = f"r.rn <= {cap}"
     else:
         rep_pred = f"((r.rn - 1) % ((r.cnt + {cap} - 1) // {cap})) = 0"
-    chain = _ivf_chain_sql(
-        nlist, iters, dim, train_mod,
-        where=f" WHERE vec_id % {split_mod} != 0",
-    )
+    chain = _ivf_chain_sql(nlist, iters, dim, train_mod, where=f" WHERE {corpus}")
     body = _cell_split_sql_body(max_depth, cap, nsub, sub_iters, dim)
-    qbody = _semdedup_route_sql(
-        "q", f"vec_id % {split_mod} = 0", iters, nsub, sub_iters, max_depth
-    )
-    return chain + body + qbody + f""",
-    ranked AS (
-      SELECT vec_id, v, cell,
-             row_number() OVER (PARTITION BY cell ORDER BY vec_id) AS rn,
-             count(*) OVER (PARTITION BY cell) AS cnt
-      FROM cells{max_depth})
+    routes = _semdedup_route_sql("q", batch, iters, nsub, sub_iters, max_depth)
+    source = ""
+    if pool is not None:
+        routes += _semdedup_route_sql("p", pool, iters, nsub, sub_iters,
+                                      max_depth)
+        source = ", 'index' AS source"
+    return chain + body + routes + f""",
+    ranked AS ({_ranked_cells_sql(f"cells{max_depth}")})
     SELECT q.vec_id AS new_vec_id, r.vec_id AS corpus_id,
            round(round(list_cosine_similarity(q.v, r.v), 6), 4) AS cos,
-           r.cnt > {cap} AS truncated
+           r.cnt > {cap} AS truncated{source}
     FROM q{max_depth} q JOIN ranked r USING (cell)
     WHERE (r.cnt <= {cap} OR {rep_pred})
       AND round(list_cosine_similarity(q.v, r.v), 6) >= {tau}
@@ -5868,22 +5858,12 @@ def _semdedup_pool_oracle_sql(
     over the CORPUS slice (vec_id % 5 >= 2); the BATCH (vec_id % 5 = 0)
     and the accumulation POOL (vec_id % 5 = 1) are routed through the
     same recorded chain by the shared routing template; the result is
-    the representative-capped index join (source 'index') UNION ALL the
+    the _semdedup_index_oracle_sql join (source 'index') UNION ALL the
     cell-keyed batch x pool join (source 'pool', never truncated, no
-    cap)."""
-    if reps == "lowest":
-        rep_pred = f"r.rn <= {cap}"
-    else:
-        rep_pred = f"((r.rn - 1) % ((r.cnt + {cap} - 1) // {cap})) = 0"
-    chain = _ivf_chain_sql(
-        nlist, iters, dim, train_mod, where=" WHERE vec_id % 5 >= 2",
-    )
-    body = _cell_split_sql_body(max_depth, cap, nsub, sub_iters, dim)
-    qroute = _semdedup_route_sql(
-        "q", "vec_id % 5 = 0", iters, nsub, sub_iters, max_depth
-    )
-    proute = _semdedup_route_sql(
-        "p", "vec_id % 5 = 1", iters, nsub, sub_iters, max_depth
+    cap, unless ``pool_cap`` is set)."""
+    index_arm = _semdedup_index_oracle_sql(
+        nlist, iters, dim, train_mod, tau, cap, nsub, sub_iters, max_depth,
+        reps, corpus="vec_id % 5 >= 2", pool="vec_id % 5 = 1",
     )
     pool_arm = f"""
     SELECT q.vec_id AS new_vec_id, p.vec_id AS corpus_id,
@@ -5899,28 +5879,12 @@ def _semdedup_pool_oracle_sql(
     SELECT q.vec_id AS new_vec_id, p.vec_id AS corpus_id,
            round(round(list_cosine_similarity(q.v, p.v), 6), 4) AS cos,
            p.cnt > {pool_cap} AS truncated, 'pool' AS source
-    FROM q{max_depth} q JOIN (
-      SELECT vec_id, v, cell,
-             row_number() OVER (PARTITION BY cell ORDER BY vec_id) AS rn,
-             count(*) OVER (PARTITION BY cell) AS cnt
-      FROM p{max_depth}) p USING (cell)
+    FROM q{max_depth} q JOIN ({_ranked_cells_sql(f"p{max_depth}")}) p
+      USING (cell)
     WHERE (p.cnt <= {pool_cap}
            OR ((p.rn - 1) % ((p.cnt + {pool_cap} - 1) // {pool_cap})) = 0)
       AND round(list_cosine_similarity(q.v, p.v), 6) >= {tau}"""
-    return chain + body + qroute + proute + f""",
-    ranked AS (
-      SELECT vec_id, v, cell,
-             row_number() OVER (PARTITION BY cell ORDER BY vec_id) AS rn,
-             count(*) OVER (PARTITION BY cell) AS cnt
-      FROM cells{max_depth})
-    SELECT q.vec_id AS new_vec_id, r.vec_id AS corpus_id,
-           round(round(list_cosine_similarity(q.v, r.v), 6), 4) AS cos,
-           r.cnt > {cap} AS truncated, 'index' AS source
-    FROM q{max_depth} q JOIN ranked r USING (cell)
-    WHERE (r.cnt <= {cap} OR {rep_pred})
-      AND round(list_cosine_similarity(q.v, r.v), 6) >= {tau}
-    UNION ALL{pool_arm}
-    """
+    return index_arm + f"UNION ALL{pool_arm}\n    "
 
 
 @query("semdedup_pool_probe", None)
