@@ -1691,11 +1691,10 @@ def supply_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rank_sweeps_sql(iters: int, damping: float, teleport: str,
                      seeds_join: str = "") -> str:
     """``r1``..``r{iters}``: the PageRank sweeps over ``verts``, ``deg``
-    and ``e`` from ``r0`` — each vertex gets ``teleport`` (formatted with
-    ``base`` = 1 - damping) plus the damped in-flow sum(rank / outdeg)
-    of its in-neighbors.  ``seeds_join`` adds a join for the teleport
-    term (personalized PageRank)."""
-    teleport = teleport.format(base=1.0 - damping)
+    and ``e`` from ``r0`` — each vertex gets its ``teleport`` mass plus
+    the damped in-flow sum(rank / outdeg) of its in-neighbors.
+    ``seeds_join`` adds a join for the teleport term (personalized
+    PageRank)."""
     return "".join(f""",
     r{k} AS MATERIALIZED (
       SELECT v.id, {teleport} + {damping} * coalesce(c.csum, 0) AS rank
@@ -1715,7 +1714,8 @@ def _pagerank_oracle_sql(iters: int = 8, damping: float = 0.85) -> str:
     nv AS MATERIALIZED (SELECT count(*)::DOUBLE AS n FROM verts),
     deg AS MATERIALIZED (SELECT src, count(*)::DOUBLE AS outdeg FROM e GROUP BY 1),
     r0 AS (SELECT id, 1.0 / (SELECT n FROM nv) AS rank FROM verts)"""
-    body = _rank_sweeps_sql(iters, damping, "{base} / (SELECT n FROM nv)")
+    body = _rank_sweeps_sql(iters, damping,
+                            f"{1.0 - damping} / (SELECT n FROM nv)")
     return head + body + f"\n    SELECT id, round(rank, 6) AS rank FROM r{iters}"
 
 
@@ -1749,7 +1749,7 @@ def _ppr_oracle_sql(iters: int = 8, damping: float = 0.85) -> str:
                   ELSE 0.0 END AS rank
       FROM verts v LEFT JOIN seeds s ON s.id = v.id)"""
     teleport = ("(CASE WHEN s.id IS NOT NULL"
-                " THEN {base} / (SELECT n FROM ns) ELSE 0.0 END)")
+                f" THEN {1.0 - damping} / (SELECT n FROM ns) ELSE 0.0 END)")
     body = _rank_sweeps_sql(iters, damping, teleport,
                             "LEFT JOIN seeds s ON s.id = v.id ")
     return head + body + f"""
@@ -1851,7 +1851,6 @@ def supply_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE["supply_communities"] = _label_prop_oracle_sql()
-
 
 
 def _eigenvector_oracle_sql(iters: int = 8) -> str:
@@ -3556,8 +3555,6 @@ def supply_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = degree_assortativity(_supply_edges(spark, sf_dir))
     return out.select(_r("assortativity").alias("assortativity"))
-
-
 
 
 @query(
@@ -5731,14 +5728,13 @@ def _semdedup_index_oracle_sql(
     nlist: int = 8, iters: int = 3, dim: int = 64, train_mod: int = 4,
     tau: float = 0.4, cap: int = 16, nsub: int = 2, sub_iters: int = 2,
     max_depth: int = 1, reps: str = "lowest",
-    corpus: str = "vec_id % 5 != 0", batch: str = "vec_id % 5 = 0",
-    pool: str | None = None,
+    corpus: str = "vec_id % 5 != 0", pool: str | None = None,
 ) -> str:
     """DuckDB replay of the BIN-ONCE / probe-per-batch semantic dedup
     (semdedup.semdedup_build_index + semdedup_query_index): the IVF
     chain and the shared split body run over the ``corpus`` slice only
-    (the frozen quantizer), then the ``batch`` slice is routed through
-    the SAME recorded chain
+    (the frozen quantizer), then the batch (vec_id % 5 = 0) is routed
+    through the SAME recorded chain
     — top-level argmax against c{iters}, then per level an argmax over
     the level's final sub-centroids (LEFT join: cells that never split
     contribute sub = 0) — and joined against the corpus cells'
@@ -5754,7 +5750,8 @@ def _semdedup_index_oracle_sql(
         rep_pred = f"((r.rn - 1) % ((r.cnt + {cap} - 1) // {cap})) = 0"
     chain = _ivf_chain_sql(nlist, iters, dim, train_mod, where=f" WHERE {corpus}")
     body = _cell_split_sql_body(max_depth, cap, nsub, sub_iters, dim)
-    routes = _semdedup_route_sql("q", batch, iters, nsub, sub_iters, max_depth)
+    routes = _semdedup_route_sql("q", "vec_id % 5 = 0", iters, nsub, sub_iters,
+                                 max_depth)
     source = ""
     if pool is not None:
         routes += _semdedup_route_sql("p", pool, iters, nsub, sub_iters,
