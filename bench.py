@@ -7,11 +7,12 @@ compounding (A2), breakpoint deciles (A6), tick binning (A11) — plus
 TPC-H-shaped scan/join/agg and the LLM-pipeline operators.
 
 The headline measures the PRODUCTION paths: minhash/simhash run the
-fused JVM xxhash64 family.  The slower portable arithmetic-hash variants
-(needed only so the DuckDB oracle can recompute values bit-for-bit) are
-timed separately under "oracle_path" and excluded from the headline
-total.  Both raw run times ("runs") and /proc load + CPU-steal stamps
-are reported so hypervisor noise is separable from plan regressions.
+fused JVM xxhash64 family.  Each production twin (``EXTRA``) is a
+catalog query called with its production argument (``portable=False``,
+corpus-sized ``n_planes``); only curation v3's production plan is its
+own function, beside v3 in queries.py.  The portable variants the DuckDB
+oracle recomputes are timed under "oracle_path", outside the headline.
+Raw runs and /proc load + CPU-steal stamps separate noise from plans.
 
 Timing semantics (bench_set_version 3, r11): each entry's DataFrame is
 built ONCE, one untimed warmup action pays first-run JIT, then N timed
@@ -27,6 +28,7 @@ import json
 import os
 import sys
 import time
+from functools import cache, partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -112,288 +114,35 @@ EXTENDED_QUERIES = [
 ]
 
 
-def _production_minhash(spark, sf_dir):
-    """xxhash64 MinHash+LSH — the production default of
-    similarity.minhash_candidates (portable=False)."""
-    from pyspark.sql import functions as F
+@cache
+def _twins() -> dict:
+    """``EXTRA``: name -> (spark, sf_dir) -> DataFrame."""
+    from financial_data_science_spark.queries import Q, _curation_v3_production
 
-    from financial_data_science_spark.functions import similarity as SIM
-    from financial_data_science_spark.sources.testdata import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return SIM.minhash_candidates(docs, num_hashes=64, bands=32).filter(
-        F.col("est_jaccard") >= 0.4
-    )
-
-
-def _production_stopshingle(spark, sf_dir):
-    """xxhash64 stop-shingle MinHash+LSH — the production twin of the
-    catalog's `minhash_lsh_stopshingle` (portable oracle path).  Two
-    production-only wins: the base shingle hash is one JVM intrinsic,
-    and the df CENSUS keys on the 64-bit hash with the gram string
-    dropped AT THE EXPLODE — the checkpointed/shuffled census frame is
-    (id, int64) instead of (id, string).  Hash-censusing is safe here
-    (collision odds ~n^2/2^64) where the oracle path's 31-bit hash
-    would wrongly merge gram counts at corpus scale, which is why the
-    portable path keeps its string census (similarity.py census_key).
-    Same banding/threshold as the catalog entry; the candidate set
-    legitimately differs across hash families (labeled pair, same as
-    minhash_lsh_production vs minhash_lsh_candidates)."""
-    from pyspark.sql import functions as F
-
-    from financial_data_science_spark.functions import similarity as SIM
-    from financial_data_science_spark.sources.testdata import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return SIM.minhash_candidates(
-        docs, num_hashes=64, bands=32, portable=False, max_df=0.25
-    ).filter(F.col("est_jaccard") >= 0.4)
+    return {
+        "minhash_lsh_production":
+            partial(Q["minhash_lsh_candidates"], portable=False),
+        "simhash_production": partial(Q["simhash_near_dups"], portable=False),
+        "embedding_near_dups_production":
+            partial(Q["embedding_near_dups"], n_planes=9),
+        "contamination_production":
+            partial(Q["contamination_overlap"], portable=False),
+        "curation_v3_production": _curation_v3_production,
+        "minhash_lsh_stopshingle_production":
+            partial(Q["minhash_lsh_stopshingle"], portable=False),
+        "minhash_index_increment_production":
+            partial(Q["minhash_index_increment"], portable=False),
+        "minhash_index_frozen_census_production":
+            partial(Q["minhash_index_frozen_census"], portable=False),
+    }
 
 
-def _production_simhash(spark, sf_dir):
-    """xxhash64 SimHash near-dup pairs: 16-bit band block + Hamming<=6."""
-    from financial_data_science_spark.functions import similarity as SIM
-    from financial_data_science_spark.sources.testdata import load_table
-
-    return SIM.simhash_pairs(load_table(spark, sf_dir, "documents"))
-
-
-def _production_embedding_near_dups(spark, sf_dir):
-    """Corpus-sized LSH parameters: n_planes=9 gives 512 buckets/table at
-    25k vectors (~50/bucket) vs the oracle query's 4 planes (16 buckets —
-    oracle-tractable at sf0.01 but quadratically coarse here).  At scale
-    n_planes tracks log2(corpus/target_bucket_size).  Recall note: at a
-    TRUE near-dup threshold (cosine>=0.9, collision p=0.95/plane) 9
-    planes x 3 tables retain ~95% of pairs; the 0.4 threshold used here
-    (the synthetic corpus has no real near-dups) sits far below the LSH
-    design point, so the candidate count drops vs the 4-plane oracle
-    variant — the labeled pair is the cost/recall trade, not a bug."""
-    from financial_data_science_spark.functions import similarity as SIM
-    from financial_data_science_spark.sources.testdata import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return SIM.embedding_near_dups(emb, n_planes=9, n_tables=3, threshold=0.4)
-
-
-def _production_contamination(spark, sf_dir):
-    """xxhash64 gram hashing (one JVM intrinsic per gram) vs the oracle
-    query's per-character portable fold — same counts modulo hash
-    collisions, the production default at corpus scale."""
-    from pyspark.sql import functions as F
-
-    from financial_data_science_spark.functions.pipeline import contamination
-    from financial_data_science_spark.sources.testdata import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return contamination(
-        docs.filter(F.col("doc_id") % 17 != 0),
-        docs.filter(F.col("doc_id") % 17 == 0),
-        n=5,
-        portable=False,
-    )
-
-
-# benchmark-gram broadcasts cached per (session, sf_dir) — see the
-# creation site in _production_curation_v3
-_BENCH_GRAM_BROADCASTS: dict = {}
-
-
-def _production_curation_v3(spark, sf_dir):
-    """Curation v3 at production settings: xxhash64 contamination grams
-    (one JVM intrinsic per gram, vs the oracle path's per-character
-    portable fold) and approx_percentile for the median score cut
-    (exact percentile is a full sort of the scored corpus; the sketch
-    is one pass, mergeable across 1000 executors).
-
-    FUSED action shape (r10, the structural fix the r9 verdict named):
-    the r9 twin walked the doc frame in SIX separate actions (eager
-    feature checkpoint, 3 IRLS collects, median collect, final count)
-    — at 5k docs per-action session overhead dominated the wall.  Now:
-
-    - the feature checkpoint is LAZY: IRLS iteration 1 materializes it
-      (same tokenization work, one fewer job);
-    - the median is a broadcast one-row aggregate INSIDE the final
-      plan (computed from the checkpointed 4-column feature frame, so
-      the subquery costs milliseconds) instead of a driver collect;
-    - the quality gate is MAP-SIDE: the final pass recomputes x1/x2
-      and the trained score on the train scan with the collected beta
-      (the identical logistic_score expression tree over identically
-      computed features — IEEE-identical p6, so the kept set is
-      unchanged), replacing the doc_id join back to the scored frame;
-    - the gate runs BEFORE decontamination, so only above-median docs
-      pay the gram hashing, and decontamination itself is the Arrow
-      SCREEN kernel over a collected-once broadcast benchmark set (the
-      r9 shoot-out winner) instead of the semi+anti join pair — the
-      gated subtree is walked once, zero gram explode/join stages;
-    - IRLS trains with wholestage codegen OFF (per-iteration JIT of
-      beta-baked classes is a fixed cost — bench-scale-dominant, 100
-      TB-noise; bit-equal trajectory, codegen restored for the DAG).
-
-    Result: 3 IRLS collects (inherently sequential — each iteration's
-    beta feeds the next aggregate) + the bench-gram collect + ONE
-    final action.  Parity vs the exact catalog entry is recorded in
-    SCALE.md (kept-row count within the approx-percentile ε)."""
-    from pyspark.sql import functions as F
-
-    import financial_data_science_spark.queries as QQ
-    from financial_data_science_spark.functions.classifier import (
-        logistic_irls,
-        logistic_score,
-    )
-    from financial_data_science_spark.functions import pipeline as PIPE
-    from financial_data_science_spark.functions.pipeline import (
-        pack_token_budget,
-    )
-    from financial_data_science_spark.sources.testdata import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    # lazy checkpoint: materialized by IRLS iteration 1, reused by the
-    # remaining iterations and the in-plan median subquery
-    feats = QQ._doc_quality_feats(docs).localCheckpoint(eager=False)
-    # wholestage codegen OFF for the training loop only: each IRLS
-    # iteration bakes the previous betas into the generated source, so
-    # every iteration JIT-compiles a fresh class (~0.3s) — a FIXED cost
-    # that is noise over a 100 TB corpus but >half the iteration wall
-    # at bench scale, where interpreting a 13-column aggregate over 15k
-    # quantized rows costs milliseconds.  Measured bit-equal trajectory
-    # both ways (integer-quantized sums are order- and engine-mode-
-    # independent); at real scale leave codegen ON — the per-row win
-    # amortizes the compile.  Restored immediately: the corpus-sized
-    # DAG below keeps the codegen'd shape.
-    prev = spark.conf.get("spark.sql.codegen.wholeStage")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
-        traj = logistic_irls(feats, ["x1", "x2"], "y", iters=3)
-    finally:
-        spark.conf.set("spark.sql.codegen.wholeStage", prev)
-    b = traj[-1]
-    beta = (b["b0"], b["b1"], b["b2"])
-    scored = logistic_score(feats, ["x1", "x2"], beta).select(
-        "doc_id", QQ._r("prob", 6).alias("p6")
-    )
-    med_df = scored.agg(
-        F.percentile_approx("p6", F.lit(0.5), F.lit(10000)).alias("__med__")
-    )
-    train = docs.filter(F.col("doc_id") % 17 != 0)
-    bench = docs.filter(F.col("doc_id") % 17 == 0)
-    # map-side quality gate: same feature expressions as
-    # _doc_quality_feats and the same logistic_score tree -> identical
-    # p6 doubles; median rides in as a broadcast one-row frame
-    ntok = QQ.TXT.n_tokens("text").cast("double")
-    train_feats = train.select(
-        "doc_id",
-        "text",
-        F.log(F.lit(1.0) + ntok).alias("x1"),
-        (F.col("n_chars").cast("double") / (F.lit(1.0) + ntok)).alias("x2"),
-    )
-    gated = (
-        logistic_score(train_feats, ["x1", "x2"], beta)
-        .withColumn("p6", QQ._r("prob", 6))
-        .join(F.broadcast(med_df))
-        .filter(F.col("p6") > F.col("__med__"))
-        .select("doc_id", "text")
-    )
-    # decontamination via the Arrow SCREEN kernel (the r9 three-way
-    # shoot-out's winner for the screen shape, SCALE.md): collect the
-    # benchmark gram set ONCE (suites are tiny by construction — 15k
-    # hashes here), broadcast the frozenset, and drop contaminated docs
-    # in the same map-side pass — no gram explode of the training
-    # corpus, no semi/anti join pair, and the gated subtree is walked
-    # once instead of twice (the anti-join form referenced it on both
-    # sides).  Kept set identical to the counting/semi-join forms by
-    # construction (membership vs any-gram-hit).
-    # ONE broadcast per (session, sf_dir) — contamination_screen's own
-    # docstring tells repeat callers to create/reuse a single Broadcast
-    # instead of leaking one per call; the bench times this twin 3-4x
-    # per session (and tools/measure.py ab dozens), so cache it.  Keyed on
-    # applicationId, not id(spark): a CPython id can be reused after a
-    # stopped session is garbage-collected, which would hand a new
-    # SparkContext a broadcast belonging to a dead one.
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    bench_hashes = _BENCH_GRAM_BROADCASTS.get(cache_key)
-    if bench_hashes is None:
-        # evict entries from other (dead) sessions so broadcasts aren't
-        # pinned for the process lifetime across session restarts
-        for k in [k for k in _BENCH_GRAM_BROADCASTS if k[0] != cache_key[0]]:
-            del _BENCH_GRAM_BROADCASTS[k]
-        bench_hashes = spark.sparkContext.broadcast(frozenset(
-            r["h"]
-            for r in bench.select(
-                F.explode(
-                    PIPE.ngram_hashes("text", 5, False)
-                ).alias("h")
-            ).distinct().collect()
-        ))
-        _BENCH_GRAM_BROADCASTS[cache_key] = bench_hashes
-    clean = PIPE.contamination_screen(
-        gated, spark, bench_hashes, n=5, portable=False
-    ).select("doc_id", "text")
-    ded = clean.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
-    counted = ded.select(
-        "doc_id", QQ.TXT.n_tokens("text").cast("long").alias("n_tokens")
-    )
-    packed = pack_token_budget(counted, "doc_id", "n_tokens", budget=2000)
-    return packed.select("doc_id", "n_tokens", "shard")
-
-
-def _production_minhash_index_increment(spark, sf_dir):
-    """xxhash64 incremental dedup probe — the production twin of the
-    catalog's `minhash_index_increment` (portable oracle path).  v3
-    timing semantics make this the entry that measures the INGESTION
-    claim: the index build (shingle/hash/band the standing 80% corpus)
-    lands in the untimed build stage — paid once per corpus, like
-    production — and the timed action is the per-batch half only:
-    hash the 20% increment and bucket-probe the persisted index."""
-    from pyspark.sql import functions as F
-
-    from financial_data_science_spark.functions import minhash_index as MHI
-    from financial_data_science_spark.sources.testdata import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    increment = docs.filter(F.col("doc_id") % 5 == 0)
-    index = MHI.minhash_build_index(
-        corpus, num_hashes=64, bands=32, portable=False, persist=True
-    )
-    return MHI.minhash_query_index(increment, index, min_est=0.4)
-
-
-def _production_minhash_index_frozen_census(spark, sf_dir):
-    """xxhash64 frozen-census incremental probe — the production twin of
-    the catalog's `minhash_index_frozen_census` (portable oracle path).
-    Under v3 semantics the untimed build stage pays what production pays
-    once per corpus: the stop-shingle census over the standing 80%
-    corpus (one combinable count aggregate, hash-keyed census rows) AND
-    the corpus shingle/hash/band pass under that frozen set.  The timed
-    action is the per-batch half a 100 TB ingest repeats: hash the 20%
-    increment UNDER THE FROZEN SET (broadcast anti-join, no census) and
-    bucket-probe the persisted index."""
-    from pyspark.sql import functions as F
-
-    from financial_data_science_spark.functions import minhash_index as MHI
-    from financial_data_science_spark.sources.testdata import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    increment = docs.filter(F.col("doc_id") % 5 == 0)
-    index = MHI.minhash_build_index(
-        corpus, num_hashes=64, bands=32, portable=False, persist=True,
-        max_df=0.005,
-    )
-    return MHI.minhash_query_index(increment, index, min_est=0.4)
-
-
-EXTRA = {
-    "minhash_lsh_production": _production_minhash,
-    "simhash_production": _production_simhash,
-    "embedding_near_dups_production": _production_embedding_near_dups,
-    "contamination_production": _production_contamination,
-    "curation_v3_production": _production_curation_v3,
-    "minhash_lsh_stopshingle_production": _production_stopshingle,
-    "minhash_index_increment_production": _production_minhash_index_increment,
-    "minhash_index_frozen_census_production":
-        _production_minhash_index_frozen_census,
-}
+def __getattr__(name: str):
+    # built on first use: `measure.py ab` loads this file for its timing
+    # loop beside older catalogs whose queries lack these arguments
+    if name == "EXTRA":
+        return _twins()
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 def cpu_jiffies(line: str | None = None) -> tuple[int, int]:
@@ -483,7 +232,8 @@ def main() -> None:
     raw_runs: dict[str, list[float]] = {}
 
     def run(name: str, n_runs: int = 3) -> tuple[float, int]:
-        rec, _ = time_entry(spark, EXTRA.get(name) or Q[name], SF_DIR, n_runs)
+        rec, _ = time_entry(spark, _twins().get(name) or Q[name], SF_DIR,
+                            n_runs)
         builds[name] = [rec["build"], rec["warmup"]]
         raw_runs[name] = rec["runs"]
         return min(rec["runs"]), rec["rows"]

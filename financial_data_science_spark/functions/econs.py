@@ -506,14 +506,6 @@ def train_test_split(
     return train, test
 
 
-def stratified_sample(
-    df: DataFrame, label_col: str, frac: float, seed: int = 42
-) -> DataFrame:
-    """Per-label sampling via sampleBy (learn.py stratified batching)."""
-    labels = [r[0] for r in df.select(label_col).distinct().collect()]
-    return df.sampleBy(label_col, {l: frac for l in labels}, seed=seed)
-
-
 def marginal_rsq(
     df: DataFrame,
     date_col: str = "date",

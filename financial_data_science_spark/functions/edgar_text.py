@@ -52,18 +52,14 @@ def extract_item_str(text: str, item: str, next_items: list[str]) -> str | None:
 
 
 def extract_item_udf(item: str, next_items: list[str]) -> Column:
-    """Factory: pandas UDF extracting one item span per filing row."""
+    """Factory: pandas UDF extracting one item span per filing row — the
+    reference's ``extract_item`` (edgar.py:359-527) over a text column."""
 
     @F.pandas_udf(T.StringType())
     def _udf(texts: pd.Series) -> pd.Series:
         return texts.map(lambda t: extract_item_str(t, item, next_items))
 
     return _udf
-
-
-def mda_udf() -> Column:
-    """Item 7 (MD&A), stopping at 7A or 8 (edgar.py MDA use case)."""
-    return extract_item_udf("7", ["7A", "8"])
 
 
 def clean_html_expr(col: str | Column) -> Column:

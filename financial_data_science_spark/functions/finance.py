@@ -67,10 +67,6 @@ def macaulay_duration(
     return wsum / (price * m)
 
 
-def modified_duration(coupon, n, m, price, ytm, par=100.0) -> float:
-    return macaulay_duration(coupon, n, m, price, ytm, par) / (1 + ytm / m)
-
-
 def bond_convexity(
     coupon: float, n: int, m: int, price: float, ytm: float, par: float = 100.0
 ) -> float:

@@ -11,7 +11,7 @@ distributed LBFGS.
 
 from __future__ import annotations
 
-from pyspark.ml import Pipeline, PipelineModel
+from pyspark.ml import Pipeline
 from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.feature import CountVectorizer, RegexTokenizer, StringIndexer
 from pyspark.sql import DataFrame
@@ -24,6 +24,9 @@ def lang_classifier_pipeline(
     vocab_size: int = 4096,
     max_iter: int = 20,
 ) -> Pipeline:
+    """Tokens -> counts -> logistic regression over ``label_col``: the
+    Spark-native counterpart of the reference's train/test prep
+    (learn.py:36-72); ``.fit`` on a training split returns the model."""
     tok = RegexTokenizer(
         inputCol=text_col, outputCol="__tokens__", pattern="\\W+", toLowercase=True
     )
@@ -36,27 +39,6 @@ def lang_classifier_pipeline(
         regParam=0.01,
     )
     return Pipeline(stages=[tok, cv, idx, lr])
-
-
-def fit_and_score(
-    docs: DataFrame,
-    text_col: str = "text",
-    label_col: str = "lang",
-    test_frac: float = 0.25,
-    seed: int = 42,
-) -> tuple[PipelineModel, float]:
-    """Fit on a random split, return (model, held-out accuracy)."""
-    train, test = docs.randomSplit([1.0 - test_frac, test_frac], seed=seed)
-    model = lang_classifier_pipeline(text_col, label_col).fit(train)
-    pred = model.transform(test)
-    acc = (
-        pred.select(
-            (F.col("prediction") == F.col("__label__")).cast("int").alias("ok")
-        )
-        .agg(F.avg("ok"))
-        .first()[0]
-    )
-    return model, float(acc)
 
 
 def pad_sequences(

@@ -8,7 +8,7 @@ unstructured/unstructured.py + vocab.py):
 
 - **split/sample** must be a pure function of a stable key, NOT of RNG
   state or row order: re-runs, backfills, and late-arriving shards must
-  land rows in the same split.  `hash_split`/`hash_sample` are per-row
+  land rows in the same split.  `hash_split`/`mixture_sample` are per-row
   arithmetic on porthash.keyhash — no shuffle, no seed to lose, and the
   driver's DuckDB oracle recomputes the assignment value-for-value.
 - **shard packing** assigns documents to fixed-token-budget training
@@ -72,17 +72,6 @@ def hash_split(
 ) -> DataFrame:
     """Attach a deterministic split label column (train/val/test...)."""
     return df.withColumn(out, split_assign(F.col(key_col), weights, salt))
-
-
-def hash_sample(
-    df: DataFrame, key_col: str, fraction: float, salt: int = 0
-) -> DataFrame:
-    """Deterministic ~fraction sample: keep rows whose keyhash bucket
-    falls below the threshold.  Unlike ``df.sample``, membership is a
-    property of the KEY — stable across reruns and unions of shards."""
-    thresh = round(fraction * 10_000)
-    bucket = F.floor((keyhash(F.col(key_col), salt) * 10_000) / F.lit(float(MOD)))
-    return df.filter(bucket < thresh)
 
 
 def pack_token_budget(
@@ -358,7 +347,7 @@ def mixture_sample(
     proportions into the target training mix.
 
     Membership is a pure function of (key, salt) — the same
-    porthash.keyhash bucket arithmetic as hash_sample — so the mix is
+    porthash.keyhash bucket arithmetic as hash_split — so the mix is
     reproducible across reruns, engines, and late shards, and
     subset-monotone in the rate: raising a source's rate only ADDS docs
     (the kept set at 20% is a superset of the kept set at 10%), which is

@@ -10,8 +10,7 @@ are not reasonably re-implementable here.
 
 Scope (deliberate): bit depth 8, color types 0 (gray), 2 (RGB), 4
 (gray+alpha), 6 (RGBA), no interlacing, all five scanline filters,
-multi-IDAT streams.  Encode emits filter-0 scanlines — valid PNG any
-reader accepts.  This is a codec fixture, not an imaging library: output
+multi-IDAT streams.  This is a decoder, not an imaging library: output
 is rows of raw bytes for the feature extractor to fold.
 """
 
@@ -23,41 +22,6 @@ import zlib
 SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 _CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
-
-
-def _chunk(tag: bytes, data: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(data))
-        + tag
-        + data
-        + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-    )
-
-
-def encode_gray(rows: list[bytes | bytearray | list[int]]) -> bytes:
-    """8-bit grayscale PNG from a list of equal-length pixel rows."""
-    return _encode(rows, color_type=0, channels=1)
-
-
-def encode_rgb(rows: list[list[tuple[int, int, int]]]) -> bytes:
-    """8-bit RGB PNG from rows of (r, g, b) tuples."""
-    flat = [bytes(b for px in row for b in px) for row in rows]
-    return _encode(flat, color_type=2, channels=3)
-
-
-def _encode(rows: list, color_type: int, channels: int) -> bytes:
-    height = len(rows)
-    if height == 0:
-        raise ValueError("cannot encode an empty image")
-    width = len(rows[0]) // channels if color_type else len(rows[0])
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-    raw = b"".join(b"\x00" + bytes(r) for r in rows)  # filter 0 per line
-    return (
-        SIGNATURE
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(raw))
-        + _chunk(b"IEND", b"")
-    )
 
 
 def _paeth(a: int, b: int, c: int) -> int:

@@ -223,23 +223,12 @@ def keyhash(key: Column, salt: int = 0) -> Column:
     return (h * F.lit(FIN2)) % F.lit(MOD)
 
 
-def plane_sign(p: int, i: Column) -> Column:
-    """Deterministic ±1 sign of component ``i`` of pseudo-hyperplane ``p``
-    from an LCG + xor-shift mix — balanced per plane, no string hashing."""
-    h = (F.lit((p + 1) * LCG_A) + (i + 1) * F.lit(LCG_B)) % F.lit(1 << 31)
-    h = (h * F.lit(FIN1)) % F.lit(MOD)
-    h = h.bitwiseXOR(F.shiftright(h, 15))
-    h = (h * F.lit(FIN2)) % F.lit(MOD)
-    bit = F.shiftright(h, 13).bitwiseAND(F.lit(1))
-    return F.when(bit == 1, 1.0).otherwise(-1.0)
-
-
 def plane_sign_col(p: Column, i: Column) -> Column:
-    """:func:`plane_sign` with a RUNTIME plane index (both args Columns)
-    — identical arithmetic, used by the one-pass multi-plane fold in
-    similarity.hyperplane_bucket (the int-p form stays for oracle-SQL
-    twinning and per-plane call sites).  Casts guard ANSI int overflow
-    on the transform-index argument."""
+    """Deterministic ±1 sign of component ``i`` of pseudo-hyperplane
+    ``p`` (both Columns) from an LCG + xor-shift mix — balanced per
+    plane, no string hashing; used by the one-pass multi-plane fold in
+    similarity.hyperplane_bucket.  Casts guard ANSI int overflow on the
+    transform-index argument."""
     h = ((p.cast("long") + 1) * F.lit(LCG_A) + (i.cast("long") + 1) * F.lit(LCG_B)) % F.lit(
         1 << 31
     )

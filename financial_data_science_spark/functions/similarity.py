@@ -222,7 +222,7 @@ def hyperplane_bucket(
     """Random-hyperplane LSH bucket id for cosine ANN at scale.
 
     Deterministic pseudo-hyperplanes: component i of plane p weighs ±1
-    from the arithmetic mix in porthash.plane_sign (no string hashing, and
+    from the arithmetic mix in porthash.plane_sign_col (no string hashing, and
     recomputable in any SQL engine — the driver's DuckDB oracle re-derives
     the buckets); bucket = sign bits packed to an int.  Collisions
     preserve cosine locality; search only within a bucket (and optionally

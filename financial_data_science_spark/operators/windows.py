@@ -247,8 +247,7 @@ def ewma(
     (e.g. ~11,300 rows at alpha=0.06, ~6,600 at 0.10).  ``on_overflow``
     picks the failure mode: "error" (default) raises loudly from the
     executor the moment any group exceeds the bound, "null" nulls those
-    rows, "ignore" keeps the raw Inf/NaN arithmetic.  For unbounded
-    series lengths use :func:`ewma_chunked` — same answers, no bound.
+    rows, "ignore" keeps the raw Inf/NaN arithmetic.
     """
     import math
 
@@ -292,131 +291,13 @@ def ewma(
         if on_overflow == "error":
             msg = (
                 f"ewma: group exceeds the {safe}-row double-precision "
-                f"bound for alpha={alpha}; use ewma_chunked() for "
-                "unbounded series lengths"
+                f"bound for alpha={alpha}; pass on_overflow='null' to "
+                "null the rows past it"
             )
             y = F.when(F.assert_true(in_bound, F.lit(msg)).isNull(), y)
         else:  # "null"
             y = F.when(in_bound, y)
     return d.withColumn(out, y).drop("__i__", "__j__")
-
-
-def ewma_chunked(
-    df: DataFrame,
-    keys: list[str] | str | None,
-    order: list[str] | str,
-    col: str,
-    alpha: float,
-    adjust: bool = True,
-    out: str = "ewma",
-) -> DataFrame:
-    """EWMA with NO series-length bound — chunk-rescaled exact
-    reformulation of :func:`ewma` (same pandas semantics, same null
-    handling, results equal within 1 ulp).
-
-    The plain cumsum identity overflows because lam^-j spans the whole
-    series.  Here the series is cut into fixed chunks of C rows with C
-    chosen so lam^-(C-1) stays far inside double range; within a chunk
-    the identity runs on the local index m, and the cross-chunk carry is
-    a lag-sum over per-chunk totals: contribution of chunk k-d to chunk
-    k is S_{k-d} * lam^(C*d), which underflows to exactly 0 past
-    D ~ 714/(C*-ln lam) lags (weights < 1e-310 are sub-denormal — the
-    dropped tail is below double representability, so truncation is
-    exact).  With C = 350/-ln(lam), D is ~3 regardless of alpha.
-
-    Physical plan: one windowed pass on (keys, chunk), one per-chunk
-    aggregate (rows/C output rows), D lag columns over it, and a
-    co-keyed join back — all shuffles on the same group keys.  Use the
-    plain :func:`ewma` (one window, zero joins) when every group is
-    known to fit the bound; use this for tick-scale series (e.g. 23k
-    one-second bars per day) where it cannot.
-    """
-    import math
-
-    keys_l = [keys] if isinstance(keys, str) else list(keys or [])
-    order_l = [order] if isinstance(order, str) else list(order)
-    lam = 1.0 - alpha
-    wo = (
-        Window.partitionBy(*keys_l).orderBy(*order_l)
-        if keys_l
-        else tiny_ordered_window(*order_l)
-    )
-    wc = wo.rowsBetween(Window.unboundedPreceding, 0)
-    wall = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    x = F.col(col).cast("double")
-    obs = x.isNotNull() & ~F.isnan(x)  # pandas: NaN == missing, not a value
-    idx = F.row_number().over(wo) - 1
-    if not keys_l:
-        # the chunked reformulation removes the overflow bound but the
-        # initial global row-number still single-partitions when
-        # keys=None — same guard as the plain form
-        idx = _guard(idx, order_l)
-    d = df.withColumn("__i__", idx)
-    if lam <= 0.0:
-        y = F.last(F.when(obs, x), ignorenulls=True).over(wc)
-        return d.withColumn(out, y).drop("__i__")
-    C = max(16, min(4096, int(350.0 / -math.log(lam))))
-    D = max(1, min(64, math.ceil(714.0 / (C * -math.log(lam)))))
-    i0 = F.min(F.when(obs, F.col("__i__"))).over(wall)
-    d = (
-        d.withColumn("__j__", F.col("__i__") - i0)
-        .withColumn("__k__", F.floor(F.col("__j__") / C).cast("long"))
-        .withColumn("__m__", F.col("__j__") - F.col("__k__") * C)
-    )
-    j, m = F.col("__j__"), F.col("__m__")
-    lam_neg_m = F.pow(F.lit(lam), -m)
-    w_obs = (
-        F.lit(1.0)
-        if adjust
-        else F.when(j == 0, F.lit(1.0)).otherwise(F.lit(alpha))
-    )
-    d = d.withColumn(
-        "__u__", F.when(obs, w_obs * x * lam_neg_m)
-    ).withColumn("__v__", F.when(obs, w_obs * lam_neg_m))
-    wck = Window.partitionBy(*keys_l, "__k__").orderBy(*order_l).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    # cross-chunk carry: D lagged per-chunk totals, scaled lam^(C*d)
-    totals = d.groupBy(*keys_l, "__k__").agg(
-        F.sum("__u__").alias("__S__"), F.sum("__v__").alias("__T__")
-    )
-    wk = (
-        Window.partitionBy(*keys_l).orderBy("__k__")
-        if keys_l
-        else tiny_ordered_window("__k__")  # rows/C per-chunk totals
-    )
-    G = sum(
-        (
-            F.coalesce(F.lag("__S__", dd).over(wk), F.lit(0.0))
-            * F.lit(lam ** (C * dd))
-            for dd in range(1, D + 1)
-        ),
-        F.lit(0.0),
-    )
-    H = sum(
-        (
-            F.coalesce(F.lag("__T__", dd).over(wk), F.lit(0.0))
-            * F.lit(lam ** (C * dd))
-            for dd in range(1, D + 1)
-        ),
-        F.lit(0.0),
-    )
-    carries = totals.select(
-        *keys_l, "__k__", G.alias("__G__"), H.alias("__H__")
-    )
-    d = d.join(carries, [*keys_l, "__k__"], "left")
-    p = F.coalesce(F.sum("__u__").over(wck), F.lit(0.0))
-    q = F.coalesce(F.sum("__v__").over(wck), F.lit(0.0))
-    num = F.pow(F.lit(lam), m) * (p + F.coalesce(F.col("__G__"), F.lit(0.0)))
-    den = F.pow(F.lit(lam), m) * (q + F.coalesce(F.col("__H__"), F.lit(0.0)))
-    if adjust:
-        y = F.when(den != 0.0, num / den)
-    else:
-        y_at_obs = F.when(obs, num)
-        y = F.last(y_at_obs, ignorenulls=True).over(wc)
-    return d.withColumn(out, y).drop(
-        "__i__", "__j__", "__k__", "__m__", "__u__", "__v__", "__G__", "__H__"
-    )
 
 
 def max_drawdown_window(

@@ -23,7 +23,8 @@ def latest_release(
     date_col: str = "date",
     vintage_col: str = "realtime_start",
 ) -> DataFrame:
-    """Most-revised value per (series, date) — keep max vintage (W1)."""
+    """Most-revised value per (series, date) — keep max vintage (W1,
+    the latest-release case of alfred.py:334-406 construct_series)."""
     keys = [keys] if isinstance(keys, str) else list(keys)
     return keep_extremum(obs, keys + [date_col], vintage_col, keep="last")
 

@@ -79,7 +79,8 @@ def close_ticks(
     value_col: str = "value",
 ) -> DataFrame:
     """Streaming forward-duration closure: emit each tick once its
-    successor arrives, with the forward duration attached.
+    successor arrives, with the forward duration attached (the quote
+    state the reference carries between ticks, taq.py:460-474).
 
     ``ticks`` is a streaming DataFrame with (key string, ts_us long,
     value double).  State per key = the still-open last tick; memory is

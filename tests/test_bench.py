@@ -68,3 +68,20 @@ def test_steal_pct_is_share_of_all_cpus():
     assert end[1] - start[1] == 32 * 100 * 10
     assert bench.steal_pct(start, end) == 2.9
     assert bench.steal_pct(start, start) == 0.0
+
+
+def test_extra_rows_are_catalog_calls():
+    """Each bench.EXTRA row is a function of queries.py, called with
+    keywords its signature takes: a production twin is an argument of
+    the catalog query it times, not a copy of its body.  No session: the
+    rows are only bound, never called."""
+    import inspect
+
+    import bench
+    from financial_data_science_spark import queries
+
+    assert bench.EXTRA
+    for name, row in bench.EXTRA.items():
+        fn = getattr(row, "func", row)
+        assert getattr(queries, fn.__name__, None) is fn, (name, fn)
+        inspect.signature(fn).bind(None, "sf_dir", **getattr(row, "keywords", {}))

@@ -20,7 +20,6 @@ from financial_data_science_spark.functions.econs import (
     integration_order,
     least_squares_by_group,
     min_variance_weights,
-    stratified_sample,
     train_test_split,
 )
 
@@ -168,21 +167,6 @@ def test_train_test_split_disjoint(spark):
     tr, te = train_test_split(df, 0.25, seed=1)
     assert tr.count() + te.count() == 1000
     assert tr.join(te, "id", "inner").count() == 0
-
-
-def test_stratified_sample_keeps_every_label(spark):
-    """Each label is sampled at ``frac``: 1.0 keeps every row, 0.0 none,
-    and 0.5 keeps about half of each label, the rare one included."""
-    df = spark.range(2200).withColumn(
-        "y", F.when(F.col("id") < 200, "rare").otherwise("common")
-    )
-    assert stratified_sample(df, "y", 1.0).count() == 2200
-    assert stratified_sample(df, "y", 0.0).count() == 0
-    half = dict(
-        stratified_sample(df, "y", 0.5, seed=3).groupBy("y").count().collect()
-    )
-    assert set(half) == {"rare", "common"}
-    assert 60 <= half["rare"] <= 140 and 800 <= half["common"] <= 1200
 
 
 def test_rowmatrix_factors_match_driver_svd(spark):

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import struct
+import zlib
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -10,6 +13,40 @@ from financial_data_science_spark.functions.multimodal import (
     extract_image_features,
     make_media_table,
 )
+from financial_data_science_spark.functions.png_codec import SIGNATURE
+
+
+def _chunk(tag: bytes, data: bytes) -> bytes:
+    return (
+        struct.pack(">I", len(data))
+        + tag
+        + data
+        + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
+    )
+
+
+def _encode(rows: list, color_type: int, channels: int) -> bytes:
+    """8-bit PNG of filter-0 scanlines (valid PNG any reader accepts)."""
+    width = len(rows[0]) // channels
+    ihdr = struct.pack(">IIBBBBB", width, len(rows), 8, color_type, 0, 0, 0)
+    raw = b"".join(b"\x00" + bytes(r) for r in rows)
+    return (
+        SIGNATURE
+        + _chunk(b"IHDR", ihdr)
+        + _chunk(b"IDAT", zlib.compress(raw))
+        + _chunk(b"IEND", b"")
+    )
+
+
+def encode_gray(rows: list[bytes | bytearray | list[int]]) -> bytes:
+    """8-bit grayscale PNG from a list of equal-length pixel rows."""
+    return _encode(rows, color_type=0, channels=1)
+
+
+def encode_rgb(rows: list[list[tuple[int, int, int]]]) -> bytes:
+    """8-bit RGB PNG from rows of (r, g, b) tuples."""
+    return _encode([bytes(b for px in row for b in px) for row in rows],
+                   color_type=2, channels=3)
 
 
 def _media(spark):
@@ -94,7 +131,7 @@ def test_decode_real_requires_pillow():
 
 def _half_png() -> bytes:
     """16x8 grayscale PNG, left half black / right half white — built
-    with Pillow when present, the stdlib codec otherwise, so the real
+    with Pillow when present, :func:`encode_gray` otherwise, so the real
     decode arm is exercised in EVERY environment."""
     from financial_data_science_spark.functions.multimodal import _pillow_available
 
@@ -109,8 +146,6 @@ def _half_png() -> bytes:
         buf = io.BytesIO()
         Image.fromarray(arr, mode="L").save(buf, format="PNG")
         return buf.getvalue()
-    from financial_data_science_spark.functions.png_codec import encode_gray
-
     return encode_gray([bytes([0] * 8 + [255] * 8)] * 8)
 
 
@@ -137,15 +172,8 @@ def test_png_codec_roundtrip_and_filters():
     decoder unfilters all five PNG filter types (a raw stream with
     Sub/Up/Average/Paeth scanlines, built by hand, must reproduce the
     plain-filter image bit-for-bit)."""
-    import struct
-    import zlib
-
     from financial_data_science_spark.functions.png_codec import (
-        SIGNATURE,
-        _chunk,
         decode,
-        encode_gray,
-        encode_rgb,
         luma_rows,
     )
 
@@ -209,7 +237,6 @@ def test_extract_image_features_real_decode_spark(spark):
         attach_payload_metadata,
         extract_image_features,
     )
-    from financial_data_science_spark.functions.png_codec import encode_gray
 
     payloads = [
         (0, _half_png()),

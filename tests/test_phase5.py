@@ -11,14 +11,13 @@ from financial_data_science_spark.backtesting.riskpremium import fama_macbeth
 from financial_data_science_spark.functions.edgar_text import (
     clean_html_expr,
     extract_item_str,
-    mda_udf,
+    extract_item_udf,
 )
 from financial_data_science_spark.functions.finance import (
     bond_price,
     bootstrap_spot,
     forwards_from_spots,
     macaulay_duration,
-    modified_duration,
     max_drawdown,
     parkinson_var,
 )
@@ -55,14 +54,11 @@ def test_bond_bootstrap_jorion_ch5():
 
 
 def test_duration_zero_coupon():
-    """Zero-coupon n-period bond: Macaulay duration == n/m years; modified
-    duration == Macaulay / (1 + ytm/m) = 3 / 1.03."""
+    """Zero-coupon n-period bond: Macaulay duration == n/m years."""
     ytm = 0.06
     px = bond_price(0.0, 6, 2, ytm)
     d = macaulay_duration(0.0, 6, 2, px, ytm)
     np.testing.assert_allclose(d, 3.0, rtol=1e-12)
-    md = modified_duration(0.0, 6, 2, px, ytm)
-    np.testing.assert_allclose(md, 2.912621359223301, rtol=1e-12)
 
 
 def test_parkinson_and_drawdown(spark):
@@ -166,7 +162,7 @@ def test_extract_item_udf_and_html_clean(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"cik": [1], "text": [FILING.replace("\n", "\n")]})
     )
-    out = df.select(mda_udf()(F.col("text")).alias("mda")).first()["mda"]
+    out = df.select(extract_item_udf("7", ["7A", "8"])(F.col("text")).alias("mda")).first()["mda"]
     assert "Revenue grew" in out
     html = spark.createDataFrame(
         pd.DataFrame({"t": ["<html><body><p>Hello &amp; <b>world</b></p>"

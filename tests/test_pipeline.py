@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from financial_data_science_spark.functions.pipeline import (
     contamination,
-    hash_sample,
     hash_split,
     pack_token_budget,
 )
@@ -35,17 +34,6 @@ def test_hash_split_deterministic_and_partition_independent(spark):
     frac = a["split"].value_counts(normalize=True)
     assert 0.7 < frac["train"] < 0.9  # hash is roughly uniform
     assert set(frac.index) == {"train", "val", "test"}
-
-
-def test_hash_sample_is_nested_and_stable(spark):
-    d = _docs(spark)
-    s30 = set(hash_sample(d, "doc_id", 0.3).toPandas()["doc_id"])
-    s50 = set(hash_sample(d, "doc_id", 0.5).toPandas()["doc_id"])
-    assert s30 <= s50  # same hash, larger threshold: strictly nested
-    assert 0.2 < len(s30) / 400 < 0.4
-    # different salt reshuffles membership
-    s30b = set(hash_sample(d, "doc_id", 0.3, salt=1).toPandas()["doc_id"])
-    assert s30 != s30b
 
 
 def test_global_cumsum_matches_single_window(spark):
@@ -81,6 +69,11 @@ def test_pack_token_budget_properties(spark):
 
 
 def test_contamination_hand_example(spark):
+    """Both gram-hash families count the hand example right, and agree
+    per doc on the sf0.001 benchmark split: the xxhash64 path has no SQL
+    oracle, and 64-bit collisions do not occur at this size."""
+    from financial_data_science_spark.sources.testdata import load_table
+
     train = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -95,17 +88,28 @@ def test_contamination_hand_example(spark):
     bench = spark.createDataFrame(
         pd.DataFrame({"doc_id": [9], "text": ["quick brown fox jumps over"]})
     )
-    out = (
-        contamination(train, bench, n=5)
-        .toPandas()
-        .set_index("doc_id")
-        .sort_index()
-    )
-    # doc 1 has 5 distinct 5-grams, exactly one ("quick brown fox jumps
-    # over") present in the benchmark
-    assert out.loc[1, "n_ngrams"] == 5
-    assert out.loc[1, "n_contaminated"] == 1
-    assert out.loc[2, "n_contaminated"] == 0
+    for portable in (True, False):
+        out = (
+            contamination(train, bench, n=5, portable=portable)
+            .toPandas()
+            .set_index("doc_id")
+            .sort_index()
+        )
+        # doc 1 has 5 distinct 5-grams, exactly one ("quick brown fox
+        # jumps over") present in the benchmark
+        assert out.loc[1, "n_ngrams"] == 5, portable
+        assert out.loc[1, "n_contaminated"] == 1, portable
+        assert out.loc[2, "n_contaminated"] == 0, portable
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    train = docs.filter(F.col("doc_id") % 17 != 0)
+    bench = docs.filter(F.col("doc_id") % 17 == 0)
+    per_doc = [
+        sorted(contamination(train, bench, n=5, portable=portable)
+               .select("doc_id", "n_ngrams", "n_contaminated").collect())
+        for portable in (True, False)
+    ]
+    assert per_doc[0] == per_doc[1] and per_doc[0]
 
 
 def test_contamination_screen_matches_join_form(spark):

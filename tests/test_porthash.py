@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from financial_data_science_spark.functions.porthash import (
     charhash,
     keyhash,
-    plane_sign,
+    plane_sign_col,
     sql_charhash,
     sql_keyhash,
     sql_plane_sign,
@@ -60,7 +60,7 @@ def test_plane_sign_twins(spark):
     for p in (0, 3, 11):
         got = (
             spark.createDataFrame(pdf)
-            .select("i", plane_sign(p, F.col("i")).alias("s"))
+            .select("i", plane_sign_col(F.lit(p), F.col("i")).alias("s"))
             .toPandas().sort_values("i")["s"].tolist()
         )
         want = duckdb.sql(

@@ -92,6 +92,60 @@ def test_simhash_pairs_production_matches_brute_force(spark):
     assert got == want
 
 
+def _minhash_brute_pairs(docs, max_df):
+    """(left_id, right_id, est_jaccard) of every pair of production
+    (xxhash64) 64-hash signatures that agree on a whole 2-hash band
+    slice; est_jaccard = share of the 64 min-hashes that agree."""
+    rows = (
+        S.minhash_signatures(docs, num_hashes=64, portable=False, max_df=max_df)
+        .select("doc_id", "__sig__").collect()
+    )
+    ids = np.array([r[0] for r in rows])
+    sig = np.array([r[1] for r in rows])
+    eq = sig[:, None, :] == sig[None, :, :]
+    banded = eq.reshape(len(ids), len(ids), 32, 2).all(axis=3).any(axis=2)
+    est = eq.sum(axis=2) / 64.0
+    return {
+        (min(ids[a], ids[b]), max(ids[a], ids[b]), est[a, b])
+        for a, b in zip(*np.nonzero(np.triu(banded, 1)))
+    }
+
+
+@pytest.mark.parametrize(
+    "max_df, query",
+    [(None, "minhash_lsh_candidates"), (0.25, "minhash_lsh_stopshingle")],
+)
+def test_minhash_candidates_production_matches_brute_force(spark, max_df, query):
+    """The xxhash64 MinHash path has no SQL oracle: check its banding and
+    estimate against every pair of its own signatures.  A pair is a
+    candidate iff the two signatures agree on a whole 2-hash band slice,
+    and its est_jaccard is the share of the 64 min-hashes they agree on.
+
+    The corpus draws 60 tokens from 8 Zipf-weighted words, so pairs sit
+    at Jaccard ~0.15 and ~100 of them share exactly one band: a band the
+    kernel dropped or mis-keyed changes the set.  The catalog query's
+    production row must then keep the sf0.001 pairs at >= 0.4."""
+    from financial_data_science_spark.queries import Q
+    from financial_data_science_spark.sources.testdata import load_table
+
+    rng = np.random.default_rng(5)
+    p = 1.0 / np.arange(1, 9)
+    toks = rng.choice(8, (200, 60), p=p / p.sum())
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{t}" for t in row)) for i, row in enumerate(toks)],
+        "doc_id long, text string",
+    )
+    got = set(map(tuple, S.minhash_candidates(
+        docs, num_hashes=64, bands=32, portable=False, max_df=max_df
+    ).collect()))
+    assert got == _minhash_brute_pairs(docs, max_df)
+
+    sf = "/root/testdata/sf0.001"
+    want = _minhash_brute_pairs(load_table(spark, sf, "documents"), max_df)
+    kept = set(map(tuple, Q[query](spark, sf, portable=False).collect()))
+    assert kept == {w for w in want if w[2] >= 0.4} and kept
+
+
 def test_lsh_bands_must_divide_num_hashes(spark):
     # 64 hashes in 24 bands would band only h0..h47 while the estimate
     # still divides by 64

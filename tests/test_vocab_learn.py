@@ -67,7 +67,9 @@ def test_lang_classifier_learns_marker_words(spark):
     each language mixes shared vocabulary with language-specific marker
     words.  (The driver's synthetic documents table has text independent
     of its lang column, so it can't test learning.)"""
-    from financial_data_science_spark.functions.learn import fit_and_score
+    from financial_data_science_spark.functions.learn import (
+        lang_classifier_pipeline,
+    )
 
     import random
 
@@ -83,7 +85,10 @@ def test_lang_classifier_learns_marker_words(spark):
         rng.shuffle(words)
         rows.append((i, " ".join(words), lang))
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    model, acc = fit_and_score(docs)
+    train, test = docs.randomSplit([0.75, 0.25], seed=42)
+    pred = lang_classifier_pipeline().fit(train).transform(test)
+    ok = (F.col("prediction") == F.col("__label__")).cast("int")
+    acc = pred.select(F.avg(ok)).first()[0]
     assert acc > 0.9, acc
 
 

@@ -148,7 +148,7 @@ def test_ewma_null_seeding_matches_pandas(spark):
     import numpy as np
     import pandas as pd
 
-    from financial_data_science_spark.operators.windows import ewma, ewma_chunked
+    from financial_data_science_spark.operators.windows import ewma
 
     pdf = pd.DataFrame({
         "g": ["a"] * 8 + ["b"] * 6,
@@ -161,12 +161,11 @@ def test_ewma_null_seeding_matches_pandas(spark):
         pdf.sort_values(["g", "t"]).groupby("g")["x"]
         .transform(lambda s: s.ewm(alpha=0.3, adjust=True).mean()).to_numpy()
     )
-    for fn in (ewma, ewma_chunked):
-        got = (
-            fn(df, "g", "t", "x", alpha=0.3, adjust=True)
-            .toPandas().sort_values(["g", "t"])["ewma"].to_numpy()
-        )
-        assert np.allclose(got, want_t, atol=1e-12, equal_nan=True), fn
+    got = (
+        ewma(df, "g", "t", "x", alpha=0.3, adjust=True)
+        .toPandas().sort_values(["g", "t"])["ewma"].to_numpy()
+    )
+    assert np.allclose(got, want_t, atol=1e-12, equal_nan=True)
     # adjust=False: exact pandas for leading nulls; internal-gap rows
     # carry (check the seed and the first rows after leading nulls)
     got_f = (
@@ -184,36 +183,6 @@ def test_ewma_null_seeding_matches_pandas(spark):
     assert np.allclose(got_f[2:4], want_f[2:4], atol=1e-12)
 
 
-def test_ewma_chunked_long_series(spark):
-    """30k rows at alpha=0.06 — far past the ~11.3k-row double bound the
-    plain identity dies at; the chunk-rescaled form must match pandas."""
-    import numpy as np
-    import pandas as pd
-
-    from financial_data_science_spark.operators.windows import ewma_chunked
-
-    rng = np.random.default_rng(23)
-    n = 30_000
-    pdf = pd.DataFrame({
-        "g": np.repeat(["a", "b"], n),
-        "t": np.tile(np.arange(n), 2),
-        "x": rng.normal(0, 1, 2 * n),
-    })
-    df = spark.createDataFrame(pdf).repartition(8)
-    for adjust in (True, False):
-        got = (
-            ewma_chunked(df, "g", "t", "x", alpha=0.06, adjust=adjust)
-            .toPandas().sort_values(["g", "t"])["ewma"].to_numpy()
-        )
-        want = (
-            pdf.sort_values(["g", "t"]).groupby("g")["x"]
-            .transform(lambda s: s.ewm(alpha=0.06, adjust=adjust).mean())
-            .to_numpy()
-        )
-        assert np.all(np.isfinite(got)), adjust
-        assert np.allclose(got, want, atol=1e-9, rtol=1e-9), adjust
-
-
 def test_ewma_overflow_guard_raises(spark):
     import numpy as np
     import pandas as pd
@@ -224,7 +193,7 @@ def test_ewma_overflow_guard_raises(spark):
     n = 13_000  # > 700/-ln(0.94) ~ 11.3k
     pdf = pd.DataFrame({"t": np.arange(n), "x": np.ones(n)})
     df = spark.createDataFrame(pdf)
-    with pytest.raises(Exception, match="ewma_chunked"):
+    with pytest.raises(Exception, match="double-precision bound"):
         ewma(df, None, "t", "x", alpha=0.06, on_overflow="error").agg(
             {"ewma": "max"}
         ).collect()

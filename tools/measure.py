@@ -4,7 +4,7 @@
     python tools/measure.py ab REV NAME...    # REV vs the working tree
     python tools/measure.py plans [NAME...]   # plans/current/<name>.txt
 
-NAME is a catalog query or a bench.py production twin; the scale
+NAME is a catalog query or a ``bench.EXTRA`` row; the scale
 factor is bench.py's $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 ``time`` builds each entry once, pays one untimed warmup count, then
